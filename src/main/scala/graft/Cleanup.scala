@@ -11,6 +11,10 @@ import org.apache.spark.sql.SparkSession
   * cleanup is best-effort by contract — every result is already on
   * disk/stdout by the time it runs, and JVM exit plus the scratch
   * shutdown hook reclaim whatever a failed step leaves behind.
+  *
+  * Not released, on purpose: [[Tables]]' schema catalog. Its entries
+  * are immutable metadata keyed by file state, never by session, so they
+  * stay valid across sessions — the one memo outside this lifecycle.
   */
 object Cleanup {
   def releaseAll(spark: SparkSession): Unit = {

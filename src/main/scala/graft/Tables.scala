@@ -1,8 +1,11 @@
 package graft
 
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -10,6 +13,13 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * column-pruned, predicate-pushdown scans; at cluster scale the same call
   * reads a partitioned directory tree and Catalyst prunes partitions. No
   * driver-side materialization happens here — these are lazy plans.
+  *
+  * Every read supplies its schema from one JVM-wide schema catalog
+  * ([[schemaOf]]) instead of starting a footer-reading Spark job while
+  * the query is still being built. The catalog is this engine's stand-in
+  * for a metastore or table-format schema: keyed by path and file state
+  * (a rewritten file is inferred again), and, as immutable metadata, the
+  * one memo that [[Cleanup.releaseAll]] deliberately keeps.
   */
 object Tables {
 
@@ -49,8 +59,83 @@ object Tables {
   }
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    ntzToInstant(spark.read.schema(schemaOf(spark, path)).parquet(path))
+  }
+
+  /** What a table path's schema was inferred from: one (relative path,
+    * length, modification time) per data file — the path itself for the
+    * single-file layout, every part file for the directory layout.
+    */
+  private type Stamp = Vector[(String, Long, Long)]
+
+  /** The schema catalog: table path → (stamp, schema inferred under
+    * [[tsCompatConfs]]). One entry per path; a changed stamp replaces it.
+    */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (Stamp, StructType)]
+
+  /** The schema a plain `spark.read.parquet(path)` would infer, read
+    * from the footers once per file state instead of by a Spark job on
+    * every read. Also pins [[tsCompatConfs]] on the session, as every
+    * table read must.
+    *
+    * Catalog stance:
+    *  - Production counterpart: a metastore or table-format schema. At
+    *    100 TB the job this removes is a footer read over many part
+    *    files, repeated on every query that reads the table.
+    *  - Key: the path plus its [[Stamp]], never a SparkSession. The
+    *    schema depends only on the files' bytes and the three confs
+    *    [[tsCompatConfs]] pins before every inference (the other parquet
+    *    inference confs stay at their defaults everywhere in this
+    *    project). A file rewritten at the same path changes its length
+    *    or modification time and is inferred again — a stale schema
+    *    would read the new columns as missing and the dropped ones as
+    *    silent nulls.
+    *  - Lifecycle: entries are immutable metadata, so
+    *    [[Cleanup.releaseAll]] deliberately does not release them — the
+    *    one exception to "one lifecycle" for what a query memoizes.
+    *  - A path that does not exist is not memoized: inference raises
+    *    Spark's own error for it.
+    */
+  private[graft] def schemaOf(spark: SparkSession, path: String): StructType = {
     tsCompatConfs(spark)
-    ntzToInstant(spark.read.parquet(s"$sfDir/$name.parquet"))
+    def infer = spark.read.parquet(path).schema
+    // stamped BEFORE inferring: a rewrite racing the inference leaves an
+    // entry under the old stamp, which the next read re-infers
+    stamp(spark, path) match {
+      case None => infer
+      case Some(st) =>
+        val hit = schemas.get(path)
+        if (hit != null && hit._1 == st) hit._2
+        else {
+          val schema = infer
+          schemas.put(path, (st, schema))
+          schema
+        }
+    }
+  }
+
+  private def stamp(spark: SparkSession, path: String): Option[Stamp] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root =
+      try Some(fs.getFileStatus(p))
+      catch { case _: FileNotFoundException => None }
+    root.map { st =>
+      if (!st.isDirectory) Vector(("", st.getLen, st.getModificationTime))
+      else {
+        val it = fs.listFiles(p, true)
+        val prefix = st.getPath.toUri.getPath.length
+        val files = Vector.newBuilder[(String, Long, Long)]
+        while (it.hasNext) {
+          val f = it.next()
+          files += ((f.getPath.toUri.getPath.substring(prefix),
+            f.getLen, f.getModificationTime))
+        }
+        files.result().sortBy(_._1)
+      }
+    }
   }
 
   /** Defensive NTZ→LTZ normalization: `inferTimestampNTZ=false` only

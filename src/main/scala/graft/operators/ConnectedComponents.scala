@@ -89,7 +89,14 @@ object ConnectedComponents {
             underConfiguredRoot(_, dir, sc.hadoopConfiguration)))
           sc.setCheckpointDir(dir)
         df.checkpoint(eager = true)
-      case _ => df.localCheckpoint(true)
+      case _ =>
+        // marked lazily, then materialized by the eager path's own job,
+        // with the frame in hand: a failed job (cancelled group, lost
+        // executor) must not strand the round's partly stored blocks,
+        // which nothing else could reach to release
+        val round = df.localCheckpoint(false)
+        try { org.apache.spark.sql.graft.Checkpoints.materialize(round); round }
+        catch { case e: Throwable => freeCheckpoint(round); throw e }
     }
 
   /** Release a localCheckpointed round's blocks. `Dataset.unpersist` is

@@ -496,20 +496,31 @@ object Dedup extends QueryModule {
     // deepening plan (gaps growing 3→11 s by round 8 at sf0.01), while
     // the cut keeps each round's optimizer unit a constant three
     // operators over a LogicalRDD.
-    var ranks = ConnectedComponents.ckptRound(
-      nodes.select(col("doc_id"), lit(PR_UNIT).as("rank")))
-    for (_ <- 1 to PR_ITERS) {
-      val contrib = ewd.join(ranks, col("src") === col("doc_id"))
-        .select(col("dst"), expr("rank div deg").as("c"))
-        .union(ranks.select(col("doc_id").as("dst"), lit(0L).as("c")))
-      val next = ConnectedComponents.ckptRound(
-        contrib.groupBy("dst").agg(sum(col("c")).as("inflow"))
-          .select(col("dst").as("doc_id"),
-            (lit(150000L) + expr("(inflow * 85) div 100")).as("rank")))
-      // next is materialized eagerly, so the prior round's blocks are
-      // unreachable — release them before they pile up across rounds
-      ConnectedComponents.freeCheckpoint(ranks)
-      ranks = next
+    var ranks: DataFrame = null
+    try {
+      ranks = ConnectedComponents.ckptRound(
+        nodes.select(col("doc_id"), lit(PR_UNIT).as("rank")))
+      for (_ <- 1 to PR_ITERS) {
+        val contrib = ewd.join(ranks, col("src") === col("doc_id"))
+          .select(col("dst"), expr("rank div deg").as("c"))
+          .union(ranks.select(col("doc_id").as("dst"), lit(0L).as("c")))
+        val next = ConnectedComponents.ckptRound(
+          contrib.groupBy("dst").agg(sum(col("c")).as("inflow"))
+            .select(col("dst").as("doc_id"),
+              (lit(150000L) + expr("(inflow * 85) div 100")).as("rank")))
+        // next is materialized eagerly, so the prior round's blocks are
+        // unreachable — release them before they pile up across rounds
+        ConnectedComponents.freeCheckpoint(ranks)
+        ranks = next
+      }
+    } catch {
+      // a failed round (cancelled job group, lost executor) must not
+      // strand the blocks of ewd and the last completed round: nothing
+      // outside this loop can reach them to release them
+      case e: Throwable =>
+        ConnectedComponents.freeCheckpoint(ewd)
+        if (ranks != null) ConnectedComponents.freeCheckpoint(ranks)
+        throw e
     }
     // every round consumed ewd; its blocks are dead once the last round
     // materialized (the same release-when-unreachable discipline as the

@@ -492,14 +492,6 @@ object Sources extends QueryModule {
       }
     }
 
-  /** events schema per dataset dir, resolved once: a streaming file
-    * source needs an explicit schema, and re-deriving it per query is a
-    * redundant footer read + file listing. Schemas are immutable
-    * metadata, so unlike result caches this memo never needs releasing.
-    */
-  private val eventsSchema =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]
-
   /** events as an unbounded source — the SAME ns→µs normalization
     * expression as the batch loader (`Tables.nsToMicrosTs`), so the
     * stream and its batch oracle cannot disagree on boundary
@@ -507,13 +499,11 @@ object Sources extends QueryModule {
     */
   private def streamEvents(s: SparkSession, d: String,
       glob: String = "events.parquet"): DataFrame = {
-    // same defensive confs as Tables.table: without them the schema
-    // probe itself throws (NANOS) or infers TIMESTAMP_NTZ (naive
-    // MICROS), which watermarks reject, on a driver session whose
-    // builder omitted the flags
-    graft.Tables.tsCompatConfs(s)
-    val schema = eventsSchema.computeIfAbsent(
-      d, dir => s.read.parquet(s"$dir/events.parquet").schema)
+    // a streaming file source needs an explicit schema: the one the
+    // batch loader reads with, from the same catalog, which also pins
+    // the compat confs (without them inference throws on NANOS or
+    // infers TIMESTAMP_NTZ, which watermarks reject)
+    val schema = graft.Tables.schemaOf(s, s"$d/events.parquet")
     // default glob is EXACTLY events.parquet — the same file the batch
     // loader and the DuckDB oracle read, so a stray events-prefixed
     // file in a dataset dir can never make the stream silently diverge
@@ -817,19 +807,11 @@ object Sources extends QueryModule {
       s.table(name).orderBy("event_id")
     }
 
-  /** documents schema per dataset dir, same memo rationale as
-    * [[eventsSchema]].
-    */
-  private val docsSchema =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]
-
   /** The documents table as an unbounded source — flat-file and
     * directory layouts, same scoping rules as [[streamEvents]].
     */
   private def streamDocuments(s: SparkSession, d: String): DataFrame = {
-    graft.Tables.tsCompatConfs(s)
-    val schema = docsSchema.computeIfAbsent(
-      d, dir => s.read.parquet(s"$dir/documents.parquet").schema)
+    val schema = graft.Tables.schemaOf(s, s"$d/documents.parquet")
     val tablePath = new org.apache.hadoop.fs.Path(s"$d/documents.parquet")
     val fs = tablePath.getFileSystem(s.sparkContext.hadoopConfiguration)
     val dirLayout =

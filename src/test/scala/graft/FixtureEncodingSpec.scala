@@ -76,10 +76,15 @@ class FixtureEncodingSpec extends SparkSpec {
     base.select((unix_micros(col("s").cast("timestamp")) * 1000L + 789L).as("ts"))
       .write.mode("overwrite").parquet(s"$nsFracDir/events.parquet")
 
-    assert(readInstants(ltzDir) == want, "UTC-adjusted micros")
-    assert(readInstants(ntzDir) == want, "naive micros (NTZ-shaped)")
-    assert(readInstants(nsDir) == want, "nanos-as-long")
-    assert(readInstants(nsFracDir) == want, "nanos-as-long with sub-µs remainder")
+    // each directory twice: the first read infers its schema, the
+    // second is served from Tables' schema catalog
+    for (read <- Seq("inferred", "cataloged")) {
+      assert(readInstants(ltzDir) == want, s"UTC-adjusted micros, $read")
+      assert(readInstants(ntzDir) == want, s"naive micros (NTZ-shaped), $read")
+      assert(readInstants(nsDir) == want, s"nanos-as-long, $read")
+      assert(readInstants(nsFracDir) == want,
+        s"nanos-as-long with sub-µs remainder, $read")
+    }
   }
 
   test("loader pins session.timeZone=UTC, so a non-UTC host session " +

@@ -10,6 +10,8 @@ cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.1}"
 shift || true
 OUT="target/verify_gate_$(basename "$SF")"
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
+# local[N] defaults to this host's cores, so the gate runs like-for-like
+# with the tier-1 suite and the bench; an explicit SPARK_GRAFT_CPUS wins
+SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" \
   sbt "runMain graft.Verify $SF $OUT $*"
 python3 tools/check.py "$SF" "$OUT" "$@"
