@@ -37,6 +37,16 @@ import org.apache.spark.storage.StorageLevel
   * measurements, not globally. Blocks live on executors
   * (MEMORY_AND_DISK, spills under pressure).
   *
+  * The AQE rule `SmallTerminalSort`, which sorts a small input in its
+  * one task with no sampling job, replaces none of the six call sites.
+  * Their sort's input is this checkpoint (or its cache), not a
+  * materialized shuffle stage, so the rule never rewrites their range
+  * exchange and the sampling job still reads the materialized rows.
+  * Dropping a site would not help either: at sf0.1 the inputs of
+  * rel_window_range and rel_asof_join exceed the rule's one-partition
+  * bound anyway, and the others would compute their projection twice
+  * again.
+  *
   * Lifecycle: keyed by (query, dataset); re-invoking the same query
   * frees the PREVIOUS invocation's blocks first (sweep N's consumers
   * are done before sweep N+1 constructs — the Bench/Verify/spec

@@ -152,69 +152,83 @@ object ConnectedComponents {
     val sym = edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // Each round references the previous labels multiple times (join +
-    // union + self-join), so without lineage truncation the logical plan
-    // grows geometrically — exponential analysis/planning cost long
-    // before any data is big (observed: minutes of Catalyst time by
-    // round ~10 on a 30-node graph). ckptRound materializes the round
-    // and CUTS the plan — localCheckpoint by default, reliable
-    // checkpoint() when CheckpointDirKey is set (cluster deployments).
-    var lbls = ckptRound(sym.select(col("src").as("id")).distinct()
-      .withColumn("lbl", col("id")))
-    // coalesce(…, 0): with an empty edge set the sum aggregates zero rows
-    // and returns null — the fixpoint compare would NPE on graphs where
-    // no pair survived upstream filtering (legitimate at other corpora).
-    def lblSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("lbl").cast("decimal(38,0)")),
-          lit(0).cast("decimal(38,0)")))
-        .head().getDecimal(0)
-    var prevSum = lblSum(lbls)
-    var converged = false
-    var iters = 0
-    while (!converged && iters < maxIters) {
-      val prop = sym.join(lbls, sym("src") === lbls("id"))
-        .select(col("dst").as("id"), col("lbl"))
-      // checkpointed so the pointer-jump self-join reads materialized
-      // blocks instead of executing the aggregation subtree twice
-      val mins = ckptRound(
-        lbls.union(prop).groupBy("id").agg(min("lbl").as("lbl")))
-      // pointer jumping: follow the label's own label. Every label value
-      // IS a participant id (labels start as ids and only min-combine),
-      // so the lookup is a self-join on the same (id, lbl) table; the
-      // left+coalesce guards the invariant rather than assuming it.
-      val next = ckptRound(mins.as("m")
-        .join(mins.select(col("id").as("p_id"), col("lbl").as("p_lbl")),
-          col("m.lbl") === col("p_id"), "left")
-        .select(col("m.id").as("id"),
-          coalesce(col("p_lbl"), col("m.lbl")).as("lbl")))
-      iters += 1
-      // Fixpoint check every 2nd round: per-node labels are monotone
-      // non-increasing, so sum(r) == sum(r-2) forces sum(r-1) — and
-      // every individual label — unchanged through both rounds: the
-      // same fixpoint, half the driver round-trips (each lblSum is a
-      // blocking 1-row action serialized between rounds; the eager
-      // checkpoint above is the only other per-round action). Near the
-      // budget edge check EVERY round (>= maxIters - 1, not just the
-      // last): a lone gap-2 check at an even maxIters compares r to r-2
-      // and reads "converged exactly at round maxIters-1" as a sum
-      // change — a false NotConverged on a graph that did converge.
-      if (iters % 2 == 0 || iters >= maxIters - 1) {
-        val nextSum = lblSum(next)
-        converged = nextSum.compareTo(prevSum) == 0
-        prevSum = nextSum
+    // Every round checkpoint the loop holds right now. A failed round (a
+    // cancelled job group, a lost executor) or NotConverged leaves the
+    // builder through the catch below, which frees them with `sym`:
+    // nothing outside the loop can reach them to release them later.
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def hold(df: DataFrame): DataFrame = { val r = ckptRound(df); held += r; r }
+    def release(df: DataFrame): Unit = { freeCheckpoint(df); held -= df }
+    try {
+      // Each round references the previous labels multiple times (join +
+      // union + self-join), so without lineage truncation the logical plan
+      // grows geometrically — exponential analysis/planning cost long
+      // before any data is big (observed: minutes of Catalyst time by
+      // round ~10 on a 30-node graph). ckptRound materializes the round
+      // and CUTS the plan — localCheckpoint by default, reliable
+      // checkpoint() when CheckpointDirKey is set (cluster deployments).
+      var lbls = hold(sym.select(col("src").as("id")).distinct()
+        .withColumn("lbl", col("id")))
+      // coalesce(…, 0): with an empty edge set the sum aggregates zero rows
+      // and returns null — the fixpoint compare would NPE on graphs where
+      // no pair survived upstream filtering (legitimate at other corpora).
+      def lblSum(df: DataFrame): java.math.BigDecimal =
+        df.agg(coalesce(sum(col("lbl").cast("decimal(38,0)")),
+            lit(0).cast("decimal(38,0)")))
+          .head().getDecimal(0)
+      var prevSum = lblSum(lbls)
+      var converged = false
+      var iters = 0
+      while (!converged && iters < maxIters) {
+        val prop = sym.join(lbls, sym("src") === lbls("id"))
+          .select(col("dst").as("id"), col("lbl"))
+        // checkpointed so the pointer-jump self-join reads materialized
+        // blocks instead of executing the aggregation subtree twice
+        val mins = hold(
+          lbls.union(prop).groupBy("id").agg(min("lbl").as("lbl")))
+        // pointer jumping: follow the label's own label. Every label value
+        // IS a participant id (labels start as ids and only min-combine),
+        // so the lookup is a self-join on the same (id, lbl) table; the
+        // left+coalesce guards the invariant rather than assuming it.
+        val next = hold(mins.as("m")
+          .join(mins.select(col("id").as("p_id"), col("lbl").as("p_lbl")),
+            col("m.lbl") === col("p_id"), "left")
+          .select(col("m.id").as("id"),
+            coalesce(col("p_lbl"), col("m.lbl")).as("lbl")))
+        iters += 1
+        // Fixpoint check every 2nd round: per-node labels are monotone
+        // non-increasing, so sum(r) == sum(r-2) forces sum(r-1) — and
+        // every individual label — unchanged through both rounds: the
+        // same fixpoint, half the driver round-trips (each lblSum is a
+        // blocking 1-row action serialized between rounds; the eager
+        // checkpoint above is the only other per-round action). Near the
+        // budget edge check EVERY round (>= maxIters - 1, not just the
+        // last): a lone gap-2 check at an even maxIters compares r to r-2
+        // and reads "converged exactly at round maxIters-1" as a sum
+        // change — a false NotConverged on a graph that did converge.
+        if (iters % 2 == 0 || iters >= maxIters - 1) {
+          val nextSum = lblSum(next)
+          converged = nextSum.compareTo(prevSum) == 0
+          prevSum = nextSum
+        }
+        // next is checkpointed EAGERLY above, so the previous round's and
+        // the intermediate min table's blocks are no longer reachable
+        release(lbls)
+        release(mins)
+        lbls = next
       }
-      // next is checkpointed EAGERLY above, so the previous round's and
-      // the intermediate min table's blocks are no longer reachable
-      freeCheckpoint(lbls)
-      freeCheckpoint(mins)
-      lbls = next
+      if (!converged) throw new NotConverged(maxIters)
+      val out = nodes.select("id")
+        .join(lbls, Seq("id"), "left")
+        .select(col("id"), coalesce(col("lbl"), col("id")).as("component"))
+      sym.unpersist()
+      (out, iters)
+    } catch {
+      case e: Throwable =>
+        held.foreach(freeCheckpoint)
+        sym.unpersist()
+        throw e
     }
-    if (!converged) { sym.unpersist(); throw new NotConverged(maxIters) }
-    val out = nodes.select("id")
-      .join(lbls, Seq("id"), "left")
-      .select(col("id"), coalesce(col("lbl"), col("id")).as("component"))
-    sym.unpersist()
-    (out, iters)
     }
   }
 }

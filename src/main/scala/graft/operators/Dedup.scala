@@ -1654,28 +1654,40 @@ object Dedup extends QueryModule {
         val edges = pairs
           .select(col("doc_a").as("src"), col("doc_b").as("dst"))
           .persist(StorageLevel.MEMORY_AND_DISK)
-        edges.count()
-        // the iterated tables are label/edge sets (LSH survivors) — tiny
-        // relative to the corpus — so per-round task-launch overhead
-        // dominates at the session's default fan-out
-        val nodes = documents(s, d).select(col("doc_id").as("id"))
-          .unionByName(CJK_NEARDUP_DOCS.map(_._1).toDF("id"))
-        val lbl = graft.Tuning.withShufflePartitions(s, 8) {
-          ConnectedComponents.labels(nodes, edges)
-            .select(col("id").as("doc_id"), col("component").as("cluster_id"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          edges.count()
+          // the iterated tables are label/edge sets (LSH survivors) — tiny
+          // relative to the corpus — so per-round task-launch overhead
+          // dominates at the session's default fan-out
+          val nodes = documents(s, d).select(col("doc_id").as("id"))
+            .unionByName(CJK_NEARDUP_DOCS.map(_._1).toDF("id"))
+          graft.Tuning.withShufflePartitions(s, 8) {
+            ConnectedComponents.labels(nodes, edges)
+              .select(col("id").as("doc_id"), col("component").as("cluster_id"))
+              .persist(StorageLevel.MEMORY_AND_DISK)
+          }
+        } finally {
+          // labels() has run its loop by here (eager per-round checkpoints)
+          // and its result carries checkpointed lineage, not the edge plan —
+          // the edge cache can go (non-blocking; consumers materialized);
+          // on a failed build nothing else could reach either cache
+          edges.unpersist(false)
+          latinSigs.unpersist(false)
         }
-        // labels() has run its loop by here (eager per-round checkpoints)
-        // and its result carries checkpointed lineage, not the edge plan —
-        // the edge cache can go (non-blocking; consumers materialized)
-        edges.unpersist(false)
-        latinSigs.unpersist(false)
-        lbl
       }
       val prev = ccCache.putIfAbsent(key, fresh)
       if (prev != null) { fresh.unpersist(false); prev } else fresh
     }
   }
+
+  /** Forget the memoized CC labels of (s, d), so the next `dedup_cc`
+    * build reruns the propagation loop over the warm signature memos.
+    */
+  private[graft] def forgetCcLabels(s: SparkSession, d: String): Unit =
+    Option(ccCache.remove((s, d))).foreach { df =>
+      df.unpersist(false)
+      ConnectedComponents.freeCheckpoint(df)
+    }
 
   /** Release every DataFrame this module persisted and drop the memo
     * maps — Verify/Bench call it before session stop so a long-lived

@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions entry point: registers the engine's custom
   * Catalyst expressions as SQL functions, so `spark.sql("... vec_dot(a,
-  * b) ...")` works alongside the Column API ([[VectorColumns]]).
+  * b) ...")` works alongside the Column API ([[VectorColumns]]), and the
+  * AQE rule [[SmallTerminalSort]].
   *
   * Install via `SparkSession.builder().withExtensions(new
   * GraftExtensions)` or
@@ -79,5 +80,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         "AFTER nfc(): folding never normalizes. ASCII rows fold in a " +
         "byte scan. Returns NULL on NULL input.")(
       c => CaseFold(c.head))
+    ext.injectQueryStagePrepRule(SmallTerminalSort)
   }
 }

@@ -46,8 +46,11 @@ class Round4Spec extends SparkSpec {
     val n = 32L
     val nodes = (0L until n).toDF("id")
     val edges = (0L until n - 1).map(i => (i, i + 1)).toDF("src", "dst")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     assertThrows[operators.ConnectedComponents.NotConverged] {
       operators.ConnectedComponents.labels(nodes, edges, maxIters = 1).collect()
     }
+    // the loop's edge table and live round are freed with the error
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
   }
 }

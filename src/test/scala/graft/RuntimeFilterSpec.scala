@@ -17,16 +17,6 @@ import org.apache.spark.sql.functions._
   */
 class RuntimeFilterSpec extends SparkSpec {
 
-  private def withConf[A](pairs: (String, String)*)(body: => A): A = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   private def factJoin() = {
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
     val ord = spark.read.parquet(s"$sfDir/orders.parquet")
@@ -40,7 +30,7 @@ class RuntimeFilterSpec extends SparkSpec {
   test("a selective build side injects a bloom filter on the fact scan, " +
       "result unchanged") {
     val expected = factJoin().collect().toSeq // defaults: no injection at fixture size
-    withConf(
+    withConfs(
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",

@@ -11,16 +11,6 @@ import org.apache.spark.sql.functions._
   */
 class SkewAqeSpec extends SparkSpec {
 
-  private def withConfs(pairs: (String, String)*)(body: => Unit): Unit = {
-    val olds = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally olds.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("AQE splits the planted hot key's partition in a sort-merge join " +
       "(skew=true in the executed plan) and the result is exact") {
     // one hot key carrying 60k rows vs 50 keys of 100 rows — at 8

@@ -7,6 +7,19 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Run `body` with session confs set, restoring each (or unsetting
+    * it) afterwards.
+    */
+  def withConfs[T](pairs: (String, String)*)(body: => T): T = {
+    val olds = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally olds.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
 }
 
 object SparkSpec {

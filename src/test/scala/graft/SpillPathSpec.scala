@@ -35,23 +35,13 @@ class SpillPathSpec extends SparkSpec {
   private val queries =
     Seq("rel_percentile", "inverted_index", "rel_window_frames", "rel_join_full")
 
-  private def withConfs(pairs: Seq[(String, String)])(body: => Unit): Unit = {
-    val olds = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally olds.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("forced-spill runs are row-identical to unconstrained runs, and " +
       "the constrained runs actually spill") {
     val baselines = queries.map { q =>
       q -> SparkEntry.queries(q)(spark, sfDir).collect().toSeq
     }
     var spilled = 0L
-    withConfs(spillConfs) {
+    withConfs(spillConfs: _*) {
       baselines.foreach { case (q, expected) =>
         val df = SparkEntry.queries(q)(spark, sfDir)
         val constrained = df.collect().toSeq
