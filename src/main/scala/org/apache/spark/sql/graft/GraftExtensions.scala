@@ -3,15 +3,20 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.internal.StaticSQLConf
 
 /** SparkSessionExtensions entry point: registers the engine's custom
   * Catalyst expressions as SQL functions, so `spark.sql("... vec_dot(a,
   * b) ...")` works alongside the Column API ([[VectorColumns]]), and the
-  * AQE rule [[SmallTerminalSort]].
+  * AQE rule [[SmallTerminalSort]]; it also defaults the size of Spark's
+  * generated-class cache (see [[GraftExtensions.CodegenCacheMaxEntries]]).
   *
   * Install via `SparkSession.builder().withExtensions(new
   * GraftExtensions)` or
   * `spark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions`.
+  * Only the first reaches the cache default: the builder runs `apply`
+  * before `build()` creates its `SparkConf`, while the conf route runs
+  * it after.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -36,6 +41,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       }))
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    // absent only: an explicit -D, or a builder .config that overrides
+    // loaded properties, always wins
+    System.getProperties.putIfAbsent(
+      StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
+      GraftExtensions.CodegenCacheMaxEntries.toString)
     register(ext, "vec_dot", classOf[DotProductD].getName, 2,
       "vec_dot(a, b) - Dot product of two float/double arrays as DOUBLE, " +
         "accumulated strictly left-to-right. Returns NULL if either array " +
@@ -82,4 +92,22 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       c => CaseFold(c.head))
     ext.injectQueryStagePrepRule(SmallTerminalSort)
   }
+}
+
+object GraftExtensions {
+
+  /** The default for Spark's static `spark.sql.codegen.cache.maxEntries`
+    * (Spark's own default is 100). `CodeGenerator` sizes its JVM-wide
+    * cache of compiled classes once, at the first code generation, so a
+    * cache smaller than the working set recompiles evicted classes on
+    * every pass: the ten `interactive_mix` queries alone compile over 100.
+    * Sized to at least twice the distinct classes one sweep of the whole
+    * 158-query surface compiles, counted with an unbounded cache: 1,852
+    * at sf0.01 and 1,839 at sf0.1, so the next power of two, 4096.
+    * Bounded rather than unbounded: later sweeps still compile about 230
+    * new classes each (stream micro-batches, `rel_bloom_join`), and a
+    * long-lived JVM running ad hoc queries keeps adding such classes.
+    * Measurements and precedence: SCALE.md, "Generated-class cache".
+    */
+  val CodegenCacheMaxEntries: Int = 4096
 }
