@@ -70,11 +70,11 @@ object BpeLadderBench {
       val census = spark.sparkContext.getPersistentRDDs.size
       // release this ladder point's checkpoint blocks before the next
       // (the train path frees all but the final round itself; the
-      // final round's blocks die here). NOT Cleanup.releaseAll — that
-      // is the end-of-run sequence and stops the session. The memo is
-      // cleared too: a cached triple whose checkpoint was just
-      // unpersisted must never be handed out for recompute
-      operators.TextAnalysis.clearCaches()
+      // store frees the final round with the memoized triple, so a
+      // triple whose checkpoint is gone is never handed out for
+      // recompute). NOT Cleanup.releaseAll — that is the end-of-run
+      // sequence and stops the session.
+      Materialize.clear()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       System.err.println(f"[bpe-ladder] merges=$m wall=$secs%.1fs " +
         f"per-round=${secs / m}%.3fs vocab=${row.getLong(0)} " +

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** Materialize-once helper for contract queries whose pre-sort
@@ -47,7 +47,7 @@ import org.apache.spark.storage.StorageLevel
   * bound anyway, and the others would compute their projection twice
   * again.
   *
-  * Lifecycle: keyed by (query, dataset); re-invoking the same query
+  * `once` is keyed by (query, dataset); re-invoking the same query
   * frees the PREVIOUS invocation's blocks first (sweep N's consumers
   * are done before sweep N+1 constructs — the Bench/Verify/spec
   * lifecycle), so steady state holds one block set per query instead
@@ -58,12 +58,51 @@ import org.apache.spark.storage.StorageLevel
   * registering the new one would evict the fresh cache entry too.
   * Like the CC rounds, a freed local checkpoint cannot be recomputed:
   * a caller that holds a stale frame across a re-invocation of the
-  * same query must materialize it first. [[clear]] releases everything
-  * at end of run (Cleanup.releaseAll also sweeps getPersistentRDDs,
-  * the backstop that already covered the CC loop's blocks).
+  * same query must materialize it first.
+  *
+  * The session store. This object also owns everything else a query
+  * memoizes or persists beyond its own plan, so there is one lifecycle
+  * and one release:
+  *  - [[memo]]: one value per (session, sfDir, name) — a persisted
+  *    signature table, the event spine, a BPE train, the bucketed
+  *    table names;
+  *  - [[track]]: a per-call persist, kept until release;
+  *  - [[once]]: the slots above, in the same map under a key with no
+  *    session (the query's own key string names the dataset);
+  *  - [[forget]] frees one entry, [[clear]] frees them all.
+  * Both release through the one [[free]], which also frees a value's
+  * checkpoint blocks (the CC labels' final round, the BPE vocab's last
+  * round) and the DataFrames inside a tuple value. Cleanup.releaseAll
+  * calls [[clear]] and then still sweeps `getPersistentRDDs`, the
+  * backstop for blocks no entry reaches. Not held here: the schema
+  * catalog ([[Tables]]), which is keyed by file state, never by
+  * session, and stays valid across sessions.
   */
 object Materialize {
-  private val last = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
+
+  /** One memo entry. Its build runs at most once, under the entry's own
+    * lock rather than the map's bin lock, so a build may memoize other
+    * keys (the CC labels build both signature tables) and a long build
+    * blocks only callers of its own key. A build that throws rethrows
+    * to every waiter; its caller then drops the entry, so the next call
+    * builds afresh.
+    */
+  private final class Slot(private var build: () => Any) {
+    @volatile private var result: scala.util.Try[Any] = _
+    def get: Any = synchronized {
+      if (result == null) {
+        result = scala.util.Try(build())
+        build = null // the inputs it captured are not kept alive
+      }
+      result.get
+    }
+    /** The built value, without waiting for a build in progress. */
+    def built: Option[Any] = Option(result).flatMap(_.toOption)
+  }
+
+  private val entries =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), Slot]
+  private val tracked = new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]
 
   /** Scale-adaptive scan fan-out for heavy row-local compute over an
     * effectively unsplittable input (guide §2.5: "one huge unsplittable
@@ -86,29 +125,57 @@ object Materialize {
     if (df.rdd.getNumPartitions * 2 <= target) df.repartition(target) else df
   }
 
+  /** The value memoized under (s, sfDir, name), built by `build` on the
+    * first call.
+    */
+  def memo[T](s: SparkSession, sfDir: String, name: String)(build: => T): T = {
+    val key = (s, sfDir, name)
+    val slot = entries.computeIfAbsent(key, _ => new Slot(() => build))
+    try slot.get.asInstanceOf[T]
+    catch { case e: Throwable => entries.remove(key, slot); throw e }
+  }
+
+  /** Keep a per-call persist until [[clear]]; returns it unchanged. */
+  def track(df: DataFrame): DataFrame = { tracked.add(df); df }
+
   def once(key: String, df: DataFrame): DataFrame = synchronized {
-    val prev = last.remove(key)
-    if (prev != null) free(prev)
-    val c =
+    forget(null, "", key)
+    memo(null, "", key) {
       if (df.sparkSession.sparkContext.isLocal) df.localCheckpoint(true)
       else df.persist(StorageLevel.MEMORY_AND_DISK)
-    last.put(key, c)
-    c
+    }
   }
 
+  /** Drop the entry (s, sfDir, name) and free what it holds. */
+  def forget(s: SparkSession, sfDir: String, name: String): Unit =
+    Option(entries.remove((s, sfDir, name))).foreach(release)
+
+  /** Free every memo value, tracked frame and [[once]] slot. */
   def clear(): Unit = synchronized {
-    last.values().forEach(free(_))
-    last.clear()
+    entries.forEach((key, slot) => if (entries.remove(key, slot)) release(slot))
+    Iterator.continually(tracked.poll()).takeWhile(_ != null).foreach(free)
   }
 
-  /** Release whichever materialization [[once]] built: the persist path
-    * unregisters through the Dataset (CacheManager) route; the
-    * checkpoint path needs the LogicalRDD's RDD unpersisted directly —
+  private def release(slot: Slot): Unit = slot.built.foreach {
+    case ds: Dataset[_] => free(ds)
+    case p: Product => p.productIterator.foreach {
+      case ds: Dataset[_] => free(ds)
+      case _ => ()
+    }
+    case _ => ()
+  }
+
+  /** Release a persisted or checkpointed frame: the persist path
+    * unregisters through the Dataset (CacheManager) route; a checkpoint
+    * needs its LogicalRDD's RDD unpersisted directly —
     * `Dataset.unpersist` is a no-op on checkpoint blocks (RDD-level
-    * persists the CacheManager never registered), as
-    * ConnectedComponents.freeCheckpoint documents.
+    * persists the CacheManager never registered). Only call once every
+    * consumer of the frame has been materialized: a truncated-lineage
+    * RDD cannot be recomputed after unpersisting. Under reliable
+    * checkpointing the LogicalRDD's RDD holds no persisted blocks (the
+    * round lives in checkpoint FILES), so that unpersist is a no-op.
     */
-  private def free(df: DataFrame): Unit = {
+  private[graft] def free(df: Dataset[_]): Unit = {
     df.unpersist(false)
     df.queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>

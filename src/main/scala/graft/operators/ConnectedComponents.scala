@@ -96,24 +96,7 @@ object ConnectedComponents {
         // which nothing else could reach to release
         val round = df.localCheckpoint(false)
         try { org.apache.spark.sql.graft.Checkpoints.materialize(round); round }
-        catch { case e: Throwable => freeCheckpoint(round); throw e }
-    }
-
-  /** Release a localCheckpointed round's blocks. `Dataset.unpersist` is
-    * a NO-OP here: it routes through the CacheManager, which never
-    * registered the checkpoint's RDD-level persist — the blocks must be
-    * unpersisted on the underlying RDD of the checkpoint's LogicalRDD.
-    * Only call once every consumer of the round has been materialized:
-    * a truncated-lineage RDD cannot be recomputed after unpersisting.
-    * Under reliable checkpointing the LogicalRDD's RDD holds no
-    * persisted blocks (the round lives in checkpoint FILES), so the
-    * unpersist is a harmless no-op there.
-    */
-  private[operators] def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(false); ()
-      case _ => ()
+        catch { case e: Throwable => graft.Materialize.free(round); throw e }
     }
 
   /** One row per node of `nodes(id)`: (id, component) where component is
@@ -158,7 +141,7 @@ object ConnectedComponents {
     // nothing outside the loop can reach them to release them later.
     val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def hold(df: DataFrame): DataFrame = { val r = ckptRound(df); held += r; r }
-    def release(df: DataFrame): Unit = { freeCheckpoint(df); held -= df }
+    def release(df: DataFrame): Unit = { graft.Materialize.free(df); held -= df }
     try {
       // Each round references the previous labels multiple times (join +
       // union + self-join), so without lineage truncation the logical plan
@@ -225,7 +208,7 @@ object ConnectedComponents {
       (out, iters)
     } catch {
       case e: Throwable =>
-        held.foreach(freeCheckpoint)
+        held.foreach(graft.Materialize.free)
         sym.unpersist()
         throw e
     }

@@ -475,18 +475,13 @@ object ScalarFns extends QueryModule {
     * model-sized (channels / |event_types|³ paths / |event_types|²
     * transitions), so past the spine nothing re-sees the corpus.
     */
-  private val spineCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-  private val persisted = new graft.PersistRegistry
-  def clearCaches(): Unit = { spineCache.clear(); persisted.clear() }
-
   private def eventSpine(s: SparkSession, d: String): DataFrame =
-    spineCache.computeIfAbsent((s, d), _ => {
+    graft.Materialize.memo(s, d, "fn.event_spine") {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id").orderBy("ts", "event_id")
       val wp = w.rowsBetween(
         org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-      persisted.track(events(s, d)
+      events(s, d)
         .select(col("user_id"), col("ts"), col("event_id"),
           col("event_type"), col("value"))
         .withColumn("to1", lead("event_type", 1).over(w))
@@ -494,8 +489,8 @@ object ScalarFns extends QueryModule {
         .withColumn("touch",
           last(when(col("event_type").isin("click", "view"),
             col("event_type")), ignoreNulls = true).over(wp))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    })
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   // ---- last-touch attribution -------------------------------------------
 

@@ -44,14 +44,6 @@ object Similarity extends QueryModule {
 
   import Tables._
 
-  /** Frames persisted by queries in this module (the trained k-means
-    * codebook below) — released by Verify/Bench before session stop,
-    * same discipline as Dedup's signature caches. Per-CALL persists,
-    * never memoized across calls: a bench retry sweep must re-pay
-    * training, not measure a warm cache.
-    */
-  private val persisted = new graft.PersistRegistry
-  def clearCaches(): Unit = persisted.clear()
   /** Distinguishes each call's codebook plan: without it the
     * CacheManager plan-matches call N's persist to call 1's cached
     * blocks ("already cached" WARN) and a bench retry sweep would
@@ -398,7 +390,9 @@ object Similarity extends QueryModule {
       .withColumn("cnrm", vecNorm(col("cvec")))
       .withColumn("train_run", lit(trainRun.incrementAndGet()))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    persisted.track(cent)
+    // a per-CALL persist, never memoized across calls: a bench retry
+    // sweep must re-pay training, not measure a warm cache
+    graft.Materialize.track(cent)
     val assign = assignCells(emb, cent)
     val q = emb.filter(col("vec_id") < NQUERIES)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"),

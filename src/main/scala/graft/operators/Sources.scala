@@ -433,7 +433,7 @@ object Sources extends QueryModule {
     * exit must not leave five table copies in tmpdir waiting for some
     * future JVM's dead-pid reaper). Called by Verify/Bench before
     * session stop and by the shutdown hook — same discipline as the
-    * module clearCaches() hooks: on a tmpfs root the leftovers are
+    * session store's release: on a tmpfs root the leftovers are
     * RAM, and a long-lived host accumulating one orphan set per JVM
     * would leak it (the first-use rmTree only covers pid reuse, not
     * the steady state).

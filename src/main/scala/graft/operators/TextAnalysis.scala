@@ -1167,6 +1167,11 @@ object TextAnalysis extends QueryModule {
     * BPE_LADDER.json), because live state per round is exactly one
     * checkpointed vocab plus one 1-row local result.
     */
+  /** Trains run this session — the memo's observability hook (specs
+    * assert N consumers cost exactly one train).
+    */
+  private[graft] val bpeTrainRuns = new java.util.concurrent.atomic.AtomicLong
+
   /** One train per (session, sfDir, merge count) — the
     * eventSpine/simhashTable memo discipline applied to the most
     * expensive derivation in the module: four consumers (train report,
@@ -1176,24 +1181,15 @@ object TextAnalysis extends QueryModule {
     * per-round driver jobs EACH (BPE_ENCODE.json pricing). The memoized
     * triple is two driver-local values plus the final-vocab frame (one
     * lazy rewrite over the last retained checkpoint), so the only
-    * session-lifetime state is that checkpoint — released by
-    * [[clearCaches]] like every other module cache. At cluster scale
-    * the equivalent is training once and SHIPPING the merge list —
+    * session-lifetime state is that checkpoint — released with the
+    * triple by the session store ([[graft.Materialize.clear]]) like
+    * every other memo. At cluster scale the equivalent is training once
+    * and SHIPPING the merge list —
     * [[writeTokenizer]]/[[readTokenizer]] below are that path.
     */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), (DataFrame, DataFrame, Seq[(String, String)])]
-
-  /** Trains run this session — the memo's observability hook (specs
-    * assert N consumers cost exactly one train).
-    */
-  private[graft] val bpeTrainRuns = new java.util.concurrent.atomic.AtomicLong
-
-  def clearCaches(): Unit = bpeCache.clear()
-
   private[graft] def bpeRounds(s: SparkSession, d: String,
       merges: Int = BPE_MERGES): (DataFrame, DataFrame, Seq[(String, String)]) =
-    bpeCache.computeIfAbsent((s, d, merges), _ => trainBpe(s, d, merges))
+    graft.Materialize.memo(s, d, s"text.bpe@$merges")(trainBpe(s, d, merges))
 
   /** @return (learned-merge rows as a local relation, final vocab
     *         frame, learned merge pairs in rank order — already
@@ -1225,7 +1221,7 @@ object TextAnalysis extends QueryModule {
       // vc is materialized eagerly and the previous round's winner is
       // already a local row, so the prior round's blocks are now
       // unreachable from ANY live lineage — release them
-      prevVc.foreach(ConnectedComponents.freeCheckpoint)
+      prevVc.foreach(graft.Materialize.free)
       prevVc = Some(vc)
       pairsOf(vc)
         .groupBy("a", "b").agg(sum("freq").as("n"))

@@ -29,18 +29,6 @@ object TrainingPipeline extends QueryModule {
 
   import Tables._
 
-  /** Frames persisted by this module, released by Verify/Bench via
-    * [[clearCaches]] — the shared end-of-run discipline.
-    */
-  private val persisted = new graft.PersistRegistry
-  private val memo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]
-  def clearCaches(): Unit = {
-    memo.values.forEach(df => { df.unpersist(false); () })
-    memo.clear()
-    persisted.clear()
-  }
-
   /** Materialize an n-gram-array frame BEFORE its explode consumers,
     * once per (session, sfDir) — the Dedup signature-table pattern.
     * Two reasons, both structural:
@@ -56,12 +44,13 @@ object TrainingPipeline extends QueryModule {
     *     otherwise each re-run the interpreted array build.
     *
     * At cluster scale the equivalent is writing the gram table to
-    * storage once — the point is the barrier, not the heap.
+    * storage once — the point is the barrier, not the heap. The frame
+    * lives in the session store, released with every other memo.
     */
   private def materialized(s: SparkSession, d: String, tag: String)(
       build: => DataFrame): DataFrame =
-    memo.computeIfAbsent((s, d, tag), _ => persisted.track(
-      build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+    graft.Materialize.memo(s, d, s"pipe.$tag")(
+      build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   // ---- shared text helpers (mirrors Dedup/TextAnalysis tokenization) --
 

@@ -133,7 +133,7 @@ class BpeMergeSpec extends SparkSpec {
   test("the train memo: all four BPE consumers on one (session, sfDir) " +
       "cost exactly ONE training run") {
     val dir = corpusOf(Seq.fill(4)("banana") ++ Seq.fill(2)("bandana"))
-    operators.TextAnalysis.clearCaches()
+    Materialize.clear()
     val before = operators.TextAnalysis.bpeTrainRuns.get()
     for (q <- Seq("text_bpe_train", "text_bpe_encode", "text_bpe_encode_rank",
         "text_bpe_doc_tokens"))

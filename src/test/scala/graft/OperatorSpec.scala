@@ -8,6 +8,8 @@ import org.apache.spark.sql.functions._
 class OperatorSpec extends SparkSpec {
 
   test("every registered query runs on sf0.001 and is non-degenerate") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
     val results = SparkEntry.queries.map { case (name, fn) =>
       val df = fn(spark, sfDir)
       name -> df.count()
@@ -19,6 +21,13 @@ class OperatorSpec extends SparkSpec {
     }
     val empty = mustBeNonEmpty.filter(_._2 == 0L).keys.toSeq
     assert(empty.isEmpty, s"empty results: $empty")
+    // the session store's release alone — no getPersistentRDDs backstop,
+    // the session kept open — frees every block the sweep memoized,
+    // tracked or materialized, checkpoints included
+    Materialize.clear()
+    val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(left.isEmpty,
+      s"persisted RDDs the store did not release: ${left.values.mkString("; ")}")
   }
 
   test("oracleSql keys are a subset of queries keys") {

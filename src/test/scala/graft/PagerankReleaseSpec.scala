@@ -30,7 +30,7 @@ class PagerankReleaseSpec extends SparkSpec {
   private val loops: Seq[(String, String, () => Unit)] = Seq(
     ("graph_pagerank", "pagerank", () => ()),
     ("dedup_cc", "connected-components",
-      () => operators.Dedup.forgetCcLabels(spark, sfDir)))
+      () => Materialize.forget(spark, sfDir, operators.Dedup.CcLabels)))
 
   for ((q, loop, rerun) <- loops)
   test(s"a cancelled $loop round releases the loop's checkpoints") {

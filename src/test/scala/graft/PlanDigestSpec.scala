@@ -32,12 +32,9 @@ class PlanDigestSpec extends SparkSpec {
     // CacheManager entries, and a module memo still holding a frame
     // whose cache registration was just dropped digests as the raw
     // (uncached) plan — exactly the order-dependent divergence the
-    // round-15 spine memo exposed when a prior suite had built it
-    operators.Dedup.clearCaches()
-    operators.ScalarFns.clearCaches()
-    operators.RelationalExt.clearCaches()
-    operators.Similarity.clearCaches()
-    operators.TrainingPipeline.clearCaches()
+    // round-15 spine memo exposed when a prior suite had built it.
+    // Every memo lives in the one session store.
+    Materialize.clear()
     spark.catalog.clearCache()
   }
 

@@ -188,7 +188,7 @@ class PlanShapeSpec extends SparkSpec {
       "spine's per-user exchange), never as a window over raw content") {
     // deterministic COLD spine: another suite (or test order) may have
     // materialized it for this (session, sfDir) already
-    operators.ScalarFns.clearCaches()
+    Materialize.clear()
     val plan = finalSection(planOf("event_attribution"))
     // exactly one full-stream hash exchange keyed on user_id alone (the
     // spine's); the channel rollup's exchange is over the purchase-
@@ -206,7 +206,7 @@ class PlanShapeSpec extends SparkSpec {
   test("the event spine plans ONE exchange + ONE sort feeding its " +
       "frame-grouped window pair, and warm reports add no window work " +
       "of their own") {
-    operators.ScalarFns.clearCaches()
+    Materialize.clear()
     val cold = finalSection(planOf("event_paths"))
     // one exchange + one per-user sort serve BOTH window nodes (Spark
     // groups the offset-frame leads and the running last into two

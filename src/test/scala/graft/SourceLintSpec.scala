@@ -74,6 +74,16 @@ class SourceLintSpec extends AnyFunSuite {
       "TextAnalysis gained a coalesce(1) beyond the tokenizer artifact write")
   }
 
+  test("operator modules keep no memo map or persist registry of their own") {
+    // memo and release are decided in one module, the session store
+    // (graft.Materialize). The Tables schema catalog lives in graft/,
+    // outside this scope, on purpose: it is keyed by file state, never
+    // by session, and outlives the store's release.
+    val hits = Seq("ConcurrentHashMap", "PersistRegistry")
+      .flatMap(offenders(_, "graft/operators"))
+    assert(hits.isEmpty, s"module-level memo or registry in: $hits")
+  }
+
   test("no sleeps or processing-time hacks in main sources") {
     // StreamStateBench: a measurement main, not an operator — its only
     // sleep drains the async StreamingQueryListener bus after each
