@@ -141,12 +141,8 @@ object Dedup extends QueryModule {
     * contract); the full-fold twin below is the spec-gated variant for
     * the scripts where `lower()` is the wrong fold.
     */
-  private def exactGroupsFold(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val planted = TextAnalysis.LATIN_FOLD_DOCS.toDF("doc_id", "text")
-    exactGroupsFoldOf(
-      documents(s, d).select(col("doc_id"), col("text")).unionByName(planted))
-  }
+  private def exactGroupsFold(s: SparkSession, d: String): DataFrame =
+    exactGroupsFoldOf(ScriptRouting.corpus(s, d, TextAnalysis.LATIN_FOLD_DOCS))
 
   /** The lower(nfc) grouping over an arbitrary (doc_id, text) frame —
     * shared by the contract query and the soundness spec's planted
@@ -170,17 +166,11 @@ object Dedup extends QueryModule {
       .agg(count(lit(1)).as("n_dups"), min(col("doc_id")).as("keeper"))
       .orderBy("h")
 
-  private def exactGroupsFoldOracle: String = {
-    val values = TextAnalysis.LATIN_FOLD_DOCS
-      .map { case (id, t) => s"(CAST($id AS BIGINT), '$t')" }
-      .mkString(", ")
-    s"""WITH corpus AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL SELECT * FROM (VALUES $values) t(doc_id, text))
+  private def exactGroupsFoldOracle: String =
+    s"""WITH ${ScriptRouting.corpusSql(TextAnalysis.LATIN_FOLD_DOCS)}
        |SELECT md5(lower(nfc_normalize(text))) AS h, count(*) AS n_dups,
        |  min(doc_id) AS keeper
        |FROM corpus GROUP BY 1 ORDER BY h""".stripMargin
-  }
 
   /** Keep-first on the normalized key — the row-level operator a user
     * actually runs to dedup a multilingual corpus: one keeper row per
@@ -189,35 +179,25 @@ object Dedup extends QueryModule {
     * a boilerplate doc duplicated 10^9 times costs one partial per
     * partition, not a single-task sort straggler).
     */
-  private def exactKeepFold(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val planted = TextAnalysis.LATIN_FOLD_DOCS.toDF("doc_id", "text")
-      .select(col("doc_id"), col("text"), lit("xx").as("lang"),
-        length(col("text")).cast("long").as("n_chars"))
-    documents(s, d).select("doc_id", "text", "lang", "n_chars")
-      .unionByName(planted)
+  private def exactKeepFold(s: SparkSession, d: String): DataFrame =
+    ScriptRouting.corpus(s, d, TextAnalysis.LATIN_FOLD_DOCS,
+        "lang" -> lit("xx"), "n_chars" -> length(col("text")).cast("long"))
       .groupBy(md5(expr("lower(nfc(text))")).as("h"))
       .agg(min(struct(col("doc_id"), col("lang"), col("n_chars"))).as("keep"))
       .select(col("keep.doc_id").as("doc_id"), col("keep.lang").as("lang"),
         col("keep.n_chars").as("n_chars"))
       .orderBy("doc_id")
-  }
 
-  private def exactKeepFoldOracle: String = {
-    val values = TextAnalysis.LATIN_FOLD_DOCS
-      .map { case (id, t) =>
-        s"(CAST($id AS BIGINT), '$t', 'xx', CAST(length('$t') AS BIGINT))" }
-      .mkString(", ")
-    s"""WITH corpus AS (
-       |  SELECT doc_id, text, lang, n_chars FROM documents
-       |  UNION ALL SELECT * FROM (VALUES $values) t(doc_id, text, lang, n_chars))
+  private def exactKeepFoldOracle: String =
+    s"""WITH ${ScriptRouting.corpusSql(TextAnalysis.LATIN_FOLD_DOCS, extra = Seq(
+         "lang" -> ((_: String) => "'xx'"),
+         "n_chars" -> ((t: String) => s"CAST(length('$t') AS BIGINT)")))}
        |SELECT doc_id, lang, n_chars FROM (
        |  SELECT doc_id, lang, n_chars,
        |    row_number() OVER (PARTITION BY md5(lower(nfc_normalize(text)))
        |      ORDER BY doc_id) AS rn
        |  FROM corpus)
        |WHERE rn = 1 ORDER BY doc_id""".stripMargin
-  }
 
   // ---- MinHash signature table (shared, computed once) ----------------
 
@@ -301,6 +281,13 @@ object Dedup extends QueryModule {
     (0 until K).map { k =>
       s"substr(list_min(list_transform(shingles, s -> md5('$k|' || s))), 1, 8) AS m$k"
     }.mkString(",\n    ")
+
+  /** The oracles' minhash agreement between signature rows `sa` and
+    * `sb` — K × their estimated Jaccard.
+    */
+  private val matchSum: String = (0 until K)
+    .map(k => s"CASE WHEN sa.m$k = sb.m$k THEN 1 ELSE 0 END")
+    .mkString(" + ")
 
   private def minhashSig(s: SparkSession, d: String): DataFrame =
     sigTable(s, d)
@@ -421,19 +408,20 @@ object Dedup extends QueryModule {
   private def minhashPairs(s: SparkSession, d: String): DataFrame =
     verifiedPairs(s, d).orderBy("doc_a", "doc_b")
 
-  private def minhashPairsOracle: String = {
-    val matches = (0 until K)
-      .map(k => s"CASE WHEN sa.m$k = sb.m$k THEN 1 ELSE 0 END")
-      .mkString(" + ")
-    s"""WITH $shinglesCte,
+  /** DuckDB twin of [[verifiedPairsOfSigs]] at 0.5 over a shingle chain
+    * ending in `sh(doc_id, shingles)` — shared by both bases' pair rows.
+    */
+  private def pairsOracle(shingles: String): String =
+    s"""WITH $shingles,
        |$candidatePairsCte
-       |SELECT doc_a, doc_b, round(($matches)::DOUBLE / $K, 6) AS est_jaccard
+       |SELECT doc_a, doc_b, round(($matchSum)::DOUBLE / $K, 6) AS est_jaccard
        |FROM pairs
        |JOIN sig sa ON doc_a = sa.doc_id
        |JOIN sig sb ON doc_b = sb.doc_id
-       |WHERE ($matches)::DOUBLE / $K >= 0.5
+       |WHERE ($matchSum)::DOUBLE / $K >= 0.5
        |ORDER BY doc_a, doc_b""".stripMargin
-  }
+
+  private def minhashPairsOracle: String = pairsOracle(shinglesCte)
 
   // ---- PageRank over the near-dup graph -------------------------------
 
@@ -537,9 +525,6 @@ object Dedup extends QueryModule {
     * re-expansion OOMs a 128 GiB host before round 3.
     */
   private def pagerankOracle: String = {
-    val matches = (0 until K)
-      .map(k => s"CASE WHEN sa.m$k = sb.m$k THEN 1 ELSE 0 END")
-      .mkString(" + ")
     val iters = (1 to PR_ITERS).map { k =>
       s"""r$k AS MATERIALIZED (
          |  SELECT n.doc_id,
@@ -555,7 +540,7 @@ object Dedup extends QueryModule {
        |  SELECT doc_a, doc_b FROM pairs
        |  JOIN sig sa ON doc_a = sa.doc_id
        |  JOIN sig sb ON doc_b = sb.doc_id
-       |  WHERE ($matches)::DOUBLE / $K >= 0.5),
+       |  WHERE ($matchSum)::DOUBLE / $K >= 0.5),
        |edges AS (
        |  SELECT doc_a AS src, doc_b AS dst FROM vp
        |  UNION ALL SELECT doc_b AS src, doc_a AS dst FROM vp),
@@ -875,34 +860,36 @@ object Dedup extends QueryModule {
       .orderBy("doc_id")
   }
 
-  /** DuckDB twin of [[incrementalDedup]]'s dominance rule, phrased over
+  /** DuckDB twin of the parity-split [[dedupAgainstSigs]] dominance rule
+    * over a shingle chain ending in `sh(doc_id, shingles)`, phrased over
     * the all-docs candidate-pair CTE: an odd (new) doc is dropped iff a
     * verified pair (agreement >= t·K) links it to an even (corpus) doc —
     * either side of the pair — or to a SMALLER odd doc (`doc_a < doc_b`
-    * in `pairs`, so that's exactly the `doc_b % 2 = 1` branch). A larger
-    * odd partner never drops a doc, hence the `doc_b % 2 = 0` guard on
-    * the second branch.
+    * in `pairs`, so that's exactly the odd-`doc_b` branch). A larger odd
+    * partner never drops a doc, hence the `doc_b % 2 = 0` guard on the
+    * second branch. `odd` completes `doc_id % 2` to the batch test;
+    * `survivors` is the select list and FROM clause of the kept rows.
     */
-  private def incrementalDedupOracle: String = {
-    val matches = (0 until K)
-      .map(k => s"CASE WHEN sa.m$k = sb.m$k THEN 1 ELSE 0 END")
-      .mkString(" + ")
-    s"""WITH $shinglesCte,
+  private def dominanceOracle(shingles: String, odd: String,
+      survivors: String): String =
+    s"""WITH $shingles,
        |$candidatePairsCte,
        |verified AS (
        |  SELECT doc_a, doc_b FROM pairs
        |  JOIN sig sa ON doc_a = sa.doc_id
        |  JOIN sig sb ON doc_b = sb.doc_id
-       |  WHERE ($matches) >= ${(0.5 * K).toInt}),
+       |  WHERE ($matchSum) >= ${(0.5 * K).toInt}),
        |dropped AS (
-       |  SELECT doc_b AS new_id FROM verified WHERE doc_b % 2 = 1
+       |  SELECT doc_b AS new_id FROM verified WHERE doc_b % 2 $odd
        |  UNION
        |  SELECT doc_a AS new_id FROM verified
-       |  WHERE doc_a % 2 = 1 AND doc_b % 2 = 0)
-       |SELECT doc_id, lang, n_chars FROM documents
-       |WHERE doc_id % 2 = 1 AND doc_id NOT IN (SELECT new_id FROM dropped)
+       |  WHERE doc_a % 2 $odd AND doc_b % 2 = 0)
+       |SELECT $survivors
+       |WHERE doc_id % 2 $odd AND doc_id NOT IN (SELECT new_id FROM dropped)
        |ORDER BY doc_id""".stripMargin
-  }
+
+  private def incrementalDedupOracle: String =
+    dominanceOracle(shinglesCte, "= 1", "doc_id, lang, n_chars FROM documents")
 
   // ---- character-n-gram near-dup for unsegmented scripts ----------------
 
@@ -950,15 +937,15 @@ object Dedup extends QueryModule {
     * boundaries, so punctuation variants of the same prose land on the
     * same grams.
     *
-    * Scale shape: identical to the word pipeline — per-row codegen'd
-    * gram build, distinct, explode → codegen md5 → partial-min
-    * signatures, (band, digest)-keyed LSH join — but the shingle
-    * EXPLOSION is one row per code point rather than per word (~3–5×
-    * the word base's rows on segmented text). A production pipeline
-    * therefore routes by script after langid: word shingles for
-    * segmented languages, char grams for unsegmented ones — both bases
-    * share [[sigOf]] and the banding, so the routing is a column
-    * choice, not a second pipeline.
+    * Scale shape: identical to the word pipeline — both bases share
+    * [[sigOf]] and the banding — but the shingle EXPLOSION is one row
+    * per code point rather than per word (~3–5× the word base's rows on
+    * segmented text). Hence every char-base consumer reads the
+    * [[ScriptRouting.routed]] slice: run UNROUTED over the segmented
+    * 500k-doc rehearsal corpus, the base stayed bit-correct (42.7M
+    * verified pairs matched DuckDB at 100× — SCALE.md) but over-paired
+    * ~1,700× the word base at ~200× its wall, and every letterless doc
+    * would share the `""` fallback shingle.
     */
   private def withCharShingles(df: DataFrame): DataFrame =
     df.withColumn("shingles",
@@ -966,50 +953,19 @@ object Dedup extends QueryModule {
         .charNGrams(lower(org.apache.spark.sql.graft.TextColumns
           .nfc(col("text"))), CHAR_GRAM)))
 
-  /** The SCRIPT ROUTING the scaladoc above prescribes, applied: only
-    * docs whose letter mass is majority non-ASCII enter the char-gram
-    * base (a production pipeline routes on langid's script class; this
-    * integer predicate is the same decision for the contract corpus).
-    * Measured necessity, not taste: run UNROUTED over the segmented
-    * 500k-doc rehearsal corpus, the base stays bit-correct (42.7M
-    * verified pairs matched DuckDB at 100× — SCALE.md) but over-pairs
-    * ~1,700× the word base at ~200× its wall — a shared word
-    * vocabulary makes 5-char-gram overlap near-universal, re-creating
-    * the candidate blowup LSH exists to avoid. Routing also retires a
-    * degeneracy: EVERY letterless doc shares the `""` fallback shingle
-    * (they would all pair at 1.0); the ratio predicate drops them
-    * (0 · 2 > 0 is false). The predicate itself is the ONE shared
-    * definition in [[ScriptRouting]] (also consumed by
-    * `text_script_route` and both oracles — see its scaladoc for the
-    * `lower()` cross-engine caveat class).
-    */
-  private def unsegmentedOnly(df: DataFrame): DataFrame =
-    ScriptRouting.unsegmentedOnly(df)
-
   private def charSigTable(s: SparkSession, d: String): DataFrame =
     graft.Materialize.memo(s, d, "dedup.char_sig_table") {
-      import s.implicits._
-      val planted = CJK_NEARDUP_DOCS.toDF("doc_id", "text")
-      val corpus = documents(s, d).select(col("doc_id"), col("text"))
-        .unionByName(planted)
-      sigOf(tracked(withCharShingles(unsegmentedOnly(corpus))
+      sigOf(tracked(withCharShingles(ScriptRouting.routed(
+          ScriptRouting.corpus(s, d, CJK_NEARDUP_DOCS)))
         .select("doc_id", "shingles")
         .persist(StorageLevel.MEMORY_AND_DISK)))
         .persist(StorageLevel.MEMORY_AND_DISK)
     }
 
-  /** LSH candidates over the char-gram signatures whose estimated
-    * Jaccard clears 0.5 — same banding, same verify, same output shape
-    * as [[minhashPairs]], so the two bases read as one API with two
-    * tokenization policies. This is the CERTIFIED CONTRACT INSTANCE:
-    * it unions the planted CJK docs so the green oracle row proves
-    * actual pairings on every run (the all-ASCII fixture routes no
-    * real doc into the char base, so without the plant the row would
-    * certify an empty set). The planted rows are therefore visible in
-    * THIS query's output by design; a pipeline deduplicating a real
-    * corpus calls the plant-free [[chargramPairsOf]] instead
-    * (round-16 advice: split the certification from the production
-    * entry point rather than ship synthetic pairs to users).
+  /** [[minhashPairs]] over the char-gram signatures of the routed
+    * corpus ∪ [[CJK_NEARDUP_DOCS]]. The planted rows are visible in
+    * this query's output by design; a pipeline deduplicating a real
+    * corpus calls the plant-free [[chargramPairsOf]].
     */
   private def chargramPairs(s: SparkSession, d: String): DataFrame =
     verifiedPairsOfSigs(charSigTable(s, d), 0.5)
@@ -1027,55 +983,29 @@ object Dedup extends QueryModule {
     */
   def chargramPairsOf(docs: DataFrame, threshold: Double = 0.5): DataFrame =
     verifiedPairsOfSigs(
-      sigOf(withCharShingles(unsegmentedOnly(docs))
+      sigOf(withCharShingles(ScriptRouting.routed(docs))
         .select("doc_id", "shingles")), threshold)
 
-  /** Oracle twin: the char-gram squeeze + windows in SQL (DuckDB's
-    * substr/length are code-point-indexed, matching the expression's
-    * window arithmetic — proven on the planted 3-byte CJK rows every
-    * run), ending in the same `sh$sfx(doc_id, shingles)` shape as
-    * [[shinglesCte]] so [[candidatePairsCteFor]] composes verbatim.
-    * CTE names suffixed so the chain can sit beside the word chain in
-    * the routed-union CC oracle.
+  /** Oracle twin of [[withCharShingles]] over the routed corpus ∪
+    * `planted` (DuckDB's substr/length are code-point-indexed, matching
+    * the expression's window arithmetic — proven on the planted 3-byte
+    * CJK rows every run), ending in `sh$sfx(doc_id, shingles)` — the
+    * [[shinglesCte]] shape, so [[candidatePairsCteFor]] composes
+    * verbatim and the chain can sit beside the word chain in the
+    * routed-union CC oracle.
     */
-  private def charShinglesCteFor(sfx: String,
-      docs: Seq[(Long, String)] = CJK_NEARDUP_DOCS): String = {
-    val values = docs
-      .map { case (id, t) => s"(CAST($id AS BIGINT), '$t')" }
-      .mkString(", ")
-    s"""corpus$sfx AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL SELECT * FROM (VALUES $values) t(doc_id, text)),
-       |sq0$sfx AS (
-       |  SELECT doc_id,
-       |    ${ScriptRouting.sqSql} AS sq
-       |  FROM corpus$sfx),
-       |sq$sfx AS (
-       |  SELECT doc_id, sq FROM sq0$sfx
-       |  WHERE ${ScriptRouting.unsegmentedSql("sq")}),
+  private def charShinglesCte(planted: Seq[(Long, String)],
+      sfx: String = ""): String =
+    s"""${ScriptRouting.routedSql(planted, sfx)},
        |sh$sfx AS (
        |  SELECT doc_id, list_distinct(CASE WHEN length(sq) >= $CHAR_GRAM
        |    THEN list_transform(range(length(sq) - ${CHAR_GRAM - 1}),
        |      i -> substr(sq, i + 1, $CHAR_GRAM))
        |    ELSE [sq] END) AS shingles
-       |  FROM sq$sfx)""".stripMargin
-  }
+       |  FROM routed$sfx)""".stripMargin
 
-  private def charShinglesCte: String = charShinglesCteFor("")
-
-  private def chargramPairsOracle: String = {
-    val matches = (0 until K)
-      .map(k => s"CASE WHEN sa.m$k = sb.m$k THEN 1 ELSE 0 END")
-      .mkString(" + ")
-    s"""WITH $charShinglesCte,
-       |$candidatePairsCte
-       |SELECT doc_a, doc_b, round(($matches)::DOUBLE / $K, 6) AS est_jaccard
-       |FROM pairs
-       |JOIN sig sa ON doc_a = sa.doc_id
-       |JOIN sig sb ON doc_b = sb.doc_id
-       |WHERE ($matches)::DOUBLE / $K >= 0.5
-       |ORDER BY doc_a, doc_b""".stripMargin
-  }
+  private def chargramPairsOracle: String =
+    pairsOracle(charShinglesCte(CJK_NEARDUP_DOCS))
 
   // ---- incremental dedup for unsegmented scripts ------------------------
 
@@ -1102,58 +1032,36 @@ object Dedup extends QueryModule {
     -57L -> "春天的花园里开满了各种颜色的鲜花蝴蝶在花丛中飞舞蜜蜂忙着采蜜小鸟在枝头歌唱温暖的阳光洒满大地微风轻拂柳条摇动",
     -55L -> "量子计算利用叠加态和纠缠实现并行计算能力远超经典计算机在密码学药物设计材料科学领域具有广阔应用前景值得期待关注")
 
-  /** Incremental near-dup dedup for UNSEGMENTED scripts — the routed
-    * twin of [[dedupAgainst]], and the last pair-family consumer that
-    * was still word-base-only after round 17's cluster/removal union:
-    * a new CJK crawl document shares ZERO word shingles with the CJK
-    * corpus doc it near-duplicates (each is ONE `\p{L}` run), so the
-    * word-base dominance pass keeps every unsegmented duplicate —
+  /** [[dedupAgainst]] for UNSEGMENTED scripts: a new CJK crawl document
+    * shares ZERO word shingles with the CJK corpus doc it
+    * near-duplicates (each is ONE `\p{L}` run), so the word-base
+    * dominance pass keeps every unsegmented duplicate —
     * DedupIncrementalSpec pins exactly that blindness and this catch.
-    *
-    * Both sides route through [[ScriptRouting]] (latin docs are the
-    * word base's job, letterless docs nobody's), build char-gram
-    * signatures, and run the SAME [[dedupAgainstSigs]] dominance join —
-    * one rule, two signature front-ends, mirroring the cluster path.
-    * Scale shape is [[dedupAgainst]]'s: corpus text is never read
-    * (signatures only), shuffle keys are band digests and doc_ids.
+    * Both sides route through [[ScriptRouting.routed]] and build
+    * char-gram signatures for the same [[dedupAgainstSigs]] join.
     *
     * @return the kept rows of `newDocs`'s routed slice, all columns.
     */
   def dedupAgainstChars(corpusDocs: DataFrame, newDocs: DataFrame,
       threshold: Double = 0.5): DataFrame = {
     val corpusSigs = sigOf(withCharShingles(
-      ScriptRouting.unsegmentedOnly(corpusDocs)).select("doc_id", "shingles"))
-    val newRouted = ScriptRouting.unsegmentedOnly(newDocs)
+      ScriptRouting.routed(corpusDocs)).select("doc_id", "shingles"))
+    val newRouted = ScriptRouting.routed(newDocs).drop("sq")
     val newSigs = tracked(sigOf(withCharShingles(newRouted)
       .select("doc_id", "shingles"))
       .persist(StorageLevel.MEMORY_AND_DISK))
     dedupAgainstSigs(corpusSigs, newRouted, newSigs, threshold)
   }
 
-  /** Driver-gated exercise of [[dedupAgainstChars]]: even doc_ids of
-    * documents ∪ [[CJK_INCR_DOCS]] play the kept corpus, odd ids the
-    * batch; output is the routed batch's survivors with their letter
-    * mass. The all-ASCII fixture routes no real doc, so the planted
-    * rows ARE the certified content (the [[chargramPairs]] pattern —
-    * a plant-free row would certify the empty set); production callers
-    * use the plant-free entry point above.
+  /** [[incrementalDedup]] over the routed corpus ∪ [[CJK_INCR_DOCS]]
+    * (negative odd ids, hence `=!= 0` for the batch), reporting each
+    * survivor's letter mass. One routed signature build serves both
+    * parity slices; the batch's routed slice is a semi join against its
+    * own signature ids.
     */
   private def incrementalDedupChars(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val planted = CJK_INCR_DOCS.toDF("doc_id", "text")
-    val corpus = documents(s, d).select(col("doc_id"), col("text"))
-      .unionByName(planted)
-    // r17 optimization: ONE routed signature build over the whole
-    // corpus, sliced by parity — the word-base [[incrementalDedup]]'s
-    // own argument applies verbatim (a per-doc signature doesn't
-    // depend on what else is in the corpus, so slicing a shared table
-    // IS computing each side's signatures). The previous shape called
-    // [[dedupAgainstChars]] on the two parity slices, which ran the
-    // squeeze+routing+gram scan over the corpus THREE times (corpus
-    // route, batch route, batch sigs); this runs it once and derives
-    // the batch's routed slice by a semi join against its own sig ids.
-    // Results identical (same oracle); measured 2.0 → 1.2 s min solo.
-    val sigs = tracked(sigOf(withCharShingles(unsegmentedOnly(corpus))
+    val corpus = ScriptRouting.corpus(s, d, CJK_INCR_DOCS)
+    val sigs = tracked(sigOf(withCharShingles(ScriptRouting.routed(corpus))
       .select("doc_id", "shingles")).select("doc_id", "sig")
       .persist(StorageLevel.MEMORY_AND_DISK))
     val oddSigs = sigs.filter(col("doc_id") % 2 =!= 0)
@@ -1166,26 +1074,9 @@ object Dedup extends QueryModule {
       .orderBy("doc_id")
   }
 
-  private def incrementalDedupCharsOracle: String = {
-    val matches = (0 until K)
-      .map(k => s"CASE WHEN sa.m$k = sb.m$k THEN 1 ELSE 0 END")
-      .mkString(" + ")
-    s"""WITH ${charShinglesCteFor("", CJK_INCR_DOCS)},
-       |$candidatePairsCte,
-       |verified AS (
-       |  SELECT doc_a, doc_b FROM pairs
-       |  JOIN sig sa ON doc_a = sa.doc_id
-       |  JOIN sig sb ON doc_b = sb.doc_id
-       |  WHERE ($matches) >= ${(0.5 * K).toInt}),
-       |dropped AS (
-       |  SELECT doc_b AS new_id FROM verified WHERE doc_b % 2 <> 0
-       |  UNION
-       |  SELECT doc_a AS new_id FROM verified
-       |  WHERE doc_a % 2 <> 0 AND doc_b % 2 = 0)
-       |SELECT doc_id, length(sq)::BIGINT AS n_letters FROM sq
-       |WHERE doc_id % 2 <> 0 AND doc_id NOT IN (SELECT new_id FROM dropped)
-       |ORDER BY doc_id""".stripMargin
-  }
+  private def incrementalDedupCharsOracle: String =
+    dominanceOracle(charShinglesCte(CJK_INCR_DOCS), "<> 0",
+      "doc_id, length(sq)::BIGINT AS n_letters FROM routed")
 
   // ---- streaming incremental dedup ------------------------------------
 
@@ -1678,12 +1569,7 @@ object Dedup extends QueryModule {
     * `WITH RECURSIVE` and aggregate `min(lbl)` per doc_id. Shared with
     * the composed pipeline oracle in TextAnalysis.
     */
-  private[operators] def ccOracleCtes: String = {
-    val matches = (0 until K)
-      .map(k => s"CASE WHEN sa.m$k = sb.m$k THEN 1 ELSE 0 END")
-      .mkString(" + ")
-    val plantedIds = CJK_NEARDUP_DOCS
-      .map { case (id, _) => s"(CAST($id AS BIGINT))" }.mkString(", ")
+  private[operators] def ccOracleCtes: String =
     s"""$shinglesCte,
        |$candidatePairsCte,
        |sqw AS (
@@ -1695,14 +1581,14 @@ object Dedup extends QueryModule {
        |  JOIN lat lb ON doc_b = lb.doc_id
        |  JOIN sig sa ON doc_a = sa.doc_id
        |  JOIN sig sb ON doc_b = sb.doc_id
-       |  WHERE 2 * ($matches) >= $K),
-       |${charShinglesCteFor("c")},
+       |  WHERE 2 * ($matchSum) >= $K),
+       |${charShinglesCte(CJK_NEARDUP_DOCS, "c")},
        |${candidatePairsCteFor("shc", "c")},
        |cfilt AS (
        |  SELECT doc_a, doc_b FROM pairsc
        |  JOIN sigc sa ON doc_a = sa.doc_id
        |  JOIN sigc sb ON doc_b = sb.doc_id
-       |  WHERE 2 * ($matches) >= $K),
+       |  WHERE 2 * ($matchSum) >= $K),
        |filt AS (
        |  SELECT doc_a, doc_b FROM wfilt
        |  UNION ALL
@@ -1711,14 +1597,11 @@ object Dedup extends QueryModule {
        |  SELECT doc_a AS src, doc_b AS dst FROM filt
        |  UNION ALL
        |  SELECT doc_b AS src, doc_a AS dst FROM filt),
-       |nodes AS (
-       |  SELECT doc_id FROM documents
-       |  UNION ALL SELECT * FROM (VALUES $plantedIds) t(doc_id)),
+       |nodes AS (SELECT doc_id FROM corpusc),
        |reach AS (
        |  SELECT doc_id, doc_id AS lbl FROM nodes
        |  UNION
        |  SELECT e.dst AS doc_id, r.lbl FROM reach r JOIN edges e ON e.src = r.doc_id)""".stripMargin
-  }
 
   private def ccClustersOracle: String =
     s"""WITH RECURSIVE $ccOracleCtes
@@ -1734,13 +1617,12 @@ object Dedup extends QueryModule {
     */
   private val SUB_GRAM = 8
 
-  /** Positional window table (doc_id, pos, gh): one row per [[SUB_GRAM]]-
-    * word sliding window of each document with at least SUB_GRAM words,
-    * gh = 16-char md5 prefix of the window text.
+  /** Positional window table (doc_id, pos, gh) of a (doc_id, grams)
+    * frame: one row per window, gh = 16-char md5 prefix of its text.
     *
     * Computed FRESH per consumer — deliberately uncached, unlike the
     * module's shingle/signature tables. The whole pass is one codegen'd
-    * projection over the scan plus the explode ([[WordNGrams]] is a
+    * projection over the scan plus the explode (the n-gram scanner is a
     * Catalyst expression the Generate evaluates once per DOCUMENT, so
     * there is no per-output-element re-evaluation to barrier away —
     * measured 23.6M windows in ~11 s at the 500k-doc decade), while
@@ -1752,36 +1634,37 @@ object Dedup extends QueryModule {
     * use, and the shape that still works when the corpus is 100 TB and
     * no corpus-sized cache exists.
     */
-  private def subGramTable(s: SparkSession, d: String): DataFrame =
-    documents(s, d)
-      // windows build over the NORMALIZED word stream — lower(nfc) over
-      // \p{L} runs, the same fold+scanner as the shingle front-end: a
-      // capitalized copy of a license block must hit the lowercase
-      // original, a non-Latin license block must window at all, and the
-      // cut side below tokenizes identically so span indices line up.
-      // The < SUB_GRAM-words guard is folded into the n-gram scanner
-      // (WordNGramsExact: empty array below the window width) — the
-      // spelled-out `when(size(letterTokens(...)) >= n, ...)` guard ran
-      // a SECOND full letter-run scan per document per pass, measured
-      // ~30 % of this table's scan stage (OPTIMIZATION_r18.md §substring)
-      .withColumn("grams",
-        org.apache.spark.sql.graft.TextColumns.wordNGramsUExact(
-          lower(org.apache.spark.sql.graft.TextColumns.nfc(col("text"))),
-          SUB_GRAM))
-      .select(col("doc_id"), posexplode(col("grams")).as(Seq("pos", "gram")))
+  private def windowsOf(grams: DataFrame): DataFrame =
+    grams.select(col("doc_id"), posexplode(col("grams")).as(Seq("pos", "gram")))
       .select(col("doc_id"), col("pos").cast(LongType).as("pos"),
         substring(md5(col("gram")), 1, 16).as("gh"))
 
+  /** [[SUB_GRAM]]-word windows over the NORMALIZED word stream — lower(nfc)
+    * over `\p{L}` runs, the same fold+scanner as the shingle front-end:
+    * a capitalized copy of a license block must hit the lowercase
+    * original, a non-Latin license block must window at all, and the
+    * cut side below tokenizes identically so span indices line up.
+    * Documents below the window width yield no windows (WordNGramsExact
+    * returns an empty array there, in the same letter scan).
+    */
+  private def subGramTable(s: SparkSession, d: String): DataFrame =
+    windowsOf(documents(s, d)
+      .withColumn("grams",
+        org.apache.spark.sql.graft.TextColumns.wordNGramsUExact(
+          lower(org.apache.spark.sql.graft.TextColumns.nfc(col("text"))),
+          SUB_GRAM)))
+
   /** Exact repeated-substring spans — the substring-level dedup of Lee et
     * al. 2022 ("Deduplicating Training Data Makes Language Models
-    * Better"): for every document, each MAXIMAL run of sliding
-    * [[SUB_GRAM]]-word windows whose text occurs at least twice anywhere
-    * in the corpus (other documents or elsewhere in the same one).
-    * Adjacent duplicated windows merge gaps-and-islands style
+    * Better"): for every document, each MAXIMAL run of `width`-unit
+    * windows of `pos` ([[windowsOf]]) whose text occurs at least twice
+    * anywhere in the corpus (other documents or elsewhere in the same
+    * one). Adjacent duplicated windows merge gaps-and-islands style
     * (island = pos − row_number over pos), so a long verbatim repeat
-    * reports as ONE span with its word extent, not n overlapping
-    * windows. Emits (doc_id, span_start, span_words, n_windows) — the
-    * cut list a substring-dedup pass applies to the corpus.
+    * reports as ONE span, not n overlapping windows. Emits (doc_id,
+    * span_start, span_end exclusive, n_windows) — the cut list a
+    * substring-dedup pass applies to the corpus; the word and char
+    * reports and the cut path all read it.
     *
     * Differs from the doc-level MinHash family above (whole-document
     * similarity) and from pipe_decontaminate (cross-corpus containment):
@@ -1795,53 +1678,42 @@ object Dedup extends QueryModule {
     * partial-aggregated counts on the build side — pinned with an
     * explicit shuffle_hash hint, because at fixture scale size-based
     * planning would broadcast the tiny aggregated table and the
-    * committed plan digest would record the wrong shape for 100 TB. The island window
-    * sorts each document's hits only — bounded by document length,
-    * never corpus size. At fixed window width the whole pipeline is
-    * linear in corpus words.
+    * committed plan digest would record the wrong shape for 100 TB. The
+    * island window sorts each document's hits only — bounded by
+    * document length, never corpus size. At fixed window width the
+    * whole pipeline is linear in corpus units.
     */
-  /** Maximal duplicated spans as (doc_id, span_start, span_end
-    * exclusive, n_windows) — the shared core of the report
-    * ([[substringSpans]]) and the apply path ([[substringCut]]).
-    */
-  private def spanFrame(s: SparkSession, d: String): DataFrame = {
-    val pos = subGramTable(s, d)
+  private def spanFrame(pos: DataFrame, width: Int): DataFrame = {
     val dup = pos.groupBy("gh").agg(count(lit(1)).as("c"))
       .filter(col("c") >= 2).select("gh")
     val w = Window.partitionBy("doc_id").orderBy("pos")
-    // the duplicate-window table is corpus-DERIVED — it grows with the
-    // corpus, so the scale shape is a shuffled hash join on the digest,
-    // never a broadcast. Fixture-scale stats would broadcast it (the
-    // aggregated dup table is tiny at sf0.01), so the hint pins the
-    // join the 100 TB plan needs — the same plan at every scale, and
-    // the plan the digest snapshot records
     pos.join(dup.hint("shuffle_hash"), "gh")
       .withColumn("island", col("pos") - row_number().over(w).cast(LongType))
       .groupBy("doc_id", "island")
       .agg(min("pos").as("span_start"),
-        (max(col("pos")) + lit(SUB_GRAM.toLong)).as("span_end"),
+        (max(col("pos")) + lit(width.toLong)).as("span_end"),
         count(lit(1)).as("n_windows"))
   }
 
-  private def substringSpans(s: SparkSession, d: String): DataFrame =
-    spanFrame(s, d)
+  /** The span report: (doc_id, span_start, span length as `unit`,
+    * n_windows).
+    */
+  private def spanReport(pos: DataFrame, width: Int, unit: String): DataFrame =
+    spanFrame(pos, width)
       .select(col("doc_id"), col("span_start"),
-        (col("span_end") - col("span_start")).as("span_words"),
+        (col("span_end") - col("span_start")).as(unit),
         col("n_windows"))
       .orderBy("doc_id", "span_start")
 
-  /** Shared oracle CTE chain ending in `spans` (doc_id, st, en, nw). */
-  private def spanOracleCtes: String = {
-    val gram = (1 to SUB_GRAM).map(j => s"words[i+$j]").mkString(" || ' ' || ")
-    s"""docs AS (
-       |  SELECT doc_id,
-       |    list_filter(string_split_regex(lower(nfc_normalize(text)), '[^\\p{L}]+'), x -> x <> '') AS words
-       |  FROM documents),
-       |g AS (
-       |  SELECT doc_id, CASE WHEN len(words) >= $SUB_GRAM
-       |    THEN list_transform(range(len(words)-${SUB_GRAM - 1}), i -> $gram)
-       |    ELSE [] END AS grams
-       |  FROM docs),
+  private def substringSpans(s: SparkSession, d: String): DataFrame =
+    spanReport(subGramTable(s, d), SUB_GRAM, "span_words")
+
+  /** Oracle twin of [[spanFrame]] over a window chain ending in
+    * `g(doc_id, grams)`: CTEs pos, dup, hit, isl and spans(doc_id, st,
+    * en, nw).
+    */
+  private def spanCtes(grams: String, width: Int): String =
+    s"""$grams,
        |pos AS (
        |  SELECT doc_id, unnest(range(len(grams))) AS pos,
        |    unnest(list_transform(grams, x -> substr(md5(x), 1, 16))) AS gh
@@ -1852,16 +1724,33 @@ object Dedup extends QueryModule {
        |  pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS island
        |  FROM hit),
        |spans AS (
-       |  SELECT doc_id, min(pos) AS st, max(pos) + $SUB_GRAM AS en,
+       |  SELECT doc_id, min(pos) AS st, max(pos) + $width AS en,
        |    count(*) AS nw
        |  FROM isl GROUP BY doc_id, island)""".stripMargin
+
+  /** Oracle twin of [[spanReport]] over [[spanCtes]]. */
+  private def spanReportOracle(spans: String, unit: String): String =
+    s"""WITH $spans
+       |SELECT doc_id, st::BIGINT AS span_start,
+       |  (en - st)::BIGINT AS $unit, nw::BIGINT AS n_windows
+       |FROM spans ORDER BY doc_id, span_start""".stripMargin
+
+  /** The word chain: CTEs docs(doc_id, words) and g, then spans. */
+  private def spanOracleCtes: String = {
+    val gram = (1 to SUB_GRAM).map(j => s"words[i+$j]").mkString(" || ' ' || ")
+    spanCtes(s"""docs AS (
+       |  SELECT doc_id,
+       |    list_filter(string_split_regex(lower(nfc_normalize(text)), '[^\\p{L}]+'), x -> x <> '') AS words
+       |  FROM documents),
+       |g AS (
+       |  SELECT doc_id, CASE WHEN len(words) >= $SUB_GRAM
+       |    THEN list_transform(range(len(words)-${SUB_GRAM - 1}), i -> $gram)
+       |    ELSE [] END AS grams
+       |  FROM docs)""".stripMargin, SUB_GRAM)
   }
 
   private def substringSpansOracle: String =
-    s"""WITH $spanOracleCtes
-       |SELECT doc_id, st::BIGINT AS span_start,
-       |  (en - st)::BIGINT AS span_words, nw::BIGINT AS n_windows
-       |FROM spans ORDER BY doc_id, span_start""".stripMargin
+    spanReportOracle(spanOracleCtes, "span_words")
 
   /** The apply path of [[substringSpans]]: cut every word covered by a
     * duplicated span out of each document and publish the surgery
@@ -1876,7 +1765,7 @@ object Dedup extends QueryModule {
     * left join back to the corpus, both keyed on doc_id.
     */
   private def substringCut(s: SparkSession, d: String): DataFrame = {
-    val sp = spanFrame(s, d).groupBy("doc_id")
+    val sp = spanFrame(subGramTable(s, d), SUB_GRAM).groupBy("doc_id")
       .agg(collect_list(struct(col("span_start").as("st"),
         col("span_end").as("en"))).as("spans"))
     documents(s, d)
@@ -1919,12 +1808,10 @@ object Dedup extends QueryModule {
 
   // ---- char-window repeated-substring spans (unsegmented scripts) -------
 
-  /** Sliding-window width (code points) for char-level substring dedup —
-    * the unsegmented-script twin of [[SUB_GRAM]]: a CJK doc is ONE
-    * `\p{L}` word, so the 8-WORD window table is structurally empty for
-    * it (round-16 verdict #2 — the same blindness class the char-gram
-    * shingles fixed for whole-doc near-dup, one consumer family over).
-    * 20 characters of an unsegmented script carry roughly the
+  /** Sliding-window width (code points) for char-level substring dedup:
+    * a CJK doc is ONE `\p{L}` word, so the 8-WORD window table is
+    * structurally empty for it. 20 characters of an unsegmented script
+    * carry roughly the
     * information of the 8-word window on segmented text (CJK words
     * average 1–3 characters) and keep the "long enough to be
     * non-accidental" property at the planted-doc lengths, the same
@@ -1945,102 +1832,34 @@ object Dedup extends QueryModule {
     -53L -> "完全无关的参考文献列表包含若干条目每条都有独立编号和标题说明页码出版社信息等等共五十多个汉字构成",
     -54L -> "文章开场白这一段宣传语会在同一篇文章里面原样重复出现两次供检测中间插叙部分这一段宣传语会在同一篇文章里面原样重复出现两次供检测收尾总结段")
 
-  /** Positional char-window table (doc_id, pos, gh) over the ROUTED
-    * unsegmented corpus ∪ [[CJK_SPAN_DOCS]] — [[subGramTable]] with the
-    * word stream swapped for the `\p{L}` squeeze: windows are
-    * [[SUB_CHAR]]-code-point slices of `sq`, positions are code-point
-    * indices, docs shorter than the window yield NO windows (empty
-    * array, same contract as the word table's size guard). Same
-    * deliberately-uncached two-pass shape and the same scale argument
-    * as [[subGramTable]].
+  /** [[SUB_CHAR]]-code-point windows of the routed corpus ∪
+    * [[CJK_SPAN_DOCS]] squeeze; positions are code-point indices, and
+    * docs below the window width yield no windows.
     */
-  private def subCharTable(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val planted = CJK_SPAN_DOCS.toDF("doc_id", "text")
-    documents(s, d).select(col("doc_id"), col("text"))
-      .unionByName(planted)
-      .withColumn("sq", ScriptRouting.squeezedLetters(col("text")))
-      .filter(ScriptRouting.unsegmented(col("sq")))
+  private def subCharTable(s: SparkSession, d: String): DataFrame =
+    windowsOf(ScriptRouting.routed(ScriptRouting.corpus(s, d, CJK_SPAN_DOCS))
       .withColumn("grams",
         when(length(col("sq")) >= SUB_CHAR,
           org.apache.spark.sql.graft.TextColumns.charNGrams(col("sq"), SUB_CHAR))
-          .otherwise(array().cast("array<string>")))
-      .select(col("doc_id"), posexplode(col("grams")).as(Seq("pos", "gram")))
-      .select(col("doc_id"), col("pos").cast(LongType).as("pos"),
-        substring(md5(col("gram")), 1, 16).as("gh"))
-  }
+          .otherwise(array().cast("array<string>"))))
 
-  /** Maximal repeated CHAR spans for unsegmented-script documents — the
-    * routed twin of [[substringSpans]] (same duplicate-window →
-    * gaps-and-islands merge, same shuffle_hash-pinned digest join, same
-    * output shape with char extents): for every routed doc, each
-    * maximal run of [[SUB_CHAR]]-char sliding windows whose text occurs
-    * at least twice anywhere in the routed corpus. The planted docs
-    * certify cross-doc repeats (a license-ish block shared at different
-    * positions), within-doc repeats (a phrase occurring twice → two
-    * spans), and the no-span control; the contract instance carries
-    * them for exactly the [[chargramPairs]] reason (the fixture routes
-    * no real doc here, so a plant-free row would certify the empty
-    * set). Scale: identical to the word pipeline — (doc_id, pos,
-    * 16-char digest) is all that shuffles, the window explosion is one
-    * row per code point (~3–5× the word table's rows on segmented
-    * text, which is why the ROUTING, not a second unrouted pass, is
-    * the production shape).
+  /** [[substringSpans]] for unsegmented scripts, in char extents. The
+    * planted docs certify cross-doc repeats (a license-ish block shared
+    * at different positions), within-doc repeats (a phrase occurring
+    * twice → two spans) and the no-span control.
     */
-  private def substringCharSpans(s: SparkSession, d: String): DataFrame = {
-    val pos = subCharTable(s, d)
-    val dup = pos.groupBy("gh").agg(count(lit(1)).as("c"))
-      .filter(col("c") >= 2).select("gh")
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    // corpus-derived dup table: shuffled hash join, never broadcast —
-    // the spanFrame argument verbatim
-    pos.join(dup.hint("shuffle_hash"), "gh")
-      .withColumn("island", col("pos") - row_number().over(w).cast(LongType))
-      .groupBy("doc_id", "island")
-      .agg(min("pos").as("span_start"),
-        (max(col("pos")) + lit(SUB_CHAR.toLong)).as("span_end"),
-        count(lit(1)).as("n_windows"))
-      .select(col("doc_id"), col("span_start"),
-        (col("span_end") - col("span_start")).as("span_chars"),
-        col("n_windows"))
-      .orderBy("doc_id", "span_start")
-  }
+  private def substringCharSpans(s: SparkSession, d: String): DataFrame =
+    spanReport(subCharTable(s, d), SUB_CHAR, "span_chars")
 
-  private def substringCharSpansOracle: String = {
-    val values = CJK_SPAN_DOCS
-      .map { case (id, t) => s"(CAST($id AS BIGINT), '$t')" }
-      .mkString(", ")
-    s"""WITH corpus AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL SELECT * FROM (VALUES $values) t(doc_id, text)),
-       |sq0 AS (
-       |  SELECT doc_id, ${ScriptRouting.sqSql} AS sq FROM corpus),
-       |sq AS (
-       |  SELECT doc_id, sq FROM sq0
-       |  WHERE ${ScriptRouting.unsegmentedSql("sq")}),
-       |g AS (
-       |  SELECT doc_id, CASE WHEN length(sq) >= $SUB_CHAR
-       |    THEN list_transform(range(length(sq) - ${SUB_CHAR - 1}),
-       |      i -> substr(sq, i + 1, $SUB_CHAR))
-       |    ELSE [] END AS grams
-       |  FROM sq),
-       |pos AS (
-       |  SELECT doc_id, unnest(range(len(grams))) AS pos,
-       |    unnest(list_transform(grams, x -> substr(md5(x), 1, 16))) AS gh
-       |  FROM g),
-       |dup AS (SELECT gh FROM pos GROUP BY gh HAVING count(*) >= 2),
-       |hit AS (SELECT pos.doc_id, pos.pos FROM pos JOIN dup USING (gh)),
-       |isl AS (SELECT doc_id, pos,
-       |  pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS island
-       |  FROM hit),
-       |spans AS (
-       |  SELECT doc_id, min(pos) AS st, max(pos) + $SUB_CHAR AS en,
-       |    count(*) AS nw
-       |  FROM isl GROUP BY doc_id, island)
-       |SELECT doc_id, st::BIGINT AS span_start,
-       |  (en - st)::BIGINT AS span_chars, nw::BIGINT AS n_windows
-       |FROM spans ORDER BY doc_id, span_start""".stripMargin
-  }
+  private def substringCharSpansOracle: String =
+    spanReportOracle(spanCtes(
+      s"""${ScriptRouting.routedSql(CJK_SPAN_DOCS)},
+         |g AS (
+         |  SELECT doc_id, CASE WHEN length(sq) >= $SUB_CHAR
+         |    THEN list_transform(range(length(sq) - ${SUB_CHAR - 1}),
+         |      i -> substr(sq, i + 1, $SUB_CHAR))
+         |    ELSE [] END AS grams
+         |  FROM routed)""".stripMargin, SUB_CHAR), "span_chars")
 
   // ---- registry -------------------------------------------------------
 

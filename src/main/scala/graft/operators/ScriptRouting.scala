@@ -1,14 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.Tables
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** THE script-routing predicate — the tokenizer dispatch the whole
-  * near-dup/gram family routes on, defined ONCE (round-16 advice: the
-  * same squeeze+majority arithmetic lived in four copies across
-  * `Dedup.unsegmentedOnly`, `TextAnalysis.scriptRoute`, and both of
-  * their oracles; the `stream_corpus_gate` shared-policy precedent says
-  * a policy consumed by more than one operator gets one definition).
+  * near-dup/gram family routes on — and the planted, routed front-end
+  * every certified multilingual row reads through, each defined ONCE
+  * per engine: [[corpus]]/[[corpusSql]] (documents ∪ planted rows) and
+  * [[routed]]/[[routedSql]] (the squeeze plus the unsegmented filter).
   *
   * Semantics: squeeze the normalized fold `lower(nfc(text))` to its
   * `\p{L}` code points, then classify by letter mass —
@@ -77,14 +77,30 @@ private[operators] object ScriptRouting {
   def latin(sq: Column): Column =
     length(sq) > 0 && !unsegmented(sq)
 
-  /** Keep only the unsegmented-majority docs of a (…, text, …) frame —
-    * the char-gram bases' routed front door. The squeeze column is
-    * computed and dropped here so callers never see it.
+  /** `documents` ∪ planted `(doc_id, text)` rows — the contract corpus
+    * of every row certified on planted multilingual docs (the fixtures
+    * are all-ASCII, so without the plant such a row would certify
+    * nothing, or the empty set). Columns are doc_id, text, then each
+    * `extra` name: read from `documents` as is, and computed for the
+    * planted rows by its expression over their text. The plant is a
+    * LocalRelation unioned under the scan — free at any corpus size.
     */
-  def unsegmentedOnly(df: DataFrame): DataFrame =
-    df.withColumn("sq", squeezedLetters(col("text")))
+  def corpus(s: SparkSession, d: String, docs: Seq[(Long, String)],
+      extra: (String, Column)*): DataFrame = {
+    import s.implicits._
+    val base = Seq(col("doc_id"), col("text"))
+    val planted = docs.toDF("doc_id", "text")
+      .select(base ++ extra.map { case (n, c) => c.as(n) }: _*)
+    Tables.documents(s, d).select(base ++ extra.map(e => col(e._1)): _*)
+      .unionByName(planted)
+  }
+
+  /** The unsegmented-majority docs of a (…, text, …) frame with their
+    * squeeze kept as `sq` — the char-gram bases' front door.
+    */
+  def routed(docs: DataFrame): DataFrame =
+    docs.withColumn("sq", squeezedLetters(col("text")))
       .filter(unsegmented(col("sq")))
-      .drop("sq")
 
   // ---- DuckDB twins (one definition per engine, not per consumer) ----
 
@@ -99,4 +115,31 @@ private[operators] object ScriptRouting {
   /** [[latin]] over a squeeze expression/column name. */
   def latinSql(sq: String): String =
     s"(length($sq) > 0 AND NOT (${unsegmentedSql(sq)}))"
+
+  /** [[corpus]] as the CTE `name(doc_id, text, extra…)`; each extra
+    * column's planted value is its SQL over the planted text.
+    */
+  def corpusSql(docs: Seq[(Long, String)], name: String = "corpus",
+      extra: Seq[(String, String => String)] = Nil): String = {
+    val cols = ("doc_id" +: "text" +: extra.map(_._1)).mkString(", ")
+    val values = docs.map { case (id, t) =>
+      (s"CAST($id AS BIGINT)" +: s"'$t'" +: extra.map(_._2(t)))
+        .mkString("(", ", ", ")")
+    }.mkString(", ")
+    s"""$name AS (
+       |  SELECT $cols FROM documents
+       |  UNION ALL SELECT * FROM (VALUES $values) t($cols))""".stripMargin
+  }
+
+  /** [[routed]] over [[corpus]] as CTEs `corpus$sfx`, `sq0$sfx` and
+    * `routed$sfx(doc_id, text, sq)`; the suffix lets two routed chains
+    * share one WITH.
+    */
+  def routedSql(docs: Seq[(Long, String)], sfx: String = ""): String =
+    s"""${corpusSql(docs, s"corpus$sfx")},
+       |sq0$sfx AS (
+       |  SELECT doc_id, text, $sqSql AS sq FROM corpus$sfx),
+       |routed$sfx AS (
+       |  SELECT doc_id, text, sq FROM sq0$sfx
+       |  WHERE ${unsegmentedSql("sq")})""".stripMargin
 }

@@ -83,11 +83,8 @@ object TextAnalysis extends QueryModule {
     * LocalRelation unioned under the scan — free at any corpus size.
     */
   private def tokensUnicode(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val planted = UNICODE_DOCS.toDF("doc_id", "text")
     val toks = org.apache.spark.sql.graft.TextColumns.letterTokens(col("text"))
-    documents(s, d).select(col("doc_id"), col("text"))
-      .unionByName(planted)
+    ScriptRouting.corpus(s, d, UNICODE_DOCS)
       // the \p{L} columns run the codegen'd LetterRunTokens scanner —
       // the SAME expression the dedup/pipe bases tokenize with — so
       // this contract row certifies the production scanner against
@@ -101,13 +98,8 @@ object TextAnalysis extends QueryModule {
       .orderBy("doc_id")
   }
 
-  private def tokensUnicodeOracle: String = {
-    val values = UNICODE_DOCS
-      .map { case (id, t) => s"(CAST($id AS BIGINT), '$t')" }
-      .mkString(", ")
-    s"""WITH corpus AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL SELECT * FROM (VALUES $values) t(doc_id, text)),
+  private def tokensUnicodeOracle: String =
+    s"""WITH ${ScriptRouting.corpusSql(UNICODE_DOCS)},
        |tok AS (
        |  SELECT doc_id,
        |    list_filter(string_split_regex(text, '[^\\p{L}]+'), x -> x <> '') AS tu,
@@ -117,7 +109,6 @@ object TextAnalysis extends QueryModule {
        |  len(ta)::BIGINT AS n_tok_ascii,
        |  len(list_distinct(tu))::BIGINT AS n_uniq_unicode
        |FROM tok ORDER BY doc_id""".stripMargin
-  }
 
   /** Planted docs exercising every byte-width and category-boundary
     * class the `\p{L}` scanner must classify: 2-byte letters
@@ -161,24 +152,16 @@ object TextAnalysis extends QueryModule {
     * 9-row LocalRelation — free at any corpus size.
     */
   private def letterTokensQ(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val planted = LETTER_TOKEN_DOCS.toDF("doc_id", "text")
     val toks = org.apache.spark.sql.graft.TextColumns.letterTokens(
       org.apache.spark.sql.graft.TextColumns.nfc(col("text")))
-    documents(s, d).select(col("doc_id"), col("text"))
-      .unionByName(planted)
+    ScriptRouting.corpus(s, d, LETTER_TOKEN_DOCS)
       .select(col("doc_id"), size(toks).cast("long").as("n_words"),
         md5(concat_ws(" ", toks)).as("words_md5"))
       .orderBy("doc_id")
   }
 
-  private def letterTokensOracle: String = {
-    val values = LETTER_TOKEN_DOCS
-      .map { case (id, t) => s"(CAST($id AS BIGINT), '$t')" }
-      .mkString(", ")
-    s"""WITH corpus AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL SELECT * FROM (VALUES $values) t(doc_id, text)),
+  private def letterTokensOracle: String =
+    s"""WITH ${ScriptRouting.corpusSql(LETTER_TOKEN_DOCS)},
        |tok AS (
        |  SELECT doc_id,
        |    list_filter(string_split_regex(nfc_normalize(text), '[^\\p{L}]+'), x -> x <> '') AS toks
@@ -186,7 +169,6 @@ object TextAnalysis extends QueryModule {
        |SELECT doc_id, len(toks)::BIGINT AS n_words,
        |  md5(coalesce(array_to_string(toks, ' '), '')) AS words_md5
        |FROM tok ORDER BY doc_id""".stripMargin
-  }
 
   /** Per-document script-class routing — the dedup family's tokenizer
     * dispatch as a first-class certified operator: `latin` (ASCII
@@ -205,11 +187,8 @@ object TextAnalysis extends QueryModule {
     * char-gram base filters with), so this certified row and the
     * production routing can never drift.
     */
-  private def scriptRoute(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val planted = LETTER_TOKEN_DOCS.toDF("doc_id", "text")
-    documents(s, d).select(col("doc_id"), col("text"))
-      .unionByName(planted)
+  private def scriptRoute(s: SparkSession, d: String): DataFrame =
+    ScriptRouting.corpus(s, d, LETTER_TOKEN_DOCS)
       .withColumn("sq", ScriptRouting.squeezedLetters(col("text")))
       .withColumn("n_letters", length(col("sq")).cast("long"))
       // ≡ length(sq) - length(regexp_replace(sq, '[a-z]+', '')) — the
@@ -222,15 +201,9 @@ object TextAnalysis extends QueryModule {
           .when(!ScriptRouting.unsegmented(col("sq")), "latin")
           .otherwise("nonlatin").as("script_class"))
       .orderBy("doc_id")
-  }
 
-  private def scriptRouteOracle: String = {
-    val values = LETTER_TOKEN_DOCS
-      .map { case (id, t) => s"(CAST($id AS BIGINT), '$t')" }
-      .mkString(", ")
-    s"""WITH corpus AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL SELECT * FROM (VALUES $values) t(doc_id, text)),
+  private def scriptRouteOracle: String =
+    s"""WITH ${ScriptRouting.corpusSql(LETTER_TOKEN_DOCS)},
        |sq AS (
        |  SELECT doc_id,
        |    ${ScriptRouting.sqSql} AS sq
@@ -246,7 +219,6 @@ object TextAnalysis extends QueryModule {
        |       WHEN NOT unseg THEN 'latin'
        |       ELSE 'nonlatin' END AS script_class
        |FROM m ORDER BY doc_id""".stripMargin
-  }
 
   // ---- quality scoring ------------------------------------------------
 
@@ -453,8 +425,6 @@ object TextAnalysis extends QueryModule {
     * metadata.
     */
   private def langidScript(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val planted = (LETTER_TOKEN_DOCS ++ LANGID_SCRIPT_DOCS).toDF("doc_id", "text")
     // r17 optimization: the per-class `length(regexp_replace(sq,
     // '[^\p{IsXxx}]+', ''))` columns were |classes| java-regex NFA
     // passes over every document; ScriptCounts computes all of them in
@@ -462,8 +432,7 @@ object TextAnalysis extends QueryModule {
     // \p{IsXxx} IS UnicodeScript membership; property-tested). The
     // oracle keeps the per-class regexp spelling.
     val counts = scriptClasses.zipWithIndex.foldLeft(
-      documents(s, d).select(col("doc_id"), col("text"))
-        .unionByName(planted)
+      ScriptRouting.corpus(s, d, LETTER_TOKEN_DOCS ++ LANGID_SCRIPT_DOCS)
         .withColumn("sq", ScriptRouting.squeezedLetters(col("text")))
         .withColumn("n_letters", length(col("sq")).cast("long"))
         .withColumn("sc", org.apache.spark.sql.graft.TextColumns
@@ -484,17 +453,12 @@ object TextAnalysis extends QueryModule {
   }
 
   private def langidScriptOracle: String = {
-    val values = (LETTER_TOKEN_DOCS ++ LANGID_SCRIPT_DOCS)
-      .map { case (id, t) => s"(CAST($id AS BIGINT), '$t')" }
-      .mkString(", ")
     val countCols = scriptClasses.map { case (name, _, re2Cls) =>
       s"length(regexp_replace(sq, '[^$re2Cls]+', '', 'g'))::BIGINT AS n_$name"
     }.mkString(",\n    ")
     val otherExpr = scriptClasses.map(c => s"n_${c._1}")
       .mkString("n_letters - ", " - ", "")
-    s"""WITH corpus AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL SELECT * FROM (VALUES $values) t(doc_id, text)),
+    s"""WITH ${ScriptRouting.corpusSql(LETTER_TOKEN_DOCS ++ LANGID_SCRIPT_DOCS)},
        |sq AS (
        |  SELECT doc_id, ${ScriptRouting.sqSql} AS sq FROM corpus),
        |m AS (
@@ -513,37 +477,21 @@ object TextAnalysis extends QueryModule {
 
   // ---- quality scoring for unsegmented scripts -------------------------
 
-  /** Character-level quality scoring for the unsegmented script class —
-    * `text_quality`'s routed twin, closing the same blindness one
-    * consumer over: the word-base metrics score a CJK document as ONE
-    * word with ZERO `[a-z]` alphabetic characters (n_words=1,
-    * avg_word_len=0, stop_ratio=0 — a constant garbage score
-    * regardless of content; TextSoundnessSpec pins it). For scripts
-    * where words are not delimited, the published quality heuristics
-    * (CCNet's per-character LM features, Gopher's character-level
-    * rules) work on characters instead — this operator emits, for the
-    * routed docs only: letter count, letter-to-text density, distinct
-    * code-point diversity (a boilerplate/repetition proxy: dup-heavy
-    * docs reuse few characters), and a 0.4/0.3/0.3 composite in exact
-    * integer millionths (the `text_quality` rounding contract — every
-    * component integer-scaled before the weighted sum so both engines
-    * land bit-equal).
-    *
-    * The corpus is all-ASCII, so the routed rows are the planted
-    * multilingual docs — present so the row certifies actual scoring
-    * every run (the chargram-contract rationale); a real pipeline
-    * calls this on its routed slice where those docs are the data.
-    *
-    * Scale: row-local projection over the routed slice (the squeeze +
-    * two distinct-count passes), no shuffle before the contract sort.
+  /** Character-level quality scoring for the routed unsegmented docs of
+    * corpus ∪ the planted multilingual docs: the word-base metrics
+    * score a CJK document as ONE word with ZERO `[a-z]` alphabetic
+    * characters (a constant garbage score regardless of content;
+    * TextSoundnessSpec pins it), so — after CCNet's and Gopher's
+    * character-level rules — this row emits letter count,
+    * letter-to-text density, distinct code-point diversity (a
+    * boilerplate/repetition proxy) and a 0.4/0.3/0.3 composite in exact
+    * integer millionths (the `text_quality` rounding contract). Scale:
+    * row-local projection over the routed slice, no shuffle before the
+    * contract sort.
     */
-  private def qualityChars(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val planted = (LETTER_TOKEN_DOCS ++ LANGID_SCRIPT_DOCS).toDF("doc_id", "text")
-    documents(s, d).select(col("doc_id"), col("text"))
-      .unionByName(planted)
-      .withColumn("sq", ScriptRouting.squeezedLetters(col("text")))
-      .filter(ScriptRouting.unsegmented(col("sq")))
+  private def qualityChars(s: SparkSession, d: String): DataFrame =
+    ScriptRouting.routed(
+        ScriptRouting.corpus(s, d, LETTER_TOKEN_DOCS ++ LANGID_SCRIPT_DOCS))
       .withColumn("n_letters", length(col("sq")).cast("long"))
       .withColumn("n_uniq", size(array_distinct(
         org.apache.spark.sql.graft.TextColumns.charNGrams(col("sq"), 1)))
@@ -561,20 +509,9 @@ object TextAnalysis extends QueryModule {
       .select("doc_id", "n_letters", "n_uniq", "letter_ratio",
         "uniq_ratio", "quality_score")
       .orderBy("doc_id")
-  }
 
-  private def qualityCharsOracle: String = {
-    val values = (LETTER_TOKEN_DOCS ++ LANGID_SCRIPT_DOCS)
-      .map { case (id, t) => s"(CAST($id AS BIGINT), '$t')" }
-      .mkString(", ")
-    s"""WITH corpus AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL SELECT * FROM (VALUES $values) t(doc_id, text)),
-       |sq0 AS (
-       |  SELECT doc_id, text, ${ScriptRouting.sqSql} AS sq FROM corpus),
-       |routed AS (
-       |  SELECT doc_id, text, sq FROM sq0
-       |  WHERE ${ScriptRouting.unsegmentedSql("sq")}),
+  private def qualityCharsOracle: String =
+    s"""WITH ${ScriptRouting.routedSql(LETTER_TOKEN_DOCS ++ LANGID_SCRIPT_DOCS)},
        |m AS (
        |  SELECT doc_id, length(sq)::BIGINT AS n_letters,
        |    len(list_distinct(list_transform(range(length(sq)),
@@ -590,7 +527,6 @@ object TextAnalysis extends QueryModule {
        |    + round(uniq_ratio * 1000000)::BIGINT * 30
        |    + 50) // 100)::DOUBLE / 1000000 AS quality_score
        |FROM m2 ORDER BY doc_id""".stripMargin
-  }
 
   // ---- document fingerprinting ----------------------------------------
 
@@ -626,25 +562,28 @@ object TextAnalysis extends QueryModule {
           .as("fp_min_gram"))
       .orderBy("doc_id")
 
+  /** The fingerprint oracles' min-gram: the min base-31 polynomial over
+    * the 8-character windows of space-padded column `padded`, one
+    * window per `i` in `range(m)` — the DuckDB twin of MinGramHash and
+    * MinCharGramHash.
+    */
+  private def minGramSql(padded: String): String =
+    (1 to 8).map { j =>
+      s"ord(substr($padded, i+$j, 1))::BIGINT" +
+        (if (j < 8) s"*${BigInt(31).pow(8 - j)}" else "")
+    }.mkString("list_min(list_transform(range(m),\n    i -> ", "\n       + ", "))")
+
   private val fingerprintOracle =
-    """WITH n AS (
-      |  SELECT doc_id,
-      |    trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) AS norm
-      |  FROM documents),
-      |g AS (
-      |  SELECT doc_id, md5(norm) AS fp_norm, norm || '        ' AS n8,
-      |    greatest(length(norm)-7, 1) AS m FROM n)
-      |SELECT doc_id, fp_norm,
-      |  list_min(list_transform(range(m),
-      |    i -> ord(substr(n8, i+1, 1))::BIGINT*27512614111
-      |       + ord(substr(n8, i+2, 1))::BIGINT*887503681
-      |       + ord(substr(n8, i+3, 1))::BIGINT*28629151
-      |       + ord(substr(n8, i+4, 1))::BIGINT*923521
-      |       + ord(substr(n8, i+5, 1))::BIGINT*29791
-      |       + ord(substr(n8, i+6, 1))::BIGINT*961
-      |       + ord(substr(n8, i+7, 1))::BIGINT*31
-      |       + ord(substr(n8, i+8, 1))::BIGINT)) AS fp_min_gram
-      |FROM g ORDER BY doc_id""".stripMargin
+    s"""WITH n AS (
+       |  SELECT doc_id,
+       |    trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) AS norm
+       |  FROM documents),
+       |g AS (
+       |  SELECT doc_id, md5(norm) AS fp_norm, norm || '        ' AS n8,
+       |    greatest(length(norm)-7, 1) AS m FROM n)
+       |SELECT doc_id, fp_norm,
+       |  ${minGramSql("n8")} AS fp_min_gram
+       |FROM g ORDER BY doc_id""".stripMargin
 
   // ---- document fingerprinting for unsegmented scripts -----------------
 
@@ -662,78 +601,44 @@ object TextAnalysis extends QueryModule {
     -122L -> "深層学習は データの表現を学ぶ",
     -123L -> "𐌰𐌱𐌲𐌳𐌴𐌵𐌶𐌷𐌸𐌹𐌺")
 
-  /** `text_fingerprint`'s routed twin — the fingerprint base for the
-    * unsegmented script class, where the word form is not merely blind
-    * but ACTIVELY WRONG: its `[^a-z0-9]+` normalization squeezes a CJK
-    * document to the EMPTY string, so every unsegmented doc gets the
-    * same `md5('')` content hash and the same padded-window min-gram —
-    * a fingerprint store would silently merge all of them into one
-    * "duplicate" group (TextSoundnessSpec pins exactly that false
-    * merge, and this operator's split). Here the normalized form is
-    * the shared [[ScriptRouting]] `\p{L}` squeeze and the min-gram
-    * runs over 8-CODE-POINT windows via the codegen'd
-    * [[org.apache.spark.sql.graft.MinCharGramHash]] (byte windows
-    * would hash UTF-8 fragments no `ord`-based oracle recomputes).
-    *
-    * The corpus is all-ASCII, so the routed rows are the planted
-    * multilingual docs — present so the row certifies actual
-    * fingerprinting every run (the chargram-contract rationale); the
+  /** The fingerprint of the routed unsegmented docs of corpus ∪ the
+    * planted multilingual docs. The word form's `[^a-z0-9]+`
+    * normalization squeezes a CJK document to the EMPTY string, so
+    * every unsegmented doc would share one `md5('')` fingerprint
+    * (TextSoundnessSpec pins that false merge and this split). Here
+    * the normalized form is the [[ScriptRouting]] `\p{L}` squeeze and
+    * the min-gram runs over 8-CODE-POINT windows via the codegen'd
+    * [[org.apache.spark.sql.graft.MinCharGramHash]] (byte windows would
+    * hash UTF-8 fragments no `ord`-based oracle recomputes). The
     * identical CJK pair (-44/-45) lands on equal fingerprints, the
     * punctuation variants (-121/-122) prove the squeeze erases
-    * formatting, and the Gothic doc certifies the 4-byte plane.
-    *
-    * Scale: row-local — one squeeze + one O(len) codegen'd hash pass
-    * per routed doc, no shuffle before the contract sort; at 100 TB
-    * this rides the same scan as the word fingerprint, routed by the
-    * script class like every char-base consumer.
+    * formatting, and the Gothic doc certifies the 4-byte plane. Scale:
+    * one squeeze + one O(len) hash pass per routed doc, no shuffle
+    * before the contract sort.
     */
-  private def fingerprintChars(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val planted = (LETTER_TOKEN_DOCS ++ LANGID_SCRIPT_DOCS ++
-      Dedup.CJK_NEARDUP_DOCS ++ FINGERPRINT_CHAR_DOCS).toDF("doc_id", "text")
-    fingerprintCharsOf(
-      documents(s, d).select(col("doc_id"), col("text")).unionByName(planted))
-  }
+  private def fingerprintChars(s: SparkSession, d: String): DataFrame =
+    fingerprintCharsOf(ScriptRouting.corpus(s, d, LETTER_TOKEN_DOCS ++
+      LANGID_SCRIPT_DOCS ++ Dedup.CJK_NEARDUP_DOCS ++ FINGERPRINT_CHAR_DOCS))
 
   /** The routed char fingerprint over an arbitrary (doc_id, text, ...)
     * frame — the seam TextSoundnessSpec drives planted corpora through.
     */
   private[graft] def fingerprintCharsOf(df: DataFrame): DataFrame =
-    df.withColumn("sq", ScriptRouting.squeezedLetters(col("text")))
-      .filter(ScriptRouting.unsegmented(col("sq")))
+    ScriptRouting.routed(df)
       .select(col("doc_id"), md5(col("sq")).as("fp_norm"),
         org.apache.spark.sql.graft.TextColumns.minCharGramHash(col("sq"))
           .as("fp_min_gram"))
       .orderBy("doc_id")
 
-  private def fingerprintCharsOracle: String = {
-    val values = (LETTER_TOKEN_DOCS ++ LANGID_SCRIPT_DOCS ++
-      Dedup.CJK_NEARDUP_DOCS ++ FINGERPRINT_CHAR_DOCS)
-      .map { case (id, t) => s"(CAST($id AS BIGINT), '$t')" }
-      .mkString(", ")
-    s"""WITH corpus AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL SELECT * FROM (VALUES $values) t(doc_id, text)),
-       |sq0 AS (
-       |  SELECT doc_id, ${ScriptRouting.sqSql} AS sq FROM corpus),
-       |routed AS (
-       |  SELECT doc_id, sq FROM sq0
-       |  WHERE ${ScriptRouting.unsegmentedSql("sq")}),
+  private def fingerprintCharsOracle: String =
+    s"""WITH ${ScriptRouting.routedSql(LETTER_TOKEN_DOCS ++
+         LANGID_SCRIPT_DOCS ++ Dedup.CJK_NEARDUP_DOCS ++ FINGERPRINT_CHAR_DOCS)},
        |g AS (
        |  SELECT doc_id, md5(sq) AS fp_norm, sq || '        ' AS s8,
        |    greatest(length(sq)-7, 1) AS m FROM routed)
        |SELECT doc_id, fp_norm,
-       |  list_min(list_transform(range(m),
-       |    i -> ord(substr(s8, i+1, 1))::BIGINT*27512614111
-       |       + ord(substr(s8, i+2, 1))::BIGINT*887503681
-       |       + ord(substr(s8, i+3, 1))::BIGINT*28629151
-       |       + ord(substr(s8, i+4, 1))::BIGINT*923521
-       |       + ord(substr(s8, i+5, 1))::BIGINT*29791
-       |       + ord(substr(s8, i+6, 1))::BIGINT*961
-       |       + ord(substr(s8, i+7, 1))::BIGINT*31
-       |       + ord(substr(s8, i+8, 1))::BIGINT)) AS fp_min_gram
+       |  ${minGramSql("s8")} AS fp_min_gram
        |FROM g ORDER BY doc_id""".stripMargin
-  }
 
   // ---- tf-idf ---------------------------------------------------------
 
@@ -992,13 +897,9 @@ object TextAnalysis extends QueryModule {
     * oracle (DedupSoundnessSpec pins the kept/dropped ids).
     */
   private def pipelineDedup(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val keepers = Dedup.ccLabels(s, d)
       .filter(col("doc_id") === col("cluster_id")).select("doc_id")
-    val planted = Dedup.CJK_NEARDUP_DOCS.toDF("doc_id", "text")
-      .select(col("doc_id"), lit("xx").as("lang"), col("text"))
-    documents(s, d).select("doc_id", "lang", "text")
-      .unionByName(planted)
+    ScriptRouting.corpus(s, d, Dedup.CJK_NEARDUP_DOCS, "lang" -> lit("xx"))
       .withColumn("words", expr("filter(split(text, '[^a-z]+'), x -> x <> '')"))
       .withColumn("n_words", expr("size(words)").cast("long"))
       .withColumn("sq", ScriptRouting.squeezedLetters(col("text")))
@@ -1018,17 +919,13 @@ object TextAnalysis extends QueryModule {
       .orderBy("lang")
   }
 
-  private def pipelineDedupOracle: String = {
-    val values = Dedup.CJK_NEARDUP_DOCS
-      .map { case (id, t) => s"(CAST($id AS BIGINT), 'xx', '$t')" }
-      .mkString(", ")
+  private def pipelineDedupOracle: String =
     s"""WITH RECURSIVE ${Dedup.ccOracleCtes},
        |clusters AS (
        |  SELECT doc_id, min(lbl)::BIGINT AS cluster_id
        |  FROM reach GROUP BY doc_id),
-       |pcorpus AS (
-       |  SELECT doc_id, lang, text FROM documents
-       |  UNION ALL SELECT * FROM (VALUES $values) t(doc_id, lang, text)),
+       |${ScriptRouting.corpusSql(Dedup.CJK_NEARDUP_DOCS, "pcorpus",
+            Seq("lang" -> ((_: String) => "'xx'")))},
        |pm AS (
        |  SELECT doc_id, lang, text,
        |    len(list_filter(string_split_regex(text, '[^a-z]+'), x -> x <> ''))::BIGINT
@@ -1050,7 +947,6 @@ object TextAnalysis extends QueryModule {
        |SELECT lang, count(*) AS n_docs, sum(n_units)::BIGINT AS total_words,
        |  sum(n_emails)::BIGINT AS emails_removed
        |FROM gated GROUP BY lang ORDER BY lang""".stripMargin
-  }
 
   // ---- heavy hitters (frequent tokens) --------------------------------
 
@@ -1216,7 +1112,7 @@ object TextAnalysis extends QueryModule {
     var vocab = seed
     var prevVc: Option[DataFrame] = None
     val won = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    for (k <- 1 to merges) {
+    try for (k <- 1 to merges) {
       val vc = ConnectedComponents.ckptRound(vocab)
       // vc is materialized eagerly and the previous round's winner is
       // already a local row, so the prior round's blocks are now
@@ -1250,6 +1146,13 @@ object TextAnalysis extends QueryModule {
           // exactly the oracle's NULL-subquery pass-through behavior
           vocab = vc
       }
+    } catch {
+      // a failed round (cancelled job group, lost executor) must not
+      // strand the held round checkpoint: nothing outside this loop
+      // can reach it to release it
+      case e: Throwable =>
+        prevVc.foreach(graft.Materialize.free)
+        throw e
     }
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("merge_rank",
@@ -1592,36 +1495,29 @@ object TextAnalysis extends QueryModule {
     * digests, never document bodies (the same digest-not-content rule
     * every dedup shuffle in this repo follows).
     */
-  private def casefoldKey(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val planted = LATIN_FOLD_DOCS.toDF("doc_id", "text")
-    documents(s, d).select(col("doc_id"), col("text"))
-      .unionByName(planted)
+  private def casefoldKey(s: SparkSession, d: String): DataFrame =
+    ScriptRouting.corpus(s, d, LATIN_FOLD_DOCS)
       .select(col("doc_id"), expr("lower(nfc(text))").as("k"))
       .groupBy("k")
       .agg(count(lit(1)).as("n_docs"), min("doc_id").as("first_doc"))
       .orderBy("first_doc")
-  }
 
-  private def casefoldKeyOracle: String = {
-    val values = LATIN_FOLD_DOCS
-      .map { case (id, t) => s"(CAST($id AS BIGINT), '$t')" }
-      .mkString(", ")
-    s"""WITH corpus AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL SELECT * FROM (VALUES $values) t(doc_id, text)),
+  private def casefoldKeyOracle: String =
+    s"""WITH ${ScriptRouting.corpusSql(LATIN_FOLD_DOCS)},
        |keyed AS (
        |  SELECT doc_id, lower(nfc_normalize(text)) AS k FROM corpus)
        |SELECT k, count(*) AS n_docs, min(doc_id) AS first_doc
        |FROM keyed GROUP BY k ORDER BY first_doc""".stripMargin
-  }
 
   // ---- statistical LM familiarity score --------------------------------
 
-  /** CCNet-style statistical quality score: each document scored by how
-    * familiar its word bigrams are to a bigram model trained on the
-    * corpus itself (the contract instance; a production pipeline points
-    * the model side at a curated reference corpus, same shape). The
+  /** CCNet-style statistical quality score, the core of both
+    * `text_lm_score` rows: each row of `keys` (doc_id first) scored by
+    * how familiar its `bigrams` rows (doc_id, bigram) are to a bigram
+    * model trained on those same rows (the contract instances; a
+    * production pipeline points the model side at a curated reference
+    * corpus, same shape). The word row passes word bigrams, the char
+    * row character bigrams of the routed squeeze. The
     * published recipe scores with LM log-perplexity; this operator uses
     * the mean corpus-frequency of the document's bigrams instead —
     * monotone in the same signal (rare-bigram documents score low) but
@@ -1641,157 +1537,109 @@ object TextAnalysis extends QueryModule {
     * their counts (a bounded statistical smear on a frequency model,
     * not a correctness break; a pipeline at billion-type vocabularies
     * should widen to the full 32-hex digest — still fixed-width, same
-    * shape). Both aggregations are partial
-    * (map-side combine on digest / doc_id); the gram build itself is
-    * the codegen'd [[org.apache.spark.sql.graft.TextColumns.wordNGrams]]
-    * byte pass. Documents with fewer than two words carry no bigrams:
-    * they survive via the left join with n_bigrams = 0 and a NULL
-    * familiarity (never a 0/0).
+    * shape). Both aggregations are partial (map-side combine on digest
+    * / doc_id). A key with no bigram survives the left join with
+    * n_bigrams = 0 and a NULL familiarity (never a 0/0).
     */
+  private def familiarityOf(keys: DataFrame, bigrams: DataFrame): DataFrame = {
+    val bg = bigrams
+      .select(col("doc_id"), substring(md5(col("bigram")), 1, 16).as("bh"))
+    val model = bg.groupBy("bh").agg(count(lit(1)).as("cnt"))
+    val perDoc = bg.join(model, "bh")
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_bigrams"), sum("cnt").as("fam_sum"))
+    keys.join(perDoc, Seq("doc_id"), "left")
+      .select(keys.columns.map(col).toSeq ++ Seq(
+        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
+        coalesce(col("fam_sum"), lit(0L)).as("fam_sum"),
+        (col("fam_sum").cast("double") / col("n_bigrams")).as("familiarity")): _*)
+      .orderBy("doc_id")
+  }
+
+  /** DuckDB twin of [[familiarityOf]]: `grams` is the bigram-list SQL
+    * over each row of `src`, and the report keeps `keyCols` of every
+    * row of table `keys`.
+    */
+  private def familiarityOracle(ctes: String, src: String, grams: String,
+      keys: String, keyCols: String*): String =
+    s"""WITH $ctes,
+       |bg AS (
+       |  SELECT doc_id,
+       |    substr(md5(unnest($grams)), 1, 16) AS bh
+       |  FROM $src),
+       |model AS (SELECT bh, count(*) AS cnt FROM bg GROUP BY bh),
+       |per_doc AS (
+       |  SELECT doc_id, count(*) AS n_bigrams, sum(cnt)::BIGINT AS fam_sum
+       |  FROM bg JOIN model USING (bh) GROUP BY doc_id)
+       |SELECT ${keyCols.map("d." + _).mkString(", ")},
+       |  coalesce(n_bigrams, 0) AS n_bigrams,
+       |  coalesce(fam_sum, 0) AS fam_sum,
+       |  fam_sum::DOUBLE / n_bigrams AS familiarity
+       |FROM $keys d LEFT JOIN per_doc ON d.doc_id = per_doc.doc_id
+       |ORDER BY d.doc_id""".stripMargin
+
   private def lmScore(s: SparkSession, d: String): DataFrame =
     lmScoreOf(documents(s, d))
 
   /** The familiarity pipeline over an arbitrary (doc_id, lang, text)
     * frame — the seam TextSoundnessSpec scores planted corpora through.
+    * Word bigrams come from the codegen'd
+    * [[org.apache.spark.sql.graft.TextColumns.wordNGrams]] byte pass;
+    * its short-input fallback emits the whole-doc join (a single word,
+    * or "" for wordless text) as one element, and a true bigram always
+    * contains exactly one space, so the row filter is the exact twin of
+    * the oracle's CASE len(words) >= 2 branch.
     */
-  private[graft] def lmScoreOf(docs: DataFrame): DataFrame = {
-    val bg = docs
-      .select(col("doc_id"),
-        explode(org.apache.spark.sql.graft.TextColumns
-          .wordNGrams(col("text"), 2)).as("bigram"))
-      // word_ngrams' short-input fallback emits the whole-doc join (a
-      // single word, or "" for wordless text) as one element; a true
-      // bigram always contains exactly one space, so this row filter is
-      // the exact twin of the oracle's CASE len(words) >= 2 branch
-      .filter(col("bigram").contains(" "))
-      .select(col("doc_id"), substring(md5(col("bigram")), 1, 16).as("bh"))
-    val model = bg.groupBy("bh").agg(count(lit(1)).as("cnt"))
-    val perDoc = bg.join(model, "bh")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"), sum("cnt").as("fam_sum"))
-    docs.select("doc_id", "lang")
-      .join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("lang"),
-        (col("fam_sum").cast("double") / col("n_bigrams")).as("familiarity"),
-        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        coalesce(col("fam_sum"), lit(0L)).as("fam_sum"))
-      .select("doc_id", "lang", "n_bigrams", "fam_sum", "familiarity")
-      .orderBy("doc_id")
-  }
+  private[graft] def lmScoreOf(docs: DataFrame): DataFrame =
+    familiarityOf(docs.select("doc_id", "lang"),
+      docs.select(col("doc_id"),
+          explode(org.apache.spark.sql.graft.TextColumns
+            .wordNGrams(col("text"), 2)).as("bigram"))
+        .filter(col("bigram").contains(" ")))
 
   private val lmScoreOracle =
-    s"""WITH $wordsCte,
-       |bg AS (
-       |  SELECT doc_id,
-       |    substr(md5(unnest(CASE WHEN len(words) >= 2
-       |      THEN list_transform(range(len(words)-1),
-       |        i -> words[i+1] || ' ' || words[i+2])
-       |      ELSE [] END)), 1, 16) AS bh
-       |  FROM docs),
-       |model AS (SELECT bh, count(*) AS cnt FROM bg GROUP BY bh),
-       |per_doc AS (
-       |  SELECT doc_id, count(*) AS n_bigrams, sum(cnt)::BIGINT AS fam_sum
-       |  FROM bg JOIN model USING (bh) GROUP BY doc_id)
-       |SELECT d.doc_id, d.lang,
-       |  coalesce(n_bigrams, 0) AS n_bigrams,
-       |  coalesce(fam_sum, 0) AS fam_sum,
-       |  fam_sum::DOUBLE / n_bigrams AS familiarity
-       |FROM documents d LEFT JOIN per_doc ON d.doc_id = per_doc.doc_id
-       |ORDER BY d.doc_id""".stripMargin
+    familiarityOracle(wordsCte, "docs",
+      """CASE WHEN len(words) >= 2
+        |      THEN list_transform(range(len(words)-1),
+        |        i -> words[i+1] || ' ' || words[i+2])
+        |      ELSE [] END""".stripMargin,
+      "documents", "doc_id", "lang")
 
-  // ---- statistical LM quality score for unsegmented scripts ------------
-
-  /** `text_lm_score`'s routed twin — bigram familiarity over CHARACTER
-    * bigrams of the `\p{L}` squeeze, for the script class where the
-    * word model is structurally silent: a CJK document tokenizes to at
-    * most one `[a-z]` word, so it has ZERO word bigrams and a NULL
-    * familiarity — rare-boilerplate and fluent prose are
-    * indistinguishable (TextSoundnessSpec pins the miss). The
-    * published recipe (CCNet's char-level LM for CJK) scores such
-    * scripts on character n-grams; this operator is that tier with the
-    * repo's exactness contract: integer bigram counts, one IEEE
-    * division, bit-identical cross-engine.
-    *
-    * Same shapes as the word twin: the model is the corpus's char
-    * bigram table, the doc-bigram → model join shuffles a fixed-width
-    * 16-hex digest (never gram text), both aggregations partial. The
-    * gram build is the codegen'd [[org.apache.spark.sql.graft.CharNGrams]]
-    * pass; its short-input fallback (one whole-squeeze element) is
-    * dropped by an exact-length row filter — the twin of the oracle's
-    * `length(sq) >= 2` CASE — so 1-letter docs carry 0 bigrams and a
-    * NULL score through the left join, never a 0/0.
-    *
-    * The corpus is all-ASCII, so the routed rows are the planted
-    * multilingual docs (the chargram-contract rationale); the planted
+  /** [[lmScoreOf]] over the routed unsegmented docs of corpus ∪ the
+    * planted multilingual docs: a CJK document tokenizes to at most one
+    * `[a-z]` word, so its word familiarity is NULL (TextSoundnessSpec
+    * pins the miss); here the model counts CHARACTER bigrams of the
+    * `\p{L}` squeeze (CCNet's char-level tier for CJK). The planted
     * near-dup pair shares nearly all bigrams (high familiarity) while
-    * the unrelated doc scores low — the ordinal signal
-    * TextSoundnessSpec pins.
+    * the unrelated doc scores low.
     */
-  private def lmScoreChars(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val planted = (LETTER_TOKEN_DOCS ++ LANGID_SCRIPT_DOCS ++
-      Dedup.CJK_NEARDUP_DOCS).toDF("doc_id", "text")
-    lmScoreCharsOf(
-      documents(s, d).select(col("doc_id"), col("text")).unionByName(planted))
-  }
+  private def lmScoreChars(s: SparkSession, d: String): DataFrame =
+    lmScoreCharsOf(ScriptRouting.corpus(s, d,
+      LETTER_TOKEN_DOCS ++ LANGID_SCRIPT_DOCS ++ Dedup.CJK_NEARDUP_DOCS))
 
-  /** The routed char-bigram familiarity pipeline over an arbitrary
-    * (doc_id, text, ...) frame — the spec seam.
+  /** The routed char-bigram familiarity over an arbitrary
+    * (doc_id, text, ...) frame — the spec seam. CharNGrams' short-input
+    * fallback (one whole-squeeze element) is dropped by an exact-length
+    * row filter, the twin of the oracle's `length(sq) >= 2` CASE.
     */
   private[graft] def lmScoreCharsOf(docs: DataFrame): DataFrame = {
-    val routed = docs
-      .withColumn("sq", ScriptRouting.squeezedLetters(col("text")))
-      .filter(ScriptRouting.unsegmented(col("sq")))
-    val bg = routed
-      .select(col("doc_id"),
-        explode(org.apache.spark.sql.graft.TextColumns
-          .charNGrams(col("sq"), 2)).as("bigram"))
-      .filter(length(col("bigram")) === 2)
-      .select(col("doc_id"), substring(md5(col("bigram")), 1, 16).as("bh"))
-    val model = bg.groupBy("bh").agg(count(lit(1)).as("cnt"))
-    val perDoc = bg.join(model, "bh")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"), sum("cnt").as("fam_sum"))
-    routed.select("doc_id")
-      .join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        coalesce(col("fam_sum"), lit(0L)).as("fam_sum"),
-        (col("fam_sum").cast("double") / col("n_bigrams")).as("familiarity"))
-      .select("doc_id", "n_bigrams", "fam_sum", "familiarity")
-      .orderBy("doc_id")
+    val routed = ScriptRouting.routed(docs)
+    familiarityOf(routed.select("doc_id"),
+      routed.select(col("doc_id"),
+          explode(org.apache.spark.sql.graft.TextColumns
+            .charNGrams(col("sq"), 2)).as("bigram"))
+        .filter(length(col("bigram")) === 2))
   }
 
-  private def lmScoreCharsOracle: String = {
-    val values = (LETTER_TOKEN_DOCS ++ LANGID_SCRIPT_DOCS ++
-      Dedup.CJK_NEARDUP_DOCS)
-      .map { case (id, t) => s"(CAST($id AS BIGINT), '$t')" }
-      .mkString(", ")
-    s"""WITH corpus AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL SELECT * FROM (VALUES $values) t(doc_id, text)),
-       |sq0 AS (
-       |  SELECT doc_id, ${ScriptRouting.sqSql} AS sq FROM corpus),
-       |routed AS (
-       |  SELECT doc_id, sq FROM sq0
-       |  WHERE ${ScriptRouting.unsegmentedSql("sq")}),
-       |bg AS (
-       |  SELECT doc_id, substr(md5(unnest(CASE WHEN length(sq) >= 2
-       |    THEN list_transform(range(length(sq)-1),
-       |      i -> substr(sq, i+1, 2))
-       |    ELSE [] END)), 1, 16) AS bh
-       |  FROM routed),
-       |model AS (SELECT bh, count(*) AS cnt FROM bg GROUP BY bh),
-       |per_doc AS (
-       |  SELECT doc_id, count(*) AS n_bigrams, sum(cnt)::BIGINT AS fam_sum
-       |  FROM bg JOIN model USING (bh) GROUP BY doc_id)
-       |SELECT r.doc_id,
-       |  coalesce(n_bigrams, 0) AS n_bigrams,
-       |  coalesce(fam_sum, 0) AS fam_sum,
-       |  fam_sum::DOUBLE / n_bigrams AS familiarity
-       |FROM routed r LEFT JOIN per_doc ON r.doc_id = per_doc.doc_id
-       |ORDER BY r.doc_id""".stripMargin
-  }
+  private def lmScoreCharsOracle: String =
+    familiarityOracle(ScriptRouting.routedSql(
+        LETTER_TOKEN_DOCS ++ LANGID_SCRIPT_DOCS ++ Dedup.CJK_NEARDUP_DOCS),
+      "routed",
+      """CASE WHEN length(sq) >= 2
+        |      THEN list_transform(range(length(sq)-1),
+        |        i -> substr(sq, i+1, 2))
+        |      ELSE [] END""".stripMargin,
+      "routed", "doc_id")
 
   // ---- registry -------------------------------------------------------
 

@@ -101,11 +101,12 @@ object TrainingPipeline extends QueryModule {
        |      ELSE [array_to_string(words, ' ')] END) AS grams
        |  FROM docs)""".stripMargin
 
-  /** Benchmark n-gram decontamination: flag every training document
-    * sharing at least one [[DECON_GRAM]]-word shingle with the held-out
-    * benchmark slice, reporting how many of its distinct shingles hit.
+  /** Benchmark n-gram decontamination over a gram table `g(doc_id,
+    * grams)` of distinct grams per doc: flag every training document
+    * sharing at least one gram with the held-out benchmark slice,
+    * reporting how many of its distinct grams hit.
     *
-    * Scale: the benchmark index is distinct shingles of the EVAL set —
+    * Scale: the benchmark index is distinct grams of the EVAL set —
     * megabytes even when the training corpus is 100 TB — so it rides a
     * broadcast hash join (a Bloom filter over the same set is the
     * lossy variant; the broadcast is exact at the same network cost
@@ -113,23 +114,25 @@ object TrainingPipeline extends QueryModule {
     * → partial-count; nothing wide shuffles: the only exchange is the
     * (doc_id, count) aggregation.
     */
-  private def decontaminate(s: SparkSession, d: String): DataFrame = {
-    val g = materialized(s, d, "decon_grams")(
-      withGrams(documents(s, d)).select("doc_id", "grams"))
-    val bench = g.filter(col("doc_id") % DECON_MOD === 0)
-      .select(explode(col("grams")).as("gram")).distinct()
+  private def deconReport(g: DataFrame): DataFrame =
     g.filter(col("doc_id") % DECON_MOD =!= 0)
       .select(col("doc_id"), size(col("grams")).cast("long").as("n_grams"),
         explode(col("grams")).as("gram"))
-      .join(broadcast(bench), "gram")
+      .join(broadcast(benchIndex(g)), "gram")
       .groupBy("doc_id")
       .agg(max("n_grams").as("n_grams"), count(lit(1)).as("n_hits"))
       .orderBy("doc_id")
-  }
 
-  private def decontaminateOracle: String =
-    s"""WITH $wordsCte,
-       |$gramsCte,
+  /** The distinct grams of the benchmark slice of a gram table. */
+  private def benchIndex(g: DataFrame): DataFrame =
+    g.filter(col("doc_id") % DECON_MOD === 0)
+      .select(explode(col("grams")).as("gram")).distinct()
+
+  /** DuckDB twin of [[deconReport]] over a CTE chain ending in
+    * `g(doc_id, grams)`.
+    */
+  private def deconReportOracle(grams: String): String =
+    s"""WITH $grams,
        |bench AS (
        |  SELECT DISTINCT unnest(grams) AS gram FROM g
        |  WHERE doc_id % $DECON_MOD = 0),
@@ -140,6 +143,17 @@ object TrainingPipeline extends QueryModule {
        |  count(*)::BIGINT AS n_hits
        |FROM train JOIN bench ON train.gram = bench.gram
        |GROUP BY train.doc_id ORDER BY doc_id""".stripMargin
+
+  /** The [[DECON_GRAM]]-word gram table, once per session. */
+  private def deconGrams(s: SparkSession, d: String): DataFrame =
+    materialized(s, d, "decon_grams")(
+      withGrams(documents(s, d)).select("doc_id", "grams"))
+
+  private def decontaminate(s: SparkSession, d: String): DataFrame =
+    deconReport(deconGrams(s, d))
+
+  private def decontaminateOracle: String =
+    deconReportOracle(s"$wordsCte,\n$gramsCte")
 
   /** The APPLY path of [[decontaminate]]: drop every flagged training
     * document and emit the retained-corpus manifest — what a pipeline
@@ -152,13 +166,10 @@ object TrainingPipeline extends QueryModule {
     * but id-only.
     */
   private def decontaminateCut(s: SparkSession, d: String): DataFrame = {
-    val g = materialized(s, d, "decon_grams")(
-      withGrams(documents(s, d)).select("doc_id", "grams"))
-    val bench = g.filter(col("doc_id") % DECON_MOD === 0)
-      .select(explode(col("grams")).as("gram")).distinct()
+    val g = deconGrams(s, d)
     val flagged = g.filter(col("doc_id") % DECON_MOD =!= 0)
       .select(col("doc_id"), explode(col("grams")).as("gram"))
-      .join(broadcast(bench), "gram")
+      .join(broadcast(benchIndex(g)), "gram")
       .select("doc_id").distinct()
     documents(s, d).filter(col("doc_id") % DECON_MOD =!= 0)
       .join(flagged, Seq("doc_id"), "left_anti")
@@ -206,74 +217,31 @@ object TrainingPipeline extends QueryModule {
     -96L -> "某网页教学材料里恰好抄录了考试题目要求计算下列函数的导数并给出完整推导过程作为例题讲解",
     -95L -> "另一个训练文档内容完全原创没有任何基准泄漏问题涉及烹饪菜谱和旅行游记共约五十个字符长度合适")
 
-  /** Benchmark decontamination for unsegmented scripts — the routed
-    * twin of [[decontaminate]]: a CJK training doc quoting benchmark
-    * prose shares ZERO 8-word shingles with it (each doc is one
-    * `\p{L}` token), so the word-gram pass is structurally blind one
-    * more consumer over (round-16 verdict #2); this instance routes
-    * the corpus ∪ [[CJK_DECON_DOCS]] through [[ScriptRouting]] and
-    * overlaps distinct [[DECON_CHAR_GRAM]]-char windows of the squeeze
-    * instead. Same shapes at 100 TB: the benchmark index is eval-set
-    * sized and broadcast-joined; the routed training side streams
-    * explode → broadcast-join → partial count; the only exchange is
-    * the (doc_id, count) aggregation. The char-gram build is the
-    * codegen'd CharNGrams scan (built-in whole-text fallback below the
-    * window width, mirrored by the oracle's CASE).
+  /** [[decontaminate]] for unsegmented scripts: a CJK training doc
+    * quoting benchmark prose shares ZERO 8-word grams with it (each doc
+    * is one `\p{L}` token), so this row overlaps distinct
+    * [[DECON_CHAR_GRAM]]-char windows of the routed corpus ∪
+    * [[CJK_DECON_DOCS]] instead. CharNGrams squeezes to `\p{L}`
+    * internally (the Dedup shingle pattern), with a whole-text fallback
+    * below the window width that the oracle's CASE mirrors.
     */
-  private def decontaminateChars(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val planted = CJK_DECON_DOCS.toDF("doc_id", "text")
-    val g = materialized(s, d, "decon_char_grams")(
-      ScriptRouting.unsegmentedOnly(
-        documents(s, d).select(col("doc_id"), col("text"))
-          .unionByName(planted))
-        // CharNGrams squeezes to \p{L} internally (the Dedup shingle
-        // pattern) — no second regexp pass over the routed rows
+  private def decontaminateChars(s: SparkSession, d: String): DataFrame =
+    deconReport(materialized(s, d, "decon_char_grams")(
+      ScriptRouting.routed(ScriptRouting.corpus(s, d, CJK_DECON_DOCS))
         .withColumn("grams", array_distinct(
           org.apache.spark.sql.graft.TextColumns.charNGrams(
             lower(nfc(col("text"))), DECON_CHAR_GRAM)))
-        .select("doc_id", "grams"))
-    val bench = g.filter(col("doc_id") % DECON_MOD === 0)
-      .select(explode(col("grams")).as("gram")).distinct()
-    g.filter(col("doc_id") % DECON_MOD =!= 0)
-      .select(col("doc_id"), size(col("grams")).cast("long").as("n_grams"),
-        explode(col("grams")).as("gram"))
-      .join(broadcast(bench), "gram")
-      .groupBy("doc_id")
-      .agg(max("n_grams").as("n_grams"), count(lit(1)).as("n_hits"))
-      .orderBy("doc_id")
-  }
+        .select("doc_id", "grams")))
 
-  private def decontaminateCharsOracle: String = {
-    val values = CJK_DECON_DOCS
-      .map { case (id, t) => s"(CAST($id AS BIGINT), '$t')" }
-      .mkString(", ")
-    s"""WITH corpus AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL SELECT * FROM (VALUES $values) t(doc_id, text)),
-       |sq0 AS (
-       |  SELECT doc_id, ${ScriptRouting.sqSql} AS sq FROM corpus),
-       |sq AS (
-       |  SELECT doc_id, sq FROM sq0
-       |  WHERE ${ScriptRouting.unsegmentedSql("sq")}),
+  private def decontaminateCharsOracle: String =
+    deconReportOracle(s"""${ScriptRouting.routedSql(CJK_DECON_DOCS)},
        |g AS (
        |  SELECT doc_id,
        |    list_distinct(CASE WHEN length(sq) >= $DECON_CHAR_GRAM
        |      THEN list_transform(range(length(sq) - ${DECON_CHAR_GRAM - 1}),
        |        i -> substr(sq, i + 1, $DECON_CHAR_GRAM))
        |      ELSE [sq] END) AS grams
-       |  FROM sq),
-       |bench AS (
-       |  SELECT DISTINCT unnest(grams) AS gram FROM g
-       |  WHERE doc_id % $DECON_MOD = 0),
-       |train AS (
-       |  SELECT doc_id, len(grams)::BIGINT AS n_grams, unnest(grams) AS gram
-       |  FROM g WHERE doc_id % $DECON_MOD <> 0)
-       |SELECT train.doc_id, max(train.n_grams) AS n_grams,
-       |  count(*)::BIGINT AS n_hits
-       |FROM train JOIN bench ON train.gram = bench.gram
-       |GROUP BY train.doc_id ORDER BY doc_id""".stripMargin
-  }
+       |  FROM routed)""".stripMargin)
 
   // ---- sequence packing ------------------------------------------------
 
@@ -358,11 +326,8 @@ object TrainingPipeline extends QueryModule {
     * doc_id + two longs, never text) plus one row-local squeeze pass.
     */
   private def packSequencesRouted(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val planted = CJK_PACK_DOCS.toDF("doc_id", "text")
     val w = Window.partitionBy("shard").orderBy("doc_id")
-    documents(s, d).select(col("doc_id"), col("text"))
-      .unionByName(planted)
+    ScriptRouting.corpus(s, d, CJK_PACK_DOCS)
       .withColumn("sq", ScriptRouting.squeezedLetters(col("text")))
       .select(col("doc_id"), (col("doc_id") % PACK_SHARDS).as("shard"),
         when(ScriptRouting.unsegmented(col("sq")), length(col("sq")))
@@ -377,13 +342,8 @@ object TrainingPipeline extends QueryModule {
       .orderBy("shard", "seq_id")
   }
 
-  private def packSequencesRoutedOracle: String = {
-    val values = CJK_PACK_DOCS
-      .map { case (id, t) => s"(CAST($id AS BIGINT), '$t')" }
-      .mkString(", ")
-    s"""WITH corpus AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL SELECT * FROM (VALUES $values) t(doc_id, text)),
+  private def packSequencesRoutedOracle: String =
+    s"""WITH ${ScriptRouting.corpusSql(CJK_PACK_DOCS)},
        |sq AS (
        |  SELECT doc_id, text, ${ScriptRouting.sqSql} AS sq FROM corpus),
        |toks AS (
@@ -401,7 +361,6 @@ object TrainingPipeline extends QueryModule {
        |  count(*)::BIGINT AS n_docs, sum(n_tok)::BIGINT AS n_tokens,
        |  min(doc_id) AS first_doc
        |FROM cums GROUP BY shard, seq_id ORDER BY shard, seq_id""".stripMargin
-  }
 
   // ---- deterministic hashing shared by the sampling operators ----------
 
@@ -534,10 +493,13 @@ object TrainingPipeline extends QueryModule {
   // ---- repetition quality stats (Gopher-style) ---------------------------
 
   /** Per-document repetition statistics in the style of the Gopher
-    * quality rules: the fraction of word-bigrams occupied by the single
-    * most frequent bigram, and the fraction of word-trigrams that are
-    * duplicates of an earlier trigram. High values mark boilerplate /
-    * degenerate repetition a pretraining corpus filters out.
+    * quality rules: the fraction of bigrams occupied by the single most
+    * frequent bigram, and the fraction of trigrams that are duplicates
+    * of an earlier trigram. High values mark boilerplate / degenerate
+    * repetition a pretraining corpus filters out. `units` carries
+    * doc_id and the token count column `unit`; `grams(n)` is the n-gram
+    * array of a row, read as EMPTY below the window width. The word row
+    * passes words, the char row the code points of the routed squeeze.
     *
     * Scale: the trigram duplicate fraction is row-local (two array
     * sizes). The top-bigram count needs a per-(doc, bigram) frequency —
@@ -546,19 +508,14 @@ object TrainingPipeline extends QueryModule {
     * gram, not collapse onto one task. Ratios carry 6-dp rounding and
     * zero-guards (NULL, not inf/NaN) per the cross-engine discipline.
     */
-  private def repetitionStats(s: SparkSession, d: String): DataFrame = {
-    val base = materialized(s, d, "rep_base")(withWords(documents(s, d))
-      .withColumn("n_words", expr("size(words)").cast("long"))
-      // wordNGrams' short-input fallback is ONE whole-text element, but
-      // this operator's contract (and its oracle) wants an EMPTY array
-      // for docs below the window — hence the explicit size guard
-      .withColumn("bigrams",
-        when(size(col("words")) >= 2, wordNGramsU(lower(nfc(col("text"))), 2))
-          .otherwise(array().cast("array<string>")))
-      .withColumn("trigrams",
-        when(size(col("words")) >= 3, wordNGramsU(lower(nfc(col("text"))), 3))
-          .otherwise(array().cast("array<string>")))
-      .select(col("doc_id"), col("n_words"),
+  private def repetitionOf(s: SparkSession, d: String, tag: String,
+      units: => DataFrame, unit: String, grams: Int => Column): DataFrame = {
+    def window(n: Int): Column =
+      when(col(unit) >= n, grams(n)).otherwise(array().cast("array<string>"))
+    val base = materialized(s, d, tag)(units
+      .withColumn("bigrams", window(2))
+      .withColumn("trigrams", window(3))
+      .select(col("doc_id"), col(unit),
         size(col("bigrams")).cast("long").as("n_bi"),
         size(col("trigrams")).cast("long").as("n_tri"),
         size(array_distinct(col("trigrams"))).cast("long").as("n_tri_d"),
@@ -575,12 +532,39 @@ object TrainingPipeline extends QueryModule {
       .withColumn("dup_trigram_frac",
         round((col("n_tri") - col("n_tri_d")).cast("double") /
           when(col("n_tri") > 0, col("n_tri")), 6))
-      .select("doc_id", "n_words", "top_bigram_frac", "dup_trigram_frac")
+      .select("doc_id", unit, "top_bigram_frac", "dup_trigram_frac")
       .orderBy("doc_id")
   }
 
+  /** DuckDB twin of [[repetitionOf]] over a CTE chain ending in `base`
+    * (doc_id, `unit`, bigrams, trigrams).
+    */
+  private def repetitionOracle(base: String, unit: String): String =
+    s"""WITH $base,
+       |sizes AS (
+       |  SELECT doc_id, $unit, len(bigrams)::BIGINT AS n_bi,
+       |    len(trigrams)::BIGINT AS n_tri,
+       |    len(list_distinct(trigrams))::BIGINT AS n_tri_d
+       |  FROM base),
+       |bg AS (
+       |  SELECT doc_id, unnest(bigrams) AS bg FROM base),
+       |topbi AS (
+       |  SELECT doc_id, max(c) AS top_bi FROM (
+       |    SELECT doc_id, bg, count(*) AS c FROM bg GROUP BY doc_id, bg)
+       |  GROUP BY doc_id)
+       |SELECT sizes.doc_id, $unit,
+       |  round(top_bi::DOUBLE / (CASE WHEN n_bi > 0 THEN n_bi END), 6) AS top_bigram_frac,
+       |  round((n_tri - n_tri_d)::DOUBLE / (CASE WHEN n_tri > 0 THEN n_tri END), 6) AS dup_trigram_frac
+       |FROM sizes LEFT JOIN topbi ON sizes.doc_id = topbi.doc_id
+       |ORDER BY 1""".stripMargin
+
+  private def repetitionStats(s: SparkSession, d: String): DataFrame =
+    repetitionOf(s, d, "rep_base",
+      withWords(documents(s, d)).withColumn("n_words", expr("size(words)").cast("long")),
+      "n_words", wordNGramsU(lower(nfc(col("text"))), _))
+
   private def repetitionStatsOracle: String =
-    s"""WITH $wordsCte,
+    repetitionOracle(s"""$wordsCte,
        |base AS (
        |  SELECT doc_id, len(words)::BIGINT AS n_words,
        |    CASE WHEN len(words) >= 2
@@ -591,23 +575,7 @@ object TrainingPipeline extends QueryModule {
        |      THEN list_transform(range(len(words)-2),
        |        i -> words[i+1] || ' ' || words[i+2] || ' ' || words[i+3])
        |      ELSE [] END AS trigrams
-       |  FROM docs),
-       |sizes AS (
-       |  SELECT doc_id, n_words, len(bigrams)::BIGINT AS n_bi,
-       |    len(trigrams)::BIGINT AS n_tri,
-       |    len(list_distinct(trigrams))::BIGINT AS n_tri_d
-       |  FROM base),
-       |bg AS (
-       |  SELECT doc_id, unnest(bigrams) AS bg FROM base),
-       |topbi AS (
-       |  SELECT doc_id, max(c) AS top_bi FROM (
-       |    SELECT doc_id, bg, count(*) AS c FROM bg GROUP BY doc_id, bg)
-       |  GROUP BY doc_id)
-       |SELECT sizes.doc_id, n_words,
-       |  round(top_bi::DOUBLE / (CASE WHEN n_bi > 0 THEN n_bi END), 6) AS top_bigram_frac,
-       |  round((n_tri - n_tri_d)::DOUBLE / (CASE WHEN n_tri > 0 THEN n_tri END), 6) AS dup_trigram_frac
-       |FROM sizes LEFT JOIN topbi ON sizes.doc_id = topbi.doc_id
-       |ORDER BY 1""".stripMargin
+       |  FROM docs)""".stripMargin, "n_words")
 
   // ---- repetition quality stats, unsegmented scripts ----------------------
 
@@ -623,71 +591,20 @@ object TrainingPipeline extends QueryModule {
     -62L -> "自然流畅的中文散文内容每个字符各不相同避免重复以便统计基线保持低位数值水平测试用例设计完成",
     -63L -> (("滚动广告" * 8) + "正文只有这一点点"))
 
-  /** Gopher-style repetition statistics for unsegmented scripts — the
-    * routed twin of [[repetitionStats]]: a CJK doc has at most ONE
-    * `\p{L}` word, so its word-bigram/trigram arrays are empty and the
-    * word row reports NULL fractions (the oracle's zero-guard) — a
-    * repetition filter that cannot see the most boilerplate-prone
-    * pattern in unsegmented text, n-char loops (round-16 verdict #2).
-    * This instance routes corpus ∪ [[CJK_REP_DOCS]] through
-    * [[ScriptRouting]] and computes the same two signals over CHAR
-    * 2/3-grams of the squeeze: the top-bigram occupancy and the
-    * duplicate-trigram fraction. Same shapes: trigram dup fraction is
-    * row-local; the top-bigram count is explode → partial count →
-    * per-doc max, keyed (doc_id, gram) so a hot doc spreads by gram;
-    * 6-dp rounding and NULL zero-guards per the cross-engine
-    * discipline. The gram arrays are the codegen'd CharNGrams scan,
-    * size-guarded to EMPTY below the window (the word twin's guard).
+  /** [[repetitionStats]] for unsegmented scripts over CHAR 2/3-grams of
+    * the routed corpus ∪ [[CJK_REP_DOCS]] squeeze: a CJK doc has at most
+    * ONE `\p{L}` word, so its word-gram arrays are empty and the word
+    * row reports NULL fractions for the most boilerplate-prone pattern
+    * in unsegmented text, n-char loops.
     */
-  private def repetitionChars(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val planted = CJK_REP_DOCS.toDF("doc_id", "text")
-    val base = materialized(s, d, "rep_char_base")(
-      documents(s, d).select(col("doc_id"), col("text"))
-        .unionByName(planted)
-        .withColumn("sq", ScriptRouting.squeezedLetters(col("text")))
-        .filter(ScriptRouting.unsegmented(col("sq")))
-        .withColumn("bigrams",
-          when(length(col("sq")) >= 2,
-            org.apache.spark.sql.graft.TextColumns.charNGrams(col("sq"), 2))
-            .otherwise(array().cast("array<string>")))
-        .withColumn("trigrams",
-          when(length(col("sq")) >= 3,
-            org.apache.spark.sql.graft.TextColumns.charNGrams(col("sq"), 3))
-            .otherwise(array().cast("array<string>")))
-        .select(col("doc_id"), length(col("sq")).cast("long").as("n_letters"),
-          size(col("bigrams")).cast("long").as("n_bi"),
-          size(col("trigrams")).cast("long").as("n_tri"),
-          size(array_distinct(col("trigrams"))).cast("long").as("n_tri_d"),
-          col("bigrams")))
-    val topBi = base
-      .select(col("doc_id"), explode(col("bigrams")).as("bg"))
-      .groupBy("doc_id", "bg").agg(count(lit(1)).as("c"))
-      .groupBy("doc_id").agg(max("c").as("top_bi"))
-    base.drop("bigrams")
-      .join(topBi, Seq("doc_id"), "left")
-      .withColumn("top_bigram_frac",
-        round(col("top_bi").cast("double") /
-          when(col("n_bi") > 0, col("n_bi")), 6))
-      .withColumn("dup_trigram_frac",
-        round((col("n_tri") - col("n_tri_d")).cast("double") /
-          when(col("n_tri") > 0, col("n_tri")), 6))
-      .select("doc_id", "n_letters", "top_bigram_frac", "dup_trigram_frac")
-      .orderBy("doc_id")
-  }
+  private def repetitionChars(s: SparkSession, d: String): DataFrame =
+    repetitionOf(s, d, "rep_char_base",
+      ScriptRouting.routed(ScriptRouting.corpus(s, d, CJK_REP_DOCS))
+        .withColumn("n_letters", length(col("sq")).cast("long")),
+      "n_letters", org.apache.spark.sql.graft.TextColumns.charNGrams(col("sq"), _))
 
-  private def repetitionCharsOracle: String = {
-    val values = CJK_REP_DOCS
-      .map { case (id, t) => s"(CAST($id AS BIGINT), '$t')" }
-      .mkString(", ")
-    s"""WITH corpus AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL SELECT * FROM (VALUES $values) t(doc_id, text)),
-       |sq0 AS (
-       |  SELECT doc_id, ${ScriptRouting.sqSql} AS sq FROM corpus),
-       |sq AS (
-       |  SELECT doc_id, sq FROM sq0
-       |  WHERE ${ScriptRouting.unsegmentedSql("sq")}),
+  private def repetitionCharsOracle: String =
+    repetitionOracle(s"""${ScriptRouting.routedSql(CJK_REP_DOCS)},
        |base AS (
        |  SELECT doc_id, length(sq)::BIGINT AS n_letters,
        |    CASE WHEN length(sq) >= 2
@@ -696,24 +613,7 @@ object TrainingPipeline extends QueryModule {
        |    CASE WHEN length(sq) >= 3
        |      THEN list_transform(range(length(sq) - 2), i -> substr(sq, i + 1, 3))
        |      ELSE [] END AS trigrams
-       |  FROM sq),
-       |sizes AS (
-       |  SELECT doc_id, n_letters, len(bigrams)::BIGINT AS n_bi,
-       |    len(trigrams)::BIGINT AS n_tri,
-       |    len(list_distinct(trigrams))::BIGINT AS n_tri_d
-       |  FROM base),
-       |bg AS (
-       |  SELECT doc_id, unnest(bigrams) AS bg FROM base),
-       |topbi AS (
-       |  SELECT doc_id, max(c) AS top_bi FROM (
-       |    SELECT doc_id, bg, count(*) AS c FROM bg GROUP BY doc_id, bg)
-       |  GROUP BY doc_id)
-       |SELECT sizes.doc_id, n_letters,
-       |  round(top_bi::DOUBLE / (CASE WHEN n_bi > 0 THEN n_bi END), 6) AS top_bigram_frac,
-       |  round((n_tri - n_tri_d)::DOUBLE / (CASE WHEN n_tri > 0 THEN n_tri END), 6) AS dup_trigram_frac
-       |FROM sizes LEFT JOIN topbi ON sizes.doc_id = topbi.doc_id
-       |ORDER BY 1""".stripMargin
-  }
+       |  FROM routed)""".stripMargin, "n_letters")
 
   // ---- semantic dedup (SemDeDup-style) -----------------------------------
 

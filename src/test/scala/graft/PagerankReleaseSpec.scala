@@ -2,11 +2,11 @@ package graft
 
 import org.apache.spark.graft.Jobs
 
-/** The pagerank and connected-components loops hold their inputs and
-  * live rounds as persisted or localCheckpoint blocks that nothing
-  * outside the loop can reach. A round that fails mid-loop must release
-  * them before the error leaves the builder, or every failed query
-  * strands its blocks until the end of the run.
+/** The pagerank, connected-components and BPE merge loops hold their
+  * inputs and live rounds as persisted or localCheckpoint blocks that
+  * nothing outside the loop can reach. A round that fails mid-loop must
+  * release them before the error leaves the builder, or every failed
+  * query strands its blocks until the end of the run.
   */
 class PagerankReleaseSpec extends SparkSpec {
 
@@ -25,12 +25,15 @@ class PagerankReleaseSpec extends SparkSpec {
   }
 
   /** Each loop's query, its name in the test, and what makes a warm
-    * build run the loop again: dedup_cc memoizes its labels.
+    * build run the loop again: dedup_cc memoizes its labels and
+    * text_bpe_train its trained merges.
     */
   private val loops: Seq[(String, String, () => Unit)] = Seq(
     ("graph_pagerank", "pagerank", () => ()),
     ("dedup_cc", "connected-components",
-      () => Materialize.forget(spark, sfDir, operators.Dedup.CcLabels)))
+      () => Materialize.forget(spark, sfDir, operators.Dedup.CcLabels)),
+    ("text_bpe_train", "BPE merge",
+      () => Materialize.forget(spark, sfDir, "text.bpe@10")))
 
   for ((q, loop, rerun) <- loops)
   test(s"a cancelled $loop round releases the loop's checkpoints") {

@@ -84,6 +84,16 @@ class SourceLintSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"module-level memo or registry in: $hits")
   }
 
+  test("the planted corpus is built only in ScriptRouting") {
+    // every planted (doc_id, text) union, Spark or oracle, goes through
+    // ScriptRouting.corpus / corpusSql: an inlined copy is how the
+    // routed front-end drifted into seventeen spellings before
+    val hits = Seq("unionByName(planted)", "UNION ALL SELECT * FROM (VALUES")
+      .flatMap(offenders(_, "graft/operators",
+        exempt = Set("graft/operators/ScriptRouting.scala")))
+    assert(hits.isEmpty, s"planted union outside ScriptRouting in: $hits")
+  }
+
   test("no sleeps or processing-time hacks in main sources") {
     // StreamStateBench: a measurement main, not an operator — its only
     // sleep drains the async StreamingQueryListener bus after each
