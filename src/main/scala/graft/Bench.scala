@@ -100,45 +100,22 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // JVM (not ICU) case mappings: identical for this ASCII corpus and
-      // for DuckDB, and avoids a multi-minute one-time ICU table build
-      // that the first lower()/upper() otherwise triggers per JVM
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-    // Measurement knob for the rehearsal-scale stream sweeps: flip the
-    // stateful-stream state store to the RocksDB provider (heap is the
-    // Spark default) so heap-vs-RocksDB wall time can be compared at
-    // sf10 with everything else identical. The driver never sets it;
-    // StreamingSpec proves both providers produce identical results.
-    val forcedProvider =
-      sys.env.get("SPARK_GRAFT_STATE_PROVIDER").filter(_.nonEmpty)
-    // An in-process caller (test, REPL, driver harness) may have set the
-    // forced-provider property itself; this run must RESTORE that value
-    // on exit, not clear it — set/restore, never set/clear.
-    val priorForced = sys.props.get(Tuning.STATE_STORE_FORCED_PROP)
-    forcedProvider.foreach { p =>
-      builder.config("spark.sql.streaming.stateStore.providerClass", p)
-      // an explicit measurement provider must actually govern: suppress
-      // the per-query RocksDB policy for this run (see Tuning). Set here
-      // and RESTORED in the finally at the bottom of main — a standalone
-      // run exits anyway, but an in-process invocation must not have its
-      // own setting stomped for every later streaming query in the JVM.
-      System.setProperty(Tuning.STATE_STORE_FORCED_PROP, p)
+    val cpus = Session.cpus
+    // Measurement knob for the rehearsal-scale stream sweeps: force the
+    // stateful-stream state store (heap is the Spark default) so
+    // heap-vs-RocksDB wall time can be compared at sf10 with everything
+    // else identical. Contract runs never set it; StreamingSpec proves
+    // both providers produce identical results.
+    Tuning.withForcedStateStore(
+        sys.env.get("SPARK_GRAFT_STATE_PROVIDER").filter(_.nonEmpty)) {
+      confs => Session.run(cpus, confs: _*)(sweep(_, sfDir, cpus))
     }
-    try {
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  }
+
+  /** Warm up, time every query, write the detail file; returns the
+    * terminal JSON line.
+    */
+  private def sweep(spark: SparkSession, sfDir: String, cpus: String): String = {
     import org.apache.spark.sql.functions._
     // JIT/codegen warmup: touch the vectorized parquet reader, hash
     // aggregation, window exec, regex/md5 and higher-order-function
@@ -275,26 +252,7 @@ object Bench {
     val slowest = ok.toSeq.sortBy(-_._2).take(5)
       .map { case (k, v) => "\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
-    // Terminal-line contract: the JSON line must be the LAST thing on the
-    // combined output, so every noisy step — cache release (the
-    // checkpoint-block unpersist logs a MapPartitionsRDD WARN), session
-    // stop — runs BEFORE the println, at ERROR log level. build.sbt
-    // strips sbt's [info] prefix and [success] trailer.
-    spark.sparkContext.setLogLevel("ERROR")
-    // Best-effort: a cleanup failure must never swallow the terminal
-    // line — every timed result above is already in hand, and the JVM
-    // exit (plus the scratch shutdown hook) reclaims whatever a failed
-    // step here leaves behind.
-    try Cleanup.releaseAll(spark)
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] cleanup failed (ignored): ${e.getMessage}")
-    }
     // ONE compact line, well under the driver's output-tail window.
-    println(s"""{"metric":"total","value":${r3(total)},"stat":"p50_of_$SWEEPS","min_total":${r3(minTotal)},"unit":"sec","n_queries":${med.size},"failed":${failedNames.size},"slowest":$slowest,"env":$env,"detail":$detailRef,"sf":"$sfDir"}""")
-    System.out.flush()
-    } finally forcedProvider.foreach(_ => priorForced match {
-      case Some(v) => System.setProperty(Tuning.STATE_STORE_FORCED_PROP, v)
-      case None    => System.clearProperty(Tuning.STATE_STORE_FORCED_PROP)
-    })
+    s"""{"metric":"total","value":${r3(total)},"stat":"p50_of_$SWEEPS","min_total":${r3(minTotal)},"unit":"sec","n_queries":${med.size},"failed":${failedNames.size},"slowest":$slowest,"env":$env,"detail":$detailRef,"sf":"$sfDir"}"""
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Merge-ladder scaling of the BPE trainer — the ROUND-COUNT dimension
@@ -36,58 +35,45 @@ object BpeLadderBench {
     val ladder: Seq[Int] =
       if (args.length > 1) args(1).split(",").toSeq.map(_.trim.toInt)
       else Seq(10, 100, 1000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // locale-safe JSON numbers: the f interpolator is locale-sensitive
-    // (a comma decimal separator under e.g. de_DE voids the artifact
-    // line); stderr progress keeps f-interp, the JSON goes through this
-    def rn(v: Double, scale: Int): String =
-      BigDecimal(v).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toString
-    val points = ladder.map { m =>
-      val t0 = System.nanoTime()
-      val vocab = operators.TextAnalysis.bpeRounds(spark, sfDir, m)._2
-      val Array(row) = vocab
-        .agg(count(lit(1)).as("n_words"),
-          sum(size(split(col("seq"), " ")).cast("long")).as("n_symbols"))
-        .collect()
-      val secs = (System.nanoTime() - t0) / 1e9
-      // the O(1)-retention witness at THIS merge count (Round13Spec pins
-      // it at 5/25 merges; the ladder re-proves it wherever it runs,
-      // incl. the 32k production point): after m rounds only the final
-      // round's checkpoint survives — a census that grew with m would
-      // be the r12 defect back
-      val census = spark.sparkContext.getPersistentRDDs.size
-      // release this ladder point's checkpoint blocks before the next
-      // (the train path frees all but the final round itself; the
-      // store frees the final round with the memoized triple, so a
-      // triple whose checkpoint is gone is never handed out for
-      // recompute). NOT Cleanup.releaseAll — that is the end-of-run
-      // sequence and stops the session.
-      Materialize.clear()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      System.err.println(f"[bpe-ladder] merges=$m wall=$secs%.1fs " +
-        f"per-round=${secs / m}%.3fs vocab=${row.getLong(0)} " +
-        f"symbols=${row.getLong(1)} census=$census")
-      (m, secs, row.getLong(0), row.getLong(1), census)
+    Session.run(Session.cpus) { spark =>
+      // locale-safe JSON numbers: the f interpolator is locale-sensitive
+      // (a comma decimal separator under e.g. de_DE voids the artifact
+      // line); stderr progress keeps f-interp, the JSON goes through this
+      def rn(v: Double, scale: Int): String =
+        BigDecimal(v).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toString
+      val points = ladder.map { m =>
+        val t0 = System.nanoTime()
+        val vocab = operators.TextAnalysis.bpeRounds(spark, sfDir, m)._2
+        val Array(row) = vocab
+          .agg(count(lit(1)).as("n_words"),
+            sum(size(split(col("seq"), " ")).cast("long")).as("n_symbols"))
+          .collect()
+        val secs = (System.nanoTime() - t0) / 1e9
+        // the O(1)-retention witness at THIS merge count (Round13Spec pins
+        // it at 5/25 merges; the ladder re-proves it wherever it runs,
+        // incl. the 32k production point): after m rounds only the final
+        // round's checkpoint survives — a census that grew with m would
+        // be the r12 defect back
+        val census = spark.sparkContext.getPersistentRDDs.size
+        // release this ladder point's checkpoint blocks before the next
+        // (the train path frees all but the final round itself; the
+        // store frees the final round with the memoized triple, so a
+        // triple whose checkpoint is gone is never handed out for
+        // recompute). `release`, not `releaseAll`: the session stays up
+        // for the next point.
+        Cleanup.release(spark)
+        System.err.println(f"[bpe-ladder] merges=$m wall=$secs%.1fs " +
+          f"per-round=${secs / m}%.3fs vocab=${row.getLong(0)} " +
+          f"symbols=${row.getLong(1)} census=$census")
+        (m, secs, row.getLong(0), row.getLong(1), census)
+      }
+      val json = points.map { case (m, secs, nw, ns, census) =>
+        s"""{"merges":$m,"wall_sec":${rn(secs, 2)},""" +
+          s""""sec_per_round":${rn(secs / m, 4)},""" +
+          s""""vocab_rows":$nw,"final_symbols":$ns,""" +
+          s""""persisted_rdds_after":$census}"""
+      }.mkString("[", ",", "]")
+      s"""{"metric":"bpe_merge_ladder","sf_dir":"$sfDir","points":$json}"""
     }
-    val json = points.map { case (m, secs, nw, ns, census) =>
-      s"""{"merges":$m,"wall_sec":${rn(secs, 2)},""" +
-        s""""sec_per_round":${rn(secs / m, 4)},""" +
-        s""""vocab_rows":$nw,"final_symbols":$ns,""" +
-        s""""persisted_rdds_after":$census}"""
-    }.mkString("[", ",", "]")
-    println(s"""{"metric":"bpe_merge_ladder","sf_dir":"$sfDir","points":$json}""")
-    spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
@@ -60,61 +60,50 @@ object PairScaleBench {
     val sfDir = args.headOption.getOrElse(sys.error(
       "usage: PairScaleBench <sfDir> [fullCap]"))
     val fullCap = args.lift(1).map(_.toLong).getOrElse(100000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    Session.run(Session.cpus) { spark =>
+      val corpus = Tables.embeddings(spark, sfDir).persist()
+      val n = corpus.count()
+      // bands·bits ≤ dim=64 throughout: the fixed contract point, the
+      // same-band-budget midpoints, the occupancy-priced extreme — and
+      // whatever point the scaled derivation picks for THIS corpus size,
+      // so every probed fixture prices its own sim_neardup_scaled knobs
+      val derivedBits = Similarity.scaledBits(n)
+      val derived = (Similarity.scaledBands(64, derivedBits), derivedBits)
+      val knobs =
+        (Seq((8, 6), (8, 8), (6, 10), (5, 12), (4, 16)) :+ derived).distinct
+      val rows = knobs.map { case (bands, bits) =>
+        val t0 = System.nanoTime()
+        val cand = candidateCount(corpus, bands, bits)
+        val priceSec = (System.nanoTime() - t0) / 1e9
+        val (fullSec, pairs) =
+          if (cand > fullCap) (Double.NaN, -1L)
+          else {
+            val t1 = System.nanoTime()
+            val p = Similarity.nearDupPairs(corpus, bands, bits, MIN_SIM)
+              .count()
+            (((System.nanoTime() - t1) / 1e9), p)
+          }
+        val r = Row(bands, bits, cand, priceSec, fullSec, pairs)
+        System.err.println(f"[pairscale] bands=$bands bits=$bits " +
+          f"candidates=$cand%,d price=${priceSec}%.1fs full=${fullSec}%.1fs " +
+          f"pairs=$pairs%,d")
+        r
+      }
+      corpus.unpersist()
 
-    val corpus = Tables.embeddings(spark, sfDir).persist()
-    val n = corpus.count()
-    // bands·bits ≤ dim=64 throughout: the fixed contract point, the
-    // same-band-budget midpoints, the occupancy-priced extreme — and
-    // whatever point the scaled derivation picks for THIS corpus size,
-    // so every probed fixture prices its own sim_neardup_scaled knobs
-    val derivedBits = Similarity.scaledBits(n)
-    val derived = (Similarity.scaledBands(64, derivedBits), derivedBits)
-    val knobs =
-      (Seq((8, 6), (8, 8), (6, 10), (5, 12), (4, 16)) :+ derived).distinct
-    val rows = knobs.map { case (bands, bits) =>
-      val t0 = System.nanoTime()
-      val cand = candidateCount(corpus, bands, bits)
-      val priceSec = (System.nanoTime() - t0) / 1e9
-      val (fullSec, pairs) =
-        if (cand > fullCap) (Double.NaN, -1L)
-        else {
-          val t1 = System.nanoTime()
-          val p = Similarity.nearDupPairs(corpus, bands, bits, MIN_SIM)
-            .count()
-          (((System.nanoTime() - t1) / 1e9), p)
-        }
-      val r = Row(bands, bits, cand, priceSec, fullSec, pairs)
-      System.err.println(f"[pairscale] bands=$bands bits=$bits " +
-        f"candidates=$cand%,d price=${priceSec}%.1fs full=${fullSec}%.1fs " +
-        f"pairs=$pairs%,d")
-      r
+      println(s"\n| bands | bits | candidates (pre-distinct) | occupancy-price s | full-run s | verified pairs |")
+      println("|---|---|---|---|---|---|")
+      rows.foreach { r =>
+        val full = if (r.fullSec.isNaN) "— (over cap)" else f"${r.fullSec}%.1f"
+        val pairs = if (r.pairs < 0) "—" else f"${r.pairs}%,d"
+        println(f"| ${r.bands} | ${r.bits} | ${r.candidates}%,d | ${r.priceSec}%.1f | $full | $pairs |")
+      }
+      val json = rows.map(r =>
+        s"""{"bands":${r.bands},"bits":${r.bits},"candidates":${r.candidates},""" +
+          s""""price_sec":${if (r.priceSec.isNaN) "null" else f"${r.priceSec}%.2f"},""" +
+          s""""full_sec":${if (r.fullSec.isNaN) "null" else f"${r.fullSec}%.2f"},""" +
+          s""""pairs":${r.pairs}}""").mkString("[", ",", "]")
+      s"""{"bench":"pair_scale","sf_dir":"$sfDir","n":$n,"min_sim":$MIN_SIM,"rows":$json}"""
     }
-    corpus.unpersist()
-
-    println(s"\n| bands | bits | candidates (pre-distinct) | occupancy-price s | full-run s | verified pairs |")
-    println("|---|---|---|---|---|---|")
-    rows.foreach { r =>
-      val full = if (r.fullSec.isNaN) "— (over cap)" else f"${r.fullSec}%.1f"
-      val pairs = if (r.pairs < 0) "—" else f"${r.pairs}%,d"
-      println(f"| ${r.bands} | ${r.bits} | ${r.candidates}%,d | ${r.priceSec}%.1f | $full | $pairs |")
-    }
-    val json = rows.map(r =>
-      s"""{"bands":${r.bands},"bits":${r.bits},"candidates":${r.candidates},""" +
-        s""""price_sec":${if (r.priceSec.isNaN) "null" else f"${r.priceSec}%.2f"},""" +
-        s""""full_sec":${if (r.fullSec.isNaN) "null" else f"${r.fullSec}%.2f"},""" +
-        s""""pairs":${r.pairs}}""").mkString("[", ",", "]")
-    println(s"""{"bench":"pair_scale","sf_dir":"$sfDir","n":$n,"min_sim":$MIN_SIM,"rows":$json}""")
-    spark.stop()
   }
 }

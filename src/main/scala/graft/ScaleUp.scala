@@ -57,19 +57,10 @@ object ScaleUp {
     // optional arg 6: cluster multi-file tables by this column (range
     // partition + in-file sort) — the ingest-order layout for event data
     val clusterBy = args.lift(5).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    run(spark, in, out, factor, filesPerTable, tables, clusterBy)
-    println(s"[scaleup] wrote ${factor}x of $in to $out")
-    spark.stop()
+    Session.run(Session.cpus) { spark =>
+      run(spark, in, out, factor, filesPerTable, tables, clusterBy)
+      s"[scaleup] wrote ${factor}x of $in to $out"
+    }
   }
 
   /** The derivation itself, on a caller-owned session (ScaleUpSpec pins

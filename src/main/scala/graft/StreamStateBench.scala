@@ -57,52 +57,37 @@ object StreamStateBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val providerArg = args.lift(1).getOrElse("heap")
-    val providerClass = providerArg match {
-      case "heap"    => None // Spark's default HDFSBackedStateStoreProvider
-      case "rocksdb" => Some("org.apache.spark.sql.execution.streaming" +
-        ".state.RocksDBStateStoreProvider")
-      case other     => Some(other) // escape hatch: any provider FQCN
+    // heap (Spark's default HDFSBackedStateStoreProvider), rocksdb, or
+    // any provider FQCN. Forcing also suppresses the per-query RocksDB
+    // policy (Tuning.withRocksDbStateStore): the whole point of the heap
+    // arm is to record what the policy queries WOULD cost on the heap
+    // provider.
+    val provider = args.lift(1).getOrElse("heap")
+    val cpus = args.lift(2).getOrElse(Session.cpus)
+    // The replay fixtures surface results through a COMPLETE-mode
+    // memory sink (built for driver-side oracle comparison); at the
+    // sf100 probe the session query's 95M result rows trip the 1 GiB
+    // default driver result cap BEFORE the state store is even
+    // stressed. Lifting the cap is a measurement-harness decision —
+    // the sink cost is identical under both providers, so the
+    // provider delta this main exists to measure is unaffected.
+    // Production pipelines append finalized rows to a file sink
+    // (stream_tumbling_append) and never ship results driver-side.
+    val uncapped = "spark.driver.maxResultSize" -> "0"
+    Tuning.withForcedStateStore(Some(provider)) { confs =>
+      Session.run(cpus, confs :+ uncapped: _*)(
+        measure(_, sfDir, provider, cpus, args.lift(3)))
     }
-    val cpus = args.lift(2)
-      .getOrElse(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // The replay fixtures surface results through a COMPLETE-mode
-      // memory sink (built for driver-side oracle comparison); at the
-      // sf100 probe the session query's 95M result rows trip the 1 GiB
-      // default driver result cap BEFORE the state store is even
-      // stressed. Lifting the cap is a measurement-harness decision —
-      // the sink cost is identical under both providers, so the
-      // provider delta this main exists to measure is unaffected.
-      // Production pipelines append finalized rows to a file sink
-      // (stream_tumbling_append) and never ship results driver-side.
-      .config("spark.driver.maxResultSize", "0")
-    providerClass.foreach(p =>
-      builder.config("spark.sql.streaming.stateStore.providerClass", p))
-    // suppress the per-query RocksDB policy (Tuning.withRocksDbStateStore)
-    // for this measurement run: the whole point of the heap arm is to
-    // record what the policy queries WOULD cost on the heap provider.
-    // Set inside try / cleared in the finally at the end of main: a
-    // standalone run exits anyway, but an in-process invocation (test,
-    // REPL, driver harness) must not leave the policy disabled for
-    // every later streaming query in the JVM — the same discipline
-    // StreamStateBenchSpec already applies.
-    System.setProperty(Tuning.STATE_STORE_FORCED_PROP, providerArg)
-    try {
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  }
 
+  /** Time every selected stream query SHOTS times under the session's
+    * provider; returns the JSON line.
+    */
+  private def measure(spark: SparkSession, sfDir: String, provider: String,
+      cpus: String, filter: Option[String]): String = {
     val all = SparkEntry.queries.keys.toSeq
       .filter(_.startsWith("stream_")).sorted
-    val contract = args.lift(3) match {
+    val contract = filter match {
       case None => all
       case Some(f) =>
         val wanted = f.split(",").map(_.trim).filter(_.nonEmpty).toSet
@@ -208,16 +193,9 @@ object StreamStateBench {
         s""","rocksdb_mem_bytes":${p.rocksMemBytes}""" +
         s""","progress_events":${p.progressCount}}"""
     }.mkString("{", ",", "}")
-    spark.sparkContext.setLogLevel("ERROR")
-    try Cleanup.releaseAll(spark)
-    catch { case e: Throwable =>
-      System.err.println(s"[statebench] cleanup failed (ignored): ${e.getMessage}")
-    }
     val heapGb = Runtime.getRuntime.maxMemory / 1024.0 / 1024 / 1024
-    println(s"""{"bench":"stream_state","provider":"$providerArg"""" +
+    s"""{"bench":"stream_state","provider":"$provider"""" +
       s""","total_sec":${r3(walls.map(w => p50(w._2)).sum)},"queries":$qs""" +
-      s""","cpus":$cpus,"heap_gb":${r3(heapGb)},"sf":"$sfDir"}""")
-    System.out.flush()
-    } finally System.clearProperty(Tuning.STATE_STORE_FORCED_PROP)
+      s""","cpus":$cpus,"heap_gb":${r3(heapGb)},"sf":"$sfDir"}"""
   }
 }

@@ -52,11 +52,14 @@ object Tables {
     *    external driver session in, say, Asia/Tokyo would otherwise read
     *    the same fixtures to instants shifted 9 h from the DuckDB oracle.
     */
-  private[graft] def tsCompatConfs(s: SparkSession): Unit = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    s.conf.set("spark.sql.session.timeZone", "UTC")
-  }
+  private[graft] def tsCompatConfs(s: SparkSession): Unit =
+    TsCompat.foreach { case (k, v) => s.conf.set(k, v) }
+
+  /** The three confs [[tsCompatConfs]] pins; [[Session]] builds with them. */
+  private[graft] val TsCompat: Seq[(String, String)] = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
+    "spark.sql.session.timeZone" -> "UTC")
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"

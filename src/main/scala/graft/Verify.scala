@@ -14,21 +14,14 @@ object Verify {
     // result dirs for the real name would pass the downstream compare
     require(only.subsetOf(SparkEntry.queries.keySet),
       s"query names not in SparkEntry.queries: ${only.diff(SparkEntry.queries.keySet).toSeq.sorted.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // see Bench: ASCII-identical, avoids a minutes-long ICU one-time init
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    Session.run(Session.cpus)(dump(_, sfDir, outDir, only))
+  }
+
+  /** Write every selected result and oracle_sql.json; returns the
+    * terminal line.
+    */
+  private def dump(spark: SparkSession, sfDir: String, outDir: String,
+      only: Set[String]): String = {
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (only.isEmpty || only(name)) {
@@ -64,16 +57,6 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // Release module-level persisted caches AND any remaining persisted
-    // RDDs (localCheckpoint blocks from the CC loop) — everything is
-    // consumed by now, and a long-lived process must not accumulate
-    // block-manager memory across runs.
-    // Best-effort: every result and oracle_sql.json is already on disk;
-    // a cleanup failure must not fail the run's exit code (the JVM exit
-    // and the scratch shutdown hook reclaim what a failed step leaves).
-    try Cleanup.releaseAll(spark)
-    catch { case e: Throwable =>
-      System.err.println(s"[verify] cleanup failed (ignored): ${e.getMessage}")
-    }
+    s"[verify] done: $outDir"
   }
 }

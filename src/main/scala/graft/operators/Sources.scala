@@ -431,8 +431,8 @@ object Sources extends QueryModule {
   /** Release this process's scratch: stream checkpoints, append-sink
     * dirs, AND the round-trip sink dirs under graft_src_<pid> (a clean
     * exit must not leave five table copies in tmpdir waiting for some
-    * future JVM's dead-pid reaper). Called by Verify/Bench before
-    * session stop and by the shutdown hook — same discipline as the
+    * future JVM's dead-pid reaper). Called by `Cleanup.release` and
+    * by the shutdown hook — same discipline as the
     * session store's release: on a tmpfs root the leftovers are
     * RAM, and a long-lived host accumulating one orphan set per JVM
     * would leak it (the first-use rmTree only covers pid reuse, not

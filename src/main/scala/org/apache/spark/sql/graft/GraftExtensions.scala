@@ -11,8 +11,7 @@ import org.apache.spark.sql.internal.StaticSQLConf
   * AQE rule [[SmallTerminalSort]]; it also defaults the size of Spark's
   * generated-class cache (see [[GraftExtensions.CodegenCacheMaxEntries]]).
   *
-  * Install via `SparkSession.builder().withExtensions(new
-  * GraftExtensions)` or
+  * Install via `graft.Session` (the builder's `withExtensions`) or
   * `spark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions`.
   * Only the first reaches the cache default: the builder runs `apply`
   * before `build()` creates its `SparkConf`, while the conf route runs

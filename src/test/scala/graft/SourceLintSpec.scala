@@ -15,8 +15,9 @@ class SourceLintSpec extends AnyFunSuite {
 
   private val mainRoot = Paths.get("src/main/scala")
 
-  private def sources(sub: String): Seq[(String, String)] = {
-    val dir = mainRoot.resolve(sub)
+  private def sources(sub: String,
+      root: java.nio.file.Path = mainRoot): Seq[(String, String)] = {
+    val dir = root.resolve(sub)
     Files.walk(dir).iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
       .map(p => (p.toString, new String(Files.readAllBytes(p))))
@@ -24,8 +25,9 @@ class SourceLintSpec extends AnyFunSuite {
   }
 
   private def offenders(pattern: String, sub: String,
-      exempt: Set[String] = Set.empty): Seq[String] =
-    sources(sub).collect {
+      exempt: Set[String] = Set.empty,
+      root: java.nio.file.Path = mainRoot): Seq[String] =
+    sources(sub, root).collect {
       case (path, text)
           if text.contains(pattern) && !exempt.exists(path.endsWith) =>
         path
@@ -92,6 +94,17 @@ class SourceLintSpec extends AnyFunSuite {
       .flatMap(offenders(_, "graft/operators",
         exempt = Set("graft/operators/ScriptRouting.scala")))
     assert(hits.isEmpty, s"planted union outside ScriptRouting in: $hits")
+  }
+
+  test("only graft.Session builds a SparkSession") {
+    // one factory, so no entry point or suite runs a session the others
+    // don't: nine hand-copied builder blocks had drifted apart (missing
+    // extensions, warehouse dir, ICU and timestamp confs; two core-count
+    // defaults). The needle is split so this file does not match itself.
+    val needle = "SparkSession.builder" + "("
+    val hits = offenders(needle, "", exempt = Set("graft/Session.scala")) ++
+      offenders(needle, "", root = Paths.get("src/test/scala"))
+    assert(hits.isEmpty, s"SparkSession built outside graft.Session in: $hits")
   }
 
   test("no sleeps or processing-time hacks in main sources") {

@@ -11,33 +11,13 @@ trait SparkSpec extends AnyFunSuite {
   /** Run `body` with session confs set, restoring each (or unsetting
     * it) afterwards.
     */
-  def withConfs[T](pairs: (String, String)*)(body: => T): T = {
-    val olds = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally olds.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
+  def withConfs[T](pairs: (String, String)*)(body: => T): T =
+    Tuning.withConfs(spark, pairs: _*)(body)
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // see Bench: ASCII-identical, avoids a minutes-long ICU one-time init
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // 4 explicitly, not Session.cpus: the suite runs with SPARK_GRAFT_CPUS
+  // set to the host's cores, and PLAN_DIGEST.json is pinned at 4
+  // shuffle partitions
+  lazy val session: SparkSession = Session.local("4")
 }

@@ -101,8 +101,7 @@ class StreamStateBenchSpec extends SparkSpec {
       }
     }
     spark.streams.addListener(listener)
-    System.setProperty(Tuning.STATE_STORE_FORCED_PROP, "heap")
-    try {
+    try Tuning.withForcedStateStore(Some("heap")) { _ =>
       SparkEntry.queries("stream_dedup")(spark, sfDir).collect()
       def dedupKeys: Option[Set[String]] =
         seen.asScala.collectFirst {
@@ -115,10 +114,35 @@ class StreamStateBenchSpec extends SparkSpec {
           k.nonEmpty && !k.exists(_.startsWith("rocksdb"))),
         s"with the forced-provider hatch set, stream_dedup must run on " +
           s"the session provider (heap here); state metrics: $dedupKeys")
-    } finally {
-      System.clearProperty(Tuning.STATE_STORE_FORCED_PROP)
-      spark.streams.removeListener(listener)
+    } finally spark.streams.removeListener(listener)
+  }
+
+  test("the forced-provider scope restores a hatch value set before it") {
+    val prop = Tuning.STATE_STORE_FORCED_PROP
+    sys.props(prop) = "sentinel"
+    try {
+      Tuning.withForcedStateStore(Some("heap")) { confs =>
+        assert(confs.isEmpty, "heap is the session default: no conf to set")
+        assert(sys.props.get(prop).contains("heap"))
+      }
+      assert(sys.props.get(prop).contains("sentinel"),
+        "the scope cleared or replaced the caller's own hatch value")
+    } finally sys.props -= prop
+  }
+
+  test("the forced-provider scope leaves no hatch behind when none was set, " +
+      "also when the run throws") {
+    val prop = Tuning.STATE_STORE_FORCED_PROP
+    assert(!sys.props.contains(prop))
+    intercept[IllegalStateException] {
+      Tuning.withForcedStateStore(Some("rocksdb")) { confs =>
+        // the forced RocksDB arm runs the knob set the shipped queries run
+        assert(confs == Tuning.RocksDbConfs)
+        assert(sys.props.get(prop).contains("rocksdb"))
+        throw new IllegalStateException("run failed")
+      }
     }
+    assert(!sys.props.contains(prop), "the scope left the hatch set")
   }
 
   test("queryName maps to its contract query") {
