@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Generic connected components over an undirected edge list —
   * min-label propagation accelerated with pointer jumping, as a driver
@@ -31,73 +30,6 @@ object ConnectedComponents {
     extends IllegalStateException(
       s"connected components did not converge after $iters rounds " +
         "(pointer jumping makes this ~2^iters of diameter — raise maxIters)")
-
-  /** Session config key selecting the round-materialization mode: unset
-    * (default) uses `localCheckpoint` — blocks in executor storage,
-    * fastest, correct whenever the job can simply be rerun on executor
-    * loss; set to a directory path it uses reliable `checkpoint()` into
-    * that path, which survives executor loss mid-loop — the shape a
-    * long CC run on a real cluster wants, since a truncated lineage
-    * cannot recompute lost local blocks. Config, not an API parameter,
-    * so deployments flip it without touching call sites. Pair with
-    * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (or
-    * periodic dir cleanup) on long-lived sessions: each round writes a
-    * new rdd-N subdir.
-    */
-  val CheckpointDirKey = "spark.graft.cc.checkpointDir"
-
-  /** True when `current` (the SparkContext's checkpoint dir, which
-    * setCheckpointDir stored as `<root>/<uuid>` in SCHEME-QUALIFIED form,
-    * e.g. `file:/tmp/x/<uuid>`) already lives DIRECTLY under the
-    * configured `root`. Both sides are qualified through Hadoop Path
-    * resolution before comparing — a raw string compare never matches
-    * the scheme-qualified stored form (so every round would re-point and
-    * re-UUID), and a bare `startsWith` has no separator boundary (root
-    * `/a/ckpt` would wrongly claim `/a/ckpt-old/<uuid>`). Parent
-    * EQUALITY, not prefix: setCheckpointDir appends exactly one UUID
-    * level, so the current dir's parent must BE the root.
-    */
-  private[graft] def underConfiguredRoot(current: String, root: String,
-      hadoopConf: org.apache.hadoop.conf.Configuration): Boolean =
-    try {
-      import org.apache.hadoop.fs.Path
-      val rootPath = new Path(root)
-      val fs = rootPath.getFileSystem(hadoopConf)
-      val qualifiedRoot = fs.makeQualified(rootPath)
-      fs.makeQualified(new Path(current)).getParent == qualifiedRoot
-    } catch {
-      // unresolvable path/filesystem: claim no match so the caller
-      // re-points — setCheckpointDir then surfaces the real error
-      case scala.util.control.NonFatal(_) => false
-    }
-
-  /** Materialize a round and CUT its lineage, per [[CheckpointDirKey]].
-    * Both modes are eager: the fixpoint loop frees the previous round's
-    * blocks right after, which is only sound once the new round is fully
-    * materialized. The SparkContext checkpoint dir is process-global
-    * (setCheckpointDir appends a UUID subdir), so it is re-pointed only
-    * when it does not already live under the CONFIGURED root (via
-    * [[underConfiguredRoot]]'s qualified compare) — honoring a
-    * mid-session config change to a new root without resetting (and
-    * re-UUID-ing) on every round.
-    */
-  private[operators] def ckptRound(df: DataFrame): DataFrame =
-    df.sparkSession.conf.getOption(CheckpointDirKey) match {
-      case Some(dir) if dir.nonEmpty =>
-        val sc = df.sparkSession.sparkContext
-        if (!sc.getCheckpointDir.exists(
-            underConfiguredRoot(_, dir, sc.hadoopConfiguration)))
-          sc.setCheckpointDir(dir)
-        df.checkpoint(eager = true)
-      case _ =>
-        // marked lazily, then materialized by the eager path's own job,
-        // with the frame in hand: a failed job (cancelled group, lost
-        // executor) must not strand the round's partly stored blocks,
-        // which nothing else could reach to release
-        val round = df.localCheckpoint(false)
-        try { org.apache.spark.sql.graft.Checkpoints.materialize(round); round }
-        catch { case e: Throwable => graft.Materialize.free(round); throw e }
-    }
 
   /** One row per node of `nodes(id)`: (id, component) where component is
     * the smallest node id reachable via `edges(src, dst)` (undirected;
@@ -132,25 +64,20 @@ object ConnectedComponents {
     // checkpoint's LogicalRDD — the next round's union crashes rewriting
     // them (NoSuchElementException in UnionBase.rewriteConstraints).
     graft.Tuning.withoutConstraintPropagation(nodes.sparkSession) {
-    val sym = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Every round checkpoint the loop holds right now. A failed round (a
-    // cancelled job group, a lost executor) or NotConverged leaves the
-    // builder through the catch below, which frees them with `sym`:
-    // nothing outside the loop can reach them to release them later.
-    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def hold(df: DataFrame): DataFrame = { val r = ckptRound(df); held += r; r }
-    def release(df: DataFrame): Unit = { graft.Materialize.free(df); held -= df }
-    try {
+    // A failed round (a cancelled job group, a lost executor) or
+    // NotConverged leaves the builder through the scope, which frees
+    // every round it holds with `sym`.
+    graft.Materialize.rounds { rounds =>
+      val sym = rounds.persist(edges.select(col("src"), col("dst"))
+        .union(edges.select(col("dst").as("src"), col("src").as("dst"))))
       // Each round references the previous labels multiple times (join +
       // union + self-join), so without lineage truncation the logical plan
       // grows geometrically — exponential analysis/planning cost long
       // before any data is big (observed: minutes of Catalyst time by
-      // round ~10 on a 30-node graph). ckptRound materializes the round
-      // and CUTS the plan — localCheckpoint by default, reliable
-      // checkpoint() when CheckpointDirKey is set (cluster deployments).
-      var lbls = hold(sym.select(col("src").as("id")).distinct()
+      // round ~10 on a 30-node graph). hold materializes the round and
+      // CUTS the plan — localCheckpoint by default, reliable checkpoint()
+      // when Materialize.CheckpointDirKey is set (cluster deployments).
+      var lbls = rounds.hold(sym.select(col("src").as("id")).distinct()
         .withColumn("lbl", col("id")))
       // coalesce(…, 0): with an empty edge set the sum aggregates zero rows
       // and returns null — the fixpoint compare would NPE on graphs where
@@ -167,13 +94,13 @@ object ConnectedComponents {
           .select(col("dst").as("id"), col("lbl"))
         // checkpointed so the pointer-jump self-join reads materialized
         // blocks instead of executing the aggregation subtree twice
-        val mins = hold(
+        val mins = rounds.hold(
           lbls.union(prop).groupBy("id").agg(min("lbl").as("lbl")))
         // pointer jumping: follow the label's own label. Every label value
         // IS a participant id (labels start as ids and only min-combine),
         // so the lookup is a self-join on the same (id, lbl) table; the
         // left+coalesce guards the invariant rather than assuming it.
-        val next = hold(mins.as("m")
+        val next = rounds.hold(mins.as("m")
           .join(mins.select(col("id").as("p_id"), col("lbl").as("p_lbl")),
             col("m.lbl") === col("p_id"), "left")
           .select(col("m.id").as("id"),
@@ -196,21 +123,15 @@ object ConnectedComponents {
         }
         // next is checkpointed EAGERLY above, so the previous round's and
         // the intermediate min table's blocks are no longer reachable
-        release(lbls)
-        release(mins)
+        rounds.release(lbls)
+        rounds.release(mins)
         lbls = next
       }
       if (!converged) throw new NotConverged(maxIters)
       val out = nodes.select("id")
         .join(lbls, Seq("id"), "left")
         .select(col("id"), coalesce(col("lbl"), col("id")).as("component"))
-      sym.unpersist()
       (out, iters)
-    } catch {
-      case e: Throwable =>
-        held.foreach(graft.Materialize.free)
-        sym.unpersist()
-        throw e
     }
     }
   }

@@ -447,7 +447,8 @@ object Dedup extends QueryModule {
     * (at cluster scale: written out, partitioned by src); each
     * iteration shuffles only (node, long) pairs — one groupBy(dst) per
     * round, same wire footprint as the pointer-jumping CC rounds, and
-    * each round is checkpointed via the CC helper: without lineage
+    * each round is checkpointed in a session-store round scope
+    * ([[graft.Materialize.rounds]]), as CC's are: without lineage
     * truncation the per-round plan nests the full prior plan and
     * Catalyst analysis goes superlinear long before data does
     * (measured 37.9 s → ~2 s at sf0.01 from the cut alone). The
@@ -462,57 +463,46 @@ object Dedup extends QueryModule {
     val edges = vp.union(vp.select(col("doc_b"), col("doc_a")))
       .toDF("src", "dst")
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    // ewd is read by all eight rounds: materialize it through the SAME
-    // round-checkpoint discipline as the loop instead of a CacheManager
-    // persist — each round re-planning an InMemoryRelation (cache
-    // lookup + columnar decode per iteration) measured 0.27 s/round at
-    // sf0.1 vs 0.08 s/round over the checkpointed LogicalRDD (probe,
-    // OPTIMIZATION_r18.md §pagerank: loop8 2.70 -> 1.17 s min, same
-    // rows). ckptRound honors the reliable-checkpoint config key for
-    // cluster deployments; the blocks are freed right after the loop.
-    val ewd = ConnectedComponents.ckptRound(edges.join(deg, "src"))
-    def nodes = documents(s, d).select("doc_id")
-    // Per round: ONE equi-join (rank mass onto edges) and ONE hash
-    // aggregation. Nodes with no inflow are reinstated by unioning a
-    // zero-contribution row per node DERIVED FROM THE PRIOR RANKS FRAME
-    // (which holds exactly one row per node) — not a second join, and
-    // not a re-scan of the corpus. Every round is checkpointed, the CC
-    // discipline: profiling the sparser alternatives showed the driver
-    // stalling seconds BETWEEN jobs on AQE re-optimization of the
-    // deepening plan (gaps growing 3→11 s by round 8 at sf0.01), while
-    // the cut keeps each round's optimizer unit a constant three
-    // operators over a LogicalRDD.
-    var ranks: DataFrame = null
-    try {
-      ranks = ConnectedComponents.ckptRound(
-        nodes.select(col("doc_id"), lit(PR_UNIT).as("rank")))
+    // a failed round (cancelled job group, lost executor) leaves through
+    // the scope, which frees ewd and the rounds it holds; at exit it frees
+    // ewd and hands the final round, which the result reads, to the store
+    graft.Materialize.rounds { rounds =>
+      // ewd is read by all eight rounds: materialize it through the SAME
+      // round-checkpoint discipline as the loop instead of a CacheManager
+      // persist — each round re-planning an InMemoryRelation (cache
+      // lookup + columnar decode per iteration) measured 0.27 s/round at
+      // sf0.1 vs 0.08 s/round over the checkpointed LogicalRDD (probe,
+      // OPTIMIZATION_r18.md §pagerank: loop8 2.70 -> 1.17 s min, same
+      // rows). hold honors the reliable-checkpoint config key for
+      // cluster deployments (Round6Spec runs this query under it).
+      val ewd = rounds.hold(edges.join(deg, "src"))
+      // Per round: ONE equi-join (rank mass onto edges) and ONE hash
+      // aggregation. Nodes with no inflow are reinstated by unioning a
+      // zero-contribution row per node DERIVED FROM THE PRIOR RANKS FRAME
+      // (which holds exactly one row per node) — not a second join, and
+      // not a re-scan of the corpus. Every round is checkpointed, the CC
+      // discipline: profiling the sparser alternatives showed the driver
+      // stalling seconds BETWEEN jobs on AQE re-optimization of the
+      // deepening plan (gaps growing 3→11 s by round 8 at sf0.01), while
+      // the cut keeps each round's optimizer unit a constant three
+      // operators over a LogicalRDD.
+      var ranks = rounds.hold(
+        documents(s, d).select(col("doc_id"), lit(PR_UNIT).as("rank")))
       for (_ <- 1 to PR_ITERS) {
         val contrib = ewd.join(ranks, col("src") === col("doc_id"))
           .select(col("dst"), expr("rank div deg").as("c"))
           .union(ranks.select(col("doc_id").as("dst"), lit(0L).as("c")))
-        val next = ConnectedComponents.ckptRound(
+        val next = rounds.hold(
           contrib.groupBy("dst").agg(sum(col("c")).as("inflow"))
             .select(col("dst").as("doc_id"),
               (lit(150000L) + expr("(inflow * 85) div 100")).as("rank")))
         // next is materialized eagerly, so the prior round's blocks are
         // unreachable — release them before they pile up across rounds
-        graft.Materialize.free(ranks)
+        rounds.release(ranks)
         ranks = next
       }
-    } catch {
-      // a failed round (cancelled job group, lost executor) must not
-      // strand the blocks of ewd and the last completed round: nothing
-      // outside this loop can reach them to release them
-      case e: Throwable =>
-        graft.Materialize.free(ewd)
-        if (ranks != null) graft.Materialize.free(ranks)
-        throw e
+      ranks.orderBy("doc_id")
     }
-    // every round consumed ewd; its blocks are dead once the last round
-    // materialized (the same release-when-unreachable discipline as the
-    // per-round frees above)
-    graft.Materialize.free(ewd)
-    ranks.orderBy("doc_id")
   }
 
   /** DuckDB twin: identical fixed-point recurrence, iterations unrolled
@@ -1515,26 +1505,28 @@ object Dedup extends QueryModule {
         .withColumn("sq", ScriptRouting.squeezedLetters(col("text")))
         .filter(ScriptRouting.latin(col("sq")))
         .select("doc_id")
-      val latinSigs = tracked(
-        sigTable(s, d).select("doc_id", "sig").join(latinIds, "doc_id")
-          .persist(StorageLevel.MEMORY_AND_DISK))
-      val wordPairs = verifiedPairsOfSigs(latinSigs, 0.5)
-        .select("doc_a", "doc_b")
-      // char base, routed: the memoized char-gram signature table is
-      // already unsegmented-only (and carries the planted CJK docs —
-      // the contract corpus, so the planted near-dups cluster)
-      val charPairs = verifiedPairsOfSigs(charSigTable(s, d), 0.5)
-        .select("doc_a", "doc_b")
-      val pairs = wordPairs.union(charPairs)
-      // Materialize the corpus-scale upstream (signature aggregation,
-      // LSH band join, agreement verify) BEFORE narrowing the fan-out:
-      // shuffle-partition conf is read when a job RUNS, not where its
-      // frame is defined, so without this eager cut a first dedup_cc
-      // call would execute the whole corpus pipeline at 8 reducers.
-      val edges = pairs
-        .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
+      // the scope unpersists both input caches once labels() has run its
+      // loop (eager per-round checkpoints: the result carries checkpointed
+      // lineage, not the edge plan), and on a failed build, when nothing
+      // else could reach them
+      graft.Materialize.rounds { rounds =>
+        val latinSigs = rounds.persist(
+          sigTable(s, d).select("doc_id", "sig").join(latinIds, "doc_id"))
+        val wordPairs = verifiedPairsOfSigs(latinSigs, 0.5)
+          .select("doc_a", "doc_b")
+        // char base, routed: the memoized char-gram signature table is
+        // already unsegmented-only (and carries the planted CJK docs —
+        // the contract corpus, so the planted near-dups cluster)
+        val charPairs = verifiedPairsOfSigs(charSigTable(s, d), 0.5)
+          .select("doc_a", "doc_b")
+        val pairs = wordPairs.union(charPairs)
+        // Materialize the corpus-scale upstream (signature aggregation,
+        // LSH band join, agreement verify) BEFORE narrowing the fan-out:
+        // shuffle-partition conf is read when a job RUNS, not where its
+        // frame is defined, so without this eager cut a first dedup_cc
+        // call would execute the whole corpus pipeline at 8 reducers.
+        val edges = rounds.persist(
+          pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
         edges.count()
         // the iterated tables are label/edge sets (LSH survivors) — tiny
         // relative to the corpus — so per-round task-launch overhead
@@ -1546,13 +1538,6 @@ object Dedup extends QueryModule {
             .select(col("id").as("doc_id"), col("component").as("cluster_id"))
             .persist(StorageLevel.MEMORY_AND_DISK)
         }
-      } finally {
-        // labels() has run its loop by here (eager per-round checkpoints)
-        // and its result carries checkpointed lineage, not the edge plan —
-        // the edge cache can go (non-blocking; consumers materialized);
-        // on a failed build nothing else could reach either cache
-        edges.unpersist(false)
-        latinSigs.unpersist(false)
       }
     }
 

@@ -1109,65 +1109,61 @@ object TextAnalysis extends QueryModule {
             |    'a', element_at(split(seq, ' '), i),
             |    'b', element_at(split(seq, ' '), i + 1)))""".stripMargin)).as("p"))
         .select(col("p.a").as("a"), col("p.b").as("b"), col("freq"))
-    var vocab = seed
-    var prevVc: Option[DataFrame] = None
-    val won = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    try for (k <- 1 to merges) {
-      val vc = ConnectedComponents.ckptRound(vocab)
-      // vc is materialized eagerly and the previous round's winner is
-      // already a local row, so the prior round's blocks are now
-      // unreachable from ANY live lineage — release them
-      prevVc.foreach(graft.Materialize.free)
-      prevVc = Some(vc)
-      pairsOf(vc)
-        .groupBy("a", "b").agg(sum("freq").as("n"))
-        .orderBy(col("n").desc, col("a"), col("b"))
-        .limit(1).collect().headOption match {
-        case Some(r) =>
-          val (a, b) = (r.getString(0), r.getString(1))
-          won += org.apache.spark.sql.Row(k, a, b, a + b, r.getLong(2))
-          // boundary-delimited literal rewrite: ' a b ' can only match
-          // at token boundaries, and two leftmost-non-overlapping
-          // passes merge adjacent chains ('a b a b') like the canonical
-          // greedy pass — identical to the oracle's replace chain
-          val pat = lit(s" $a $b ")
-          val rep = lit(s" $a$b ")
-          vocab = vc
-            .withColumn("r1",
-              org.apache.spark.sql.functions.replace(
-                concat(lit(" "), col("seq"), lit(" ")), pat, rep))
-            .withColumn("r2",
-              org.apache.spark.sql.functions.replace(col("r1"), pat, rep))
-            .select(col("word"), col("freq"),
-              expr("substring(r2, 2, length(r2) - 2)").as("seq"))
-        case None =>
-          // fully merged: the recurrence stays TOTAL — remaining rounds
-          // pass the vocab through unchanged and emit no merge row,
-          // exactly the oracle's NULL-subquery pass-through behavior
-          vocab = vc
+    // a failed round (cancelled job group, lost executor) leaves through
+    // the scope, which frees the held round checkpoint; at exit the last
+    // round, which the final vocab reads, goes to the store
+    graft.Materialize.rounds { rounds =>
+      var vocab = seed
+      val won = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
+      for (k <- 1 to merges) {
+        val vc = rounds.hold(vocab)
+        // vc is materialized eagerly and the previous round's winner is
+        // already a local row, so the prior round's blocks are now
+        // unreachable from ANY live lineage — release them
+        rounds.release(vocab)
+        pairsOf(vc)
+          .groupBy("a", "b").agg(sum("freq").as("n"))
+          .orderBy(col("n").desc, col("a"), col("b"))
+          .limit(1).collect().headOption match {
+          case Some(r) =>
+            val (a, b) = (r.getString(0), r.getString(1))
+            won += org.apache.spark.sql.Row(k, a, b, a + b, r.getLong(2))
+            // boundary-delimited literal rewrite: ' a b ' can only match
+            // at token boundaries, and two leftmost-non-overlapping
+            // passes merge adjacent chains ('a b a b') like the canonical
+            // greedy pass — identical to the oracle's replace chain
+            val pat = lit(s" $a $b ")
+            val rep = lit(s" $a$b ")
+            vocab = vc
+              .withColumn("r1",
+                org.apache.spark.sql.functions.replace(
+                  concat(lit(" "), col("seq"), lit(" ")), pat, rep))
+              .withColumn("r2",
+                org.apache.spark.sql.functions.replace(col("r1"), pat, rep))
+              .select(col("word"), col("freq"),
+                expr("substring(r2, 2, length(r2) - 2)").as("seq"))
+          case None =>
+            // fully merged: the recurrence stays TOTAL — remaining rounds
+            // pass the vocab through unchanged and emit no merge row,
+            // exactly the oracle's NULL-subquery pass-through behavior
+            vocab = vc
+        }
       }
-    } catch {
-      // a failed round (cancelled job group, lost executor) must not
-      // strand the held round checkpoint: nothing outside this loop
-      // can reach it to release it
-      case e: Throwable =>
-        prevVc.foreach(graft.Materialize.free)
-        throw e
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("merge_rank",
+          org.apache.spark.sql.types.IntegerType, nullable = false),
+        org.apache.spark.sql.types.StructField("pa",
+          org.apache.spark.sql.types.StringType, nullable = true),
+        org.apache.spark.sql.types.StructField("pb",
+          org.apache.spark.sql.types.StringType, nullable = true),
+        org.apache.spark.sql.types.StructField("merged",
+          org.apache.spark.sql.types.StringType, nullable = true),
+        org.apache.spark.sql.types.StructField("n",
+          org.apache.spark.sql.types.LongType, nullable = false)))
+      import scala.jdk.CollectionConverters._
+      (s.createDataFrame(won.toSeq.asJava, schema), vocab,
+        won.toSeq.map(r => (r.getString(1), r.getString(2))))
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("merge_rank",
-        org.apache.spark.sql.types.IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("pa",
-        org.apache.spark.sql.types.StringType, nullable = true),
-      org.apache.spark.sql.types.StructField("pb",
-        org.apache.spark.sql.types.StringType, nullable = true),
-      org.apache.spark.sql.types.StructField("merged",
-        org.apache.spark.sql.types.StringType, nullable = true),
-      org.apache.spark.sql.types.StructField("n",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    import scala.jdk.CollectionConverters._
-    (s.createDataFrame(won.toSeq.asJava, schema), vocab,
-      won.toSeq.map(r => (r.getString(1), r.getString(2))))
   }
 
   private def bpeTrain(s: SparkSession, d: String): DataFrame =

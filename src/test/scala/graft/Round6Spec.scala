@@ -15,7 +15,7 @@ class Round6Spec extends SparkSpec {
     val nodes = (0L until n).toDF("id")
     val edges = (0L until n - 1).map(i => (i, i + 1)).toDF("src", "dst")
     val expected = (0L until n).map(i => i -> 0L).toMap
-    spark.conf.set(operators.ConnectedComponents.CheckpointDirKey, dir)
+    spark.conf.set(Materialize.CheckpointDirKey, dir)
     try {
       val got = operators.ConnectedComponents.labels(nodes, edges, maxIters = 10)
         .as[(Long, Long)].collect().toMap
@@ -28,7 +28,7 @@ class Round6Spec extends SparkSpec {
       assert(rddDirs(new java.io.File(dir)) > 0,
         s"no rdd-N checkpoint dirs under $dir — reliable mode did not engage")
     } finally {
-      spark.conf.unset(operators.ConnectedComponents.CheckpointDirKey)
+      spark.conf.unset(Materialize.CheckpointDirKey)
       Fs.rmTree(new java.io.File(dir))
     }
   }
@@ -47,7 +47,7 @@ class Round6Spec extends SparkSpec {
       .createTempDirectory("graft_cc_ckpt_move_").toFile)
     try {
       dirs.foreach { d =>
-        spark.conf.set(operators.ConnectedComponents.CheckpointDirKey,
+        spark.conf.set(Materialize.CheckpointDirKey,
           d.toString)
         val got = operators.ConnectedComponents
           .labels(nodes, edges, maxIters = 10)
@@ -56,9 +56,30 @@ class Round6Spec extends SparkSpec {
         assert(rddDirs(d) > 0, s"no checkpoints under newly configured $d")
       }
     } finally {
-      spark.conf.unset(operators.ConnectedComponents.CheckpointDirKey)
+      spark.conf.unset(Materialize.CheckpointDirKey)
       dirs.foreach(Fs.rmTree)
     }
+  }
+
+  test("graph_pagerank: reliable-checkpoint mode yields the default " +
+      "mode's rows and writes checkpoint files") {
+    // pagerank's rounds go through the same round scope as CC's, so the
+    // key governs them too
+    def ranks() = SparkEntry.queries("graph_pagerank")(spark, sfDir)
+      .collect().toSeq
+    def rddDirs(f: java.io.File): Int =
+      if (f.getName.startsWith("rdd-")) 1
+      else Option(f.listFiles).map(_.map(rddDirs).sum).getOrElse(0)
+    val expected = ranks()
+    assert(expected.nonEmpty)
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_pr_ckpt_").toFile
+    try {
+      assert(withConfs(Materialize.CheckpointDirKey -> dir.toString)(ranks())
+        == expected)
+      assert(rddDirs(dir) > 0,
+        s"no rdd-N checkpoint dirs under $dir — reliable mode did not engage")
+    } finally Fs.rmTree(dir)
   }
 
   test("bench detail pointer: quoted path on success, null on an " +
@@ -126,7 +147,7 @@ class Round6Spec extends SparkSpec {
     // checkpoint dir: the mode switch must key off the session conf
     // flag alone, never off sc.getCheckpointDir being set
     assert(spark.conf.getOption(
-      operators.ConnectedComponents.CheckpointDirKey).isEmpty)
+      Materialize.CheckpointDirKey).isEmpty)
     val nodes = (0L until 8L).toDF("id")
     val edges = Seq((0L, 1L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
     val got = operators.ConnectedComponents.labels(nodes, edges)

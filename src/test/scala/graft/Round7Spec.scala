@@ -16,22 +16,22 @@ class Round7Spec extends SparkSpec {
 
   test("underConfiguredRoot: scheme-qualified current dir matches a plain-path root") {
     // setCheckpointDir stores file:/tmp/x/<uuid>; the config says /tmp/x
-    assert(operators.ConnectedComponents.underConfiguredRoot(
+    assert(Materialize.underConfiguredRoot(
       "file:/tmp/graft_cc_x/0b2c-uuid", "/tmp/graft_cc_x", hconf))
     // and the mixed-direction case: URI-form config, plain current
-    assert(operators.ConnectedComponents.underConfiguredRoot(
+    assert(Materialize.underConfiguredRoot(
       "/tmp/graft_cc_x/0b2c-uuid", "file:/tmp/graft_cc_x", hconf))
   }
 
   test("underConfiguredRoot: requires a path-separator boundary and exactly one level") {
     // /a/ckpt must NOT claim /a/ckpt-old/<uuid> (string-prefix trap)
-    assert(!operators.ConnectedComponents.underConfiguredRoot(
+    assert(!Materialize.underConfiguredRoot(
       "file:/tmp/graft_cc_x-old/0b2c-uuid", "/tmp/graft_cc_x", hconf))
     // nor a dir nested deeper than setCheckpointDir's single UUID level
-    assert(!operators.ConnectedComponents.underConfiguredRoot(
+    assert(!Materialize.underConfiguredRoot(
       "file:/tmp/graft_cc_x/0b2c-uuid/deeper", "/tmp/graft_cc_x", hconf))
     // nor an entirely different root
-    assert(!operators.ConnectedComponents.underConfiguredRoot(
+    assert(!Materialize.underConfiguredRoot(
       "file:/tmp/other/0b2c-uuid", "/tmp/graft_cc_x", hconf))
   }
 
@@ -45,7 +45,7 @@ class Round7Spec extends SparkSpec {
     val n = 16L
     val nodes = (0L until n).toDF("id")
     val edges = (0L until n - 1).map(i => (i, i + 1)).toDF("src", "dst")
-    spark.conf.set(operators.ConnectedComponents.CheckpointDirKey, dir)
+    spark.conf.set(Materialize.CheckpointDirKey, dir)
     try {
       val got = operators.ConnectedComponents.labels(nodes, edges, maxIters = 10)
         .as[(Long, Long)].collect().toMap
@@ -55,7 +55,7 @@ class Round7Spec extends SparkSpec {
       assert(uuidDirs == 1,
         s"$uuidDirs UUID subdirs under $dir — the guard re-pointed per round")
     } finally {
-      spark.conf.unset(operators.ConnectedComponents.CheckpointDirKey)
+      spark.conf.unset(Materialize.CheckpointDirKey)
       Fs.rmTree(new java.io.File(dir))
     }
   }

@@ -48,4 +48,18 @@ class SessionStoreSpec extends SparkSpec {
     assert(sc.getPersistentRDDs.keySet.filterNot(before).isEmpty,
       "clear() left checkpoint blocks behind")
   }
+
+  test("clear() alone frees graph_pagerank's rounds: the store owns the final one") {
+    // the round scope hands the final round, which the result reads, to
+    // the store; nothing else may be left for the getPersistentRDDs
+    // backstop
+    val sc = spark.sparkContext
+    Materialize.clear()
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val ranks = SparkEntry.queries("graph_pagerank")(spark, sfDir)
+    assert(ranks.count() > 0)
+    Materialize.clear()
+    assert(sc.getPersistentRDDs.keySet.toSet == before,
+      "clear() left graph_pagerank blocks behind")
+  }
 }

@@ -107,6 +107,15 @@ class SourceLintSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"SparkSession built outside graft.Session in: $hits")
   }
 
+  test("only the session store cuts lineage") {
+    // every checkpoint goes through graft.Materialize's one cut, which
+    // owns the local-vs-reliable choice and frees a round whose job
+    // fails; a loop that checkpoints on its own strands those blocks
+    val hits = Seq("localCheckpoint(", ".checkpoint(")
+      .flatMap(offenders(_, "", exempt = Set("graft/Materialize.scala")))
+    assert(hits.isEmpty, s"lineage cut outside graft.Materialize in: $hits")
+  }
+
   test("no sleeps or processing-time hacks in main sources") {
     // StreamStateBench: a measurement main, not an operator — its only
     // sleep drains the async StreamingQueryListener bus after each

@@ -11,6 +11,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   */
 object Jobs {
 
+  /** Wait until every event posted so far has reached the listeners. */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
   /** Run `body` on this thread under a fresh job group; `onStart(k,
     * group)` runs on the listener thread as the group's k-th job starts.
     * Returns the body's result and the number of jobs the group started.
@@ -29,7 +32,7 @@ object Jobs {
     sc.setJobGroup(group, group)
     try {
       val r = body
-      sc.listenerBus.waitUntilEmpty()
+      drain(sc)
       (r, n.get)
     } finally {
       sc.clearJobGroup()
