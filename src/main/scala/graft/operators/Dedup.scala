@@ -301,41 +301,18 @@ object Dedup extends QueryModule {
        |    $minhashSigSqlCols
        |FROM sh ORDER BY doc_id""".stripMargin
 
-  /** LSH candidates: docs sharing any of the BANDS band hashes (band hash
-    * = md5 of ROWS_PER_BAND consecutive minhashes). Shuffle key is
-    * (band, hash) — never a content block.
-    *
-    * Scale law of the within-bucket self-join: pairs per bucket grow
-    * quadratically in bucket OCCUPANCY, so two knobs keep it linear-ish
-    * as the corpus grows. (1) Band width: ROWS_PER_BAND rows of a
-    * 128-bit hash give an effectively unbounded keyspace, so random
-    * occupancy stays O(1); what concentrates a bucket is genuine
-    * similarity. (2) Identical contents (and the degenerate <3-word
-    * shingle [""]) share ALL band hashes — a boilerplate page duplicated
-    * m times contributes m²/2 candidate pairs. A production pipeline
-    * collapses exact duplicates FIRST (exactGroups keeps one
-    * representative per md5(text), the text_pipeline_dedup composition
-    * shows the chaining) and near-dups on representatives; this query
-    * keeps per-doc semantics so the DuckDB oracle stays row-comparable.
-    */
-  /** (doc_id, band, h) — the banded-LSH bucket keys of a signature
-    * frame; any two docs sharing a (band, h) row are candidates.
+  /** (doc_id, sig, band, h) — the banded-LSH bucket keys of a signature
+    * frame (band hash = md5 of ROWS_PER_BAND consecutive minhashes; the
+    * shuffle key is a digest, never a content block), carrying the
+    * signature the inline verify reads ([[Blocking]]).
     */
   private def bandsOf(sigs: DataFrame): DataFrame = {
     val bandHashes = (0 until BANDS).map { b =>
       md5(concat((0 until ROWS_PER_BAND)
         .map(r => element_at(col("sig"), ROWS_PER_BAND * b + r + 1)): _*))
     }
-    sigs.select(col("doc_id"), posexplode(array(bandHashes: _*)).as(Seq("band", "h")))
-  }
-
-  private def candidatePairs(s: SparkSession, d: String): DataFrame = {
-    val bands = bandsOf(sigTable(s, d))
-    bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.h") === col("b.h") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    sigs.select(col("doc_id"), col("sig"),
+      posexplode(array(bandHashes: _*)).as(Seq("band", "h")))
   }
 
   /** DuckDB twin of the band+candidate pipeline over a shingle CTE
@@ -360,17 +337,17 @@ object Dedup extends QueryModule {
        |    ON a.band = b.band AND a.h = b.h AND a.doc_id < b.doc_id)""".stripMargin
   }
 
-  /** DuckDB twin of [[candidatePairs]]: CTEs sig, bands, pairs (assumes
+  /** DuckDB twin of the band pipeline: CTEs sig, bands, pairs (assumes
     * the shingles CTE is already in scope).
     */
   private val candidatePairsCte: String = candidatePairsCteFor("sh", "")
 
   /** Banded-LSH candidates of a signature frame whose estimated
     * Jaccard (fraction of equal minhashes) clears `threshold` — the
-    * band join, candidate dedup, and agreement verify shared VERBATIM
-    * by both tokenization bases (word shingles and char grams) and
-    * every consumer of their edges (pair listings, PageRank, the CC
-    * cluster path): one pipeline, N signature front-ends.
+    * band join and agreement verify shared VERBATIM by both tokenization
+    * bases (word shingles and char grams) and every consumer of their
+    * edges (pair listings, PageRank, the CC cluster path): one pipeline,
+    * N signature front-ends.
     *
     * The filter runs on the UNROUNDED ratio — exactly the oracle's
     * WHERE clause — and the rounding exists only on the output column
@@ -381,20 +358,9 @@ object Dedup extends QueryModule {
     */
   private def verifiedPairsOfSigs(sig: DataFrame,
       threshold: Double): DataFrame = {
-    val bands = bandsOf(sig)
-    val cand = bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.h") === col("b.h") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-    val sa = sig.select(col("doc_id").as("doc_a"), col("sig").as("sa"))
-    val sb = sig.select(col("doc_id").as("doc_b"), col("sig").as("sb"))
-    cand
-      .join(sa, "doc_a").join(sb, "doc_b")
-      .withColumn("agree", minhashAgreement("sa", "sb"))
-      .filter(col("agree").cast("double") / K >= threshold)
-      .withColumn("est_jaccard", round(col("agree").cast("double") / K, 6))
-      .select("doc_a", "doc_b", "est_jaccard")
+    val est = minhashAgreement("a.sig", "b.sig").cast("double") / K
+    Blocking.pairs(bandsOf(sig), Seq("band", "h"), "doc_id", ("doc_a", "doc_b"),
+      verify = est >= threshold, out = Seq(round(est, 6).as("est_jaccard")))
   }
 
   /** The word base's verified near-dup edge set over the memoized
@@ -638,29 +604,23 @@ object Dedup extends QueryModule {
     * corpus size (worse under correlated natural-language bits). The
     * band width is the knob and must widen with log2(N) at larger
     * corpora (e.g. 2×32-bit bands at billions of docs, trading recall
-    * for blowup); identical/empty docs share all bands and want the
-    * exact-dedup pre-collapse described on [[candidatePairs]].
+    * for blowup); identical/empty docs share all bands and want an
+    * exact-dedup pre-collapse ([[exactGroups]] keeps one representative
+    * per md5(text)).
     */
   private def simhashPairs(s: SparkSession, d: String): DataFrame = {
-    val t = simhashTable(s, d)
-    val chunks = t.select(col("doc_id") +: (0 until 4).map(b =>
-      expr(s"CAST(conv(substr(simhash64, ${16 * b + 1}, 16), 2, 10) AS BIGINT)")
-        .as(s"ch$b")): _*)
-    val bands = t.select(col("doc_id"), posexplode(array(
-      (0 until 4).map(b => expr(s"substr(simhash64, ${16 * b + 1}, 16)")): _*))
-      .as(Seq("band", "code")))
-    val pairs = bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.code") === col("b.code") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-    val ca = chunks.toDF("doc_a" +: (0 until 4).map(b => s"a$b"): _*)
-    val cb = chunks.toDF("doc_b" +: (0 until 4).map(b => s"b$b"): _*)
-    pairs.join(ca, "doc_a").join(cb, "doc_b")
-      .withColumn("hamming", expr(
-        (0 until 4).map(b => s"bit_count(a$b ^ b$b)").mkString("CAST(", " + ", " AS BIGINT)")))
-      .filter(col("hamming") <= 8)
-      .select("doc_a", "doc_b", "hamming")
+    // each fingerprint converts to its four chunks once per doc, below
+    // the band explode
+    val codes = simhashTable(s, d).select(col("doc_id") +: col("simhash64") +:
+        (0 until 4).map(b =>
+          expr(s"CAST(conv(substr(simhash64, ${16 * b + 1}, 16), 2, 10) AS BIGINT)")
+            .as(s"ch$b")): _*)
+      .select(col("*"), posexplode(array((0 until 4).map(b =>
+        expr(s"substr(simhash64, ${16 * b + 1}, 16)")): _*)).as(Seq("band", "code")))
+    val hamming = expr((0 until 4).map(b => s"bit_count(a.ch$b ^ b.ch$b)")
+      .mkString("CAST(", " + ", " AS BIGINT)"))
+    Blocking.pairs(codes, Seq("band", "code"), "doc_id", ("doc_a", "doc_b"),
+        verify = hamming <= 8, out = Seq(hamming.as("hamming")))
       .orderBy("doc_a", "doc_b")
   }
 
@@ -711,7 +671,7 @@ object Dedup extends QueryModule {
       size(col("shingles")).as("sza"))
     val sb = sh.select(col("doc_id").as("doc_b"), col("shingles").as("shb"),
       size(col("shingles")).as("szb"))
-    candidatePairs(s, d)
+    Blocking.pairs(bandsOf(sh), Seq("band", "h"), "doc_id", ("doc_a", "doc_b"))
       .join(sa, "doc_a").join(sb, "doc_b")
       .withColumn("inter", size(array_intersect(col("sha"), col("shb"))))
       .withColumn("jaccard",
@@ -765,8 +725,8 @@ object Dedup extends QueryModule {
     * Scale: `corpusSigs` is the materialized ~100 B/doc signature table
     * ([[sigTable]] semantics, `(doc_id, sig)` suffices) — the corpus
     * TEXT is never read. Shuffle keys are band digests and doc_ids; the
-    * within-bucket join touches only same-bucket docs, and the verify is
-    * a per-candidate zip_with over K 8-char strings.
+    * within-bucket join touches only same-bucket docs and verifies them
+    * inside the join ([[Blocking]]).
     *
     * Persist lifecycle (decision, round 9): this convenience overload
     * computes the new batch's signatures itself and PARKS the persisted
@@ -803,33 +763,16 @@ object Dedup extends QueryModule {
   def dedupAgainstSigs(corpusSigs: DataFrame, newDocs: DataFrame,
       newSigs: DataFrame, threshold: Double = 0.5): DataFrame = {
     val nb = bandsOf(newSigs)
-    val sn = newSigs.select(col("doc_id").as("new_id"), col("sig").as("sn"))
-    val needed = lit(threshold * K) // est_jaccard >= t  <=>  agreement >= t*K
-
-    // new docs colliding with the corpus in any band, verified
-    val dupOfCorpus = nb.as("n")
-      .join(bandsOf(corpusSigs.select("doc_id", "sig")).as("c"),
-        col("n.band") === col("c.band") && col("n.h") === col("c.h"))
-      .select(col("n.doc_id").as("new_id"), col("c.doc_id").as("old_id"))
-      .distinct()
-      .join(sn, "new_id")
-      .join(corpusSigs.select(col("doc_id").as("old_id"), col("sig").as("so")), "old_id")
-      .filter(minhashAgreement("sn", "so").cast("double") >= needed)
-      .select(col("new_id").as("doc_id"))
-
+    // est_jaccard >= t  <=>  agreement >= t*K
+    val verified = minhashAgreement("a.sig", "b.sig").cast("double") >= threshold * K
+    // new docs colliding with the corpus in any band
+    val dupOfCorpus = Blocking.across(bandsOf(corpusSigs.select("doc_id", "sig")),
+      nb, Seq("band", "h"), "doc_id", ("old_id", "new_id"), verified)
     // new docs dominated by an earlier (smaller-id) near-dup new doc
-    val dupOfEarlier = nb.as("a").join(nb.as("b"),
-        col("a.band") === col("b.band") && col("a.h") === col("b.h") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("earlier_id"), col("b.doc_id").as("new_id"))
-      .distinct()
-      .join(sn, "new_id")
-      .join(newSigs.select(col("doc_id").as("earlier_id"), col("sig").as("se")),
-        "earlier_id")
-      .filter(minhashAgreement("sn", "se").cast("double") >= needed)
-      .select(col("new_id").as("doc_id"))
-
-    newDocs.join(dupOfCorpus.union(dupOfEarlier).distinct(), Seq("doc_id"), "left_anti")
+    val dupOfEarlier = Blocking.pairs(nb, Seq("band", "h"), "doc_id",
+      ("earlier_id", "new_id"), verified)
+    newDocs.join(dupOfCorpus.union(dupOfEarlier).select(col("new_id").as("doc_id")),
+      Seq("doc_id"), "left_anti")
   }
 
   /** Driver-gated exercise of [[dedupAgainst]] on the standard tables:
