@@ -55,6 +55,14 @@ object StreamStateBench {
       contract.filter(n => sn.startsWith("graft_" + n + "_"))
         .sortBy(-_.length).headOption)
 
+  /** The `state_rows` JSON value: null under RocksDB, whose
+    * [[Tuning.RocksDbConfs]] set `trackTotalNumberOfRows=false` — that
+    * drops `numRowsTotal`, which then reads 0 rather than a count.
+    */
+  private[graft] def stateRowsJson(provider: String, rowsTotal: Long): String =
+    if (provider == "rocksdb" || provider == Tuning.ROCKSDB_PROVIDER) "null"
+    else rowsTotal.toString
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     // heap (Spark's default HDFSBackedStateStoreProvider), rocksdb, or
@@ -187,7 +195,7 @@ object StreamStateBench {
       s""""$name":{"wall_sec":${r3(p50(vs))},"wall_min":${r3(vs.min)}""" +
         s""","wall_max":${r3(vs.max)},"shots":${vs.size}""" +
         s""","samples":${vs.map(r3).mkString("[", ",", "]")}""" +
-        s""","state_rows":${p.rowsTotal}""" +
+        s""","state_rows":${stateRowsJson(provider, p.rowsTotal)}""" +
         s""","state_mem_bytes":${p.memUsedBytes}""" +
         s""","rocksdb_sst_bytes":${p.sstBytes}""" +
         s""","rocksdb_mem_bytes":${p.rocksMemBytes}""" +

@@ -77,20 +77,49 @@ object Similarity extends QueryModule {
     s"""round(list_dot_product(list_transform($a, x -> x::DOUBLE),
        |  list_transform($b, x -> x::DOUBLE)) / ($na * $nb), 6)""".stripMargin
 
+  /** The fixed queries' query set (vec_id < NQUERIES) as (qid, qe, qn),
+    * then `extra`.
+    */
+  private def queriesOf(emb: DataFrame, extra: Column*): DataFrame =
+    emb.filter(col("vec_id") < NQUERIES)
+      .select(Seq(col("vec_id").as("qid"), col("embedding").as("qe"),
+        col("nrm").as("qn")) ++ extra: _*)
+
+  /** The top-k core: the rank tail every fixed top-k query and the
+    * parameterized ANN APIs share. Exact cosine per (query, candidate)
+    * row, then the `k` best per query by (sim desc, vec_id) — a bounded
+    * per-query window (TakeOrdered shape), no global materialization.
+    * Reads qid, qe, qn, vec_id, embedding, nrm; returns (qid, rnk,
+    * vec_id, sim).
+    */
+  private def topK(cand: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("vec_id"))
+    cand.withColumn("sim", simCol("qe", "embedding", "qn", "nrm"))
+      .withColumn("rnk", row_number().over(w).cast("long"))
+      .filter(col("rnk") <= k)
+      .select("qid", "rnk", "vec_id", "sim")
+  }
+
+  /** IVF probe: score the (tiny, broadcast) codebook `cent` — cvec, cnrm
+    * and the `cell` id column — against each query (qid, qe, qn) and
+    * keep the `nprobe` best cells per query, ties to the lower cell.
+    */
+  private def probe(q: DataFrame, cent: DataFrame, cell: String,
+      nprobe: Int): DataFrame = {
+    val w = Window.partitionBy("qid").orderBy(col("csim").desc, col(cell))
+    q.crossJoin(broadcast(cent))
+      .withColumn("csim",
+        round(vecDot(col("qe"), col("cvec")) / (col("qn") * col("cnrm")), 6))
+      .withColumn("crnk", row_number().over(w))
+      .filter(col("crnk") <= nprobe)
+  }
+
   // ---- brute-force cosine top-k --------------------------------------
 
   private def topkBrute(s: SparkSession, d: String): DataFrame = {
     val emb = withNorm(embeddings(s, d))
-    val q = emb.filter(col("vec_id") < NQUERIES)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        col("nrm").as("qn"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("vec_id"))
-    emb.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("sim", simCol("qe", "embedding", "qn", "nrm"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= TOPK)
-      .select("qid", "rnk", "vec_id", "sim")
+    topK(emb.crossJoin(broadcast(queriesOf(emb)))
+      .filter(col("vec_id") =!= col("qid")), TOPK)
       .orderBy("qid", "rnk")
   }
 
@@ -124,16 +153,9 @@ object Similarity extends QueryModule {
   private def topkLsh(s: SparkSession, d: String): DataFrame = {
     val emb = withNorm(embeddings(s, d))
       .withColumn("bucket", expr(lshBucketExpr("embedding")))
-    val q = emb.filter(col("vec_id") < NQUERIES)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        col("nrm").as("qn"), col("bucket").as("qbucket"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("vec_id"))
-    emb.join(broadcast(q), col("bucket") === col("qbucket") &&
-        col("vec_id") =!= col("qid"))
-      .withColumn("sim", simCol("qe", "embedding", "qn", "nrm"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= TOPK)
-      .select("qid", "rnk", "vec_id", "sim")
+    val q = queriesOf(emb, col("bucket").as("qbucket"))
+    topK(emb.join(broadcast(q), col("bucket") === col("qbucket") &&
+        col("vec_id") =!= col("qid")), TOPK)
       .orderBy("qid", "rnk")
   }
 
@@ -157,49 +179,29 @@ object Similarity extends QueryModule {
 
   // ---- banded-LSH cosine near-dup pairs ------------------------------
 
-  /** Integer band code b: sign bits of dims [PAIR_BITS*b, PAIR_BITS*(b+1)). */
-  private def bandCodeExpr(b: Int): String =
-    (0 until PAIR_BITS)
-      .map(j => s"CASE WHEN embedding[${PAIR_BITS * b + j}] >= 0 THEN ${1 << j} ELSE 0 END")
-      .mkString(" + ")
-
+  /** DuckDB band code b: sign bits of dims [PAIR_BITS*b, PAIR_BITS*(b+1)). */
   private def bandCodeSql(b: Int): String =
     (0 until PAIR_BITS)
       .map(j => s"CASE WHEN embedding[${PAIR_BITS * b + j + 1}] >= 0 THEN ${1 << j} ELSE 0 END")
       .mkString(" + ")
 
-  /** Verify-INLINE shape (shared with [[nearDupPairs]]): the bucket
-    * self-join carries embedding+norm, computes the exact cosine as it
-    * streams, filters at minSim, and only then distincts the (few)
-    * survivors. The candidate set — bands·N²/2^bits pairs — is never
-    * shuffled or spilled; it exists only inside the join's output
-    * iterator, so its cost is verify CPU (scales out with cores), not
-    * disk. The distinct-candidates-first alternative shuffles
-    * O(candidates) rows and filled 80 GB of spill at the 200k-vector
-    * rehearsal decade before this restructure. Cross-band duplicates
-    * collapse on the PAIR KEY alone (dropDuplicates on (va, vb), not
-    * distinct over (va, vb, sim)): one row per pair holds by
-    * construction, instead of leaning on the sim expression staying
-    * bit-deterministic across bands — the invariant AnnRecallSpec
-    * additionally asserts. The carried sim is well-defined because the
-    * same codegen'd expression on the same operands yields the same
-    * value on every surviving copy.
+  /** The fixed-knob instance: PAIR_BANDS bands of PAIR_BITS sign bits,
+    * blocked within a label, verified at PAIR_MIN_SIM.
     */
-  private def cosinePairs(s: SparkSession, d: String): DataFrame = {
-    val emb = withNorm(embeddings(s, d))
-    val bands = emb.select(col("vec_id"), col("label"), col("embedding"),
-        col("nrm"),
-        posexplode(array((0 until PAIR_BANDS).map(b => expr(bandCodeExpr(b))): _*))
-          .as(Seq("band", "code")))
-    bands.as("a").join(bands.as("b"),
-        col("a.label") === col("b.label") && col("a.band") === col("b.band") &&
-          col("a.code") === col("b.code") && col("a.vec_id") < col("b.vec_id"))
-      .withColumn("sim", simCol("a.embedding", "b.embedding", "a.nrm", "b.nrm"))
-      .filter(col("sim") >= PAIR_MIN_SIM)
-      .select(col("a.vec_id").as("va"), col("b.vec_id").as("vb"),
-        col("a.label").as("label"), col("sim"))
-      .dropDuplicates("va", "vb")
+  private def cosinePairs(s: SparkSession, d: String): DataFrame =
+    cosinePairsOf(bandCodesCarrying(embeddings(s, d), "sim_cos_pairs",
+        PAIR_BANDS, PAIR_BITS, "label"), Seq("label", "band", "code"),
+        PAIR_MIN_SIM, col("a.label").as("label"))
       .orderBy("va", "vb")
+
+  /** [[Blocking.pairs]] over embedding band codes: the exact cosine
+    * verified inline at `minSim`; (va, vb, `extra`, sim) out.
+    */
+  private def cosinePairsOf(codes: DataFrame, keys: Seq[String],
+      minSim: Double, extra: Column*): DataFrame = {
+    val sim = simCol("a.embedding", "b.embedding", "a.nrm", "b.nrm")
+    Blocking.pairs(codes, keys, "vec_id", ("va", "vb"), sim >= minSim,
+      extra :+ sim.as("sim"))
   }
 
   private def cosinePairsOracle: String = {
@@ -252,23 +254,10 @@ object Similarity extends QueryModule {
   private def topkIvf(s: SparkSession, d: String): DataFrame = {
     val emb = withNorm(embeddings(s, d))
     val cent = centroids(s, d).withColumn("cnrm", vecNorm(col("cvec")))
-    val q = emb.filter(col("vec_id") < NQUERIES)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        col("nrm").as("qn"))
-    val probeW = Window.partitionBy("qid").orderBy(col("csim").desc, col("label"))
-    val probes = q.crossJoin(broadcast(cent))
-      .withColumn("csim",
-        round(vecDot(col("qe"), col("cvec")) / (col("qn") * col("cnrm")), 6))
-      .withColumn("crnk", row_number().over(probeW))
-      .filter(col("crnk") <= NPROBE)
+    val probes = probe(queriesOf(emb), cent, "label", NPROBE)
       .select("qid", "qe", "qn", "label")
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("vec_id"))
-    emb.join(broadcast(probes), Seq("label"))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("sim", simCol("qe", "embedding", "qn", "nrm"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= TOPK)
-      .select("qid", "rnk", "vec_id", "sim")
+    topK(emb.join(broadcast(probes), Seq("label"))
+      .filter(col("vec_id") =!= col("qid")), TOPK)
       .orderBy("qid", "rnk")
   }
 
@@ -394,24 +383,11 @@ object Similarity extends QueryModule {
     // sweep must re-pay training, not measure a warm cache
     graft.Materialize.track(cent)
     val assign = assignCells(emb, cent)
-    val q = emb.filter(col("vec_id") < NQUERIES)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        col("nrm").as("qn"))
-    val probeW = Window.partitionBy("qid").orderBy(col("csim").desc, col("cell"))
-    val probes = q.crossJoin(broadcast(cent))
-      .withColumn("csim",
-        round(vecDot(col("qe"), col("cvec")) / (col("qn") * col("cnrm")), 6))
-      .withColumn("crnk", row_number().over(probeW))
-      .filter(col("crnk") <= NPROBE)
+    val probes = probe(queriesOf(emb), cent, "cell", NPROBE)
       .select("qid", "qe", "qn", "cell")
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("vec_id"))
-    emb.join(assign, "vec_id")
+    topK(emb.join(assign, "vec_id")
       .join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("sim", simCol("qe", "embedding", "qn", "nrm"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= TOPK)
-      .select("qid", "rnk", "vec_id", "sim")
+      .filter(col("vec_id") =!= col("qid")), TOPK)
       .orderBy("qid", "rnk")
   }
 
@@ -506,12 +482,7 @@ object Similarity extends QueryModule {
     val c = withNorm(corpus).select(col("vec_id"), col("embedding"), col("nrm"))
     val q = withNorm(queries.withColumnRenamed("qe", "embedding"))
       .select(col("qid"), col("embedding").as("qe"), col("nrm").as("qn"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("vec_id"))
-    cand.join(c, "vec_id").join(q, "qid")
-      .withColumn("sim", simCol("qe", "embedding", "qn", "nrm"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select("qid", "rnk", "vec_id", "sim")
+    topK(cand.join(c, "vec_id").join(q, "qid"), k)
   }
 
   /** Knob validation for the parameterized LSH APIs. The static part is
@@ -609,13 +580,7 @@ object Similarity extends QueryModule {
     val assign = assignCells(emb, cent)
     val q = withNorm(queries.withColumnRenamed("qe", "embedding"))
       .select(col("qid"), col("embedding").as("qe"), col("nrm").as("qn"))
-    val probeW = Window.partitionBy("qid").orderBy(col("csim").desc, col("cell"))
-    val probes = q.crossJoin(broadcast(cent))
-      .withColumn("csim",
-        round(vecDot(col("qe"), col("cvec")) / (col("qn") * col("cnrm")), 6))
-      .withColumn("crnk", row_number().over(probeW))
-      .filter(col("crnk") <= nprobe)
-      .select("qid", "cell")
+    val probes = probe(q, cent, "cell", nprobe).select("qid", "cell")
     val cand = emb.select("vec_id").join(assign, "vec_id")
       .join(broadcast(probes), Seq("cell"))
       .select("qid", "vec_id")
@@ -634,18 +599,19 @@ object Similarity extends QueryModule {
     bandCodesCarrying(corpus, api, bands, bits)
       .select("vec_id", "band", "code")
 
-  /** [[bandCodes]] plus the embedding and its norm on every exploded
-    * row — the join input of the verify-inline pairs shape. Catalyst
-    * prunes the carried columns out of the probe's occupancy aggregate,
-    * so sharing one projection keeps the probe's price and the
-    * operator's blocking keys from ever drifting.
+  /** [[bandCodes]] plus the `carry` columns, the embedding and its norm
+    * on every exploded row — the join input of the verify-inline pairs
+    * shape. Catalyst prunes the carried columns out of the probe's
+    * occupancy aggregate, so sharing one projection keeps the probe's
+    * price and the operator's blocking keys from ever drifting.
     */
   private def bandCodesCarrying(corpus: DataFrame, api: String, bands: Int,
-      bits: Int): DataFrame =
-    withNorm(corpus).select(col("vec_id"), col("embedding"), col("nrm"),
+      bits: Int, carry: String*): DataFrame =
+    withNorm(corpus).select((col("vec_id") +: carry.map(col)) ++ Seq(
+      col("embedding"), col("nrm"),
       posexplode(array((0 until bands).map(b =>
         expr(guardedBandCode(api, "embedding", b, bands, bits))): _*))
-        .as(Seq("band", "code")))
+        .as(Seq("band", "code"))): _*)
 
   /** Embedding near-dup PAIRS — the parameterized form of the fixed
     * sim_cos_pairs query, for arbitrary corpora: banded sign-LSH
@@ -655,28 +621,15 @@ object Similarity extends QueryModule {
     * scale with bands · N²/2^bits within a bucket — `bits` is the knob
     * that holds per-bucket work flat as N grows (widen with log2 N),
     * `bands` buys back the recall wider bands lose. The verify is
-    * INLINE in the bucket join (see [[cosinePairs]]): candidates are
-    * priced in CPU, never shuffled — the only shuffle is the
-    * O(N·bands·dim) band projection, and the distinct runs on verified
-    * survivors only.
+    * INLINE in the bucket join ([[Blocking]]): candidates are priced in
+    * CPU, never shuffled — the only shuffle is the O(N·bands·dim) band
+    * projection, and the distinct runs on verified survivors only.
     */
   def nearDupPairs(corpus: DataFrame, bands: Int, bits: Int,
       minSim: Double): DataFrame = {
     requireKnobs("nearDupPairs", bands, bits)
-    val codes = bandCodesCarrying(corpus, "nearDupPairs", bands, bits)
-    // the band table is corpus-sized, so the bucket self-join is pinned
-    // SHUFFLED (same rule as dedup_substring's dup table): fixture-scale
-    // stats would broadcast one side — measured 3x SLOWER here even at
-    // sf0.1 (the per-probe build-list walk beats nothing), and the wrong
-    // shape at any real corpus. AnnRecallSpec pins verify-inline on this
-    // same join; PairScaleBench priced the shuffled shape.
-    codes.as("a").join(codes.as("b").hint("shuffle_hash"),
-        col("a.band") === col("b.band") && col("a.code") === col("b.code") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .withColumn("sim", simCol("a.embedding", "b.embedding", "a.nrm", "b.nrm"))
-      .filter(col("sim") >= minSim)
-      .select(col("a.vec_id").as("va"), col("b.vec_id").as("vb"), col("sim"))
-      .dropDuplicates("va", "vb")
+    cosinePairsOf(bandCodesCarrying(corpus, "nearDupPairs", bands, bits),
+      Seq("band", "code"), minSim)
   }
 
   // ---- scale-safe derived-knob pairs ----------------------------------
@@ -760,17 +713,7 @@ object Similarity extends QueryModule {
     val codes = withNorm(corpus).crossJoin(broadcast(knobs))
       .select(col("vec_id"), col("embedding"), col("nrm"),
         posexplode(expr(codesArr)).as(Seq("band", "code")))
-    // pinned shuffled for the same reason as [[nearDupPairs]] — here the
-    // in-plan knob derivation already hides stats (the planner falls to
-    // SMJ), but the hint makes the scale shape deliberate and picks the
-    // cheaper hash join over sort-merge
-    codes.as("a").join(codes.as("b").hint("shuffle_hash"),
-        col("a.band") === col("b.band") && col("a.code") === col("b.code") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .withColumn("sim", simCol("a.embedding", "b.embedding", "a.nrm", "b.nrm"))
-      .filter(col("sim") >= minSim)
-      .select(col("a.vec_id").as("va"), col("b.vec_id").as("vb"), col("sim"))
-      .dropDuplicates("va", "vb")
+    cosinePairsOf(codes, Seq("band", "code"), minSim)
   }
 
   // ---- driver-gated instance of the parameterized pairs API ----------
@@ -793,7 +736,7 @@ object Similarity extends QueryModule {
     * point [[nearDupPairsScaled]] derives IN the plan, so the two
     * binding modes (caller-bound explicit knobs vs in-plan derivation)
     * must agree row-for-row at every scale; the shared derived-knob
-    * oracle hash-gates both, and Round12Spec asserts the cross-check.
+    * oracle hash-gates both, and AnnRecallSpec asserts the cross-check.
     */
   private def nearDupParam(s: SparkSession, d: String): DataFrame = {
     val corpus = embeddings(s, d)

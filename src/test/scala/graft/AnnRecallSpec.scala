@@ -1,6 +1,12 @@
 package graft
 
 import graft.operators.{Similarity, SyntheticVectors}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{BitwiseCount, Expression,
+  GreaterThanOrEqual, LessThanOrEqual, ZipWith}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.graft.DotProductD
 
 /** Recall floors for the parameterized ANN API at the settings SCALE.md
   * documents — the statistical guarantee the planted-copy fixtures
@@ -99,53 +105,99 @@ class AnnRecallSpec extends SparkSpec {
     } finally { corpus.unpersist(); () }
   }
 
-  test("nearDupPairs verifies inline: the cosine verify rides the bucket " +
-      "join's own condition, and no aggregate sits below the join") {
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    import org.apache.spark.sql.execution.joins.BaseJoinExec
-    // force the canonical shuffled self-join (a broadcast band side
-    // would hide the shape this spec pins: at corpus scale both sides
-    // shuffle, and the 80 GB sf10 spill this shape replaced came from
-    // a candidate distinct BETWEEN the join and the verify)
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val (corpus, _) =
-        SyntheticVectors.corpusAndQueries(spark, 500, 0, 64, 8, 3L)
-      val plan = Similarity
-        .nearDupPairs(corpus, bands = 4, bits = 6, minSim = 0.5)
-        .queryExecution.sparkPlan
-      val joins = plan.collect { case j: BaseJoinExec => j }
-      assert(joins.size == 1, s"expected the one bucket self-join:\n$plan")
-      // Catalyst pushes the sim predicate INTO the join condition, so
-      // every candidate is verified inside the join operator and only
-      // survivors ever leave it — a shuffle or spill of the candidate
-      // set is structurally impossible in this plan. Matched
-      // STRUCTURALLY (a >= comparison whose operand subtree computes
-      // the exact dot product), not by a numeric substring: a bare
-      // "0.5" also appears in unrelated literals, so a substring match
-      // could pass with the verify pushed nowhere.
-      import org.apache.spark.sql.catalyst.expressions.GreaterThanOrEqual
-      import org.apache.spark.sql.graft.DotProductD
-      val simInCondition = joins.head.condition.exists(_.exists {
-        case cmp: GreaterThanOrEqual =>
-          cmp.exists { case _: DotProductD => true; case _ => false }
-        case _ => false
-      })
-      assert(simInCondition,
-        "the minSim verify (a >= over the exact-cosine DotProductD) must " +
-          "ride the bucket join's condition — a plan that verifies after " +
-          "an exchange re-materializes the candidate set (the sf10 80 GB " +
-          s"spill shape):\n$plan")
-      // the distinct runs on survivors only: nothing aggregates below
-      // the join (the regression shape put distinct(va, vb) there)
-      val aggsBelowJoin = joins.head.collect {
-        case a: BaseAggregateExec => a
+  /** One pair query whose plan must verify inside its bucket join:
+    * `bucketJoins` joins carry the verify (`isVerify`, matched
+    * STRUCTURALLY — a comparison whose operand subtree computes the
+    * exact score — not by a numeric substring: a bare "0.5" also
+    * appears in unrelated literals, so a substring match could pass
+    * with the verify pushed nowhere), and no aggregate runs below any
+    * of them — or, with `scalarAggBelow`, only a grouping-less one.
+    * `onlyJoin` additionally pins the bucket join as the plan's one
+    * join.
+    */
+  private case class InlineCase(name: String, frame: () => DataFrame,
+      isVerify: Expression => Boolean, bucketJoins: Int = 1,
+      onlyJoin: Boolean = false, scalarAggBelow: Boolean = false)
+
+  private def cosineVerify(e: Expression): Boolean = e match {
+    case cmp: GreaterThanOrEqual =>
+      cmp.exists { case _: DotProductD => true; case _ => false }
+    case _ => false
+  }
+
+  private def minhashVerify(e: Expression): Boolean = e match {
+    case cmp: GreaterThanOrEqual =>
+      cmp.exists { case _: ZipWith => true; case _ => false }
+    case _ => false
+  }
+
+  private def hammingVerify(e: Expression): Boolean = e match {
+    case cmp: LessThanOrEqual =>
+      cmp.exists { case _: BitwiseCount => true; case _ => false }
+    case _ => false
+  }
+
+  private lazy val inlineCorpus: DataFrame =
+    SyntheticVectors.corpusAndQueries(spark, 500, 0, 64, 8, 3L)._1
+
+  private def contractQuery(name: String): () => DataFrame =
+    () => SparkEntry.queries(name)(spark, sfDir)
+
+  private val inlineCases = Seq(
+    InlineCase("nearDupPairs", () => Similarity
+        .nearDupPairs(inlineCorpus, bands = 4, bits = 6, minSim = 0.5),
+      cosineVerify, onlyJoin = true),
+    // the knob broadcasts add joins, but no other join compares dot
+    // products; below the bucket join only the scalar (grouping-less)
+    // knob-count aggregate may appear
+    InlineCase("nearDupPairsScaled", () => Similarity
+        .nearDupPairsScaled(inlineCorpus, 64, minSim = 0.5),
+      cosineVerify, scalarAggBelow = true),
+    InlineCase("sim_cos_pairs", contractQuery("sim_cos_pairs"), cosineVerify),
+    InlineCase("dedup_minhash_pairs", contractQuery("dedup_minhash_pairs"),
+      minhashVerify),
+    InlineCase("dedup_simhash_pairs", contractQuery("dedup_simhash_pairs"),
+      hammingVerify),
+    InlineCase("dedup_chargram_pairs", contractQuery("dedup_chargram_pairs"),
+      minhashVerify),
+    // the corpus arm (two-sided) and the earlier-new-doc arm (self)
+    InlineCase("dedupAgainstSigs (both arms)", contractQuery("dedup_incremental"),
+      minhashVerify, bucketJoins = 2))
+
+  inlineCases.foreach { c =>
+    test(s"${c.name} verifies inside the bucket join") {
+      // force the canonical shuffled self-join (a broadcast band side
+      // would hide the shape this spec pins: at corpus scale both sides
+      // shuffle, and the 80 GB sf10 spill this shape replaced came from
+      // a candidate distinct BETWEEN the join and the verify)
+      withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        val plan = c.frame().queryExecution.sparkPlan
+        val joins = plan.collect { case j: BaseJoinExec => j }
+        if (c.onlyJoin)
+          assert(joins.size == 1, s"expected the one bucket self-join:\n$plan")
+        // Catalyst keeps the verify IN the join condition, so every
+        // candidate is verified inside the join operator and only
+        // survivors ever leave it — a shuffle or spill of the candidate
+        // set is structurally impossible in this plan
+        val bucketJoins = joins.filter(_.condition.exists(_.exists(c.isVerify)))
+        assert(bucketJoins.size == c.bucketJoins,
+          s"exactly ${c.bucketJoins} join(s) must carry the inline verify — " +
+            "a plan that verifies after an exchange re-materializes the " +
+            s"candidate set (the sf10 80 GB spill shape):\n$plan")
+        // the distinct runs on survivors only: nothing aggregates below
+        // the join (the regression shape put distinct(va, vb) there) —
+        // a GROUPED aggregate below the join is the candidate-distinct
+        // regression shape that spilled 80 GB at sf10
+        bucketJoins.foreach { j =>
+          val below = j.collect {
+            case a: BaseAggregateExec
+                if !c.scalarAggBelow || a.groupingExpressions.nonEmpty => a
+          }
+          assert(below.isEmpty,
+            s"no ${if (c.scalarAggBelow) "grouped " else ""}aggregate may " +
+              s"run below the bucket join:\n$plan")
+        }
       }
-      assert(aggsBelowJoin.isEmpty,
-        s"no aggregate may run below the bucket join:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
     }
   }
 
@@ -222,42 +274,16 @@ class AnnRecallSpec extends SparkSpec {
     } finally { planted.unpersist(); () }
   }
 
-  test("nearDupPairsScaled verifies inline like the fixed-knob form: the " +
-      "sim predicate rides the bucket join, and the only aggregate below " +
-      "it is the grouping-less 1-row knob derivation") {
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    import org.apache.spark.sql.execution.joins.BaseJoinExec
-    import org.apache.spark.sql.catalyst.expressions.GreaterThanOrEqual
-    import org.apache.spark.sql.graft.DotProductD
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val (corpus, _) =
-        SyntheticVectors.corpusAndQueries(spark, 500, 0, 64, 8, 3L)
-      val plan = Similarity.nearDupPairsScaled(corpus, 64, minSim = 0.5)
-        .queryExecution.sparkPlan
-      val joins = plan.collect { case j: BaseJoinExec => j }
-      // the bucket self-join is the one join whose condition carries the
-      // inline verify (the knob broadcasts add joins, but no other join
-      // compares dot products)
-      val bucketJoins = joins.filter(_.condition.exists(_.exists {
-        case cmp: GreaterThanOrEqual =>
-          cmp.exists { case _: DotProductD => true; case _ => false }
-        case _ => false
-      }))
-      assert(bucketJoins.size == 1,
-        s"exactly one join must carry the inline cosine verify:\n$plan")
-      // below that join, only the scalar (grouping-less) knob-count
-      // aggregate may appear — a GROUPED aggregate below the join is the
-      // candidate-distinct regression shape that spilled 80 GB at sf10
-      val groupedBelow = bucketJoins.head.collect {
-        case a: BaseAggregateExec if a.groupingExpressions.nonEmpty => a
-      }
-      assert(groupedBelow.isEmpty,
-        s"no grouped aggregate may run below the bucket join:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-    }
+  test("sim_neardup_param (caller-bound knobs) and sim_neardup_scaled " +
+      "(in-plan derivation) agree row-for-row on the fixture corpus") {
+    val param = SparkEntry.queries("sim_neardup_param")(spark, sfDir)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val scaled = SparkEntry.queries("sim_neardup_scaled")(spark, sfDir)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(param.nonEmpty, "derived-knob pairs must exist at sf0.001")
+    assert(param == scaled,
+      s"the two binding modes diverged: only-in-param=" +
+        s"${(param -- scaled).take(5)} only-in-scaled=${(scaled -- param).take(5)}")
   }
 
   test("LSH knob validation: bands*bits beyond the embedding dimension " +

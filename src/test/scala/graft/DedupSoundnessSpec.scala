@@ -354,4 +354,83 @@ class DedupSoundnessSpec extends SparkSpec {
     // leak unsegmented units into latin docs
     assert(rows.length == 1, s"40-word latin docs must stay gated out: ${rows.toSeq}")
   }
+
+  // ---- connected-components clusters ----------------------------------
+
+  test("dedup_cc labels are canonical component minima") {
+    val cc = operators.Dedup.queries("dedup_cc")(spark, sfDir).cache()
+    // finally, not in-body: suites share one session JVM, and a failed
+    // assert must not leave this cached frame pinned for later suites
+    try {
+      // labels never exceed the member id (min-propagation invariant)
+      assert(cc.filter(col("cluster_id") > col("doc_id")).count() == 0)
+      // every label is itself a doc whose own label is itself (a root)
+      val roots = cc.filter(col("cluster_id") === col("doc_id"))
+        .select(col("doc_id").as("cluster_id"))
+      val dangling = cc.select("cluster_id").distinct()
+        .join(roots, Seq("cluster_id"), "left_anti")
+      assert(dangling.count() == 0)
+      // near-dup pairs (est_jaccard >= 0.5) land in the same cluster
+      val pairs = operators.Dedup.queries("dedup_minhash_pairs")(spark, sfDir)
+      val ca = cc.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("cluster_id", "la")
+      val cb = cc.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("cluster_id", "lb")
+      val split = pairs.join(ca, "doc_a").join(cb, "doc_b")
+        .filter(col("la") =!= col("lb"))
+      assert(split.count() == 0)
+    } finally { cc.unpersist(); () }
+  }
+
+  // ---- PageRank over the near-dup graph -------------------------------
+  // the planted corpus plus a third copy of docA: 1, 2, 6 form a 3-clique,
+  // 3 and 4 a near-dup 2-clique, 5 is the loner
+  private lazy val pagerankCorpusDir: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pagerank_")
+    val rows = Seq(
+      (1L, docA), (2L, docA), (3L, nearB._1), (4L, nearB._2), (5L, loner),
+      (6L, docA))
+    import spark.implicits._
+    rows.toDF("doc_id", "text")
+      .select(col("doc_id"), col("text"), lit("en").as("lang"),
+        lit("synthetic").as("source"), length(col("text")).cast("long").as("n_chars"))
+      .coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    dir.toString
+  }
+
+  /** The exact integer recurrence graph_pagerank contracts to, run
+    * locally over an explicit edge list — an independent reference
+    * implementation, not a plan copy.
+    */
+  private def localPagerank(nodes: Seq[Long], pairs: Seq[(Long, Long)],
+      iters: Int): Map[Long, Long] = {
+    val edges = pairs.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+    val deg = edges.groupBy(_._1).map { case (k, v) => k -> v.size.toLong }
+    var rank = nodes.map(_ -> 1000000L).toMap
+    for (_ <- 1 to iters) {
+      val inflow = edges
+        .map { case (src, dst) => dst -> rank(src) / deg(src) }
+        .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).sum }
+      rank = nodes.map(n => n -> (150000L + inflow.getOrElse(n, 0L) * 85 / 100)).toMap
+    }
+    rank
+  }
+
+  test("pagerank: cliques sit at the exact integer fixed point, the " +
+      "loner at the teleport floor, and the whole table matches a " +
+      "local reference over the verified pair graph") {
+    val got = operators.Dedup.queries("graph_pagerank")(spark, pagerankCorpusDir)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // 3-clique {1,2,6}: deg 2, inflow = 2*(r/2) = r exactly -> fixed at
+    // the initial mass; 2-clique {3,4}: deg 1, same argument
+    for (id <- Seq(1L, 2L, 3L, 4L, 6L))
+      assert(got(id) == 1000000L, s"clique member $id drifted: $got")
+    // isolated node: zero inflow every round -> 150000 after round 1
+    assert(got(5L) == 150000L, s"loner must sit at the teleport floor: $got")
+    // full-table agreement with the independent local recurrence over
+    // the ACTUAL verified pair list
+    val pairs = operators.Dedup.queries("dedup_minhash_pairs")(spark, pagerankCorpusDir)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val ref = localPagerank((1L to 6L).toSeq, pairs, 8)
+    assert(got == ref, s"distributed != local reference\n got=$got\n ref=$ref")
+  }
 }

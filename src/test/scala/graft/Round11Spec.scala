@@ -3,73 +3,11 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Round-11 operators, proven on planted inputs through the PRODUCTION
-  * query entries (not expression copies): fixed-point PageRank over the
-  * near-dup graph, two-pass heavy hitters, bounded-error approximate
-  * percentiles, and PERMISSIVE corrupt-record ingest.
+  * query entries (not expression copies): two-pass heavy hitters,
+  * bounded-error approximate percentiles, and PERMISSIVE corrupt-record
+  * ingest.
   */
 class Round11Spec extends SparkSpec {
-
-  // ---- planted corpus for the graph/dedup ops -------------------------
-  // 40 distinct lowercase words; tokenizers split on [^a-z]+
-  private def words(seed: String): Seq[String] =
-    (0 until 40).map(i => s"$seed${('a' + i / 26).toChar}${('a' + i % 26).toChar}")
-
-  private val docA = words("qu").mkString(" ") // 1, 2, 6: identical (3-clique)
-  private val nearB = { // 3 and 4: one word changed (near-dup 2-clique)
-    val w = words("zx"); (w.mkString(" "), w.updated(20, "changed").mkString(" "))
-  }
-  private val loner = (0 until 40).map(i => s"lone$i").mkString(" ")
-
-  private lazy val corpusDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_r11_")
-    val rows = Seq(
-      (1L, docA), (2L, docA), (3L, nearB._1), (4L, nearB._2), (5L, loner),
-      (6L, docA))
-    import spark.implicits._
-    rows.toDF("doc_id", "text")
-      .select(col("doc_id"), col("text"), lit("en").as("lang"),
-        lit("synthetic").as("source"), length(col("text")).cast("long").as("n_chars"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    dir.toString
-  }
-
-  /** The exact integer recurrence graph_pagerank contracts to, run
-    * locally over an explicit edge list — an independent reference
-    * implementation, not a plan copy.
-    */
-  private def localPagerank(nodes: Seq[Long], pairs: Seq[(Long, Long)],
-      iters: Int): Map[Long, Long] = {
-    val edges = pairs.flatMap { case (a, b) => Seq(a -> b, b -> a) }
-    val deg = edges.groupBy(_._1).map { case (k, v) => k -> v.size.toLong }
-    var rank = nodes.map(_ -> 1000000L).toMap
-    for (_ <- 1 to iters) {
-      val inflow = edges
-        .map { case (src, dst) => dst -> rank(src) / deg(src) }
-        .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).sum }
-      rank = nodes.map(n => n -> (150000L + inflow.getOrElse(n, 0L) * 85 / 100)).toMap
-    }
-    rank
-  }
-
-  test("pagerank: cliques sit at the exact integer fixed point, the " +
-      "loner at the teleport floor, and the whole table matches a " +
-      "local reference over the verified pair graph") {
-    val got = operators.Dedup.queries("graph_pagerank")(spark, corpusDir)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // 3-clique {1,2,6}: deg 2, inflow = 2*(r/2) = r exactly -> fixed at
-    // the initial mass; 2-clique {3,4}: deg 1, same argument
-    for (id <- Seq(1L, 2L, 3L, 4L, 6L))
-      assert(got(id) == 1000000L, s"clique member $id drifted: $got")
-    // isolated node: zero inflow every round -> 150000 after round 1
-    assert(got(5L) == 150000L, s"loner must sit at the teleport floor: $got")
-    // full-table agreement with the independent local recurrence over
-    // the ACTUAL verified pair list
-    val pairs = operators.Dedup.queries("dedup_minhash_pairs")(spark, corpusDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val ref = localPagerank((1L to 6L).toSeq, pairs, 8)
-    assert(got == ref, s"distributed != local reference\n got=$got\n ref=$ref")
-  }
 
   // ---- heavy hitters --------------------------------------------------
 

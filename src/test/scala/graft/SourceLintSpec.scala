@@ -96,6 +96,21 @@ class SourceLintSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"planted union outside ScriptRouting in: $hits")
   }
 
+  test("only the blocked-pairs core joins on band codes") {
+    // every near-dup pair join goes through graft.operators.Blocking,
+    // which fixes the shape for all callers: the verify in the join
+    // condition, a dropDuplicates on the pair key after it, no aggregate
+    // below it, one join strategy. An inlined join on a qualified band
+    // column ("a.band" === "b.band") is how eight copies drifted apart
+    // on that shape before. annLsh's lookup of the broadcast query codes
+    // is a top-k candidate probe, not a pair join, and joins by name.
+    val bandJoin = """\.band"\)\s*===""".r
+    val hits = sources("graft/operators").collect {
+      case (path, text) if bandJoin.findFirstIn(text).nonEmpty => path
+    }
+    assert(hits.isEmpty, s"band-code join outside Blocking in: $hits")
+  }
+
   test("only graft.Session builds a SparkSession") {
     // one factory, so no entry point or suite runs a session the others
     // don't: nine hand-copied builder blocks had drifted apart (missing

@@ -171,6 +171,12 @@ class StreamStateBenchSpec extends SparkSpec {
       .isEmpty)
   }
 
+  test("state_rows reads null under RocksDB, which tracks no row total") {
+    assert(StreamStateBench.stateRowsJson("rocksdb", 0L) == "null")
+    assert(StreamStateBench.stateRowsJson(Tuning.ROCKSDB_PROVIDER, 0L) == "null")
+    assert(StreamStateBench.stateRowsJson("heap", 75L) == "75")
+  }
+
   test("StatePeak.max is a componentwise peak plus event count") {
     import StreamStateBench.StatePeak
     val a = StatePeak(10, 100, 5, 1, 1)
