@@ -19,7 +19,10 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, Times
   * the query is still being built. The catalog is this engine's stand-in
   * for a metastore or table-format schema: keyed by path and file state
   * (a rewritten file is inferred again), and, as immutable metadata, the
-  * one memo that [[Cleanup.releaseAll]] deliberately keeps.
+  * one memo that [[Cleanup.releaseAll]] deliberately keeps. Checking an
+  * entry costs a `getFileStatus` of the path and, for the directory
+  * layout, one `listStatus` per directory ([[stamp]]), none of which
+  * starts a process.
   */
 object Tables {
 
@@ -119,6 +122,13 @@ object Tables {
     }
   }
 
+  /** The [[Stamp]] of a table path, `None` when it does not exist. The
+    * directory walk is `listStatus`, reading only path, length and
+    * modification time: `listFiles` builds a `LocatedFileStatus` per
+    * file, which reads the file's owner and permission, and Hadoop's
+    * local file system without libhadoop reads those by an `ls -ld`
+    * process per file (SCALE.md, "Local file I/O").
+    */
   private def stamp(spark: SparkSession, path: String): Option[Stamp] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -128,15 +138,14 @@ object Tables {
     root.map { st =>
       if (!st.isDirectory) Vector(("", st.getLen, st.getModificationTime))
       else {
-        val it = fs.listFiles(p, true)
         val prefix = st.getPath.toUri.getPath.length
-        val files = Vector.newBuilder[(String, Long, Long)]
-        while (it.hasNext) {
-          val f = it.next()
-          files += ((f.getPath.toUri.getPath.substring(prefix),
-            f.getLen, f.getModificationTime))
-        }
-        files.result().sortBy(_._1)
+        def walk(dir: Path): Seq[(String, Long, Long)] =
+          fs.listStatus(dir).toSeq.flatMap { f =>
+            if (f.isDirectory) walk(f.getPath)
+            else Seq((f.getPath.toUri.getPath.substring(prefix),
+              f.getLen, f.getModificationTime))
+          }
+        walk(st.getPath).toVector.sortBy(_._1)
       }
     }
   }

@@ -9,13 +9,13 @@ import org.apache.spark.sql.internal.StaticSQLConf
   * Catalyst expressions as SQL functions, so `spark.sql("... vec_dot(a,
   * b) ...")` works alongside the Column API ([[VectorColumns]]), and the
   * AQE rule [[SmallTerminalSort]]; it also defaults the size of Spark's
-  * generated-class cache (see [[GraftExtensions.CodegenCacheMaxEntries]]).
+  * generated-class cache (see [[GraftExtensions.CodegenCacheMaxEntries]])
+  * and the file:// file systems (see [[GraftExtensions.LocalFsDefaults]]).
   *
   * Install via `graft.Session` (the builder's `withExtensions`) or
   * `spark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions`.
-  * Only the first reaches the cache default: the builder runs `apply`
-  * before `build()` creates its `SparkConf`, while the conf route runs
-  * it after.
+  * Only the first reaches the defaults: the builder runs `apply` before
+  * `build()` creates its `SparkConf`, while the conf route runs it after.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -45,6 +45,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     System.getProperties.putIfAbsent(
       StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
       GraftExtensions.CodegenCacheMaxEntries.toString)
+    GraftExtensions.LocalFsDefaults.foreach { case (k, v) =>
+      System.getProperties.putIfAbsent(k, v)
+    }
     register(ext, "vec_dot", classOf[DotProductD].getName, 2,
       "vec_dot(a, b) - Dot product of two float/double arrays as DOUBLE, " +
         "accumulated strictly left-to-right. Returns NULL if either array " +
@@ -109,4 +112,18 @@ object GraftExtensions {
     * Measurements and precedence: SCALE.md, "Generated-class cache".
     */
   val CodegenCacheMaxEntries: Int = 4096
+
+  /** The file:// file systems, as `spark.hadoop.*` defaults: both of
+    * Hadoop's local file systems over [[_root_.graft.ForklessRawLocalFileSystem]],
+    * which sets permissions and reads link status without starting a
+    * `chmod` or `readlink` process. `fs.file.impl` serves `FileSystem`
+    * (writers, committers, reliable checkpoints); the `AbstractFileSystem`
+    * key serves `FileContext` (streaming checkpoint commits). Measurements
+    * and precedence: SCALE.md, "Local file I/O".
+    */
+  val LocalFsDefaults: Seq[(String, String)] = Seq(
+    "spark.hadoop.fs.file.impl" ->
+      classOf[_root_.graft.ForklessLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
+      classOf[_root_.graft.ForklessLocalFs].getName)
 }

@@ -131,6 +131,20 @@ class SourceLintSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"lineage cut outside graft.Materialize in: $hits")
   }
 
+  test("no Hadoop located-status listing in main sources") {
+    // Hadoop's listFiles(path, recursive) and listLocatedStatus build a
+    // LocatedFileStatus per file, which reads the file's owner and
+    // permission: one `ls -ld` process per file on a local file system
+    // without libhadoop. listStatus reads path, length and time without
+    // one (Tables.stamp). java.io.File's listFiles() and
+    // listFiles(filter) take at most one argument and stay allowed.
+    val located = """\.listFiles\([^(),]+,|\.listLocatedStatus\(""".r
+    val hits = sources("graft").collect {
+      case (path, text) if located.findFirstIn(text).nonEmpty => path
+    }
+    assert(hits.isEmpty, s"located-status listing in: $hits")
+  }
+
   test("no sleeps or processing-time hacks in main sources") {
     // StreamStateBench: a measurement main, not an operator — its only
     // sleep drains the async StreamingQueryListener bus after each
