@@ -1548,22 +1548,24 @@ object Dedup extends QueryModule {
   /** Positional window table (doc_id, pos, gh) of a (doc_id, grams)
     * frame: one row per window, gh = 16-char md5 prefix of its text.
     *
-    * Computed FRESH per consumer — deliberately uncached, unlike the
+    * Computed FRESH per query — deliberately uncached, unlike the
     * module's shingle/signature tables. The whole pass is one codegen'd
-    * projection over the scan plus the explode (the n-gram scanner is a
-    * Catalyst expression the Generate evaluates once per DOCUMENT, so
-    * there is no per-output-element re-evaluation to barrier away —
-    * measured 23.6M windows in ~11 s at the 500k-doc decade), while
-    * caching it costs far more than it saves: materializing the
-    * columnar cache of 500k string-arrays plus 23.6M exploded rows took
-    * 60 s + 136 s at the same decade, against ~11 s per recompute. Two
-    * consumers (duplicate counts, hit join) → two scan passes — the
-    * same two-pass structure the published substring-dedup pipelines
-    * use, and the shape that still works when the corpus is 100 TB and
-    * no corpus-sized cache exists.
+    * projection over the scan plus the explode, and the n-gram scanner
+    * (a Catalyst expression) runs once per DOCUMENT: `posexplode_outer`
+    * with `pos IS NOT NULL` drops the empty arrays after the Generate,
+    * where a plain `posexplode` makes the optimizer infer a
+    * `size(grams) > 0` filter below it that evaluates the scanner a
+    * second time (measured 23.6M windows in ~11 s at the 500k-doc
+    * decade). Caching it costs far more than it saves: materializing
+    * the columnar cache of 500k string-arrays plus 23.6M exploded rows
+    * took 60 s + 136 s at the same decade. [[spanFrame]] reads it in one
+    * pass, which still works when the corpus is 100 TB and no
+    * corpus-sized cache exists.
     */
   private def windowsOf(grams: DataFrame): DataFrame =
-    grams.select(col("doc_id"), posexplode(col("grams")).as(Seq("pos", "gram")))
+    grams.select(col("doc_id"),
+        posexplode_outer(col("grams")).as(Seq("pos", "gram")))
+      .filter(col("pos").isNotNull)
       .select(col("doc_id"), col("pos").cast(LongType).as("pos"),
         substring(md5(col("gram")), 1, 16).as("gh"))
 
@@ -1600,22 +1602,22 @@ object Dedup extends QueryModule {
     * boilerplate headers, license blocks, quoted passages.
     *
     * Scale: windows shuffle as (doc_id, pos, 16-char digest) — text
-    * never leaves the scan stage. The duplicate-window table is
-    * corpus-derived, so it joins by SHUFFLE hash join on the digest
-    * (broadcast would be wrong: it grows with the corpus), with
-    * partial-aggregated counts on the build side — pinned with an
-    * explicit shuffle_hash hint, because at fixture scale size-based
-    * planning would broadcast the tiny aggregated table and the
-    * committed plan digest would record the wrong shape for 100 TB. The
-    * island window sorts each document's hits only — bounded by
-    * document length, never corpus size. At fixed window width the
-    * whole pipeline is linear in corpus units.
+    * never leaves the scan stage. One scan feeds one exchange on the
+    * digest, where a window count per digest keeps the windows that
+    * occur at least twice: a group-by count joined back to the windows
+    * read the corpus twice, once per side. A digest that occurs in
+    * millions of documents is one window group in one task; its rows
+    * spill from the window buffer rather than fail, the same hot key a
+    * join on the digest sends to one task. The island window sorts each
+    * document's hits only — bounded by document length, never corpus
+    * size. At fixed window width the whole pipeline is linear in corpus
+    * units.
     */
   private def spanFrame(pos: DataFrame, width: Int): DataFrame = {
-    val dup = pos.groupBy("gh").agg(count(lit(1)).as("c"))
-      .filter(col("c") >= 2).select("gh")
+    val sameDigest = Window.partitionBy("gh")
     val w = Window.partitionBy("doc_id").orderBy("pos")
-    pos.join(dup.hint("shuffle_hash"), "gh")
+    pos.withColumn("c", count(lit(1)).over(sameDigest))
+      .filter(col("c") >= 2)
       .withColumn("island", col("pos") - row_number().over(w).cast(LongType))
       .groupBy("doc_id", "island")
       .agg(min("pos").as("span_start"),
