@@ -34,6 +34,8 @@ import org.apache.hadoop.fs.permission.FsPermission
 class ForklessRawLocalFileSystem extends RawLocalFileSystem {
 
   override def setPermission(p: Path, perm: FsPermission): Unit = {
+    // the bits, as Hadoop's chmod takes them: FileContext passes an
+    // FsCreateModes, whose toString is no mode string
     val mode = perm.toShort.toInt
     val view = Files.getFileAttributeView(pathToFile(p).toPath,
       classOf[PosixFileAttributeView])
