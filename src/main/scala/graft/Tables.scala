@@ -49,8 +49,8 @@ object Tables {
     *    exactly what the DuckDB oracles compute under the UTC session
     *    this project pins everywhere.
     *  - `session.timeZone=UTC`: the naive→instant reinterpretation above
-    *    (and the NTZ→LTZ cast in [[ntzToInstant]], and the streaming NTZ
-    *    branch in Sources) all resolve the wall clock THROUGH the session
+    *    (and the NTZ→LTZ cast in [[ntzToInstant]], which batch and
+    *    stream reads share) all resolve the wall clock THROUGH the session
     *    timezone, so "self-contained" requires pinning it here too — an
     *    external driver session in, say, Asia/Tokyo would otherwise read
     *    the same fixtures to instants shifted 9 h from the DuckDB oracle.
@@ -66,7 +66,43 @@ object Tables {
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    ntzToInstant(spark.read.schema(schemaOf(spark, path)).parquet(path))
+    normalize(name, spark.read.schema(schemaOf(spark, path)).parquet(path))
+  }
+
+  /** The same table as an unbounded source: the schema [[table]] reads
+    * with (a streaming file source needs one given, and the catalog
+    * also pins [[tsCompatConfs]], without which inference throws on
+    * NANOS or infers TIMESTAMP_NTZ, which watermarks reject) and the
+    * same [[normalize]], so a stream and its batch oracle cannot
+    * disagree on boundary timestamps.
+    *
+    * `glob` defaults to EXACTLY `<name>.parquet`, the file the batch
+    * loader and the DuckDB oracle read, so a stray name-prefixed file
+    * in a dataset dir can never make the stream diverge from its batch
+    * twin. Only StreamRecoverySpec widens it (to `events*.parquet`) so
+    * a second input file can appear between two runs of the SAME
+    * pipeline to prove checkpoint recovery.
+    *
+    * Layout: driver fixtures ship a table as a single FILE, but any
+    * Spark-written dataset (every real deployment, where the table is
+    * thousands of part files) ships it as a DIRECTORY. The name glob
+    * cannot see into the directory (it matches leaf-file names), so for
+    * the directory layout the stream sources the table path itself:
+    * the same scoping, since only the table's own part files live under
+    * it. A widened glob keeps the flat layout by construction (it exists
+    * to add sibling FILES).
+    */
+  def streamTable(spark: SparkSession, sfDir: String, name: String,
+      glob: Option[String] = None): DataFrame = {
+    val path = new Path(s"$sfDir/$name.parquet")
+    val reader = spark.readStream.schema(schemaOf(spark, path.toString))
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dirLayout =
+      glob.isEmpty && fs.exists(path) && fs.getFileStatus(path).isDirectory
+    normalize(name,
+      if (dirLayout) reader.parquet(path.toString)
+      else reader.option("pathGlobFilter", glob.getOrElse(path.getName))
+        .parquet(sfDir))
   }
 
   /** What a table path's schema was inferred from: one (relative path,
@@ -150,6 +186,28 @@ object Tables {
     }
   }
 
+  /** What every read of table `name`, batch or stream, goes through:
+    * [[ntzToInstant]], then for `events` the legacy ns→µs branch —
+    * `events.ts` arrives either as naive TIMESTAMP(MICROS) (read as a
+    * plain timestamp under [[tsCompatConfs]]) or, in earlier fixture
+    * generations, as TIMESTAMP(NANOS) read as a long.
+    */
+  private def normalize(name: String, df: DataFrame): DataFrame = {
+    val d = ntzToInstant(df)
+    if (name == "events" && d.schema("ts").dataType == LongType)
+      d.withColumn("ts", expr(nsToMicrosTs))
+    else d
+  }
+
+  /** ns→µs normalization for `events.ts`: FLOOR division via pmod —
+    * `div` truncates toward zero, which would land pre-epoch nanos 1 µs
+    * late; double division would lose precision at 1.7e18 ns. Applied
+    * by [[normalize]] to the batch and the streaming read alike; floor
+    * semantics pinned by TsNormalizationSpec.
+    */
+  private[graft] val nsToMicrosTs =
+    "timestamp_micros((ts - pmod(ts, 1000)) div 1000)"
+
   /** Defensive NTZ→LTZ normalization: `inferTimestampNTZ=false` only
     * governs schema INFERENCE, so a file that carries an explicit Spark
     * schema with TIMESTAMP_NTZ columns (e.g. a fixture regenerated by a
@@ -174,27 +232,7 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame      = table(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame    = table(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = table(s, d, "lineitem")
-  /** ns→µs normalization for `events.ts`: FLOOR division via pmod —
-    * `div` truncates toward zero, which would land pre-epoch nanos 1 µs
-    * late; double division would lose precision at 1.7e18 ns. ONE
-    * definition shared by the batch loader below and the streaming
-    * source (Sources.streamEvents), so the two paths cannot drift;
-    * floor semantics pinned by TsNormalizationSpec.
-    */
-  private[graft] val nsToMicrosTs =
-    "timestamp_micros((ts - pmod(ts, 1000)) div 1000)"
-
-  /** `events.ts` arrives either as naive TIMESTAMP(MICROS) (read as a
-    * plain timestamp under [[tsCompatConfs]]) or, in earlier fixture
-    * generations, as TIMESTAMP(NANOS) read as a long — the LongType
-    * branch normalizes that legacy shape ns→µs.
-    */
-  def events(s: SparkSession, d: String): DataFrame = {
-    val df = table(s, d, "events")
-    if (df.schema("ts").dataType == LongType)
-      df.withColumn("ts", expr(nsToMicrosTs))
-    else df
-  }
+  def events(s: SparkSession, d: String): DataFrame    = table(s, d, "events")
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 }

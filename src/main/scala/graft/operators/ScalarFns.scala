@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** SURVEY §2.B scalar-function surface: string, date/time, math, JSON,
   * and array functions, plus the grep/inverted-index workloads from the
-  * MapReduce paper's motivating set, and batch event-time windowing
-  * (tumbling / sliding / session) over the `events` table.
+  * MapReduce paper's motivating set, and event-time windowing
+  * (tumbling / sliding / session) over the `events` table, defined once
+  * for the batch queries and their `stream_*` twins in Sources.
   *
   * All functions used are codegen'd Catalyst built-ins
   * (`org.apache.spark.sql.functions`) — no UDFs — so every query stays
@@ -212,37 +213,26 @@ object ScalarFns extends QueryModule {
       .select("word", "n_docs", "doc_list")
       .orderBy("word")
 
-  // ---- batch event-time windows (events.ts, ns-unit timestamp) --------
+  // ---- event-time windows (events.ts) ----------------------------------
 
   /** Tumbling 1-hour windows. At scale this is a single hash aggregation
     * keyed by (bucket, type) — no per-window state, fully parallel.
     */
   private def eventTumbling(s: SparkSession, d: String): DataFrame =
-    events(s, d)
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value").cast("decimal(18,6)")).cast("double").as("value_sum"))
-      .select(col("w.start").cast("long").as("bucket"), col("event_type"),
-        col("n"), col("value_sum"))
-      .orderBy("bucket", "event_type")
+    tumbling(events(s, d)).orderBy("bucket", "event_type")
 
   /** Sliding 1-hour windows every 30 min — each event lands in 2 windows. */
   private def eventSliding(s: SparkSession, d: String): DataFrame =
-    events(s, d)
-      .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"))
-      .agg(count(lit(1)).as("n"), sum(col("value").cast("decimal(18,6)")).cast("double").as("value_sum"))
-      .select(col("w.start").cast("long").as("bucket"), col("n"), col("value_sum"))
-      .orderBy("bucket")
+    sliding(events(s, d)).orderBy("bucket")
 
   /** Session windows per user, 30-minute inactivity gap. Spark merges
     * events where the gap is strictly < 30 min; the oracle reproduces
     * that with a gaps-and-islands lag() (break on gap >= 30 min).
     */
   private def eventSession(s: SparkSession, d: String): DataFrame =
-    events(s, d)
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value").cast("decimal(18,6)")).cast("double").as("value_sum"))
-      .select(col("user_id"), col("w.start").cast("long").as("session_start"),
-        col("n_events"), col("value_sum"))
+    sessions(events(s, d))
+      .select(col("user_id"), col("session_start"), col("n_events"),
+        col("v_dec").cast("double").as("value_sum"))
       .orderBy("user_id", "session_start")
 
   // ---- composed: top-k event types per hour ---------------------------
@@ -252,10 +242,10 @@ object ScalarFns extends QueryModule {
     * one bounded window for the rank.
     */
   private def eventTopk(s: SparkSession, d: String): DataFrame = {
-    val counts = events(s, d)
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("w.start").cast("long").as("bucket"), col("event_type"), col("n"))
+    // the value sum tumbling also defines is pruned: the scan reads
+    // ts and event_type only (PLAN_DIGEST.json)
+    val counts = tumbling(events(s, d))
+      .select(col("bucket"), col("event_type"), col("n"))
     val rk = org.apache.spark.sql.expressions.Window
       .partitionBy("bucket").orderBy(col("n").desc, col("event_type"))
     counts
@@ -642,7 +632,11 @@ object ScalarFns extends QueryModule {
   private val Z_CUT = 3.0
   private val Z_MIN_N = 5
 
-  /** Per-user z-score outliers over the event stream: each user's mean
+  /** The per-user (mean, sd) reference table — shared by the batch
+    * query and the streaming scorer (Sources.streamAnomaly), ONE
+    * definition so the two paths cannot drift.
+    *
+    * Per-user z-score outliers over the event stream: each user's mean
     * and sample stddev of `value` derive from EXACT decimal power sums
     * (the rel_agg_stats discipline — order-independent, so the doubles
     * they produce are bit-identical across engines and partitionings),
@@ -657,10 +651,6 @@ object ScalarFns extends QueryModule {
     * row-local. Users with fewer than [[Z_MIN_N]] events or zero
     * variance are excluded — a sample stddev over one point is
     * undefined, not an anomaly.
-    */
-  /** The per-user (mean, sd) reference table — shared by the batch
-    * query and the streaming scorer (Sources.streamAnomaly), ONE
-    * definition so the two paths cannot drift.
     */
   private[operators] def anomalyStats(s: SparkSession, d: String): DataFrame = {
     val v = col("value").cast("decimal(18,6)")
@@ -692,6 +682,53 @@ object ScalarFns extends QueryModule {
       .filter(abs(col("z")) >= Z_CUT)
       .select(col("event_id"), col("user_id"),
         round(col("mean"), 6).as("mean"), col("z"))
+
+  // ---- the event-window shapes, one definition for batch and stream ----
+
+  /** The contract's event-time windows, each written once and run by the
+    * batch `event_*` query, the complete-mode `stream_*` replay and the
+    * watermark-finalized `stream_*_append` sink alike (Sources), the
+    * way [[anomalyScore]] serves `event_anomaly` and `stream_anomaly`.
+    * Each applies this 2-hour watermark, which bounds a stream's state
+    * and decides when an append sink may emit a window; on a batch
+    * input Spark's `EliminateEventTimeWatermark` drops it, so the batch
+    * plans are those of the plain aggregation. Value sums run in
+    * DECIMAL(18,6) so they are order-independent in both engines.
+    */
+  private val Watermark = "2 hours"
+
+  /** 1-hour tumbling windows per event type: (bucket, event_type, n,
+    * value_sum), bucket the window start in epoch seconds.
+    */
+  private[graft] def tumbling(ev: DataFrame): DataFrame =
+    ev.withWatermark("ts", Watermark)
+      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("value").cast("decimal(18,6)")).cast("double").as("value_sum"))
+      .select(col("w.start").cast("long").as("bucket"), col("event_type"),
+        col("n"), col("value_sum"))
+
+  /** 1-hour windows every 30 minutes: (bucket, n, value_sum). */
+  private[graft] def sliding(ev: DataFrame): DataFrame =
+    ev.withWatermark("ts", Watermark)
+      .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("value").cast("decimal(18,6)")).cast("double").as("value_sum"))
+      .select(col("w.start").cast("long").as("bucket"), col("n"), col("value_sum"))
+
+  /** Session windows per user, 30-minute gap: (user_id, session_start,
+    * n_events, v_dec), session_start in epoch seconds. The value sum
+    * stays DECIMAL(28,6): `stream_session` re-aggregates it per user,
+    * exactly in both engines, and the per-session callers cast it to
+    * double once, at their select.
+    */
+  private[graft] def sessions(ev: DataFrame): DataFrame =
+    ev.withWatermark("ts", Watermark)
+      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
+      .agg(count(lit(1)).as("n_events"),
+        sum(col("value").cast("decimal(18,6)")).as("v_dec"))
+      .select(col("user_id"), col("w.start").cast("long").as("session_start"),
+        col("n_events"), col("v_dec"))
 
   private def eventAnomaly(s: SparkSession, d: String): DataFrame =
     anomalyScore(events(s, d), anomalyStats(s, d)).orderBy("event_id")

@@ -1,10 +1,10 @@
 package graft.operators
 
 import graft.{QueryModule, Tables}
+import graft.streaming.Streams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.LongType
 
 /** Source/sink surface (SURVEY §2.B "Scans/sources" + "Sinks"): CSV,
   * JSON, and line-text round-trips, plus a REAL Structured Streaming
@@ -304,55 +304,14 @@ object Sources extends QueryModule {
       |ORDER BY bucket""".stripMargin
 
   // ---- Structured Streaming: file source → windowed agg → sink --------
+  //
+  // Every stream query reads its table through Tables.streamTable and
+  // runs its shape through the batch twin's own definition (the event
+  // windows and anomalyScore in ScalarFns, Streams.dedupStreamExact),
+  // then through one of two sink runners: `memorySink` or the parquet
+  // `appendSink`.
 
   private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** The events table replayed through a streaming file source with a
-    * watermark and 1-hour tumbling windows — the stream-native form of
-    * `event_tumbling`, checked against the same batch oracle.
-    *
-    * Runs with Trigger.AvailableNow (bounded replay) into an in-memory
-    * sink in complete mode. At production scale the sink would be
-    * kafka/parquet in append mode past the watermark; complete+memory is
-    * the test harness shape (results must fit the driver — true here,
-    * one row per (hour, type)).
-    */
-  private def streamTumbling(s: SparkSession, d: String): DataFrame =
-    // complete mode re-emits full state every data batch — nothing
-    // waits on the watermark, so the trailing batch is pure overhead
-    withStreamFanout(s, skipNoDataBatch = true) {
-      val name = "graft_stream_tumbling_" + streamSeq.incrementAndGet()
-      val q = streamEvents(s, d)
-        .withWatermark("ts", "2 hours")
-        .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(18,6)")).cast("double").as("value_sum"))
-        .select(col("w.start").cast("long").as("bucket"), col("event_type"),
-          col("n"), col("value_sum"))
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table(name).orderBy("bucket", "event_type")
-    }
-
-  /** Sliding windows over the replayed stream (1 hour every 30 min) —
-    * each event lands in two overlapping window states.
-    */
-  private def streamSliding(s: SparkSession, d: String): DataFrame =
-    // complete mode: full state emits in the data batch (as tumbling)
-    withStreamFanout(s, skipNoDataBatch = true) {
-      val name = "graft_stream_sliding_" + streamSeq.incrementAndGet()
-      val q = streamEvents(s, d)
-        .withWatermark("ts", "2 hours")
-        .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(18,6)")).cast("double").as("value_sum"))
-        .select(col("w.start").cast("long").as("bucket"), col("n"), col("value_sum"))
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table(name).orderBy("bucket")
-    }
 
   /** Stateful streaming ops instantiate one state store per shuffle
     * partition per stateful operator; for the tiny replayed fixture the
@@ -366,22 +325,22 @@ object Sources extends QueryModule {
     */
   private val STREAM_FANOUT = 2
 
-  /** Checkpoint base for the replay fixtures: tmpfs when available.
-    * Every micro-batch commit cycle fsyncs a handful of tiny files
-    * (offset log, commit log, per-partition state deltas); on a disk
-    * tmpdir that latency IS the fixture floor, and none of it buys
-    * durability a bounded replay needs. Production checkpoints go to
-    * durable shared storage — this only relocates the TEST harness's
-    * scratch. Pid-scoped (two JVMs must not share checkpoint dirs:
-    * query names restart at 1 per JVM) and cleared on first use so a
-    * recycled pid can never resume a dead run's completed checkpoint
-    * (which would replay nothing and return an empty result).
-    */
-  /** tmpfs when the candidate is a writable directory, else the disk
-    * fallback — factored out of the lazy root so BOTH branches are
-    * spec-pinned (the fallback is exactly the case that shows up on a
-    * locked-down driver host, where it silently turns every stateful
-    * stream checkpoint into fsync-bound disk I/O).
+  /** Checkpoint base for the replay fixtures: tmpfs when the candidate
+    * is a writable directory, else the disk fallback. Every micro-batch
+    * commit cycle fsyncs a handful of tiny files (offset log, commit
+    * log, per-partition state deltas); on a disk tmpdir that latency IS
+    * the fixture floor, and none of it buys durability a bounded replay
+    * needs. Production checkpoints go to durable shared storage — this
+    * only relocates the TEST harness's scratch. Pid-scoped (two JVMs
+    * must not share checkpoint dirs: query names restart at 1 per JVM)
+    * and cleared on first use so a recycled pid can never resume a dead
+    * run's completed checkpoint (which would replay nothing and return
+    * an empty result).
+    *
+    * Factored out of the lazy root so BOTH branches are spec-pinned
+    * (the fallback is exactly the case that shows up on a locked-down
+    * driver host, where it silently turns every stateful stream
+    * checkpoint into fsync-bound disk I/O).
     */
   private[operators] def resolveScratchRoot(
       tmpfs: java.io.File, fallback: String): String =
@@ -492,61 +451,96 @@ object Sources extends QueryModule {
       }
     }
 
-  /** events as an unbounded source — the SAME ns→µs normalization
-    * expression as the batch loader (`Tables.nsToMicrosTs`), so the
-    * stream and its batch oracle cannot disagree on boundary
-    * timestamps.
+  /** Memory-sink runner: `df` replayed once (Trigger.AvailableNow) into
+    * an in-memory sink in output `mode`, awaited, and returned as the
+    * sink's table. The sink is named `prefix` plus a per-JVM sequence
+    * number: StreamStateBench attributes a query's state metrics by that
+    * prefix, and Bench and StreamStateBench drop the `graft_stream_*`
+    * views between queries. Complete+memory is the test harness shape:
+    * results must fit the driver (true for every caller's fixture,
+    * O(groups) or O(kept rows)); a production sink is the parquet
+    * [[appendSink]] or Kafka in append mode past the watermark.
     */
-  private def streamEvents(s: SparkSession, d: String,
-      glob: String = "events.parquet"): DataFrame = {
-    // a streaming file source needs an explicit schema: the one the
-    // batch loader reads with, from the same catalog, which also pins
-    // the compat confs (without them inference throws on NANOS or
-    // infers TIMESTAMP_NTZ, which watermarks reject)
-    val schema = graft.Tables.schemaOf(s, s"$d/events.parquet")
-    // default glob is EXACTLY events.parquet — the same file the batch
-    // loader and the DuckDB oracle read, so a stray events-prefixed
-    // file in a dataset dir can never make the stream silently diverge
-    // from its batch twin. Only StreamRecoverySpec widens it (to
-    // events*.parquet) so a second input file can appear between two
-    // runs of the SAME pipeline to prove checkpoint recovery.
-    //
-    // Layout: driver fixtures ship events.parquet as a single FILE, but
-    // any Spark-written dataset — i.e. every real deployment, where the
-    // table is thousands of part files — ships it as a DIRECTORY. The
-    // name-glob can't see into the directory (it matches leaf-file
-    // names), so for the dir layout the stream sources the table path
-    // itself: same scoping guarantee, since only the table's own part
-    // files live under it. The widened recovery glob keeps the flat
-    // layout by construction (it exists to add sibling FILES).
-    val tablePath = new org.apache.hadoop.fs.Path(s"$d/events.parquet")
-    val fs = tablePath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val dirLayout = glob == "events.parquet" &&
-      fs.exists(tablePath) && fs.getFileStatus(tablePath).isDirectory
-    val raw =
-      if (dirLayout) s.readStream.schema(schema).parquet(tablePath.toString)
-      else s.readStream.schema(schema).option("pathGlobFilter", glob).parquet(d)
-    raw.schema("ts").dataType match {
-      // legacy TIMESTAMP(NANOS) fixtures arrive as longs — same ns→µs
-      // floor as the batch loader
-      case LongType => raw.withColumn("ts", expr(Tables.nsToMicrosTs))
-      // Spark-written NTZ schemas bypass the inference flag (it only
-      // governs inference); cast to an instant like Tables.ntzToInstant
-      // so watermarks — which reject NTZ — keep working
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => raw
-    }
+  private def memorySink(s: SparkSession, prefix: String, mode: String)(
+      df: DataFrame): DataFrame = {
+    val name = prefix + streamSeq.incrementAndGet()
+    df.writeStream.outputMode(mode).format("memory").queryName(name)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    s.table(name)
   }
 
-  /** Streaming exact dedup: first occurrence per (user_id, event_type)
-    * passes through, later ones are dropped against the state store.
-    * Emitting only the key columns makes the result the distinct key
-    * set — invariant to batch/partition arrival order, so the batch
-    * DISTINCT oracle matches exactly.
+  /** Parquet append runner: `df` replayed once into a parquet FILE sink
+    * at `base/out`, checkpoint at `base/ckpt`, and read back with the
+    * explicit `schema`. Explicit because a replay where nothing crosses
+    * the final watermark commits ZERO files (just _spark_metadata), and
+    * a schema-inferring read would throw instead of returning the empty
+    * frame the oracle computes for that input. `prefix` names the query
+    * for StreamStateBench's attribution; without one the stream is
+    * nameless. Only watermark-finalized rows reach an append sink, so
+    * its callers keep the trailing no-data micro-batch (the default of
+    * [[withStreamFanout]]).
+    */
+  private def appendSink(s: SparkSession, base: String, prefix: Option[String],
+      schema: String)(df: DataFrame): DataFrame = {
+    val w = df.writeStream.outputMode("append").format("parquet")
+    prefix.fold(w)(p => w.queryName(p + streamSeq.incrementAndGet()))
+      .option("path", s"$base/out")
+      .option("checkpointLocation", s"$base/ckpt")
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    s.read.schema(schema).parquet(s"$base/out")
+  }
+
+  /** A fresh [[appendSink]] base, unique per (process, dataset, run)
+    * like scratch(): a bare restarting counter would let two JVMs
+    * sharing a tmpdir rmTree each other's live checkpoint or output
+    * mid-run. Emptied first, so a bounded replay never resumes a
+    * previous run's checkpoint or re-reads its leftover output files.
+    * The `graft_stream_append_<pid>_` prefix is what the dead-pid
+    * reaper and [[clearStreamScratch]] match.
+    */
+  private def appendBase(d: String): String = {
+    val base = streamScratchRoot +
+      s"/graft_stream_append_${ProcessHandle.current().pid()}" +
+      s"_${graft.Fs.pathTag(d)}" +
+      s"_${streamSeq.incrementAndGet()}"
+    graft.Fs.rmTree(new java.io.File(base))
+    base
+  }
+
+  /** The events table replayed through a streaming file source with a
+    * watermark and 1-hour tumbling windows — `event_tumbling`'s own
+    * [[ScalarFns.tumbling]] over the stream, checked against the same
+    * batch oracle, in complete mode into a [[memorySink]].
+    */
+  private def streamTumbling(s: SparkSession, d: String): DataFrame =
+    // complete mode re-emits full state every data batch — nothing
+    // waits on the watermark, so the trailing batch is pure overhead
+    withStreamFanout(s, skipNoDataBatch = true) {
+      memorySink(s, "graft_stream_tumbling_", "complete")(
+        ScalarFns.tumbling(streamTable(s, d, "events")))
+        .orderBy("bucket", "event_type")
+    }
+
+  /** Sliding windows over the replayed stream (1 hour every 30 min) —
+    * each event lands in two overlapping window states.
+    */
+  private def streamSliding(s: SparkSession, d: String): DataFrame =
+    // complete mode: full state emits in the data batch (as tumbling)
+    withStreamFanout(s, skipNoDataBatch = true) {
+      memorySink(s, "graft_stream_sliding_", "complete")(
+        ScalarFns.sliding(streamTable(s, d, "events")))
+        .orderBy("bucket")
+    }
+
+  /** Streaming exact dedup ([[Streams.dedupStreamExact]]): first
+    * occurrence per (user_id, event_type) passes through, later ones are
+    * dropped against the state store. Emitting only the key columns
+    * makes the result the distinct key set — invariant to
+    * batch/partition arrival order, so the batch DISTINCT oracle matches
+    * exactly.
     *
     * State note: global first-occurrence semantics keeps one state entry
-    * per distinct key FOREVER by definition — the watermark below bounds
+    * per distinct key FOREVER by definition — the watermark bounds
     * lateness, but Spark only evicts dedup state when the event-time
     * column is part of the key set, which global distinct excludes. On
     * an unbounded key space (billions of users) that is O(keys) state by
@@ -559,15 +553,11 @@ object Sources extends QueryModule {
     // batch would only evict state the bounded replay discards anyway.
     // State is O(distinct keys) BY CONTRACT → RocksDB by policy
     withStreamFanout(s, skipNoDataBatch = true, unboundedState = true) {
-      val name = "graft_stream_dedup_" + streamSeq.incrementAndGet()
-      val q = streamEvents(s, d)
-        .withWatermark("ts", "2 hours")
-        .dropDuplicates(Seq("user_id", "event_type"))
-        .select(col("user_id"), col("event_type"))
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table(name).orderBy("user_id", "event_type")
+      memorySink(s, "graft_stream_dedup_", "append")(
+        Streams.dedupStreamExact(streamTable(s, d, "events"),
+          Seq("user_id", "event_type"))
+          .select(col("user_id"), col("event_type")))
+        .orderBy("user_id", "event_type")
     }
 
   private val streamDedupOracle =
@@ -576,16 +566,16 @@ object Sources extends QueryModule {
 
   /** Streaming session windows per user (30-minute gap) over the
     * replayed events, rolled up to a PER-USER session profile — the
-    * streaming form of `event_session`'s session detection, surfaced
-    * through the scale-safe shape at every step. Through round 12 this
-    * query ran the complete+memory harness (full session table
-    * re-emitted into a driver-side memory sink each batch); at sf10
-    * its wall was jstack-attributed to the single-threaded driver
-    * read-back of the 9.5M-row sink, not to anything the query
-    * computes (STREAM_STATE_sf10_r12.json) — a harness bottleneck
-    * wearing a contract query's name. Now the sessions are
-    * watermark-FINALIZED and appended to a parquet file sink (the
-    * production emission discipline, identical to the
+    * streaming form of `event_session`'s session detection (the same
+    * [[ScalarFns.sessions]]), surfaced through the scale-safe shape at
+    * every step. Through round 12 this query ran the complete+memory
+    * harness (full session table re-emitted into a driver-side memory
+    * sink each batch); at sf10 its wall was jstack-attributed to the
+    * single-threaded driver read-back of the 9.5M-row sink, not to
+    * anything the query computes (STREAM_STATE_sf10_r12.json) — a
+    * harness bottleneck wearing a contract query's name. Now the
+    * sessions are watermark-FINALIZED and appended to a parquet file
+    * sink (the production emission discipline, identical to the
     * `stream_session_append` twin), read back DISTRIBUTED, and rolled
     * up per user — so the result is O(users), every stage is
     * executor-side, and the oracle comparison still certifies the
@@ -597,47 +587,21 @@ object Sources extends QueryModule {
     * order-sensitive); the single cast to double happens after the
     * final sum, like every decimal contract query.
     */
-  private def streamSession(s: SparkSession, d: String): DataFrame = {
-    val base = streamScratchRoot +
-      s"/graft_stream_append_${ProcessHandle.current().pid()}" +
-      s"_${graft.Fs.pathTag(d)}" +
-      s"_${streamSeq.incrementAndGet()}"
-    graft.Fs.rmTree(new java.io.File(base))
+  private def streamSession(s: SparkSession, d: String): DataFrame =
     // session state grows with the user space -> RocksDB by policy;
     // the trailing no-data batch is REQUIRED (it advances the final
     // watermark so closed sessions flush to the sink)
     withStreamFanout(s, unboundedState = true) {
-      // queryName so StreamStateBenchSpec / StreamStateBench can
-      // attribute this query's state metrics by prefix (a file-sink
-      // stream is nameless by default)
-      val name = "graft_stream_session_" + streamSeq.incrementAndGet()
-      val q = streamEvents(s, d)
-        .withWatermark("ts", "2 hours")
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("value").cast("decimal(18,6)")).as("v_dec"))
-        .select(col("user_id"), col("w.start").cast("long").as("session_start"),
-          col("n_events"), col("v_dec").cast("decimal(28,6)").as("v_dec"))
-        .writeStream.outputMode("append").format("parquet")
-        .queryName(name)
-        .option("path", s"$base/out")
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    // explicit schema: a replay where no session closes before the
-    // final watermark commits zero files
-    s.read
-      .schema("user_id BIGINT, session_start BIGINT, n_events BIGINT, v_dec DECIMAL(28,6)")
-      .parquet(s"$base/out")
-      .groupBy("user_id")
+      appendSink(s, appendBase(d), Some("graft_stream_session_"),
+        "user_id BIGINT, session_start BIGINT, n_events BIGINT, v_dec DECIMAL(28,6)")(
+        ScalarFns.sessions(streamTable(s, d, "events")))
+    }.groupBy("user_id")
       .agg(count(lit(1)).as("n_sessions"),
         sum("n_events").as("n_events"),
         sum("v_dec").cast("double").as("value_sum"),
         min("session_start").as("first_session_start"),
         max("session_start").as("last_session_start"))
       .orderBy("user_id")
-  }
 
   /** The PRODUCTION session shape: watermark-FINALIZED session windows
     * appended to a parquet file sink — what `stream_session`'s
@@ -653,34 +617,15 @@ object Sources extends QueryModule {
     * closed sessions actually flush (the per-query skipNoDataBatch
     * opt-out would silently truncate the output).
     */
-  private def streamSessionAppend(s: SparkSession, d: String): DataFrame = {
-    val base = streamScratchRoot +
-      s"/graft_stream_append_${ProcessHandle.current().pid()}" +
-      s"_${graft.Fs.pathTag(d)}" +
-      s"_${streamSeq.incrementAndGet()}"
-    graft.Fs.rmTree(new java.io.File(base))
+  private def streamSessionAppend(s: SparkSession, d: String): DataFrame =
     // session state grows with the user space -> RocksDB by policy
     withStreamFanout(s, unboundedState = true) {
-      val q = streamEvents(s, d)
-        .withWatermark("ts", "2 hours")
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("value").cast("decimal(18,6)")).cast("double").as("value_sum"))
-        .select(col("user_id"), col("w.start").cast("long").as("session_start"),
-          col("n_events"), col("value_sum"))
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", s"$base/out")
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    // explicit schema like readTumblingAppend: a replay where no
-    // session closes before the final watermark commits zero files
-    s.read
-      .schema("user_id BIGINT, session_start BIGINT, n_events BIGINT, value_sum DOUBLE")
-      .parquet(s"$base/out")
-      .orderBy("user_id", "session_start")
-  }
+      appendSink(s, appendBase(d), None,
+        "user_id BIGINT, session_start BIGINT, n_events BIGINT, value_sum DOUBLE")(
+        ScalarFns.sessions(streamTable(s, d, "events"))
+          .select(col("user_id"), col("session_start"), col("n_events"),
+            col("v_dec").cast("double").as("value_sum")))
+    }.orderBy("user_id", "session_start")
 
   private val streamSessionAppendOracle =
     """WITH marked AS (
@@ -718,14 +663,13 @@ object Sources extends QueryModule {
     // join would need it to emit its null-padded rows on the watermark)
     // both sides buffer join state keyed by user -> RocksDB by policy
     withStreamFanout(s, skipNoDataBatch = true, unboundedState = true) {
-      val name = "graft_stream_join_" + streamSeq.incrementAndGet()
       // ONE source pass, watermarked once, branched per side — round 3
-      // built two independent streamEvents scans (the whole events file
+      // built two independent events-stream scans (the whole events file
       // read and filtered twice); the watermark metadata follows the
       // column through the per-side renames. Reduced fan-out matters
       // doubly here: the join instantiates a state store per side per
       // partition, and store setup dominates at fixture scale.
-      val ev = streamEvents(s, d)
+      val ev = streamTable(s, d, "events")
         .filter(col("event_type").isin("click", "purchase"))
         .select(col("user_id"), col("event_type"), col("ts"))
         .withWatermark("ts", "2 hours")
@@ -733,16 +677,14 @@ object Sources extends QueryModule {
         .select(col("user_id"), col("ts").as("click_ts"))
       val purchases = ev.filter(col("event_type") === "purchase")
         .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
-      val q = clicks.join(purchases,
-          col("user_id") === col("p_user") &&
-            col("p_ts") >= col("click_ts") &&
-            col("p_ts") <= col("click_ts") + expr("INTERVAL 30 MINUTES"))
-        .select(col("user_id"), col("click_ts").cast("long").as("click_s"),
-          col("p_ts").cast("long").as("purchase_s"))
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table(name).orderBy("user_id", "click_s", "purchase_s")
+      memorySink(s, "graft_stream_join_", "append")(
+        clicks.join(purchases,
+            col("user_id") === col("p_user") &&
+              col("p_ts") >= col("click_ts") &&
+              col("p_ts") <= col("click_ts") + expr("INTERVAL 30 MINUTES"))
+          .select(col("user_id"), col("click_ts").cast("long").as("click_s"),
+            col("p_ts").cast("long").as("purchase_s")))
+        .orderBy("user_id", "click_s", "purchase_s")
     }
 
   /** Stream-static enrichment: the event stream joined to the static
@@ -763,19 +705,15 @@ object Sources extends QueryModule {
     // trailing no-data batch would only evict window state the
     // bounded replay is about to discard
     withStreamFanout(s, skipNoDataBatch = true) {
-      val name = "graft_stream_enrich_" + streamSeq.incrementAndGet()
-      val dim = graft.Tables.customer(s, d)
-        .select(col("c_custkey"), col("c_mktsegment"))
-      val q = streamEvents(s, d)
-        .withWatermark("ts", "2 hours")
-        .join(broadcast(dim), col("user_id") === col("c_custkey"), "left")
-        .groupBy(col("c_mktsegment").as("segment"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(18,6)")).cast("double").as("value_sum"))
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table(name).orderBy("segment", "event_type")
+      val dim = customer(s, d).select(col("c_custkey"), col("c_mktsegment"))
+      memorySink(s, "graft_stream_enrich_", "complete")(
+        streamTable(s, d, "events")
+          .withWatermark("ts", "2 hours")
+          .join(broadcast(dim), col("user_id") === col("c_custkey"), "left")
+          .groupBy(col("c_mktsegment").as("segment"), col("event_type"))
+          .agg(count(lit(1)).as("n"),
+            sum(col("value").cast("decimal(18,6)")).cast("double").as("value_sum")))
+        .orderBy("segment", "event_type")
     }
 
   private val streamEnrichOracle =
@@ -798,28 +736,11 @@ object Sources extends QueryModule {
     */
   private def streamAnomaly(s: SparkSession, d: String): DataFrame =
     withStreamFanout(s, skipNoDataBatch = true) {
-      val name = "graft_stream_anomaly_" + streamSeq.incrementAndGet()
-      val q = ScalarFns.anomalyScore(streamEvents(s, d),
-          ScalarFns.anomalyStats(s, d))
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table(name).orderBy("event_id")
+      memorySink(s, "graft_stream_anomaly_", "append")(
+        ScalarFns.anomalyScore(streamTable(s, d, "events"),
+          ScalarFns.anomalyStats(s, d)))
+        .orderBy("event_id")
     }
-
-  /** The documents table as an unbounded source — flat-file and
-    * directory layouts, same scoping rules as [[streamEvents]].
-    */
-  private def streamDocuments(s: SparkSession, d: String): DataFrame = {
-    val schema = graft.Tables.schemaOf(s, s"$d/documents.parquet")
-    val tablePath = new org.apache.hadoop.fs.Path(s"$d/documents.parquet")
-    val fs = tablePath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val dirLayout =
-      fs.exists(tablePath) && fs.getFileStatus(tablePath).isDirectory
-    if (dirLayout) s.readStream.schema(schema).parquet(tablePath.toString)
-    else s.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(d)
-  }
 
   /** Word-count floor for the streaming ingest gate: fixture docs run
     * 10-100 words (p10 = 19), so 30 rejects a real fraction without
@@ -842,24 +763,21 @@ object Sources extends QueryModule {
     // complete-mode agg re-emits every group each data batch; no
     // watermark-finalized rows exist to wait for
     withStreamFanout(s, skipNoDataBatch = true) {
-      val name = "graft_stream_corpus_" + streamSeq.incrementAndGet()
       val srcnum = "CAST(substr(source, 4) AS BIGINT)"
-      val q = streamDocuments(s, d)
-        .withColumn("n_words",
-          expr("size(filter(split(text, '[^a-z]+'), x -> x <> ''))"))
-        .withColumn("n_tok",
-          expr("size(filter(split(text, '\\\\s+'), x -> x <> ''))")
-            .cast("long"))
-        .withColumn("h", expr(TrainingPipeline.hashExpr(TrainingPipeline.MIX_SALT)))
-        .withColumn("weight_ppm", expr(TrainingPipeline.mixTierSql(srcnum)))
-        .filter(col("n_words") >= CORPUS_GATE_MIN_WORDS &&
-          col("h") < col("weight_ppm"))
-        .groupBy("lang", "source")
-        .agg(count(lit(1)).as("n_kept"), sum("n_tok").as("n_tokens"))
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table(name).orderBy("lang", "source")
+      memorySink(s, "graft_stream_corpus_", "complete")(
+        streamTable(s, d, "documents")
+          .withColumn("n_words",
+            expr("size(filter(split(text, '[^a-z]+'), x -> x <> ''))"))
+          .withColumn("n_tok",
+            expr("size(filter(split(text, '\\\\s+'), x -> x <> ''))")
+              .cast("long"))
+          .withColumn("h", expr(TrainingPipeline.hashExpr(TrainingPipeline.MIX_SALT)))
+          .withColumn("weight_ppm", expr(TrainingPipeline.mixTierSql(srcnum)))
+          .filter(col("n_words") >= CORPUS_GATE_MIN_WORDS &&
+            col("h") < col("weight_ppm"))
+          .groupBy("lang", "source")
+          .agg(count(lit(1)).as("n_kept"), sum("n_tok").as("n_tokens")))
+        .orderBy("lang", "source")
     }
 
   private def streamCorpusGateOracle: String = {
@@ -894,12 +812,11 @@ object Sources extends QueryModule {
     * windows whose end the final watermark (max event time − 2 h)
     * passed are emitted; the oracle applies the same cutoff in exact
     * microsecond integers.
-    */
-  /** One bounded run of the tumbling-append pipeline against the
-    * `glob`-matched files under `d` right now, appending
-    * watermark-finalized windows to `base/out` with its checkpoint at
-    * `base/ckpt`. Factored out of [[streamTumblingAppend]] so
-    * StreamRecoverySpec can run THIS code twice over a growing input
+    *
+    * One bounded run against the `glob`-matched files under `d` right
+    * now, appending to `base/out` with its checkpoint at `base/ckpt`,
+    * returns the sink read back. Factored out of [[streamTumblingAppend]]
+    * so StreamRecoverySpec can run THIS code twice over a growing input
     * dir with the SAME checkpoint — a restart must pick up exactly
     * where the stopped run left off (no lost windows, no re-emitted
     * ones), which is the recovery property a production pipeline
@@ -908,47 +825,15 @@ object Sources extends QueryModule {
     * spec widens it so the input can GROW between runs.
     */
   private[graft] def runTumblingAppend(s: SparkSession, d: String,
-      base: String, glob: String = "events.parquet"): Unit =
+      base: String, glob: Option[String] = None): DataFrame =
     withStreamFanout(s) {
-      val q = streamEvents(s, d, glob)
-        .withWatermark("ts", "2 hours")
-        .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(18,6)")).cast("double").as("value_sum"))
-        .select(col("w.start").cast("long").as("bucket"), col("event_type"),
-          col("n"), col("value_sum"))
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", s"$base/out")
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      appendSink(s, base, None,
+        "bucket BIGINT, event_type STRING, n BIGINT, value_sum DOUBLE")(
+        ScalarFns.tumbling(streamTable(s, d, "events", glob)))
     }
 
-  /** Read back a [[runTumblingAppend]] sink. Explicit schema: a replay
-    * where no window end crosses the final watermark commits ZERO files
-    * (just _spark_metadata), and a schema-inferring read would throw
-    * instead of returning the empty frame the oracle computes for that
-    * input.
-    */
-  private[graft] def readTumblingAppend(s: SparkSession, base: String): DataFrame =
-    s.read
-      .schema("bucket BIGINT, event_type STRING, n BIGINT, value_sum DOUBLE")
-      .parquet(s"$base/out")
-
-  private def streamTumblingAppend(s: SparkSession, d: String): DataFrame = {
-    // unique per (process, dataset, run) like scratch(): a bare
-    // restarting counter would let two JVMs sharing a tmpdir rmTree
-    // each other's live checkpoint/output mid-run
-    val base = streamScratchRoot +
-      s"/graft_stream_append_${ProcessHandle.current().pid()}" +
-      s"_${graft.Fs.pathTag(d)}" +
-      s"_${streamSeq.incrementAndGet()}"
-    // fresh dirs per run — a bounded replay must not resume a previous
-    // run's checkpoint or re-read its leftover output files
-    graft.Fs.rmTree(new java.io.File(base))
-    runTumblingAppend(s, d, base)
-    readTumblingAppend(s, base).orderBy("bucket", "event_type")
-  }
+  private def streamTumblingAppend(s: SparkSession, d: String): DataFrame =
+    runTumblingAppend(s, d, appendBase(d)).orderBy("bucket", "event_type")
 
   /** Sliding windows (1 hour every 30 minutes) FINALIZED past the
     * watermark, appended to a parquet file sink and read back — the
@@ -965,36 +850,12 @@ object Sources extends QueryModule {
     * cutoff in exact integer microseconds over the same two-bucket
     * union as `stream_sliding`'s.
     */
-  private def streamSlidingAppend(s: SparkSession, d: String): DataFrame = {
-    val base = streamScratchRoot +
-      s"/graft_stream_append_${ProcessHandle.current().pid()}" +
-      s"_${graft.Fs.pathTag(d)}" +
-      s"_${streamSeq.incrementAndGet()}"
-    graft.Fs.rmTree(new java.io.File(base))
+  private def streamSlidingAppend(s: SparkSession, d: String): DataFrame =
     withStreamFanout(s) {
-      // queryName for state-metric attribution, as in streamSession
-      val name = "graft_stream_sliding_append_" + streamSeq.incrementAndGet()
-      val q = streamEvents(s, d)
-        .withWatermark("ts", "2 hours")
-        .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(18,6)")).cast("double").as("value_sum"))
-        .select(col("w.start").cast("long").as("bucket"), col("n"),
-          col("value_sum"))
-        .writeStream.outputMode("append").format("parquet")
-        .queryName(name)
-        .option("path", s"$base/out")
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    // explicit schema: a replay where no window end crosses the final
-    // watermark commits zero files
-    s.read
-      .schema("bucket BIGINT, n BIGINT, value_sum DOUBLE")
-      .parquet(s"$base/out")
-      .orderBy("bucket")
-  }
+      appendSink(s, appendBase(d), Some("graft_stream_sliding_append_"),
+        "bucket BIGINT, n BIGINT, value_sum DOUBLE")(
+        ScalarFns.sliding(streamTable(s, d, "events")))
+    }.orderBy("bucket")
 
   private val streamSlidingAppendOracle =
     """WITH agg AS (
@@ -1021,21 +882,6 @@ object Sources extends QueryModule {
       |WHERE bucket * 1000000 + 3600000000 <=
       |  (SELECT epoch_us(max(ts)) - 7200000000 FROM events)
       |ORDER BY bucket, event_type""".stripMargin
-
-  private val streamTumblingOracle =
-    """SELECT epoch(time_bucket(INTERVAL '1 hour', ts))::BIGINT AS bucket,
-      |  event_type, count(*) AS n, CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS value_sum
-      |FROM events GROUP BY 1, 2 ORDER BY bucket, event_type""".stripMargin
-
-  private val streamSlidingOracle =
-    """SELECT epoch(bucket)::BIGINT AS bucket, count(*) AS n,
-      |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS value_sum
-      |FROM (
-      |  SELECT time_bucket(INTERVAL '1 hour', ts) AS bucket, value FROM events
-      |  UNION ALL
-      |  SELECT time_bucket(INTERVAL '1 hour', ts, INTERVAL '30 minutes') AS bucket, value
-      |  FROM events)
-      |GROUP BY bucket ORDER BY bucket""".stripMargin
 
   // ---- registry -------------------------------------------------------
 
@@ -1066,9 +912,9 @@ object Sources extends QueryModule {
     "src_partitioned"    -> partitionedOracle,
     "src_orc_roundtrip"  -> orcOracle,
     "src_bad_records"    -> badRecordsOracle,
-    "stream_tumbling"    -> streamTumblingOracle,
+    "stream_tumbling"    -> ScalarFns.oracles("event_tumbling"),
     "stream_tumbling_append" -> streamTumblingAppendOracle,
-    "stream_sliding"     -> streamSlidingOracle,
+    "stream_sliding"     -> ScalarFns.oracles("event_sliding"),
     "stream_sliding_append" -> streamSlidingAppendOracle,
     "stream_dedup"       -> streamDedupOracle,
     "stream_join"        -> streamJoinOracle,

@@ -1,55 +1,32 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Structured Streaming forms of the engine's event operators.
+/** The streaming dedup disciplines and the custom-state session
+  * operator. The windowed event aggregations are not here: each is
+  * defined once, for batch and stream alike, beside the batch queries
+  * (`ScalarFns.tumbling`, `sliding`, `sessions`), and the `stream_*`
+  * contract queries in `Sources` run those definitions over a
+  * streaming source.
   *
   * The reference is strictly batch (hard map→reduce barrier,
   * `src/master.cc:160-168`); these are the streaming superset a
-  * Spark-native engine adds: the same windowed aggregations as
-  * `ScalarFns.event_*` expressed over an unbounded source with
-  * watermark-bounded state, plus an explicit `flatMapGroupsWithState`
-  * operator for custom session state.
+  * Spark-native engine adds: dedup in three state disciplines
+  * ([[dedupStream]], [[dedupStreamExact]] — which `stream_dedup` runs —
+  * and [[dedupStreamWithinWatermark]]), plus an explicit
+  * `flatMapGroupsWithState` operator for custom session state.
   *
-  * Scale notes: state is keyed by (window/user) and partitioned by the
-  * same hash shuffle as the batch aggregations; the watermark bounds
-  * state size — without it a 100 TB/day stream accumulates state without
-  * limit. Sinks use append mode so downstream consumers see only
-  * finalized windows.
+  * Scale notes: state is keyed by the dedup key or the user and
+  * partitioned by the same hash shuffle as the batch aggregations; the
+  * watermark bounds state size where the discipline lets it evict —
+  * without it a 100 TB/day stream accumulates state without limit.
   *
   * Input contract: a streaming DataFrame with the `events` schema
   * (ts: timestamp, user_id: long, event_type: string, value: double) —
-  * from `spark.readStream.parquet(dir)`, Kafka, or a MemoryStream (tests).
+  * from `Tables.streamTable`, Kafka, or a MemoryStream (tests).
   */
 object Streams {
-
-  /** Tumbling 1-hour counts per event type; 2-hour watermark for late data. */
-  def tumblingCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum("value").as("value_sum"))
-      .select(col("window.start").as("bucket"), col("event_type"),
-        col("n"), col("value_sum"))
-
-  /** Sliding windows (1 hour every 30 min). */
-  def slidingCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour", "30 minutes"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("bucket"), col("n"))
-
-  /** Built-in session windows per user (30-minute gap). */
-  def sessionCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"), col("session_window.start").as("session_start"),
-        col("n_events"))
 
   /** Per-(key, ts) dedup — the original `dedupStream` contract: two
     * events are duplicates only if key AND timestamp match (at-least-once
@@ -65,12 +42,13 @@ object Streams {
       .dropDuplicates(keyCols :+ "ts")
 
   /** Streaming EXACT dedup on a key — the streaming form of
-    * Dedup.exactKeep: every key's first occurrence passes, all later
-    * ones drop, regardless of how far apart they arrive. Exact dedup
-    * inherently keeps state proportional to the distinct-key count (the
-    * watermark cannot evict a key that must still suppress duplicates
-    * arbitrarily far in the future) — acceptable when keys are bounded
-    * (entities, content digests); otherwise use [[dedupStream]] or
+    * Dedup.exactKeep, and the operator `stream_dedup` runs: every key's
+    * first occurrence passes, all later ones drop, regardless of how
+    * far apart they arrive. Exact dedup inherently keeps state
+    * proportional to the distinct-key count (the watermark cannot evict
+    * a key that must still suppress duplicates arbitrarily far in the
+    * future) — acceptable when keys are bounded (entities, content
+    * digests); otherwise use [[dedupStream]] or
     * [[dedupStreamWithinWatermark]].
     */
   def dedupStreamExact(events: DataFrame, keyCols: Seq[String]): DataFrame =

@@ -70,14 +70,4 @@ class Round3Spec extends SparkSpec {
       .as[(String, Long, Double)].collect().toSet
     assert(typed == untyped)
   }
-
-  test("stream_dedup equals batch distinct") {
-    import spark.implicits._
-    val streamed = operators.Sources.queries("stream_dedup")(spark, sfDir)
-      .as[(Long, String)].collect().toSet
-    val batch = Tables.events(spark, sfDir)
-      .select("user_id", "event_type").distinct()
-      .as[(Long, String)].collect().toSet
-    assert(streamed == batch)
-  }
 }

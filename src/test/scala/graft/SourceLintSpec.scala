@@ -33,6 +33,46 @@ class SourceLintSpec extends AnyFunSuite {
         path
     }
 
+  /** (file name, enclosing def) of every occurrence of `needle` under
+    * `graft/`: the last `def` that opens before the occurrence.
+    */
+  private def sitesOf(needle: String): Set[(String, String)] = {
+    val defName = """\bdef\s+(\w+)""".r
+    sources("graft").flatMap { case (path, text) =>
+      Iterator.iterate(text.indexOf(needle))(i => text.indexOf(needle, i + 1))
+        .takeWhile(_ >= 0)
+        .map(i => Paths.get(path).getFileName.toString ->
+          defName.findAllMatchIn(text.substring(0, i)).toSeq.lastOption
+            .fold("")(_.group(1)))
+    }.toSet
+  }
+
+  test("stream sinks start only in the two sink runners") {
+    // Sources.memorySink and Sources.appendSink own the trigger, the
+    // query name, the checkpoint and the read-back; the copies they
+    // replaced had each repeated all four. Dedup's incremental stream
+    // is a caller-owned foreachBatch library entry, not a replay query.
+    val allowed = Set("Sources.scala" -> "memorySink",
+      "Sources.scala" -> "appendSink",
+      "Dedup.scala" -> "incrementalDedupStream")
+    val sites = sitesOf(".writeStream")
+    assert(sites.subsetOf(allowed),
+      s"writeStream outside the runners: ${sites -- allowed}")
+  }
+
+  test("event-time windows are defined only in the shared window operators") {
+    // ScalarFns.tumbling, sliding and sessions serve the batch event_*
+    // queries and their stream_* twins alike; four drifted copies of
+    // each shape (one with a double sum, one with a timestamp start)
+    // stood before
+    val allowed =
+      Set("tumbling", "sliding", "sessions").map("ScalarFns.scala" -> _)
+    val sites =
+      Seq("window(col(\"ts\")", "session_window(").flatMap(sitesOf).toSet
+    assert(sites.subsetOf(allowed),
+      s"event window outside the shared operators: ${sites -- allowed}")
+  }
+
   test("operator and streaming modules never collect() to the driver") {
     // TextAnalysis: the BPE trainer's per-round `limit(1).collect()` is
     // a 1-row argmax — the same iterative-loop driver touchpoint class

@@ -85,8 +85,12 @@ class StreamRecoverySpec extends SparkSpec {
     (bucket("2024-01-01 15:00:00"), "b", 1L, 8.0),
     (bucket("2024-01-01 16:00:00"), "a", 1L, 9.0))
 
-  private def sink(base: File): Seq[(Long, String, Long, Double)] =
-    operators.Sources.readTumblingAppend(spark, base.getPath)
+  /** One run of the production pipeline over `input` into the sink and
+    * checkpoint under `base`; returns the sink's rows, sorted.
+    */
+  private def run(input: File, base: File): Seq[(Long, String, Long, Double)] =
+    operators.Sources.runTumblingAppend(spark, input.getPath, base.getPath,
+        glob = Some("events*.parquet"))
       .as[(Long, String, Long, Double)].collect().toSeq.sorted
 
   /** The full stop/restart scenario against sink+checkpoint dirs under
@@ -101,21 +105,15 @@ class StreamRecoverySpec extends SparkSpec {
     val single = new File(baseRoot, "single")
     try {
       writeEventsFile(phase1, new File(input, "events.parquet"))
-      operators.Sources.runTumblingAppend(spark, input.getPath, twoPhase.getPath,
-        glob = "events*.parquet")
-      assert(sink(twoPhase) == expectedAfterStop.sorted,
+      assert(run(input, twoPhase) == expectedAfterStop.sorted,
         "stopped run emitted the wrong prefix — stop point is not where the timeline plants it")
 
       writeEventsFile(phase2, new File(input, "events2.parquet"))
       // SAME checkpoint dir — this is the restart
-      operators.Sources.runTumblingAppend(spark, input.getPath, twoPhase.getPath,
-        glob = "events*.parquet")
-      val recovered = sink(twoPhase)
+      val recovered = run(input, twoPhase)
 
       // single-run reference: fresh checkpoint over the final input
-      operators.Sources.runTumblingAppend(spark, input.getPath, single.getPath,
-        glob = "events*.parquet")
-      assert(recovered == sink(single),
+      assert(recovered == run(input, single),
         "restart from checkpoint diverged from the single-run result")
       assert(recovered == expectedFinal.sorted,
         "recovered result does not match the hand-computed windows")

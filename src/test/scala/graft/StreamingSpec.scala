@@ -7,30 +7,32 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** Structured Streaming driven synchronously via MemoryStream + memory
-  * sink (SURVEY §2.B streaming row).
+  * sink (SURVEY §2.B streaming row), through the same window and dedup
+  * operators the `stream_*` contract queries run, plus the
+  * cross-checks between those queries and their batch or append twins.
   */
 class StreamingSpec extends SparkSpec {
 
   private def ts(minute: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00")
 
-  /** Drive tumblingCounts over the canonical 3-event fixture and assert
-    * the EXACT emitted row sequence. Row-level on purpose: collapsing
-    * to a Map would silently absorb a duplicate window emission — the
-    * exactly-once failure mode a streaming test exists to catch. Shared
-    * by the heap-provider and RocksDB-provider tests so both providers
-    * are held to the identical fixture and assertion.
-    */
-  /** Returns the query's last progress JSON so callers can assert HOW
-    * the run executed (e.g. which state-store provider engaged), not
-    * just what it produced.
+  /** Drive the shared tumbling window (`ScalarFns.tumbling`, which
+    * `event_tumbling` and both `stream_tumbling` queries run) over the
+    * canonical 3-event fixture and assert the EXACT emitted row
+    * sequence. Row-level on purpose: collapsing to a Map would silently
+    * absorb a duplicate window emission — the exactly-once failure mode
+    * a streaming test exists to catch. Shared by the heap-provider and
+    * RocksDB-provider tests so both providers are held to the identical
+    * fixture and assertion. Returns the query's last progress JSON so
+    * callers can assert HOW the run executed (e.g. which state-store
+    * provider engaged), not just what it produced.
     */
   private def assertTumblingFixture(queryName: String): String = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Timestamp, Long, String, Double)]
     val events = input.toDF().toDF("ts", "user_id", "event_type", "value")
-    val q = Streams.tumblingCounts(events).writeStream
+    val q = operators.ScalarFns.tumbling(events).writeStream
       .outputMode("append").format("memory").queryName(queryName).start()
     try {
       input.addData(
@@ -218,7 +220,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Timestamp, Long, String, Double)]
     val events = input.toDF().toDF("ts", "user_id", "event_type", "value")
-    val q = Streams.sessionCounts(events).writeStream
+    val q = operators.ScalarFns.sessions(events).writeStream
       .outputMode("append").format("memory").queryName("swin_out").start()
     try {
       input.addData((ts(0), 1L, "a", 1.0), (ts(5), 1L, "a", 1.0),
@@ -262,14 +264,17 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Timestamp, Long, String, Double)]
     val events = input.toDF().toDF("ts", "user_id", "event_type", "value")
-    val q = Streams.sessionCounts(events).writeStream
+    val q = operators.ScalarFns.sessions(events).writeStream
       .outputMode("append").format("memory").queryName("sess_append_out")
       .start()
     try {
-      def emitted(): Seq[(Long, Timestamp, Long)] =
+      // session_start is the window start in epoch seconds, as the
+      // contract queries emit it
+      def sec(t: Timestamp): Long = t.getTime / 1000
+      def emitted(): Seq[(Long, Long, Long)] =
         spark.table("sess_append_out")
           .select("user_id", "session_start", "n_events")
-          .as[(Long, Timestamp, Long)].collect().sortBy(_._2.getTime).toSeq
+          .as[(Long, Long, Long)].collect().sortBy(_._2).toSeq
       // user 1: events at 10:00 and 10:10 merge into one session
       // (end 10:40); a third at 13:00 opens a second session. After
       // this batch the watermark is 13:00 − 2 h = 11:00: the trailing
@@ -279,7 +284,7 @@ class StreamingSpec extends SparkSpec {
         (ts(0), 1L, "click", 1.0), (ts(10), 1L, "click", 1.0),
         (Timestamp.valueOf("2024-01-01 13:00:00"), 1L, "click", 1.0))
       q.processAllAvailable()
-      assert(emitted() == Seq((1L, ts(0), 2L)),
+      assert(emitted() == Seq((1L, sec(ts(0)), 2L)),
         "only the session behind the watermark may flush")
       // advance the watermark to 14:00: session 2 (ends 13:30) closes
       // and emits; the advancing event's OWN session (ends 16:30) is
@@ -287,8 +292,8 @@ class StreamingSpec extends SparkSpec {
       input.addData((Timestamp.valueOf("2024-01-01 16:00:00"), 9L, "late", 0.0))
       q.processAllAvailable()
       assert(emitted() == Seq(
-        (1L, ts(0), 2L),
-        (1L, Timestamp.valueOf("2024-01-01 13:00:00"), 1L)),
+        (1L, sec(ts(0)), 2L),
+        (1L, sec(Timestamp.valueOf("2024-01-01 13:00:00")), 1L)),
         "the closed session emits exactly once; the open one is withheld")
     } finally q.stop()
   }
@@ -299,7 +304,7 @@ class StreamingSpec extends SparkSpec {
     // scale-up (state O(keys) vs heap O(GB)). Spark's RocksDB provider
     // spills state to local disk with the same exactly-once contract;
     // this proves the engine's stateful queries are provider-agnostic:
-    // the SAME tumblingCounts plan, only the session conf differs — at
+    // the SAME ScalarFns.tumbling plan, only the session conf differs — at
     // cluster scale the provider is a config flip, not a rewrite.
     val key = "spark.sql.streaming.stateStore.providerClass"
     val old = spark.conf.getOption(key)
@@ -317,6 +322,56 @@ class StreamingSpec extends SparkSpec {
     } finally old match {
       case Some(v) => spark.conf.set(key, v)
       case None    => spark.conf.unset(key)
+    }
+  }
+
+  test("stream_dedup equals batch distinct") {
+    import spark.implicits._
+    val streamed = operators.Sources.queries("stream_dedup")(spark, sfDir)
+      .as[(Long, String)].collect().toSet
+    val batch = Tables.events(spark, sfDir)
+      .select("user_id", "event_type").distinct()
+      .as[(Long, String)].collect().toSet
+    assert(streamed == batch)
+  }
+
+  /** `stream_session` (the append+rollup shape) and its per-session twin
+    * `stream_session_append` are views of the SAME finalized session set
+    * — the rollup's session counts, event counts, and value sums must
+    * reconcile row-for-row with the twin's per-session table. A drift
+    * here means the two builders' emission cutoffs diverged, which the
+    * independent DuckDB oracles would also catch but only as two
+    * unrelated hash failures; this test names the relationship.
+    */
+  test("stream_session is the per-user rollup of exactly the sessions " +
+      "its append twin emits") {
+    val rollup = SparkEntry.queries("stream_session")(spark, sfDir)
+      .collect().map(r => r.getLong(0) ->
+        (r.getLong(1), r.getLong(2), r.getDouble(3), r.getLong(4), r.getLong(5)))
+      .toMap
+    val sessions = SparkEntry.queries("stream_session_append")(spark, sfDir)
+      .collect()
+    assert(sessions.nonEmpty, "fixture must finalize at least one session")
+    val byUser = sessions.groupBy(_.getLong(0))
+    assert(rollup.keySet == byUser.keySet,
+      "rollup user set != twin's finalized-session user set")
+    byUser.foreach { case (user, rows) =>
+      val (nSessions, nEvents, valueSum, first, last) = rollup(user)
+      assert(nSessions == rows.length, s"user $user session count")
+      assert(nEvents == rows.map(_.getLong(2)).sum, s"user $user event count")
+      // the twin emits per-session value sums as double; the rollup
+      // re-aggregates in decimal. Exact 6-dp equality would assume every
+      // double is within 5e-7 of its decimal — false once sums exceed
+      // ~3e9 (double ulp > 1e-6) — so reconcile with a per-session ulp
+      // budget: each of the n sessions may contribute one rounding ulp.
+      val twinSum = rows.map(r => BigDecimal(r.getDouble(3))
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP)).sum
+      val ulpBudget = rows.map(r => BigDecimal(math.ulp(r.getDouble(3)))).sum +
+        BigDecimal("0.000001") * rows.length
+      assert((BigDecimal(valueSum) - twinSum).abs <= ulpBudget,
+        s"user $user value sum: $valueSum vs $twinSum (budget $ulpBudget)")
+      assert(first == rows.map(_.getLong(1)).min, s"user $user first start")
+      assert(last == rows.map(_.getLong(1)).max, s"user $user last start")
     }
   }
 }
