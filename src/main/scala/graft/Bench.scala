@@ -1,5 +1,10 @@
 package graft
+import java.util.concurrent.ConcurrentHashMap
+import scala.jdk.CollectionConverters._
+import org.apache.spark.graft.Listeners
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import operators.Sources
 object Bench {
   /** Best-effort detail-file write under `dir`; returns the JSON value
     * for the compact line's `detail` field — a quoted path on success,
@@ -27,33 +32,92 @@ object Bench {
     * whether /dev/shm was writable, the 1-minute load average at sweep
     * start/end (-1.0 where the JVM can't see one), the CPU-steal share
     * of the sweep window (see [[cpuJiffies]]; -1 off-Linux), the worker
-    * thread count vs the host's real CPU count, and the heap ceiling.
+    * thread count vs the host's real CPU count, the heap ceiling, and
+    * the forced state-store provider (null when none is forced).
     */
   private[graft] def envJson(cpus: String, loadStart: Double,
-      loadEnd: Double, steal: Double = -1.0): String = {
+      loadEnd: Double, steal: Double = -1.0,
+      provider: Option[String] = None): String = {
     def num(v: Double): String =
       if (v.isNaN || v < 0) "-1"
       else BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
-    // both interpolations guard the terminal-line contract: a
-    // non-numeric SPARK_GRAFT_CPUS degrades to -1 instead of splicing
-    // raw text into a JSON number slot, and a hostile tmpdir path
-    // (quote/backslash/control char) is escaped rather than allowed to
-    // void the whole artifact line
+    // a non-numeric SPARK_GRAFT_CPUS degrades to -1 instead of splicing
+    // raw text into a JSON number slot; strings go through the escaper
     val cpusJson = cpus.trim.toIntOption.getOrElse(-1)
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     val shm = new java.io.File("/dev/shm")
     val heapGb = Runtime.getRuntime.maxMemory / 1024.0 / 1024 / 1024
-    s"""{"ckpt_root":"${esc(operators.Sources.resolvedStreamScratchRoot)}"""" +
+    s"""{"ckpt_root":${Verify.jsonString(Sources.resolvedStreamScratchRoot)}""" +
       s""","shm_writable":${shm.isDirectory && shm.canWrite}""" +
       s""","load_start":${num(loadStart)},"load_end":${num(loadEnd)}""" +
       s""","steal_pct":${num(steal)}""" +
       s""","cpus":$cpusJson,"host_cpus":${Runtime.getRuntime.availableProcessors}""" +
-      s""","heap_gb":${num(heapGb)}}"""
+      s""","heap_gb":${num(heapGb)}""" +
+      s""","state_provider":${provider.fold("null")(Verify.jsonString)}}"""
+  }
+
+  /** One stream query's peak state over its progress events: total
+    * state rows, state bytes (heap: `memoryUsedBytes`; RocksDB, which
+    * keeps its state off the heap: SST file bytes and pinned-block
+    * memory, the custom metrics `rocksdbSstFileSize` and
+    * `rocksdbPinnedBlocksMemoryUsage`), the number of events, and the
+    * custom metric keys seen.
+    */
+  private[graft] final case class StatePeak(
+      rowsTotal: Long, memUsedBytes: Long, sstBytes: Long,
+      rocksMemBytes: Long, progressCount: Long,
+      metricKeys: Set[String] = Set.empty) {
+    def max(o: StatePeak): StatePeak = StatePeak(
+      rowsTotal.max(o.rowsTotal), memUsedBytes.max(o.memUsedBytes),
+      sstBytes.max(o.sstBytes), rocksMemBytes.max(o.rocksMemBytes),
+      progressCount + o.progressCount, metricKeys ++ o.metricKeys)
+  }
+
+  /** The `state_rows` JSON value: null when the operators' custom
+    * metrics show RocksDB, whose [[Tuning.RocksDbConfs]] set
+    * `trackTotalNumberOfRows=false` — that drops `numRowsTotal`, which
+    * then reads 0 rather than a count.
+    */
+  private[graft] def stateRowsJson(metricKeys: Set[String],
+      rowsTotal: Long): String =
+    if (metricKeys.exists(_.startsWith("rocksdb"))) "null"
+    else rowsTotal.toString
+
+  /** Keeps each contract stream query's [[StatePeak]], attributed by the
+    * stream's name alone ([[Sources.streamQueryOf]]); progress without a
+    * state operator is skipped.
+    */
+  private[graft] final class StatePeaks extends StreamingQueryListener {
+    val peaks = new ConcurrentHashMap[String, StatePeak]
+    override def onQueryStarted(
+        e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+    override def onQueryTerminated(
+        e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    override def onQueryProgress(
+        e: StreamingQueryListener.QueryProgressEvent): Unit = {
+      val ops = e.progress.stateOperators
+      if (ops.nonEmpty) Sources.streamQueryOf(e.progress.name).foreach { q =>
+        def custom(key: String): Long =
+          ops.map(o => Option(o.customMetrics.get(key))
+            .map(_.longValue).getOrElse(0L)).sum
+        peaks.merge(q, StatePeak(
+          rowsTotal = ops.map(_.numRowsTotal).sum,
+          memUsedBytes = ops.map(_.memoryUsedBytes).sum,
+          sstBytes = custom("rocksdbSstFileSize"),
+          rocksMemBytes = custom("rocksdbPinnedBlocksMemoryUsage"),
+          progressCount = 1,
+          metricKeys = ops.flatMap(_.customMetrics.keySet.asScala).toSet),
+          (a, b) => a.max(b))
+      }
+    }
+
+    /** The detail file's `state` object: one entry per query, by name. */
+    def json: String = peaks.asScala.toSeq.sortBy(_._1).map { case (q, p) =>
+      s""""$q":{"state_rows":${stateRowsJson(p.metricKeys, p.rowsTotal)}""" +
+        s""","state_mem_bytes":${p.memUsedBytes}""" +
+        s""","rocksdb_sst_bytes":${p.sstBytes}""" +
+        s""","rocksdb_mem_bytes":${p.rocksMemBytes}""" +
+        s""","progress_events":${p.progressCount}}"""
+    }.mkString("{", ",", "}")
   }
 
   private def loadAvg: Double =
@@ -101,71 +165,31 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Session.cpus
-    // Measurement knob for the rehearsal-scale stream sweeps: force the
-    // stateful-stream state store (heap is the Spark default) so
-    // heap-vs-RocksDB wall time can be compared at sf10 with everything
-    // else identical. Contract runs never set it; StreamingSpec proves
-    // both providers produce identical results.
-    Tuning.withForcedStateStore(
-        sys.env.get("SPARK_GRAFT_STATE_PROVIDER").filter(_.nonEmpty)) {
-      confs => Session.run(cpus, confs: _*)(sweep(_, sfDir, cpus))
+    // Measurement knob for the stream sweeps: force the stateful-stream
+    // state store (heap is the Spark default) so heap-vs-RocksDB wall
+    // time and state weight can be compared with everything else
+    // identical. Forcing also suppresses the per-query RocksDB policy
+    // (Tuning.withRocksDbStateStore): a heap arm records what the policy
+    // queries WOULD cost on the heap. Contract runs never set it;
+    // StreamingSpec proves both providers produce identical results.
+    val provider = sys.env.get("SPARK_GRAFT_STATE_PROVIDER").filter(_.nonEmpty)
+    // The forced arm also lifts the 1 GiB driver result cap: at sf100
+    // the complete-mode memory sinks ship tens of millions of rows to
+    // the driver before the state store is even stressed. The sink cost
+    // is the same under both providers, so the provider delta is
+    // unaffected; contract runs keep Spark's default.
+    val uncapped = provider.map(_ => "spark.driver.maxResultSize" -> "0")
+    Tuning.withForcedStateStore(provider) { confs =>
+      Session.run(cpus, confs ++ uncapped: _*)(sweep(_, sfDir, cpus, provider))
     }
   }
 
-  /** Warm up, time every query, write the detail file; returns the
-    * terminal JSON line.
+  /** Warm up, time every query while recording each stream query's peak
+    * state, write the detail file; returns the terminal JSON line.
     */
-  private def sweep(spark: SparkSession, sfDir: String, cpus: String): String = {
+  private def sweep(spark: SparkSession, sfDir: String, cpus: String,
+      provider: Option[String]): String = {
     import org.apache.spark.sql.functions._
-    // JIT/codegen warmup: touch the vectorized parquet reader, hash
-    // aggregation, window exec, regex/md5 and higher-order-function
-    // codepaths once so the first timed query doesn't pay compiler
-    // warmup (round 1's first queries showed 3-5s of it).
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet").limit(2000)
-    docs.select(md5(col("text")).as("h"),
-        expr("size(filter(split(text, '[^a-z]+'), x -> x <> ''))").as("n"))
-      .groupBy("h").agg(sum("n")).count()
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet").limit(50000)
-    li.groupBy("l_returnflag").agg(sum("l_quantity"), countDistinct("l_partkey")).count()
-    li.withColumn("rn", row_number().over(
-      org.apache.spark.sql.expressions.Window
-        .partitionBy("l_returnflag").orderBy("l_orderkey"))).count()
-    // One-time session layout cost, NOT query cost: the bucketed tables
-    // rel_bucketed_join reads are written once per (session, sfDir) —
-    // paying it here keeps the timed body a pure shuffle-free join, the
-    // thing the query actually demonstrates.
-    graft.operators.RelationalExt.ensureBucketedTables(spark, sfDir)
-    // Timed runs: materialize through the noop sink — count() would let
-    // Catalyst prune sorts and unreferenced columns, under-measuring.
-    // A crashed query must NOT enter the JSON as its (tiny) elapsed time
-    // of the crash — that made failures look like speedups. NaN marks it;
-    // the final line carries a failed count.
-    def once(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val w = try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-        Double.NaN
-      }
-      // release the stream fixtures' memory-sink rows OUTSIDE the timed
-      // window AND outside the timed try: retained sinks (one temp view
-      // per stream query per sweep) pin their results driver-side and
-      // GC-tax every later sample — StreamStateBench measured 3-20x
-      // inflation at sf10 from exactly this accumulation. Own guard so
-      // a cleanup failure can never discard an already-measured sample.
-      if (name.startsWith("stream_")) try {
-        spark.catalog.listTables().collect()
-          .map(_.name).filter(_.startsWith("graft_stream_"))
-          .foreach(spark.catalog.dropTempView)
-        spark.streams.resetTerminated()
-      } catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] $name sink release failed (ignored): ${e.getMessage}")
-      }
-      w
-    }
     // Shared-host CPU steal produces 10-40x outliers on single shots AND
     // sustained multi-second steal windows (round 10's total read 84.1s
     // vs round 9's 66.8s purely from steal — and a single-shot harness
@@ -183,7 +207,8 @@ object Bench {
       .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(3)
     // Optional comma-separated filter for LOCAL timing-pinning runs
     // (re-measuring one suspect query minutes after a full sweep, per
-    // the round-4 discipline). The driver never sets it → full run.
+    // the round-4 discipline) and for the stream state-store runs. The
+    // driver never sets it → full run.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // a typo'd name would otherwise yield an EMPTY run that still prints
@@ -196,12 +221,57 @@ object Bench {
     }
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    // a filtered run warms its own queries once, untimed: the synthetic
-    // jobs above leave the JIT cold on them, and a query re-measured
-    // alone otherwise read falling samples sweep after sweep, well above
-    // its in-sweep value. A full run's earlier queries warm its later
-    // ones, so the contract run stays as it is.
-    if (only.nonEmpty) names.foreach { case (name, fn) => once(name, fn) }
+    // JIT/codegen warmup: touch the vectorized parquet reader, hash
+    // aggregation, window exec, regex/md5 and higher-order-function
+    // codepaths once so the first timed query doesn't pay compiler
+    // warmup (round 1's first queries showed 3-5s of it).
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet").limit(2000)
+    docs.select(md5(col("text")).as("h"),
+        expr("size(filter(split(text, '[^a-z]+'), x -> x <> ''))").as("n"))
+      .groupBy("h").agg(sum("n")).count()
+    val li = spark.read.parquet(s"$sfDir/lineitem.parquet").limit(50000)
+    li.groupBy("l_returnflag").agg(sum("l_quantity"), countDistinct("l_partkey")).count()
+    li.withColumn("rn", row_number().over(
+      org.apache.spark.sql.expressions.Window
+        .partitionBy("l_returnflag").orderBy("l_orderkey"))).count()
+    // Timed runs: materialize through the noop sink — count() would let
+    // Catalyst prune sorts and unreferenced columns, under-measuring.
+    // A crashed query must NOT enter the JSON as its (tiny) elapsed time
+    // of the crash — that made failures look like speedups. NaN marks it;
+    // the final line carries a failed count.
+    def once(name: String,
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+      val t0 = System.nanoTime()
+      val w = try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+        Double.NaN
+      }
+      // release the stream sinks OUTSIDE the timed window AND outside
+      // the timed try (Sources.releaseStreams has why). Own guard so a
+      // cleanup failure can never discard an already-measured sample.
+      if (name.startsWith("stream_")) try Sources.releaseStreams(spark)
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] $name sink release failed (ignored): ${e.getMessage}")
+      }
+      w
+    }
+    // One-time session layout cost, NOT query cost: the bucketed tables
+    // rel_bucketed_join reads are written once per (session, sfDir) —
+    // paying it here keeps the timed body a pure shuffle-free join, the
+    // thing the query actually demonstrates. A filtered run instead
+    // warms its own queries once, untimed (which writes those tables
+    // when rel_bucketed_join is among them): the synthetic jobs above
+    // leave the JIT cold on them, and a query re-measured alone
+    // otherwise read falling samples sweep after sweep, well above its
+    // in-sweep value. A full run's earlier queries warm its later ones.
+    if (only.isEmpty)
+      graft.operators.RelationalExt.ensureBucketedTables(spark, sfDir)
+    else names.foreach { case (name, fn) => once(name, fn) }
+    val state = new StatePeaks
+    spark.streams.addListener(state)
     val loadStart = loadAvg
     val jiffies0 = cpuJiffies
     System.err.println(f"[bench] load_start $loadStart%.2f sweeps $SWEEPS")
@@ -215,10 +285,13 @@ object Bench {
         System.err.println(f"[bench] sweep$sweep $name $v%.2fs")
       }
     }
+    // progress events reach the listener asynchronously, on the bus
+    Listeners.drain(spark.sparkContext)
+    spark.streams.removeListener(state)
     def r3(v: Double): String = BigDecimal(v)
       .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     val env = envJson(cpus, loadStart, loadAvg,
-      stealPct(jiffies0, cpuJiffies))
+      stealPct(jiffies0, cpuJiffies), provider)
     // p50 over the query's non-failed samples: middle of the sorted odd
     // run, mean of the two middles when even. A query is FAILED only if
     // every sweep failed; partial failures median over the survivors.
@@ -252,13 +325,14 @@ object Bench {
         .mkString("[", ",", "]") }
       .mkString("{", ",", "}")
     val failedJson = failedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val sf = Verify.jsonString(sfDir)
     val detail =
-      s"""{"metric":"total","value":${r3(total)},"stat":"p50_of_$SWEEPS","min_total":${r3(minTotal)},"unit":"sec","n_queries":${med.size},"failed":${failedNames.size},"failed_names":$failedJson,"queries":$qs,"queries_min":$qmin,"samples":$raw,"env":$env,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"stat":"p50_of_$SWEEPS","min_total":${r3(minTotal)},"unit":"sec","n_queries":${med.size},"failed":${failedNames.size},"failed_names":$failedJson,"queries":$qs,"queries_min":$qmin,"samples":$raw,"state":${state.json},"env":$env,"sf":$sf}"""
     val detailRef = writeDetailRef(new java.io.File("target"), detail)
     val slowest = ok.toSeq.sortBy(-_._2).take(5)
       .map { case (k, v) => "\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
     // ONE compact line, well under the driver's output-tail window.
-    s"""{"metric":"total","value":${r3(total)},"stat":"p50_of_$SWEEPS","min_total":${r3(minTotal)},"unit":"sec","n_queries":${med.size},"failed":${failedNames.size},"slowest":$slowest,"env":$env,"detail":$detailRef,"sf":"$sfDir"}"""
+    s"""{"metric":"total","value":${r3(total)},"stat":"p50_of_$SWEEPS","min_total":${r3(minTotal)},"unit":"sec","n_queries":${med.size},"failed":${failedNames.size},"slowest":$slowest,"env":$env,"detail":$detailRef,"sf":$sf}"""
   }
 }

@@ -83,13 +83,14 @@ object Tuning {
 
   /** Measurement escape hatch: when set (system property), the policy
     * wrapper becomes a no-op and the session-level provider governs.
-    * Exists ONLY for the measurement mains (`StreamStateBench`, `Bench`
-    * under `SPARK_GRAFT_STATE_PROVIDER`), which price heap-vs-RocksDB on
-    * the SAME contract queries — without the hatch a heap arm would
-    * silently measure RocksDB for exactly the unbounded-state queries
-    * whose heap cost it exists to record. Never set in production;
-    * StreamStateBenchSpec asserts the policy engages when the property
-    * is absent. Set only through [[withForcedStateStore]].
+    * Exists ONLY for `Bench` under `SPARK_GRAFT_STATE_PROVIDER` (e.g.
+    * `SPARK_GRAFT_STATE_PROVIDER=rocksdb SPARK_GRAFT_ONLY=stream_session,…
+    * SPARK_GRAFT_SWEEPS=3 sbt "runMain graft.Bench"`), which prices
+    * heap-vs-RocksDB on the SAME contract queries — without the hatch a
+    * heap arm would silently measure RocksDB for exactly the
+    * unbounded-state queries whose heap cost it exists to record. Never
+    * set in production; StreamingSpec asserts the policy engages when
+    * the property is absent. Set only through [[withForcedStateStore]].
     */
   val STATE_STORE_FORCED_PROP = "graft.stateStore.forced"
 

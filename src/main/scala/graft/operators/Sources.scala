@@ -451,39 +451,67 @@ object Sources extends QueryModule {
       }
     }
 
+  /** The name every replay of contract query `query` runs under:
+    * `graft_<query>_<seq>`, the sequence number per JVM. A memory sink
+    * registers its result as a temp view of that name.
+    */
+  private def streamName(query: String): String =
+    s"graft_${query}_${streamSeq.incrementAndGet()}"
+
+  /** The inverse of [[streamName]]: the longest contract stream query
+    * whose `graft_<query>_` prefix opens `name`, so
+    * `graft_stream_tumbling_append_7` is `stream_tumbling_append`, not
+    * `stream_tumbling`. None for a null or foreign name.
+    */
+  def streamQueryOf(name: String): Option[String] =
+    Option(name).flatMap(n => queries.keys
+      .filter(q => q.startsWith("stream_") && n.startsWith(s"graft_${q}_"))
+      .maxByOption(_.length))
+
+  /** Drop the memory-sink views the replays left in `s` and forget its
+    * terminated streams. A retained sink pins its whole result
+    * driver-side (9.5M rows for the sf10 session query), so a harness
+    * that runs stream queries back to back measures every later query
+    * under the heap of the earlier ones' sinks unless it releases them
+    * in between: adding `stream_anomaly`, which sorts first, once
+    * inflated every later stream wall 3-20x at sf10.
+    */
+  def releaseStreams(s: SparkSession): Unit = {
+    s.sqlContext.tableNames().filter(streamQueryOf(_).nonEmpty)
+      .foreach(s.catalog.dropTempView)
+    s.streams.resetTerminated()
+  }
+
   /** Memory-sink runner: `df` replayed once (Trigger.AvailableNow) into
     * an in-memory sink in output `mode`, awaited, and returned as the
-    * sink's table. The sink is named `prefix` plus a per-JVM sequence
-    * number: StreamStateBench attributes a query's state metrics by that
-    * prefix, and Bench and StreamStateBench drop the `graft_stream_*`
-    * views between queries. Complete+memory is the test harness shape:
-    * results must fit the driver (true for every caller's fixture,
-    * O(groups) or O(kept rows)); a production sink is the parquet
-    * [[appendSink]] or Kafka in append mode past the watermark.
+    * sink's table, named by [[streamName]] after `query`.
+    * Complete+memory is the test harness shape: results must fit the
+    * driver (true for every caller's fixture, O(groups) or O(kept
+    * rows)); a production sink is the parquet [[appendSink]] or Kafka in
+    * append mode past the watermark.
     */
-  private def memorySink(s: SparkSession, prefix: String, mode: String)(
+  private def memorySink(s: SparkSession, query: String, mode: String)(
       df: DataFrame): DataFrame = {
-    val name = prefix + streamSeq.incrementAndGet()
+    val name = streamName(query)
     df.writeStream.outputMode(mode).format("memory").queryName(name)
       .trigger(Trigger.AvailableNow()).start().awaitTermination()
     s.table(name)
   }
 
-  /** Parquet append runner: `df` replayed once into a parquet FILE sink
-    * at `base/out`, checkpoint at `base/ckpt`, and read back with the
+  /** Parquet append runner: `df` replayed once, as a stream named by
+    * [[streamName]] after `query`, into a parquet FILE sink at
+    * `base/out`, checkpoint at `base/ckpt`, and read back with the
     * explicit `schema`. Explicit because a replay where nothing crosses
     * the final watermark commits ZERO files (just _spark_metadata), and
     * a schema-inferring read would throw instead of returning the empty
-    * frame the oracle computes for that input. `prefix` names the query
-    * for StreamStateBench's attribution; without one the stream is
-    * nameless. Only watermark-finalized rows reach an append sink, so
-    * its callers keep the trailing no-data micro-batch (the default of
-    * [[withStreamFanout]]).
+    * frame the oracle computes for that input. Only watermark-finalized
+    * rows reach an append sink, so its callers keep the trailing no-data
+    * micro-batch (the default of [[withStreamFanout]]).
     */
-  private def appendSink(s: SparkSession, base: String, prefix: Option[String],
+  private def appendSink(s: SparkSession, base: String, query: String,
       schema: String)(df: DataFrame): DataFrame = {
-    val w = df.writeStream.outputMode("append").format("parquet")
-    prefix.fold(w)(p => w.queryName(p + streamSeq.incrementAndGet()))
+    df.writeStream.outputMode("append").format("parquet")
+      .queryName(streamName(query))
       .option("path", s"$base/out")
       .option("checkpointLocation", s"$base/ckpt")
       .trigger(Trigger.AvailableNow()).start().awaitTermination()
@@ -516,7 +544,7 @@ object Sources extends QueryModule {
     // complete mode re-emits full state every data batch — nothing
     // waits on the watermark, so the trailing batch is pure overhead
     withStreamFanout(s, skipNoDataBatch = true) {
-      memorySink(s, "graft_stream_tumbling_", "complete")(
+      memorySink(s, "stream_tumbling", "complete")(
         ScalarFns.tumbling(streamTable(s, d, "events")))
         .orderBy("bucket", "event_type")
     }
@@ -527,7 +555,7 @@ object Sources extends QueryModule {
   private def streamSliding(s: SparkSession, d: String): DataFrame =
     // complete mode: full state emits in the data batch (as tumbling)
     withStreamFanout(s, skipNoDataBatch = true) {
-      memorySink(s, "graft_stream_sliding_", "complete")(
+      memorySink(s, "stream_sliding", "complete")(
         ScalarFns.sliding(streamTable(s, d, "events")))
         .orderBy("bucket")
     }
@@ -553,7 +581,7 @@ object Sources extends QueryModule {
     // batch would only evict state the bounded replay discards anyway.
     // State is O(distinct keys) BY CONTRACT → RocksDB by policy
     withStreamFanout(s, skipNoDataBatch = true, unboundedState = true) {
-      memorySink(s, "graft_stream_dedup_", "append")(
+      memorySink(s, "stream_dedup", "append")(
         Streams.dedupStreamExact(streamTable(s, d, "events"),
           Seq("user_id", "event_type"))
           .select(col("user_id"), col("event_type")))
@@ -592,7 +620,7 @@ object Sources extends QueryModule {
     // the trailing no-data batch is REQUIRED (it advances the final
     // watermark so closed sessions flush to the sink)
     withStreamFanout(s, unboundedState = true) {
-      appendSink(s, appendBase(d), Some("graft_stream_session_"),
+      appendSink(s, appendBase(d), "stream_session",
         "user_id BIGINT, session_start BIGINT, n_events BIGINT, v_dec DECIMAL(28,6)")(
         ScalarFns.sessions(streamTable(s, d, "events")))
     }.groupBy("user_id")
@@ -620,7 +648,7 @@ object Sources extends QueryModule {
   private def streamSessionAppend(s: SparkSession, d: String): DataFrame =
     // session state grows with the user space -> RocksDB by policy
     withStreamFanout(s, unboundedState = true) {
-      appendSink(s, appendBase(d), None,
+      appendSink(s, appendBase(d), "stream_session_append",
         "user_id BIGINT, session_start BIGINT, n_events BIGINT, value_sum DOUBLE")(
         ScalarFns.sessions(streamTable(s, d, "events"))
           .select(col("user_id"), col("session_start"), col("n_events"),
@@ -677,7 +705,7 @@ object Sources extends QueryModule {
         .select(col("user_id"), col("ts").as("click_ts"))
       val purchases = ev.filter(col("event_type") === "purchase")
         .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
-      memorySink(s, "graft_stream_join_", "append")(
+      memorySink(s, "stream_join", "append")(
         clicks.join(purchases,
             col("user_id") === col("p_user") &&
               col("p_ts") >= col("click_ts") &&
@@ -706,7 +734,7 @@ object Sources extends QueryModule {
     // bounded replay is about to discard
     withStreamFanout(s, skipNoDataBatch = true) {
       val dim = customer(s, d).select(col("c_custkey"), col("c_mktsegment"))
-      memorySink(s, "graft_stream_enrich_", "complete")(
+      memorySink(s, "stream_enrich", "complete")(
         streamTable(s, d, "events")
           .withWatermark("ts", "2 hours")
           .join(broadcast(dim), col("user_id") === col("c_custkey"), "left")
@@ -736,7 +764,7 @@ object Sources extends QueryModule {
     */
   private def streamAnomaly(s: SparkSession, d: String): DataFrame =
     withStreamFanout(s, skipNoDataBatch = true) {
-      memorySink(s, "graft_stream_anomaly_", "append")(
+      memorySink(s, "stream_anomaly", "append")(
         ScalarFns.anomalyScore(streamTable(s, d, "events"),
           ScalarFns.anomalyStats(s, d)))
         .orderBy("event_id")
@@ -764,7 +792,7 @@ object Sources extends QueryModule {
     // watermark-finalized rows exist to wait for
     withStreamFanout(s, skipNoDataBatch = true) {
       val srcnum = "CAST(substr(source, 4) AS BIGINT)"
-      memorySink(s, "graft_stream_corpus_", "complete")(
+      memorySink(s, "stream_corpus_gate", "complete")(
         streamTable(s, d, "documents")
           .withColumn("n_words",
             expr("size(filter(split(text, '[^a-z]+'), x -> x <> ''))"))
@@ -827,7 +855,7 @@ object Sources extends QueryModule {
   private[graft] def runTumblingAppend(s: SparkSession, d: String,
       base: String, glob: Option[String] = None): DataFrame =
     withStreamFanout(s) {
-      appendSink(s, base, None,
+      appendSink(s, base, "stream_tumbling_append",
         "bucket BIGINT, event_type STRING, n BIGINT, value_sum DOUBLE")(
         ScalarFns.tumbling(streamTable(s, d, "events", glob)))
     }
@@ -852,7 +880,7 @@ object Sources extends QueryModule {
     */
   private def streamSlidingAppend(s: SparkSession, d: String): DataFrame =
     withStreamFanout(s) {
-      appendSink(s, appendBase(d), Some("graft_stream_sliding_append_"),
+      appendSink(s, appendBase(d), "stream_sliding_append",
         "bucket BIGINT, n BIGINT, value_sum DOUBLE")(
         ScalarFns.sliding(streamTable(s, d, "events")))
     }.orderBy("bucket")

@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.CancellationException
 import java.util.concurrent.atomic.AtomicBoolean
 
-import org.apache.spark.graft.Jobs
+import org.apache.spark.graft.{Jobs, Listeners}
 
 /** The pagerank, connected-components and BPE merge loops hold their
   * inputs and live rounds as persisted or localCheckpoint blocks that
@@ -28,7 +28,7 @@ class PagerankReleaseSpec extends SparkSpec {
     val sc = spark.sparkContext
     val cut = new AtomicBoolean
     Materialize.onStep = () => {
-      Jobs.drain(sc)
+      Listeners.drain(sc)
       if (cut.get) throw new CancellationException(s"$q cut from job $cancelFrom")
     }
     try {

@@ -1,8 +1,7 @@
 package graft
 
 /** Round-6 consolidation invariants: the ConnectedComponents reliable-
-  * checkpoint hook, the Bench detail-pointer failure path, and the
-  * bench environment telemetry block.
+  * checkpoint hook.
   */
 class Round6Spec extends SparkSpec {
   import spark.implicits._
@@ -80,65 +79,6 @@ class Round6Spec extends SparkSpec {
       assert(rddDirs(dir) > 0,
         s"no rdd-N checkpoint dirs under $dir — reliable mode did not engage")
     } finally Fs.rmTree(dir)
-  }
-
-  test("bench detail pointer: quoted path on success, null on an " +
-      "unwritable dir — compact line parses either way") {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper
-    val payload = """{"metric":"total","value":1.0}"""
-    // success: ref is a quoted path whose file holds the payload
-    val okDir = java.nio.file.Files
-      .createTempDirectory("graft_detail_ok_").toFile
-    try {
-      val ref = Bench.writeDetailRef(okDir, payload)
-      assert(ref.startsWith("\"") && ref.endsWith("\""))
-      val path = ref.substring(1, ref.length - 1)
-      assert(java.nio.file.Files.readString(
-        java.nio.file.Paths.get(path)) == payload)
-      assert(!om.readTree(s"""{"detail":$ref}""").get("detail").isNull)
-    } finally Fs.rmTree(okDir)
-    // failure: a regular FILE as the target dir — mkdirs fails quietly,
-    // the write throws IOException, the ref degrades to literal null
-    // and the composed line still parses (the round-5 guard this pins)
-    val asFile = java.nio.file.Files
-      .createTempFile("graft_detail_block_", "").toFile
-    try {
-      val ref = Bench.writeDetailRef(asFile, payload)
-      assert(ref == "null")
-      assert(om.readTree(s"""{"detail":$ref}""").get("detail").isNull)
-    } finally Fs.rmTree(asFile)
-  }
-
-  test("bench env telemetry block is well-formed JSON with the resolved " +
-      "checkpoint root") {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper
-    val node = om.readTree(Bench.envJson("32", 1.234, Double.NaN))
-    assert(node.get("ckpt_root").asText.nonEmpty)
-    assert(node.get("shm_writable").isBoolean)
-    assert(node.get("load_start").asDouble == 1.23)
-    // unavailable load must degrade to the -1 sentinel, not NaN (NaN is
-    // not valid JSON and would void the whole terminal line)
-    assert(node.get("load_end").asInt == -1)
-    assert(node.get("cpus").asInt == 32)
-    assert(node.get("host_cpus").asInt > 0)
-    assert(node.get("heap_gb").asDouble > 0)
-    // contract guards: a non-numeric cpu count and a hostile scratch
-    // path must degrade inside the JSON, never void the terminal line
-    val bad = om.readTree(Bench.envJson("not-a-number", -1.0, 0.5))
-    assert(bad.get("cpus").asInt == -1)
-    assert(bad.get("load_start").asInt == -1)
-    // steal defaults to the -1 sentinel; a measured interval reports %
-    assert(bad.get("steal_pct").asInt == -1)
-    val withSteal = om.readTree(Bench.envJson("4", 0.1, 0.1, 12.345))
-    assert(withSteal.get("steal_pct").asDouble == 12.35)
-  }
-
-  test("steal computation: interval share from jiffies snapshots, -1 " +
-      "sentinel on missing or non-advancing counters") {
-    assert(Bench.stealPct(Some((1000L, 10L)), Some((2000L, 110L))) == 10.0)
-    assert(Bench.stealPct(Some((1000L, 10L)), Some((1000L, 10L))) == -1.0)
-    assert(Bench.stealPct(None, Some((2000L, 10L))) == -1.0)
-    assert(Bench.stealPct(Some((1000L, 10L)), None) == -1.0)
   }
 
   test("connected components: default mode still green after the hook " +

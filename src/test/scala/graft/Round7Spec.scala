@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
   * qualified-path compare (r6 ADVICE: the raw `startsWith` never matched
   * Spark's scheme-qualified stored dir, so every round re-pointed and
   * re-UUID-ed; and a boundary-less prefix would cross roots like
-  * `/a/ckpt` vs `/a/ckpt-old`), and the Bench steal denominator's
-  * guest-field exclusion.
+  * `/a/ckpt` vs `/a/ckpt-old`).
   */
 class Round7Spec extends SparkSpec {
   import spark.implicits._
@@ -60,16 +59,4 @@ class Round7Spec extends SparkSpec {
     }
   }
 
-  test("parseCpuLine sums only user..steal, excluding guest/guest_nice") {
-    // user nice system idle iowait irq softirq steal guest guest_nice
-    val line = "cpu  100 10 50 800 5 1 2 32 400 40"
-    // guest(400)/guest_nice(40) are already inside user/nice per the
-    // kernel's accounting; a naive full sum would report steal 32/1440
-    // instead of 32/1000
-    assert(Bench.parseCpuLine(line).contains((1000L, 32L)))
-    // steal still required present: a 7-field pre-2.6.11 line is refused
-    assert(Bench.parseCpuLine("cpu 1 2 3 4 5 6 7").isEmpty)
-    // non-cpu lines are refused
-    assert(Bench.parseCpuLine("intr 12345").isEmpty)
-  }
 }

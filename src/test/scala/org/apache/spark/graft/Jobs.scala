@@ -5,14 +5,11 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
-/** Counts the Spark jobs a block starts. Lives in Spark's package for
-  * the listener bus, which Spark keeps package-private: it is drained
-  * before the count is read, so every job the block started is in it.
+/** Counts the Spark jobs a block starts. The listener bus is drained
+  * ([[Listeners.drain]]) before the count is read, so every job the
+  * block started is in it.
   */
 object Jobs {
-
-  /** Wait until every event posted so far has reached the listeners. */
-  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 
   /** Run `body` on this thread under a fresh job group; `onStart(k,
     * group)` runs on the listener thread as the group's k-th job starts.
@@ -32,7 +29,7 @@ object Jobs {
     sc.setJobGroup(group, group)
     try {
       val r = body
-      drain(sc)
+      Listeners.drain(sc)
       (r, n.get)
     } finally {
       sc.clearJobGroup()
