@@ -46,7 +46,7 @@ object Bench {
     val cpusJson = cpus.trim.toIntOption.getOrElse(-1)
     val shm = new java.io.File("/dev/shm")
     val heapGb = Runtime.getRuntime.maxMemory / 1024.0 / 1024 / 1024
-    s"""{"ckpt_root":${Verify.jsonString(Sources.resolvedStreamScratchRoot)}""" +
+    s"""{"ckpt_root":${Verify.jsonString(Fs.streamScratchRoot)}""" +
       s""","shm_writable":${shm.isDirectory && shm.canWrite}""" +
       s""","load_start":${num(loadStart)},"load_end":${num(loadEnd)}""" +
       s""","steal_pct":${num(steal)}""" +

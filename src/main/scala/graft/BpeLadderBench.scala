@@ -36,11 +36,6 @@ object BpeLadderBench {
       if (args.length > 1) args(1).split(",").toSeq.map(_.trim.toInt)
       else Seq(10, 100, 1000)
     Session.run(Session.cpus) { spark =>
-      // locale-safe JSON numbers: the f interpolator is locale-sensitive
-      // (a comma decimal separator under e.g. de_DE voids the artifact
-      // line); stderr progress keeps f-interp, the JSON goes through this
-      def rn(v: Double, scale: Int): String =
-        BigDecimal(v).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toString
       val points = ladder.map { m =>
         val t0 = System.nanoTime()
         val vocab = operators.TextAnalysis.bpeRounds(spark, sfDir, m)._2
@@ -68,12 +63,13 @@ object BpeLadderBench {
         (m, secs, row.getLong(0), row.getLong(1), census)
       }
       val json = points.map { case (m, secs, nw, ns, census) =>
-        s"""{"merges":$m,"wall_sec":${rn(secs, 2)},""" +
-          s""""sec_per_round":${rn(secs / m, 4)},""" +
+        s"""{"merges":$m,"wall_sec":${Verify.jsonNum(secs, 2)},""" +
+          s""""sec_per_round":${Verify.jsonNum(secs / m, 4)},""" +
           s""""vocab_rows":$nw,"final_symbols":$ns,""" +
           s""""persisted_rdds_after":$census}"""
       }.mkString("[", ",", "]")
-      s"""{"metric":"bpe_merge_ladder","sf_dir":"$sfDir","points":$json}"""
+      s"""{"metric":"bpe_merge_ladder","sf_dir":${Verify.jsonString(sfDir)},""" +
+        s""""points":$json}"""
     }
   }
 }

@@ -100,10 +100,11 @@ object PairScaleBench {
       }
       val json = rows.map(r =>
         s"""{"bands":${r.bands},"bits":${r.bits},"candidates":${r.candidates},""" +
-          s""""price_sec":${if (r.priceSec.isNaN) "null" else f"${r.priceSec}%.2f"},""" +
-          s""""full_sec":${if (r.fullSec.isNaN) "null" else f"${r.fullSec}%.2f"},""" +
+          s""""price_sec":${if (r.priceSec.isNaN) "null" else Verify.jsonNum(r.priceSec, 2)},""" +
+          s""""full_sec":${if (r.fullSec.isNaN) "null" else Verify.jsonNum(r.fullSec, 2)},""" +
           s""""pairs":${r.pairs}}""").mkString("[", ",", "]")
-      s"""{"bench":"pair_scale","sf_dir":"$sfDir","n":$n,"min_sim":$MIN_SIM,"rows":$json}"""
+      s"""{"bench":"pair_scale","sf_dir":${Verify.jsonString(sfDir)},""" +
+        s""""n":$n,"min_sim":$MIN_SIM,"rows":$json}"""
     }
   }
 }

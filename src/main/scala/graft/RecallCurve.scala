@@ -106,7 +106,7 @@ object RecallCurve {
         println(f"| $s | $r%.3f | $sec%.1f |")
       }
       val json = (lshRows ++ ivfRows)
-        .map { case (s, r, _) => s""""$s":${f"$r%.4f"}""" }
+        .map { case (s, r, _) => s"${Verify.jsonString(s)}:${Verify.jsonNum(r, 4)}" }
         .mkString(",")
       println(s"""{"n":$n,"nq":$nq,"dim":$DIM,"clusters":$CLUSTERS,"k":$K,$json}""")
 
@@ -146,7 +146,8 @@ object RecallCurve {
         println(f"| $s | $r%.3f | $fp | $sec%.1f |")
       }
       val pairJson = pairRows
-        .map { case (s, r, fp, _) => s""""$s":{"recall":${f"$r%.4f"},"false":$fp}""" }
+        .map { case (s, r, fp, _) =>
+          s"""${Verify.jsonString(s)}:{"recall":${Verify.jsonNum(r, 4)},"false":$fp}""" }
         .mkString(",")
       println(s"""{"pair_n":$PAIR_N,"dim":$DIM,"clusters":$CLUSTERS,$pairJson}""")
 
@@ -177,7 +178,8 @@ object RecallCurve {
       println(f"%n| setting | planted-dup recall | sec |%n|---|---|---|")
       dupRows.foreach { case (s, r, sec) => println(f"| $s | $r%.3f | $sec%.1f |") }
       val dupJson = dupRows
-        .map { case (s, r, _) => s""""$s":${f"$r%.4f"}""" }.mkString(",")
+        .map { case (s, r, _) => s"${Verify.jsonString(s)}:${Verify.jsonNum(r, 4)}" }
+        .mkString(",")
       planted.unpersist(); sims.unpersist(); pc.unpersist()
       s"""{"planted_dups":$PAIR_DUPS,"dim":$DIM,$dupJson}"""
     }

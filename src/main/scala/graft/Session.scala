@@ -21,10 +21,10 @@ import org.apache.spark.sql.SparkSession
   *    for this ASCII corpus, and to DuckDB's, and skip a multi-minute
   *    one-time ICU table build that the first `lower()`/`upper()`
   *    otherwise triggers in each JVM.
-  *  - warehouse dir `<tmpdir>/graft_warehouse`: the bucketed tables
-  *    (`RelationalExt.ensureBucketedTables`) are written there instead
-  *    of into a `./spark-warehouse` in whatever directory the run
-  *    started from.
+  *  - warehouse dir `Fs.scratch("warehouse")`: the bucketed tables
+  *    (`RelationalExt.ensureBucketedTables`) are written into this
+  *    process's scratch, released with it, instead of into a
+  *    `./spark-warehouse` in whatever directory the run started from.
   *  - UI off, log level WARN.
   */
 object Session {
@@ -39,8 +39,7 @@ object Session {
       .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
+      .config("spark.sql.warehouse.dir", Fs.scratch("warehouse"))
       .config("spark.ui.enabled", "false")
     (Tables.TsCompat ++ extra).foreach { case (k, v) => b.config(k, v) }
     val s = b.getOrCreate()

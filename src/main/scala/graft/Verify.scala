@@ -64,4 +64,11 @@ object Verify {
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
   } + "\""
+
+  /** `v` as a JSON number with `scale` decimals. Locale.ROOT, not the f
+    * interpolator: under a locale with a comma decimal separator (e.g.
+    * de_DE) `f"$v%.2f"` writes `1,50`, which voids the JSON line.
+    */
+  private[graft] def jsonNum(v: Double, scale: Int): String =
+    s"%.${scale}f".formatLocal(java.util.Locale.ROOT, v)
 }

@@ -556,20 +556,6 @@ object RelationalExt extends QueryModule {
     graft.Materialize.memo(s, d, "rel.bucketed_tables") {
       val suffix = graft.Fs.pathTag(d)
       val (ot, ct) = (s"graft_orders_b_$suffix", s"graft_cust_b_$suffix")
-      // a previous JVM's warehouse dir survives while the in-memory
-      // catalog doesn't — drop both the entry and the leftover location,
-      // else CREATE TABLE fails with LOCATION_ALREADY_EXISTS
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-        .stripPrefix("file:").replaceFirst("^//", "/")
-      Seq(ot, ct).foreach { t =>
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        graft.Fs.rmTree(new java.io.File(wh, t.toLowerCase))
-      }
-      // The pre-r5 decimal-suffix migration sweep (r5→r7) was RETIRED
-      // in r8 as scheduled: its removal log stayed silent for a full
-      // round, so no orphaned old-format table dirs exist anywhere this
-      // code runs, and a sweep that scans a possibly-shared warehouse
-      // forever is pure residual risk once its targets are gone.
       orders(s, d).select("o_orderkey", "o_custkey", "o_totalprice")
         .write.mode("overwrite").bucketBy(BUCKETS, "o_custkey").sortBy("o_custkey")
         .format("parquet").saveAsTable(ot)
@@ -783,8 +769,8 @@ object RelationalExt extends QueryModule {
     * fixtures: the child lowers the app-side threshold to 0 and disables
     * broadcast so the plan is the shuffle join the rule targets — the
     * parent session's optimizer conf (and every other query's pinned
-    * plan) stays untouched. BloomJoinSpec pins the `might_contain`
-    * injection structurally.
+    * plan) stays untouched. RuntimeFilterSpec ("rel_bloom_join contract
+    * query carries…") pins the `might_contain` injection structurally.
     */
   private def bloomJoin(s: SparkSession, d: String): DataFrame = {
     val s2 = s.newSession()

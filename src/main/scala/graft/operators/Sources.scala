@@ -11,12 +11,12 @@ import org.apache.spark.sql.streaming.Trigger
   * query (file source → watermark → windowed agg → sink) whose result is
   * oracle-checked against the batch semantics.
   *
-  * Each round-trip writes a Spark sink to scratch space and reads it
-  * back through the corresponding source with an explicit schema, then
-  * aggregates; the oracle runs the same aggregate on the original
-  * parquet — so a pass proves the sink+source pair is lossless for the
-  * exercised types (decimals are used where CSV/JSON would otherwise
-  * round doubles).
+  * Each round-trip writes a Spark sink to this process's disk scratch
+  * ([[graft.Fs.scratch]]) and reads it back through the corresponding
+  * source with an explicit schema, then aggregates; the oracle runs the
+  * same aggregate on the original parquet — so a pass proves the
+  * sink+source pair is lossless for the exercised types (decimals are
+  * used where CSV/JSON would otherwise round doubles).
   *
   * Reference grounding: the reference's only I/O is whole text files in,
   * line-text shuffle/sink files out (`src/worker.cc:128-133,179,231-243`);
@@ -26,107 +26,13 @@ object Sources extends QueryModule {
 
   import Tables._
 
-  /** Scratch sink dir, unique per (process, dataset): two JVMs sharing
-    * a tmpdir — or one JVM round-tripping two datasets — must not
-    * overwrite each other's sink while a lazily-evaluated read-back
+  /** Round-trip sink dir, unique per (process, dataset): two JVMs
+    * sharing a tmpdir — or one JVM round-tripping two datasets — must
+    * not overwrite each other's sink while a lazily-evaluated read-back
     * still references the files.
     */
-  private def scratch(name: String, d: String): String = {
-    scratchReaped
-    val pid = ProcessHandle.current().pid()
-    val ds = graft.Fs.pathTag(d)
-    s"${System.getProperty("java.io.tmpdir")}/graft_src_$pid/${name}_$ds"
-  }
-
-  /** Reap scratch left by JVMs that died without running their shutdown
-    * hook (OOM-kill, SIGKILL — plausible for Spark under memory
-    * pressure). Every scratch dir is pid-tagged, so a dir whose owning
-    * pid no longer exists is garbage; on the tmpfs stream root those
-    * orphans are pinned RAM that no OS tmp-cleaner ever reclaims. Each
-    * new JVM sweeps once on first scratch use, so a kill leaks only
-    * until the next run that finds the dir quiet (below). A live
-    * unrelated process that recycled the pid keeps the dir — the
-    * first-use rmTree/overwrite semantics of each path cover that case.
-    *
-    * Two guards beyond the pid check, because this DELETES trees in
-    * world-writable roots:
-    *  - pid-absence alone is unsound when the scratch root is a volume
-    *    shared across pid namespaces (two containers mounting one /tmp:
-    *    each sees only its own pids, so each would reap the other's
-    *    LIVE run). A live run keeps writing, so we additionally require
-    *    the whole tree untouched for REAP_QUIET_MS — dead scratch ages
-    *    into eligibility, live scratch never does.
-    *  - a planted symlink named like graft scratch must not become an
-    *    arbitrary-tree delete: symlinked entries are skipped outright
-    *    (and Fs.rmTree independently refuses to follow links).
-    */
-  private lazy val scratchReaped: Unit = reapDeadPidScratch()
-
-  /** Tree must be this quiet (newest mtime anywhere) before a dead-pid
-    * dir is reaped. Costs nothing for truly dead scratch — it just waits
-    * out the hour — and makes the cross-namespace false positive need a
-    * run that wrote NOTHING for an hour mid-query.
-    */
-  private[operators] val REAP_QUIET_MS: Long = 60L * 60 * 1000
-
-  /** Opt-in: skip the quiet window and reap dead-pid scratch on sight.
-    * The quiet window exists ONLY for scratch roots shared across pid
-    * namespaces (two containers mounting one /tmp — each sees only its
-    * own pids, so pid-absence alone would reap the other's LIVE run);
-    * on a host where the roots are namespace-local, pid-death is proof
-    * of orphanhood and the hour's grace just pins a crash-looping
-    * driver's tmpfs RAM, one orphan set per dead pid. Deliberately an
-    * explicit flag, never autodetected: whether /tmp or /dev/shm is
-    * shared is a deployment fact the process cannot see from inside.
-    * Env var for deployments; the system property is for tests (env is
-    * immutable in-JVM).
-    */
-  private[operators] def reapImmediate: Boolean =
-    sys.props.get("graft.reap.immediate")
-      .orElse(sys.env.get("SPARK_GRAFT_REAP_IMMEDIATE"))
-      .contains("1")
-
-  private[operators] def reapDeadPidScratch(): Unit = try {
-    def pidOf(dirName: String, prefix: String): Option[Long] = {
-      val digits = dirName.drop(prefix.length).takeWhile(_.isDigit)
-      // toLongOption, not toLong: a >19-digit numeric name planted in
-      // these world-writable roots must read as "not ours" — an
-      // unguarded parse would fail the lazy initializer, and a failed
-      // lazy is RE-RUN (and re-thrown) on every access, bricking every
-      // scratch-using query in every JVM until the dir is hand-removed
-      if (digits.isEmpty) None else digits.toLongOption
-    }
-    def isLink(f: java.io.File): Boolean =
-      java.nio.file.Files.isSymbolicLink(f.toPath)
-    def newestMtime(f: java.io.File): Long = {
-      val own = f.lastModified
-      if (f.isDirectory && !isLink(f))
-        Option(f.listFiles)
-          .map(_.foldLeft(own)((m, c) => math.max(m, newestMtime(c))))
-          .getOrElse(own)
-      else own
-    }
-    val self = ProcessHandle.current().pid()
-    val cutoff = System.currentTimeMillis() - REAP_QUIET_MS
-    val roots = Seq(
-      streamScratchRoot -> Seq("graft_stream_ckpt_", "graft_stream_append_"),
-      System.getProperty("java.io.tmpdir") -> Seq("graft_src_"))
-    for ((root, prefixes) <- roots) {
-      val entries = new java.io.File(root).listFiles()
-      if (entries != null) for (f <- entries; p <- prefixes)
-        if (f.getName.startsWith(p) && !isLink(f))
-          pidOf(f.getName, p).foreach { pid =>
-            if (pid != self && !ProcessHandle.of(pid).isPresent &&
-                (reapImmediate || newestMtime(f) < cutoff))
-              graft.Fs.rmTree(f)
-          }
-    }
-  } catch {
-    // best-effort janitor: anything unexpected in these world-writable
-    // roots (races, permissions) skips the sweep, never the queries
-    case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[graft] dead-pid scratch sweep skipped: $e")
-  }
+  private def scratch(name: String, d: String): String =
+    graft.Fs.scratch(s"${name}_${graft.Fs.pathTag(d)}")
 
   // ---- CSV round-trip -------------------------------------------------
 
@@ -316,7 +222,7 @@ object Sources extends QueryModule {
   /** Stateful streaming ops instantiate one state store per shuffle
     * partition per stateful operator; for the tiny replayed fixture the
     * store setup dominates, so the stream queries run with a reduced
-    * partition count via [[graft.Tuning.withShufflePartitions]] (each
+    * partition count in [[withStreamFanout]] (each
     * fresh run starts a fresh checkpoint, so the pinned count is
     * per-query). Fan-out 2 (r4 ran 4): results are partition-count
     * invariant — the oracles prove it — and halving the store count
@@ -325,97 +231,10 @@ object Sources extends QueryModule {
     */
   private val STREAM_FANOUT = 2
 
-  /** Checkpoint base for the replay fixtures: tmpfs when the candidate
-    * is a writable directory, else the disk fallback. Every micro-batch
-    * commit cycle fsyncs a handful of tiny files (offset log, commit
-    * log, per-partition state deltas); on a disk tmpdir that latency IS
-    * the fixture floor, and none of it buys durability a bounded replay
-    * needs. Production checkpoints go to durable shared storage — this
-    * only relocates the TEST harness's scratch. Pid-scoped (two JVMs
-    * must not share checkpoint dirs: query names restart at 1 per JVM)
-    * and cleared on first use so a recycled pid can never resume a dead
-    * run's completed checkpoint (which would replay nothing and return
-    * an empty result).
-    *
-    * Factored out of the lazy root so BOTH branches are spec-pinned
-    * (the fallback is exactly the case that shows up on a locked-down
-    * driver host, where it silently turns every stateful stream
-    * checkpoint into fsync-bound disk I/O).
-    */
-  private[operators] def resolveScratchRoot(
-      tmpfs: java.io.File, fallback: String): String =
-    if (tmpfs.isDirectory && tmpfs.canWrite) tmpfs.getPath else fallback
-
-  /** First writable root wins: the explicit `SPARK_GRAFT_STREAM_SCRATCH`
-    * override (a host without writable /dev/shm can point the stream
-    * scratch at whatever tmpfs it DOES have), then /dev/shm, then the
-    * disk tmpdir. An unusable override falls through rather than
-    * failing — the env block's `ckpt_root` records what actually won,
-    * so a mispointed override is visible in the bench artifact.
-    */
-  private[operators] def chooseScratchRoot(overridePath: Option[String],
-      tmpfs: java.io.File, disk: String): String = {
-    val fallback = resolveScratchRoot(tmpfs, disk)
-    overridePath.filter(_.nonEmpty)
-      .map(p => resolveScratchRoot(new java.io.File(p), fallback))
-      .getOrElse(fallback)
-  }
-
-  private[operators] lazy val streamScratchRoot: String =
-    chooseScratchRoot(sys.env.get("SPARK_GRAFT_STREAM_SCRATCH"),
-      new java.io.File("/dev/shm"), System.getProperty("java.io.tmpdir"))
-
-  /** Where stream checkpoints actually resolved — tmpfs or the disk
-    * tmpdir fallback. Surfaced so the bench artifact can record it: a
-    * host without writable /dev/shm pays the per-micro-batch fsync
-    * latency of a DISK checkpoint root, which alone explains a
-    * state-store-bound stream timing being several times its tmpfs
-    * value, and that fact is otherwise invisible in the numbers.
-    */
-  def resolvedStreamScratchRoot: String = streamScratchRoot
-
-  private lazy val streamCkptBase: String = {
-    scratchReaped
-    val base = s"$streamScratchRoot/graft_stream_ckpt_${ProcessHandle.current().pid()}"
-    graft.Fs.rmTree(new java.io.File(base))
-    // every JVM that touches stream scratch releases it on exit — the
-    // test JVMs have no Verify/Bench-style cleanup call site, and on a
-    // tmpfs root an orphan set per JVM is leaked RAM (all stream
-    // queries are awaited before their results return, so nothing is
-    // still writing at shutdown)
-    sys.addShutdownHook(clearStreamScratch())
-    base
-  }
-
-  /** Release this process's scratch: stream checkpoints, append-sink
-    * dirs, AND the round-trip sink dirs under graft_src_<pid> (a clean
-    * exit must not leave five table copies in tmpdir waiting for some
-    * future JVM's dead-pid reaper). Called by `Cleanup.release` and
-    * by the shutdown hook — same discipline as the
-    * session store's release: on a tmpfs root the leftovers are
-    * RAM, and a long-lived host accumulating one orphan set per JVM
-    * would leak it (the first-use rmTree only covers pid reuse, not
-    * the steady state).
-    */
-  def clearStreamScratch(): Unit = {
-    val pid = ProcessHandle.current().pid()
-    // path derived from the pid, NOT via the streamCkptBase lazy val:
-    // cleanup of a run that never touched a stream must not force that
-    // initializer (dead-pid sweep, first-use rmTree, shutdown hook)
-    // just to delete a dir that may not exist
-    graft.Fs.rmTree(new java.io.File(
-      s"$streamScratchRoot/graft_stream_ckpt_$pid"))
-    val root = new java.io.File(streamScratchRoot)
-    val mine = root.listFiles(
-      (_, n) => n.startsWith(s"graft_stream_append_${pid}_"))
-    if (mine != null) mine.foreach(graft.Fs.rmTree)
-    graft.Fs.rmTree(new java.io.File(
-      s"${System.getProperty("java.io.tmpdir")}/graft_src_$pid"))
-  }
-
   /** Shared fixture scope for the replayed streams: reduced fan-out and
-    * the tmpfs checkpoint base (each query's unique `queryName` becomes
-    * its subdir under the base, restoring the session conf after).
+    * the checkpoint base `Fs.streamScratch("ckpt")` (each query's unique
+    * `queryName` becomes its subdir under the base), restoring both
+    * confs after.
     *
     * The trailing no-data micro-batch stays ON by default — it is what
     * lets watermark-finalized results (append-mode windows, merged
@@ -430,25 +249,17 @@ object Sources extends QueryModule {
   private def withStreamFanout[T](s: SparkSession,
       skipNoDataBatch: Boolean = false,
       unboundedState: Boolean = false)(f: => T): T =
-    graft.Tuning.withShufflePartitions(s, STREAM_FANOUT) {
-      val key = "spark.sql.streaming.checkpointLocation"
-      val old = s.conf.getOption(key)
-      s.conf.set(key, streamCkptBase)
-      def body: T = {
-        // unboundedState = the query's state grows with the key space
-        // (sessions per user, dedup keys, join buffers) → RocksDB by
-        // POLICY (Tuning.withRocksDbStateStore has the measured
-        // decision); bounded-state aggregations stay on the heap
-        // provider
-        def inner: T =
-          if (skipNoDataBatch) graft.Tuning.withoutNoDataMicroBatch(s)(f) else f
-        if (unboundedState) graft.Tuning.withRocksDbStateStore(s)(inner)
-        else inner
-      }
-      try body finally old match {
-        case Some(v) => s.conf.set(key, v)
-        case None    => s.conf.unset(key)
-      }
+    graft.Tuning.withConfs(s,
+        "spark.sql.shuffle.partitions" -> STREAM_FANOUT.toString,
+        "spark.sql.streaming.checkpointLocation" -> graft.Fs.streamScratch("ckpt")) {
+      // unboundedState = the query's state grows with the key space
+      // (sessions per user, dedup keys, join buffers) → RocksDB by
+      // POLICY (Tuning.withRocksDbStateStore has the measured
+      // decision); bounded-state aggregations stay on the heap provider
+      def inner: T =
+        if (skipNoDataBatch) graft.Tuning.withoutNoDataMicroBatch(s)(f) else f
+      if (unboundedState) graft.Tuning.withRocksDbStateStore(s)(inner)
+      else inner
     }
 
   /** The name every replay of contract query `query` runs under:
@@ -520,20 +331,13 @@ object Sources extends QueryModule {
 
   /** A fresh [[appendSink]] base, unique per (process, dataset, run)
     * like scratch(): a bare restarting counter would let two JVMs
-    * sharing a tmpdir rmTree each other's live checkpoint or output
-    * mid-run. Emptied first, so a bounded replay never resumes a
-    * previous run's checkpoint or re-reads its leftover output files.
-    * The `graft_stream_append_<pid>_` prefix is what the dead-pid
-    * reaper and [[clearStreamScratch]] match.
+    * sharing a root overwrite each other's live checkpoint or output
+    * mid-run, and a reused name would resume a previous run's
+    * checkpoint or re-read its output files.
     */
-  private def appendBase(d: String): String = {
-    val base = streamScratchRoot +
-      s"/graft_stream_append_${ProcessHandle.current().pid()}" +
-      s"_${graft.Fs.pathTag(d)}" +
-      s"_${streamSeq.incrementAndGet()}"
-    graft.Fs.rmTree(new java.io.File(base))
-    base
-  }
+  private def appendBase(d: String): String =
+    graft.Fs.streamScratch(
+      s"append_${graft.Fs.pathTag(d)}_${streamSeq.incrementAndGet()}")
 
   /** The events table replayed through a streaming file source with a
     * watermark and 1-hour tumbling windows — `event_tumbling`'s own

@@ -1397,17 +1397,14 @@ object TextAnalysis extends QueryModule {
     * the in-memory merges (TokenizerStore's spec arm additionally pins
     * the stamp REFUSAL behavior on absent/mismatched sidecars).
     *
-    * The export lands in a per-sfDir temp directory (deterministic
-    * name, overwritten per run) — harness plumbing only; a pipeline
+    * The export lands in this process's scratch, one directory per
+    * sfDir, overwritten per run — harness plumbing only; a pipeline
     * points `writeTokenizer` at durable storage and ships the KB-scale
     * table to every encode job, which is the whole point: no training
     * jobs anywhere near the 100 TB encode pass.
     */
   private def bpeDocTokensStored(s: SparkSession, d: String): DataFrame = {
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_tok_contract_" +
-        java.util.UUID.nameUUIDFromBytes(d.getBytes("UTF-8")).toString)
-      .getAbsolutePath
+    val dir = graft.Fs.scratch("tok_" + graft.Fs.pathTag(d))
     writeTokenizer(s, dir, bpeRounds(s, d)._3)
     bpeDocTokensWith(s, d, dir)
   }

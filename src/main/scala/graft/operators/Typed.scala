@@ -55,9 +55,9 @@ object Typed extends QueryModule {
     * contract stays as is.
     */
   /** The exact-integer micros emission and its documented bound,
-    * factored out so TypedBoundSpec can pin the failure mode: per-group
-    * revenue above [[REVENUE_MICROS_MAX]] (= Long.MaxValue / 10^6,
-    * ≈ 9.2e12 — an sf100–sf300 per-flag revenue decade) must throw
+    * factored out so Round12Spec ("revenueMicros holds exactly…") can pin
+    * the failure mode: per-group revenue above [[REVENUE_MICROS_MAX]]
+    * (= Long.MaxValue / 10^6, ≈ 9.2e12 — an sf100–sf300 per-flag revenue decade) must throw
     * ArithmeticException LOUDLY, never wrap. The oracle's
     * `CAST … AS BIGINT` errors at the same magnitude in DuckDB, so the
     * two engines fail the same decade together.

@@ -25,8 +25,7 @@ class BenchSpec extends SparkSpec {
     val om = new com.fasterxml.jackson.databind.ObjectMapper
     val payload = """{"metric":"total","value":1.0}"""
     // success: ref is a quoted path whose file holds the payload
-    val okDir = java.nio.file.Files
-      .createTempDirectory("graft_detail_ok_").toFile
+    val okDir = TestScratch.dir("graft_detail_ok_").toFile
     try {
       val ref = Bench.writeDetailRef(okDir, payload)
       assert(ref.startsWith("\"") && ref.endsWith("\""))

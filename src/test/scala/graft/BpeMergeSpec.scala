@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 class BpeMergeSpec extends SparkSpec {
 
   private def corpusOf(docs: Seq[String]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bpe_")
+    val dir = TestScratch.dir("graft_bpe_")
     import spark.implicits._
     docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
@@ -151,8 +151,7 @@ class BpeMergeSpec extends SparkSpec {
     val dir = corpusOf(Seq.fill(4)("banana") ++ Seq.fill(2)("bandana"))
     val trained = operators.TextAnalysis.bpeRounds(spark, dir)._3
     assert(trained.nonEmpty)
-    val tokDir = java.nio.file.Files
-      .createTempDirectory("graft_tok_").toString + "/tokenizer"
+    val tokDir = TestScratch.dir("graft_tok_").toString + "/tokenizer"
     operators.TextAnalysis.writeTokenizer(spark, tokDir, trained)
     assert(operators.TextAnalysis.readTokenizer(spark, tokDir) == trained,
       "stored merge list must reload byte-identically in rank order")

@@ -25,7 +25,7 @@ class DedupSoundnessSpec extends SparkSpec {
   private val loner = (0 until 40).map(i => s"lone$i").mkString(" ")
 
   private lazy val corpusDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dedup_sound_")
+    val dir = TestScratch.dir("graft_dedup_sound_")
     val rows = Seq(
       (1L, docA), (2L, docA), (3L, nearB._1), (4L, nearB._2), (5L, loner))
     import spark.implicits._
@@ -144,7 +144,7 @@ class DedupSoundnessSpec extends SparkSpec {
     .map(_.replace("\u00e9", "e\u0301")).mkString(" ") // NFD spelling
 
   private lazy val foldCorpusDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dedup_fold_")
+    val dir = TestScratch.dir("graft_dedup_fold_")
     import spark.implicits._
     Seq((10L, ndBase), (11L, ndTitle), (12L, ndNfc), (13L, ndNfd),
         (14L, loner))
@@ -211,7 +211,7 @@ class DedupSoundnessSpec extends SparkSpec {
   private val grOther = greekWords("μον").mkString(" ")
 
   private lazy val greekCorpusDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dedup_greek_")
+    val dir = TestScratch.dir("graft_dedup_greek_")
     import spark.implicits._
     Seq((20L, grBase), (21L, grNear), (22L, grOther), (23L, loner))
       .toDF("doc_id", "text")
@@ -384,7 +384,7 @@ class DedupSoundnessSpec extends SparkSpec {
   // the planted corpus plus a third copy of docA: 1, 2, 6 form a 3-clique,
   // 3 and 4 a near-dup 2-clique, 5 is the loner
   private lazy val pagerankCorpusDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pagerank_")
+    val dir = TestScratch.dir("graft_pagerank_")
     val rows = Seq(
       (1L, docA), (2L, docA), (3L, nearB._1), (4L, nearB._2), (5L, loner),
       (6L, docA))

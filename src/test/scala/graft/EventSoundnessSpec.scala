@@ -18,7 +18,7 @@ class EventSoundnessSpec extends SparkSpec {
 
   private def writeEvents(
       rows: Seq[(Long, java.sql.Timestamp, Long, String, Double)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_evt_sound_")
+    val dir = TestScratch.dir("graft_evt_sound_")
     import spark.implicits._
     rows.toDF("event_id", "ts", "user_id", "event_type", "value")
       .withColumn("props", lit("""{"k": 0}"""))

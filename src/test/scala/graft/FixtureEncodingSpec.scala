@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
 
@@ -28,7 +26,7 @@ class FixtureEncodingSpec extends SparkSpec {
     "2026-08-13 00:00:00")
 
   private def writeDir(): String = {
-    val d = Files.createTempDirectory("graft_enc").toFile
+    val d = TestScratch.dir("graft_enc").toFile
     d.deleteOnExit()
     d.getAbsolutePath
   }

@@ -51,7 +51,7 @@ class ForklessFsSpec extends SparkSpec {
     SparkEntry.queries(q)(spark, sfDir).write.format("noop").mode("overwrite").save()
 
   private def withTempDir[T](prefix: String)(body: JPath => T): T = {
-    val dir = Files.createTempDirectory(prefix)
+    val dir = TestScratch.dir(prefix)
     try body(dir) finally Fs.rmTree(dir.toFile)
   }
 

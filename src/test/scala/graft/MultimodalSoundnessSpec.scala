@@ -22,7 +22,7 @@ class MultimodalSoundnessSpec extends SparkSpec {
     // the %4 filter keeps frames 0 and 4. A 10-char doc -> one frame.
     val longDoc = (0 until 1200).map(i => ('a' + i % 26).toChar).mkString
     val tiny = "shortfile!"
-    val dir = java.nio.file.Files.createTempDirectory("graft_mm_sound_")
+    val dir = TestScratch.dir("graft_mm_sound_")
     import spark.implicits._
     Seq((1L, longDoc), (2L, tiny))
       .toDF("doc_id", "text")

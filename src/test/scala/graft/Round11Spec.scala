@@ -12,7 +12,7 @@ class Round11Spec extends SparkSpec {
   // ---- heavy hitters --------------------------------------------------
 
   private lazy val hotDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_r11_hot_")
+    val dir = TestScratch.dir("graft_r11_hot_")
     import spark.implicits._
     // 3 docs x 100 tokens = 300 tokens; "hot" appears 30 times, every
     // other word exactly once -> threshold n*200 > 300 keeps only "hot".

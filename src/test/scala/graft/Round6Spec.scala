@@ -8,8 +8,7 @@ class Round6Spec extends SparkSpec {
 
   test("connected components: reliable-checkpoint mode yields identical " +
       "labels and actually writes checkpoint files") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_cc_ckpt_").toString
+    val dir = TestScratch.dir("graft_cc_ckpt_").toString
     val n = 16L
     val nodes = (0L until n).toDF("id")
     val edges = (0L until n - 1).map(i => (i, i + 1)).toDF("src", "dst")
@@ -42,8 +41,7 @@ class Round6Spec extends SparkSpec {
       else Option(f.listFiles).map(_.map(rddDirs).sum).getOrElse(0)
     val nodes = (0L until 8L).toDF("id")
     val edges = (0L until 7L).map(i => (i, i + 1)).toDF("src", "dst")
-    val dirs = Seq.fill(2)(java.nio.file.Files
-      .createTempDirectory("graft_cc_ckpt_move_").toFile)
+    val dirs = Seq.fill(2)(TestScratch.dir("graft_cc_ckpt_move_").toFile)
     try {
       dirs.foreach { d =>
         spark.conf.set(Materialize.CheckpointDirKey,
@@ -71,8 +69,7 @@ class Round6Spec extends SparkSpec {
       else Option(f.listFiles).map(_.map(rddDirs).sum).getOrElse(0)
     val expected = ranks()
     assert(expected.nonEmpty)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_pr_ckpt_").toFile
+    val dir = TestScratch.dir("graft_pr_ckpt_").toFile
     try {
       assert(withConfs(Materialize.CheckpointDirKey -> dir.toString)(ranks())
         == expected)

@@ -39,8 +39,7 @@ class Round7Spec extends SparkSpec {
     // round: each call mints a fresh UUID subdir, so the root ends up
     // with as many UUID dirs as checkpointed rounds. Post-fix there is
     // exactly one.
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_cc_repoint_").toString
+    val dir = TestScratch.dir("graft_cc_repoint_").toString
     val n = 16L
     val nodes = (0L until n).toDF("id")
     val edges = (0L until n - 1).map(i => (i, i + 1)).toDF("src", "dst")

@@ -22,7 +22,7 @@ class ScaleUpSpec extends SparkSpec {
   private val S = 10000000L
 
   test("2x derivation preserves per-copy structure and scales joins exactly") {
-    val root = java.nio.file.Files.createTempDirectory("graft_scaleup_").toFile
+    val root = TestScratch.dir("graft_scaleup_").toFile
     val out = root.toString
     try {
       ScaleUp.run(spark, in, out, factor = 2)
@@ -95,7 +95,7 @@ class ScaleUpSpec extends SparkSpec {
 
   test("factor past 676 switches to uniform three-letter tags and the " +
       "tables filter derives only the asked-for tables") {
-    val root = java.nio.file.Files.createTempDirectory("graft_scaleup3_").toFile
+    val root = TestScratch.dir("graft_scaleup3_").toFile
     val out = root.toString
     try {
       // 677 copies forces the 3-letter regime; documents only — the

@@ -16,7 +16,7 @@ class SchemaCatalogSpec extends SparkSpec {
   private def sc = spark.sparkContext
 
   private def tempDir(): String = {
-    val d = Files.createTempDirectory("graft_catalog").toFile
+    val d = TestScratch.dir("graft_catalog").toFile
     d.deleteOnExit()
     d.getAbsolutePath
   }

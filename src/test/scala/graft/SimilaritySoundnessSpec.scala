@@ -34,7 +34,7 @@ class SimilaritySoundnessSpec extends SparkSpec {
         centers(label).zip(gauss(0.05)).map { case (c, n) => c + n })
     }
     val copy = Seq((400L, 0, centers(0)))
-    val dir = java.nio.file.Files.createTempDirectory("graft_sim_sound_")
+    val dir = TestScratch.dir("graft_sim_sound_")
     import spark.implicits._
     (queries ++ fillers ++ copy).toDF("vec_id", "label", "embedding")
       .select(col("vec_id"), col("label").cast("int").as("label"),

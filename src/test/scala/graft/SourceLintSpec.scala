@@ -192,6 +192,16 @@ class SourceLintSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"wall-clock sleep in: $hits")
   }
 
+  test("only graft.Fs reads the tmpdir or the process id") {
+    // every scratch path is a name inside Fs's per-process directory,
+    // which one release frees and one reaper prefix matches; a path
+    // built elsewhere escapes both, as the stored tokenizer's and the
+    // warehouse's once did
+    val hits = Seq("java.io.tmpdir", "ProcessHandle")
+      .flatMap(offenders(_, "", exempt = Set("graft/Fs.scala")))
+    assert(hits.isEmpty, s"tmpdir or pid read outside graft.Fs in: $hits")
+  }
+
   test("stream sink views are dropped only in Sources") {
     // Sources names every replay and releases its memory sinks
     // (releaseStreams); a harness that drops views on its own must

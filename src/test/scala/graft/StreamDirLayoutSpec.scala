@@ -22,7 +22,7 @@ class StreamDirLayoutSpec extends SparkSpec {
   test("stream source reads directory-shaped events.parquet identically " +
       "to the single-file driver layout") {
     val src = Tables.events(spark, "/root/testdata/sf0.001")
-    val root = java.nio.file.Files.createTempDirectory("graft_dirlayout_").toFile
+    val root = TestScratch.dir("graft_dirlayout_").toFile
     val (fileDir, dirDir) = (new java.io.File(root, "as_file"),
       new java.io.File(root, "as_dir"))
     try {

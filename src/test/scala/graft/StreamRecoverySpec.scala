@@ -43,7 +43,7 @@ class StreamRecoverySpec extends SparkSpec {
     */
   private def writeEventsFile(rows: Seq[(Timestamp, Long, String, Double)],
       dest: File): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_evwrite_")
+    val tmp = TestScratch.dir("graft_evwrite_")
     rows.toDF("ts", "user_id", "event_type", "value")
       .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val part = Option(tmp.toFile.listFiles).toSeq.flatten
@@ -99,8 +99,7 @@ class StreamRecoverySpec extends SparkSpec {
     * would absorb exactly the duplicate this spec exists to catch.
     */
   private def runScenario(baseRoot: File): Unit = {
-    val input = java.nio.file.Files
-      .createTempDirectory("graft_recovery_in_").toFile
+    val input = TestScratch.dir("graft_recovery_in_").toFile
     val twoPhase = new File(baseRoot, "twophase")
     val single = new File(baseRoot, "single")
     try {
@@ -125,8 +124,7 @@ class StreamRecoverySpec extends SparkSpec {
   }
 
   test("tumbling-append restart from the same checkpoint dir loses and duplicates nothing (disk root)") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_recovery_disk_").toFile
+    val base = TestScratch.dir("graft_recovery_disk_").toFile
     try runScenario(base) finally Fs.rmTree(base)
   }
 

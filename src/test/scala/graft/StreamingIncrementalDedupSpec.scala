@@ -76,7 +76,7 @@ class StreamingIncrementalDedupSpec extends SparkSpec {
     * 1:1 onto triggers).
     */
   private def writeOneFile(df: DataFrame, dest: File): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_incwrite_")
+    val tmp = TestScratch.dir("graft_incwrite_")
     df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val part = Option(tmp.toFile.listFiles).toSeq.flatten
       .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
@@ -103,7 +103,7 @@ class StreamingIncrementalDedupSpec extends SparkSpec {
 
   test("two planted micro-batches: corpus dedup, table accumulation, " +
       "within-batch dominance, and restart idempotence") {
-    val root = java.nio.file.Files.createTempDirectory("graft_incdedup_").toFile
+    val root = TestScratch.dir("graft_incdedup_").toFile
     val (in, sig, kept, ckpt) = (new File(root, "in"), new File(root, "sig"),
       new File(root, "kept"), new File(root, "ckpt"))
     in.mkdirs()
@@ -181,7 +181,7 @@ class StreamingIncrementalDedupSpec extends SparkSpec {
   test("signature-table compaction folds batch partitions into the seed, " +
       "bounds file count, and leaves dedup behavior unchanged") {
     import operators.Dedup.{compactSignatureTable, dedupAgainst, readSignatureTable, signatures, writeSignatureTable}
-    val root = java.nio.file.Files.createTempDirectory("graft_sigcompact_").toFile
+    val root = TestScratch.dir("graft_sigcompact_").toFile
     val sig = new File(root, "sig")
     try {
       // accumulated state after two committed triggers: seed + per-batch
@@ -252,7 +252,7 @@ class StreamingIncrementalDedupSpec extends SparkSpec {
   test("compaction refuses to fold a batch the stream checkpoint has not " +
       "committed, and accepts once the commit lands") {
     import operators.Dedup.{compactSignatureTable, readSignatureTable, signatures, writeSignatureTable}
-    val root = java.nio.file.Files.createTempDirectory("graft_sigprecond_").toFile
+    val root = TestScratch.dir("graft_sigprecond_").toFile
     val sig = new File(root, "sig")
     try {
       writeSignatureTable(corpusA, sig.toString)
@@ -292,7 +292,7 @@ class StreamingIncrementalDedupSpec extends SparkSpec {
   test("readers refuse a signature table stamped with different " +
       "parameters, an unstamped table, and name the remedy") {
     import operators.Dedup.{readSignatureTable, sigTableMeta, writeSignatureTable}
-    val root = java.nio.file.Files.createTempDirectory("graft_sigstamp_").toFile
+    val root = TestScratch.dir("graft_sigstamp_").toFile
     val sig = new File(root, "sig")
     try {
       writeSignatureTable(corpusA, sig.toString)
@@ -340,7 +340,7 @@ class StreamingIncrementalDedupSpec extends SparkSpec {
       "fold is invisible and auto-collected, a reader racing the version " +
       "flip reads a complete table, and a two-flips-stale reader fail-stops") {
     import operators.Dedup.{compactSignatureTable, dedupAgainst, readSignatureTable, writeSignatureTable}
-    val root = java.nio.file.Files.createTempDirectory("graft_sigcrash_").toFile
+    val root = TestScratch.dir("graft_sigcrash_").toFile
     val sig = new File(root, "sig")
     def table(): Set[Long] = readSignatureTable(spark, sig.toString)
       .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -413,7 +413,7 @@ class StreamingIncrementalDedupSpec extends SparkSpec {
   test("two racing compactors: the first committer wins, the loser " +
       "fail-stops at its commit point and leaves no staging behind") {
     import operators.Dedup.{compactSignatureTable, readSignatureTable, writeSignatureTable}
-    val root = java.nio.file.Files.createTempDirectory("graft_sigrace_").toFile
+    val root = TestScratch.dir("graft_sigrace_").toFile
     val sig = new File(root, "sig")
     def table(): Set[Long] = readSignatureTable(spark, sig.toString)
       .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -450,7 +450,7 @@ class StreamingIncrementalDedupSpec extends SparkSpec {
   test("a pre-versioned flat signature table is refused with the exact " +
       "migration remedy, and the migration makes it readable") {
     import operators.Dedup.{readSignatureTable, signatures, sigTableMeta}
-    val root = java.nio.file.Files.createTempDirectory("graft_sigflat_").toFile
+    val root = TestScratch.dir("graft_sigflat_").toFile
     val sig = new File(root, "sig")
     try {
       // fabricate the round-9 flat layout: partitions + stamp at top level

@@ -29,7 +29,7 @@ class SubstringDedupSpec extends SparkSpec {
   private val doc6 = (uniq("six", 4) ++ p10).mkString(" ")
 
   private lazy val corpusDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_substr_sound_")
+    val dir = TestScratch.dir("graft_substr_sound_")
     import spark.implicits._
     Seq((1L, doc1), (2L, doc2), (3L, doc3), (4L, doc4), (5L, doc5), (6L, doc6))
       .toDF("doc_id", "text")

@@ -26,7 +26,7 @@ class TextSoundnessSpec extends SparkSpec {
       .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
 
   private lazy val corpusDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_text_sound_")
+    val dir = TestScratch.dir("graft_text_sound_")
     import spark.implicits._
     docs.toDF("doc_id", "text")
       .select(col("doc_id"), col("text"), lit("en").as("lang"),
@@ -52,7 +52,7 @@ class TextSoundnessSpec extends SparkSpec {
 
   test("langid assigns the planted stopword-obvious languages and " +
       "falls back to en on an all-zero profile") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_lang_sound_")
+    val dir = TestScratch.dir("graft_lang_sound_")
     import spark.implicits._
     Seq(
       (1L, "the cat and the dog is in the house of wonder"),
@@ -72,7 +72,7 @@ class TextSoundnessSpec extends SparkSpec {
 
   test("quality scoring ranks a substantial natural doc above a " +
       "word-starved one and NULLs out a wordless doc") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_qual_sound_")
+    val dir = TestScratch.dir("graft_qual_sound_")
     import spark.implicits._
     val rich = (0 until 100).map(i => s"meaningful${('a' + i % 26).toChar}")
       .mkString(" ")
@@ -128,7 +128,7 @@ class TextSoundnessSpec extends SparkSpec {
       "to: text_langid calls every CJK doc 'en' (zero stopword hits, " +
       "tie-break), text_langid_script assigns zh/ja/ko — including " +
       "kanji-majority Japanese via kana presence") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_script_sound_")
+    val dir = TestScratch.dir("graft_script_sound_")
     import spark.implicits._
     val corpus = Seq(
       (1L, "the cat and the dog is in the house"),
@@ -161,7 +161,7 @@ class TextSoundnessSpec extends SparkSpec {
       "see as constant garbage: boilerplate (one repeated char) lands " +
       "under diverse prose of the same length, and no ASCII doc " +
       "enters the routed output") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_qchar_sound_")
+    val dir = TestScratch.dir("graft_qchar_sound_")
     import spark.implicits._
     val diverse = "深度神经网络在自然语言处理领域取得重大突破注意力机制成为核心"
     val boiler = "的" * diverse.length

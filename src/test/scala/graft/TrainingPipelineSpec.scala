@@ -18,7 +18,7 @@ class TrainingPipelineSpec extends SparkSpec {
     ((docId % 1000003L) * 2654435761L + salt) % 1000000L
 
   private def writeDocs(rows: Seq[(Long, String, String, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pipe_spec_")
+    val dir = TestScratch.dir("graft_pipe_spec_")
     rows.toDF("doc_id", "text", "lang", "source")
       .select(col("doc_id"), col("text"), col("lang"), col("source"),
         length(col("text")).cast("long").as("n_chars"))
@@ -151,7 +151,7 @@ class TrainingPipelineSpec extends SparkSpec {
       (7L, vec(pos6 :+ -50.0f), 0),
       // different bucket (first sign bit flipped) -> never compared
       (9L, vec(-1.0f +: pos6.tail :+ 1.0f), 0))
-    val dir = java.nio.file.Files.createTempDirectory("graft_pipe_sem_")
+    val dir = TestScratch.dir("graft_pipe_sem_")
     rows.toDF("vec_id", "embedding", "label")
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$dir/embeddings.parquet")

@@ -41,9 +41,8 @@ object ReaperMatrixProps extends Properties("ScratchReaperMatrix") {
 
   /** root directory + name prefix pairs the sweep actually processes */
   private def roots: Seq[(String, String)] = Seq(
-    Sources.streamScratchRoot -> "graft_stream_ckpt_",
-    Sources.streamScratchRoot -> "graft_stream_append_",
-    System.getProperty("java.io.tmpdir") -> "graft_src_")
+    graft.Fs.streamScratchRoot -> "graft_scratch_",
+    graft.Fs.diskScratchRoot -> "graft_scratch_")
 
   private case class Entry(kind: Kind, rootIdx: Int, depth: Int, tag: Int) {
     def root: String = roots(rootIdx)._1
@@ -84,7 +83,7 @@ object ReaperMatrixProps extends Properties("ScratchReaperMatrix") {
   }
 
   private def backdate(f: File): Unit = {
-    val old = System.currentTimeMillis() - Sources.REAP_QUIET_MS - 60000
+    val old = System.currentTimeMillis() - graft.Fs.REAP_QUIET_MS - 60000
     if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(backdate))
     assert(f.setLastModified(old), s"backdate $f")
   }
@@ -110,9 +109,8 @@ object ReaperMatrixProps extends Properties("ScratchReaperMatrix") {
       assert(!ProcessHandle.of(deadPid).isPresent, "sentinel pid is alive")
       val entries = raw.map { case (k, r, d) => Entry(k, r, d, tagSeq.incrementAndGet()) }
       entries.foreach(plant)
-      if (immediate) System.setProperty("graft.reap.immediate", "1")
       try {
-        Sources.reapDeadPidScratch()
+        graft.Fs.reapDeadPidScratch(immediate)
         entries.forall { e =>
           val ok = e.file.exists() == e.shouldSurvive(immediate)
           if (!ok) println(
@@ -124,7 +122,6 @@ object ReaperMatrixProps extends Properties("ScratchReaperMatrix") {
           ok && victimOk
         }
       } finally {
-        System.clearProperty("graft.reap.immediate")
         entries.foreach { e =>
           if (java.nio.file.Files.isSymbolicLink(e.file.toPath))
             java.nio.file.Files.deleteIfExists(e.file.toPath)

@@ -20,7 +20,7 @@ class ScratchReaperSpec extends AnyFunSuite {
     * be pushed back, not just the root.
     */
   private def backdate(f: java.io.File): Unit = {
-    val old = System.currentTimeMillis() - Sources.REAP_QUIET_MS - 60000
+    val old = System.currentTimeMillis() - graft.Fs.REAP_QUIET_MS - 60000
     if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(backdate))
     assert(f.setLastModified(old), s"backdate $f")
   }
@@ -39,18 +39,18 @@ class ScratchReaperSpec extends AnyFunSuite {
     val self = ProcessHandle.current().pid()
     val tmp = System.getProperty("java.io.tmpdir")
     val dead = Seq(
-      new java.io.File(s"$tmp/graft_src_$deadPid"),
-      new java.io.File(s"${Sources.streamScratchRoot}/graft_stream_ckpt_$deadPid"),
-      new java.io.File(s"${Sources.streamScratchRoot}/graft_stream_append_${deadPid}_1a_7"))
+      new java.io.File(s"$tmp/graft_scratch_$deadPid"),
+      new java.io.File(s"${graft.Fs.streamScratchRoot}/graft_scratch_${deadPid}_ckpt"),
+      new java.io.File(s"${graft.Fs.streamScratchRoot}/graft_scratch_${deadPid}_1a_7"))
     // suffixed so the fixture never collides with the JVM's REAL
     // scratch dir (pidOf still parses the leading digits = self)
     val kept = Seq(
-      new java.io.File(s"$tmp/graft_src_${self}_reapertest"),
-      new java.io.File(s"$tmp/graft_src_nopid"))
+      new java.io.File(s"$tmp/graft_scratch_${self}_reapertest"),
+      new java.io.File(s"$tmp/graft_scratch_nopid"))
     (dead ++ kept).foreach(mkFixture)
     (dead ++ kept).foreach(backdate)
     try {
-      Sources.reapDeadPidScratch()
+      graft.Fs.reapDeadPidScratch(immediate = false)
       dead.foreach(d => assert(!d.exists(), s"$d should be reaped"))
       kept.foreach(d => assert(d.exists(), s"$d must survive"))
     } finally (dead ++ kept).foreach(graft.Fs.rmTree)
@@ -61,10 +61,10 @@ class ScratchReaperSpec extends AnyFunSuite {
     val tmp = System.getProperty("java.io.tmpdir")
     // fresh mtime = a run in another pid namespace could still be
     // writing it; only an hour of silence makes it provably dead
-    val fresh = new java.io.File(s"$tmp/graft_src_$deadPid")
+    val fresh = new java.io.File(s"$tmp/graft_scratch_$deadPid")
     mkFixture(fresh)
     try {
-      Sources.reapDeadPidScratch()
+      graft.Fs.reapDeadPidScratch(immediate = false)
       assert(fresh.exists(), "recent dead-pid dir must survive the sweep")
     } finally graft.Fs.rmTree(fresh)
   }
@@ -77,17 +77,17 @@ class ScratchReaperSpec extends AnyFunSuite {
     // scratch-using query until the dir is hand-removed. Planted in the
     // STREAM root, which the sweep processes before tmpdir…
     val huge = new java.io.File(
-      s"${Sources.streamScratchRoot}/graft_stream_ckpt_99999999999999999999")
+      s"${graft.Fs.streamScratchRoot}/graft_scratch_99999999999999999999")
     // …and an eligible dead-pid dir in tmpdir: the sweep wraps NonFatal,
     // so "huge survived" alone would also pass if the parse threw and
     // the whole sweep was skipped — the dead dir being reaped proves the
     // sweep ran to completion PAST the hostile name (the roots iterate
-    // in sequence order, stream prefixes before graft_src_, so this
-    // ordering holds even when the two roots are the same directory)
-    val dead = new java.io.File(s"$tmp/graft_src_$deadPid")
+    // in sequence order, stream root first; when the two roots are the
+    // same directory a throw anywhere in its listing skips the dead dir)
+    val dead = new java.io.File(s"$tmp/graft_scratch_$deadPid")
     Seq(huge, dead).foreach { d => mkFixture(d); backdate(d) }
     try {
-      Sources.reapDeadPidScratch()
+      graft.Fs.reapDeadPidScratch(immediate = false)
       assert(huge.exists(), "unparseable-pid dir must survive the sweep")
       assert(!dead.exists(),
         "sweep must complete past the hostile name and reap the dead dir")
@@ -101,22 +101,18 @@ class ScratchReaperSpec extends AnyFunSuite {
     val tmp = System.getProperty("java.io.tmpdir")
     // fresh mtimes throughout — exactly the tree the default quiet
     // window refuses (previous test); only the flag changes the outcome
-    val fresh = new java.io.File(s"$tmp/graft_src_$deadPid")
+    val fresh = new java.io.File(s"$tmp/graft_scratch_$deadPid")
     val kept = Seq(
-      new java.io.File(s"$tmp/graft_src_${self}_reapnowtest"),
-      new java.io.File(s"$tmp/graft_src_nopid_reapnow"))
+      new java.io.File(s"$tmp/graft_scratch_${self}_reapnowtest"),
+      new java.io.File(s"$tmp/graft_scratch_nopid_reapnow"))
     (fresh +: kept).foreach(mkFixture)
-    System.setProperty("graft.reap.immediate", "1")
     try {
-      assert(Sources.reapImmediate)
-      Sources.reapDeadPidScratch()
+      graft.Fs.reapDeadPidScratch(immediate = false)
+      assert(fresh.exists(), "the same sweep without the flag keeps the dir")
+      graft.Fs.reapDeadPidScratch(immediate = true)
       assert(!fresh.exists(), "immediate mode must reap on pid-death alone")
       kept.foreach(d => assert(d.exists(), s"$d must survive"))
-    } finally {
-      System.clearProperty("graft.reap.immediate")
-      (fresh +: kept).foreach(graft.Fs.rmTree)
-    }
-    assert(!Sources.reapImmediate, "flag must not leak past the test")
+    } finally (fresh +: kept).foreach(graft.Fs.rmTree)
   }
 
   test("scratch-root resolution: writable tmpfs wins, anything else " +
@@ -125,16 +121,16 @@ class ScratchReaperSpec extends AnyFunSuite {
     val writable = new java.io.File(s"$tmp/graft_root_probe_w")
     assert(writable.mkdirs() || writable.isDirectory)
     try {
-      assert(Sources.resolveScratchRoot(writable, "/fallback")
+      assert(graft.Fs.resolveScratchRoot(writable, "/fallback")
         == writable.getPath)
       // a missing dir (the no-/dev/shm container case) must fall back
-      assert(Sources.resolveScratchRoot(
+      assert(graft.Fs.resolveScratchRoot(
         new java.io.File(s"$tmp/graft_root_probe_missing"), "/fallback")
         == "/fallback")
       // a FILE at the tmpfs path is not a usable root either
       val asFile = new java.io.File(s"$tmp/graft_root_probe_file")
       asFile.createNewFile()
-      try assert(Sources.resolveScratchRoot(asFile, "/fallback")
+      try assert(graft.Fs.resolveScratchRoot(asFile, "/fallback")
         == "/fallback")
       finally graft.Fs.rmTree(asFile)
       // an unwritable dir falls back (root can write anywhere, so only
@@ -144,20 +140,20 @@ class ScratchReaperSpec extends AnyFunSuite {
       try {
         ro.setWritable(false, false)
         if (!ro.canWrite)
-          assert(Sources.resolveScratchRoot(ro, "/fallback") == "/fallback")
+          assert(graft.Fs.resolveScratchRoot(ro, "/fallback") == "/fallback")
       } finally { ro.setWritable(true, false); graft.Fs.rmTree(ro) }
       // explicit-override precedence: a usable override beats tmpfs; an
       // unusable or empty one falls through to the tmpfs-then-disk chain
       val shm = new java.io.File(s"$tmp/graft_root_probe_shm")
       assert(shm.mkdirs() || shm.isDirectory)
       try {
-        assert(Sources.chooseScratchRoot(Some(writable.getPath), shm, "/disk")
+        assert(graft.Fs.chooseScratchRoot(Some(writable.getPath), shm, "/disk")
           == writable.getPath)
-        assert(Sources.chooseScratchRoot(
+        assert(graft.Fs.chooseScratchRoot(
           Some(s"$tmp/graft_root_probe_missing"), shm, "/disk") == shm.getPath)
-        assert(Sources.chooseScratchRoot(Some(""), shm, "/disk") == shm.getPath)
-        assert(Sources.chooseScratchRoot(None, shm, "/disk") == shm.getPath)
-        assert(Sources.chooseScratchRoot(
+        assert(graft.Fs.chooseScratchRoot(Some(""), shm, "/disk") == shm.getPath)
+        assert(graft.Fs.chooseScratchRoot(None, shm, "/disk") == shm.getPath)
+        assert(graft.Fs.chooseScratchRoot(
           None, new java.io.File(s"$tmp/graft_root_probe_missing"), "/disk")
           == "/disk")
       } finally graft.Fs.rmTree(shm)
@@ -171,12 +167,12 @@ class ScratchReaperSpec extends AnyFunSuite {
     val tmp = System.getProperty("java.io.tmpdir")
     val victim = new java.io.File(s"$tmp/graft_reapertest_victim")
     mkFixture(victim)
-    val link = new java.io.File(s"$tmp/graft_src_${deadPid - 1}")
+    val link = new java.io.File(s"$tmp/graft_scratch_${deadPid - 1}")
     java.nio.file.Files.deleteIfExists(link.toPath)
     java.nio.file.Files.createSymbolicLink(link.toPath, victim.toPath)
     backdate(victim) // eligible by age+pid — only the link guards apply
     try {
-      Sources.reapDeadPidScratch()
+      graft.Fs.reapDeadPidScratch(immediate = false)
       assert(new java.io.File(victim, "marker").exists(),
         "reaper must not delete through a symlink")
       // rmTree on the link itself removes the LINK, not the target
