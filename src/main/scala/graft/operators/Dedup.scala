@@ -897,27 +897,11 @@ object Dedup extends QueryModule {
 
   /** [[minhashPairs]] over the char-gram signatures of the routed
     * corpus ∪ [[CJK_NEARDUP_DOCS]]. The planted rows are visible in
-    * this query's output by design; a pipeline deduplicating a real
-    * corpus calls the plant-free [[chargramPairsOf]].
+    * this query's output by design.
     */
   private def chargramPairs(s: SparkSession, d: String): DataFrame =
     verifiedPairsOfSigs(charSigTable(s, d), 0.5)
       .orderBy("doc_a", "doc_b")
-
-  /** Plant-free char-gram near-dup pairs over an arbitrary
-    * `(doc_id, text, ...)` frame — the production entry point: routes
-    * to the unsegmented class ([[ScriptRouting]]), builds char-gram
-    * signatures, and runs the shared band + verify pipeline. Callers
-    * with multiple consumers persist the signature frame themselves
-    * (the contract instance memoizes its own). Output matches
-    * [[signatures]]' word-base pair shape, so the two bases compose
-    * into one routed edge set by plain union — exactly what the CC
-    * cluster path does.
-    */
-  def chargramPairsOf(docs: DataFrame, threshold: Double = 0.5): DataFrame =
-    verifiedPairsOfSigs(
-      sigOf(withCharShingles(ScriptRouting.routed(docs))
-        .select("doc_id", "shingles")), threshold)
 
   /** Oracle twin of [[withCharShingles]] over the routed corpus ∪
     * `planted` (DuckDB's substr/length are code-point-indexed, matching

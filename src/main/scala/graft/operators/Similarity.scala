@@ -466,10 +466,10 @@ object Similarity extends QueryModule {
   // The sim_* queries above are driver-gated fixed-parameter instances;
   // these are the forms a pipeline embeds, with the two scale knobs —
   // LSH tables (bands) and IVF probes — as arguments so recall/cost can
-  // be tuned per deployment. RecallCurve (a main) measures recall@k of
-  // both against the brute baseline on a synthetic clustered corpus;
-  // AnnRecallSpec pins floors at the documented settings; SCALE.md
-  // carries the measured curve.
+  // be tuned per deployment. SCALE.md §"ANN recall vs cost" records
+  // recall@k of both against the brute baseline on a synthetic
+  // clustered corpus; AnnRecallSpec pins floors at the documented
+  // settings.
   //
   // Contract: `corpus` has (vec_id, embedding), `queries` (qid, qe).
   // Query ids and corpus ids are separate namespaces (no self-exclusion
@@ -570,7 +570,7 @@ object Similarity extends QueryModule {
     * broadcast) codebook per query, probe the `nprobe` best cells, and
     * exact-cosine re-rank only inside probed cells. Corpus-side work
     * scales with cells probed, not corpus size; recall grows with
-    * `nprobe` — the standard IVF trade, measured in RecallCurve.
+    * `nprobe` — the standard IVF trade (SCALE.md §"ANN recall vs cost").
     */
   def annIvf(corpus: DataFrame, queries: DataFrame, k: Int,
       cells: DataFrame, nprobe: Int): DataFrame = {
@@ -589,12 +589,12 @@ object Similarity extends QueryModule {
 
   /** (vec_id, band, code) rows of the parameterized sign-LSH band family
     * — the candidate-blocking projection shared by [[nearDupPairs]] and
-    * the occupancy probe in [[graft.PairScaleBench]], which integrates
+    * PairScaleSpec's occupancy integral `candidateCount`, which sums
     * Σ C(bucket, 2) over these rows to PRICE a knob setting (the exact
     * pre-distinct candidate count) in O(N·bands) without materializing
     * a single candidate pair.
     */
-  def bandCodes(corpus: DataFrame, api: String, bands: Int,
+  private[graft] def bandCodes(corpus: DataFrame, api: String, bands: Int,
       bits: Int): DataFrame =
     bandCodesCarrying(corpus, api, bands, bits)
       .select("vec_id", "band", "code")
@@ -686,10 +686,10 @@ object Similarity extends QueryModule {
     * occupancy pinned near [[SCALED_OCC]] throughout, candidate volume
     * linear in n. Verify stays INLINE in the bucket join (same shape as
     * [[nearDupPairs]], pinned by AnnRecallSpec): candidates are priced
-    * in CPU, never shuffled. Recall at the derived point is measured by
-    * RecallCurve's pair grid and floored in AnnRecallSpec — wider bands
-    * trade recall at moderate sims for scale-linearity; `dim` is the
-    * caller's embedding dimension (knobs always satisfy
+    * in CPU, never shuffled. Recall at the derived point is recorded in
+    * SCALE.md's pair-recall tables and floored in AnnRecallSpec — wider
+    * bands trade recall at moderate sims for scale-linearity; `dim` is
+    * the caller's embedding dimension (knobs always satisfy
     * bands·bits <= dim, and a short row still fails loudly in-plan).
     */
   def nearDupPairsScaled(corpus: DataFrame, dim: Int,
@@ -730,7 +730,7 @@ object Similarity extends QueryModule {
     * rehearsal (candidates ~N²/2⁶ past ~10⁵ vectors, SCALE.md). The
     * fixed-knob form stays available to callers and is still exercised
     * at fixture scale (AnnRecallSpec's recall/false-pair curves,
-    * PairScaleBench's occupancy pricing); no CONTRACT query binds it
+    * PairScaleSpec's occupancy pricing); no CONTRACT query binds it
     * any more. The derivation here is one driver-side count — the
     * 1-row-aggregate touchpoint — and lands on the identical operating
     * point [[nearDupPairsScaled]] derives IN the plan, so the two

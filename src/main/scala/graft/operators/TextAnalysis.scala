@@ -1055,7 +1055,7 @@ object TextAnalysis extends QueryModule {
     * blocks are released as soon as the next round has materialized
     * from them, train path included. Rounds 1–12 retained the train
     * path's blocks by contract (the per-round `bests` frames referenced
-    * them lazily) and BpeLadderBench measured the cost: retained-RDD
+    * them lazily) and BPE_LADDER.json records the cost: retained-RDD
     * block-manager/scheduler bookkeeping grew the per-round constant 3×
     * by round 1000 (0.84 s/round, BPE_LADDER.json r12 arm) — a 32k-merge
     * production train was ~7.5 h of pure bookkeeping. With the eager

@@ -14,13 +14,60 @@ import org.apache.spark.sql.graft.DotProductD
   * plans, 6-dp-rounded scores), so these are exact regression pins with
   * margin, not flaky statistical tests: at this corpus the measured
   * values are LSH(8×8) = 0.962 and IVF(nprobe=2/128) = 1.000
-  * (RecallCurve, n=10000 nq=50; the committed 50k run reads 0.960 /
-  * 1.000). A drop below the floor means candidate generation silently
-  * lost collisions — the regression class this spec exists to catch.
+  * (n=10000 nq=50; the 50k run in SCALE.md §"ANN recall vs cost" reads
+  * 0.960 / 1.000). A drop below the floor means candidate generation
+  * silently lost collisions — the regression class this spec exists to
+  * catch.
   */
 class AnnRecallSpec extends SparkSpec {
 
   private val K = 10
+
+  /** |approx ∩ truth| / |truth| over (qid, vec_id) pairs — overall
+    * recall@k (truth has exactly k rows per query, so micro == macro
+    * up to per-query candidate shortfalls, which count as misses).
+    */
+  private def recallVs(truth: DataFrame, approx: DataFrame): Double = {
+    val t = truth.select("qid", "vec_id")
+    val hit = t.join(approx.select("qid", "vec_id"), Seq("qid", "vec_id"))
+      .count()
+    hit.toDouble / t.count()
+  }
+
+  /** Exact cosine of EVERY pair (va < vb, 6-dp-rounded like
+    * [[operators.Similarity.nearDupPairs]]) — the ground truth the pair
+    * curve thresholds per minSim. All-pairs by construction (that is
+    * what makes it truth), so only run it on measurement-sized corpora;
+    * the one-sided broadcast keeps it a single streaming nested-loop
+    * pass.
+    */
+  private def pairSims(corpus: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{broadcast, col, round}
+    import org.apache.spark.sql.graft.VectorColumns.{vecDot, vecNorm}
+    val e = corpus.select(col("vec_id"), col("embedding"),
+      vecNorm(col("embedding")).as("nrm"))
+    val a = e.select(col("vec_id").as("va"), col("embedding").as("ea"),
+      col("nrm").as("na"))
+    val b = e.select(col("vec_id").as("vb"), col("embedding").as("eb"),
+      col("nrm").as("nb"))
+    a.join(broadcast(b), col("va") < col("vb"))
+      .withColumn("sim",
+        round(vecDot(col("ea"), col("eb")) / (col("na") * col("nb")), 6))
+      .select("va", "vb", "sim")
+  }
+
+  /** (pair recall, false pairs) of `found` against `truth` (both
+    * (va, vb) sets). False pairs are found-but-not-true — structurally
+    * zero for nearDupPairs because its verify stage is the same exact
+    * cosine as the truth; the count is measured anyway so the claim is
+    * an observation, not an argument.
+    */
+  private def pairStats(truth: DataFrame, found: DataFrame): (Double, Long) = {
+    val t = truth.select("va", "vb")
+    val f = found.select("va", "vb")
+    val hit = f.join(t, Seq("va", "vb")).count()
+    (hit.toDouble / math.max(t.count(), 1L), f.count() - hit)
+  }
 
   test("recall@10 floors: sign-LSH >= 0.9 at 8 tables x 8 bits, IVF " +
       ">= 0.99 at nprobe=2 of 128 k-means cells; brute is the baseline") {
@@ -31,19 +78,19 @@ class AnnRecallSpec extends SparkSpec {
       val truth = Similarity.annBrute(corpus, queries, K).persist()
       assert(truth.count() == 50L * K, "baseline must yield full top-k")
 
-      val lsh = RecallCurve.recallVs(
+      val lsh = recallVs(
         truth, Similarity.annLsh(corpus, queries, K, bands = 8, bits = 8))
       assert(lsh >= 0.9, s"LSH recall@10 regressed: $lsh < 0.9")
 
       val cells = Similarity.trainCells(corpus, 0L until 128L, iters = 3)
         .persist()
-      val ivf = RecallCurve.recallVs(
+      val ivf = recallVs(
         truth, Similarity.annIvf(corpus, queries, K, cells, nprobe = 2))
       assert(ivf >= 0.99, s"IVF recall@10 regressed: $ivf < 0.99")
 
       // the knobs actually buy recall: one table / one probe must be
       // strictly worse-or-equal, and visibly so for the single table
-      val lsh1 = RecallCurve.recallVs(
+      val lsh1 = recallVs(
         truth, Similarity.annLsh(corpus, queries, K, bands = 1, bits = 8))
       assert(lsh1 < lsh, s"more tables must not lose recall ($lsh1 vs $lsh)")
       truth.unpersist(); cells.unpersist()
@@ -78,11 +125,11 @@ class AnnRecallSpec extends SparkSpec {
       SyntheticVectors.corpusAndQueries(spark, 2000, 0, 64, 128, 42L)
     val corpus = corpus0.persist()
     try {
-      val sims = RecallCurve.pairSims(corpus).persist()
+      val sims = pairSims(corpus).persist()
       val truth = sims.filter(org.apache.spark.sql.functions.col("sim") >= 0.9)
       val found8 = Similarity.nearDupPairs(corpus, bands = 8, bits = 8,
         minSim = 0.9)
-      val (rec8, false8) = RecallCurve.pairStats(truth, found8)
+      val (rec8, false8) = pairStats(truth, found8)
       info(f"pair recall at 8x8: $rec8%.3f")
       assert(rec8 >= 0.9, s"pair recall regressed: $rec8 < 0.9")
       // exactly ONE row per (va, vb): the terminal dropDuplicates keys
@@ -98,7 +145,7 @@ class AnnRecallSpec extends SparkSpec {
           "distinct no longer collapses cross-band candidates")
       assert(false8 == 0L,
         "the exact-cosine verify stage admits no false pairs")
-      val (rec2, _) = RecallCurve.pairStats(truth,
+      val (rec2, _) = pairStats(truth,
         Similarity.nearDupPairs(corpus, bands = 2, bits = 8, minSim = 0.9))
       assert(rec2 < rec8, s"more bands must buy recall ($rec2 vs $rec8)")
       sims.unpersist()

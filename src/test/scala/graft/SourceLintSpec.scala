@@ -217,11 +217,22 @@ class SourceLintSpec extends AnyFunSuite {
     // of an iterative loop; anywhere else it is probably a mistake.
     // ScaleUp's 1-row max-key probe guards the stride shift — a fixture
     // tool, not an operator (same class as its coalesce(1) exemption).
-    // PairScaleBench's occupancy integral reduces to ONE scalar (the
-    // priced candidate count) — a measurement main, not an operator.
     val hits = offenders(".head()", "graft",
       exempt = Set("graft/operators/ConnectedComponents.scala",
-        "graft/ScaleUp.scala", "graft/PairScaleBench.scala"))
+        "graft/ScaleUp.scala"))
     assert(hits.isEmpty, s"unexpected driver-side head() in: $hits")
+  }
+
+  test("the only mains are Bench, Verify, Explain and ScaleUp") {
+    // one measurement harness: timing is a Bench run, the driver
+    // contract a Verify run, a plan audit an Explain run, and ScaleUp
+    // writes the fixtures perfbench reads. A rehearsal main grows its
+    // own loop, stderr tags and JSON beside Bench's; its numbers stay
+    // in the committed records (SCALE.md, BPE_LADDER.json) instead.
+    val allowed = Set("Bench.scala", "Verify.scala", "Explain.scala",
+      "ScaleUp.scala").map("graft/" + _)
+    val mains = Seq("def main(", "extends App")
+      .flatMap(offenders(_, "", exempt = allowed))
+    assert(mains.isEmpty, s"a main outside the four harness mains in: $mains")
   }
 }

@@ -129,10 +129,9 @@ class StreamRecoverySpec extends SparkSpec {
   }
 
   test("tumbling-append restart from the same checkpoint dir loses and duplicates nothing (tmpfs root)") {
-    val shm = new File("/dev/shm")
-    assume(shm.isDirectory && shm.canWrite, "/dev/shm not writable here")
-    val base = new File(shm,
-      s"graft_recovery_tmpfs_${ProcessHandle.current().pid()}")
+    assume(Fs.streamScratchRoot == "/dev/shm",
+      s"stream scratch root is ${Fs.streamScratchRoot}, not tmpfs")
+    val base = new File(Fs.streamScratch("spec_recovery"))
     base.mkdirs()
     try runScenario(base) finally Fs.rmTree(base)
   }

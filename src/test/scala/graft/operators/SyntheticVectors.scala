@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Deterministic clustered-Gaussian vector fixtures for ANN recall
-  * evaluation (RecallCurve, AnnRecallSpec).
+  * evaluation (AnnRecallSpec, PairScaleSpec; the same generator made
+  * the SCALE.md §"ANN recall vs cost" tables).
   *
   * Shape matters for the measurement: on UNIFORM random vectors every
   * non-identical pair is near-orthogonal in high dimension, so "the 10
