@@ -4,7 +4,7 @@ import graft.{QueryModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.graft.VectorColumns.{vecDot, vecNorm}
+import org.apache.spark.sql.graft.VectorColumns.{signBandCodes, vecDot, vecNorm}
 
 /** Approximate-nearest-neighbor / similarity search over
   * `embeddings.embedding: array<float>`.
@@ -140,11 +140,12 @@ object Similarity extends QueryModule {
 
   // ---- sign-LSH bucketed top-k ---------------------------------------
 
-  private def lshBucketExpr(emb: String): String =
-    (1 to LSHBITS)
-      .map(i => s"CASE WHEN $emb[${i - 1}] >= 0 THEN '1' ELSE '0' END")
-      .mkString("concat(", ", ", ")")
-
+  /** DuckDB bucket: the sign bits of the first LSHBITS dims as a '0'/'1'
+    * string. The Spark side keys on the same bits as a one-band
+    * SignBandCodes array (never null, so no null filter is inferred on
+    * it); equal codes are equal strings, so both engines form the same
+    * buckets.
+    */
   private def lshBucketSql(emb: String): String =
     (1 to LSHBITS)
       .map(i => s"CASE WHEN $emb[$i] >= 0 THEN '1' ELSE '0' END")
@@ -152,7 +153,8 @@ object Similarity extends QueryModule {
 
   private def topkLsh(s: SparkSession, d: String): DataFrame = {
     val emb = withNorm(embeddings(s, d))
-      .withColumn("bucket", expr(lshBucketExpr("embedding")))
+      .withColumn("bucket", signBandCodes(col("embedding"), lit(1),
+        lit(LSHBITS), "sim_topk_lsh"))
     val q = queriesOf(emb, col("bucket").as("qbucket"))
     topK(emb.join(broadcast(q), col("bucket") === col("qbucket") &&
         col("vec_id") =!= col("qid")), TOPK)
@@ -487,9 +489,10 @@ object Similarity extends QueryModule {
 
   /** Knob validation for the parameterized LSH APIs. The static part is
     * a driver-side require; the data-dependent part (bands·bits must fit
-    * the embedding dimension) is enforced IN the plan by
-    * [[guardedBandCode]] rather than a first-row probe, so it holds on
-    * every row, costs no extra job, and stays distributed.
+    * the embedding dimension) is enforced IN the plan by the
+    * [[org.apache.spark.sql.graft.SignBandCodes]] kernel rather than a
+    * first-row probe, so it holds on every row, costs no extra job, and
+    * stays distributed.
     */
   private def requireKnobs(api: String, bands: Int, bits: Int): Unit = {
     require(bands >= 1 && bits >= 1 && bits <= 30,
@@ -498,25 +501,14 @@ object Similarity extends QueryModule {
     ()
   }
 
-  /** Band-code expression for band `b` reading dims [b·bits, (b+1)·bits),
-    * guarded against the dimension under-run: band b needs the embedding
-    * to hold at least bits·(b+1) entries, and an out-of-range access
-    * would either throw a cryptic INVALID_ARRAY_INDEX (ANSI on) or
-    * silently evaluate NULL → bit 0 (ANSI off), collapsing every vector
-    * of the short bands into one bucket (~N² candidates). The guard
-    * raises a readable error naming the knobs instead, under either
-    * ANSI setting.
+  /** The (band, code) generator: one row per band, the codes from the
+    * [[org.apache.spark.sql.graft.SignBandCodes]] kernel, which raises
+    * naming `api` on an embedding shorter than bands·bits. `bands` and
+    * `bits` are literal knobs or knob columns.
     */
-  private def guardedBandCode(api: String, emb: String, b: Int,
-      bands: Int, bits: Int): String = {
-    val code = (0 until bits)
-      .map(j => s"CASE WHEN $emb[${bits * b + j}] >= 0 THEN ${1 << j} ELSE 0 END")
-      .mkString(" + ")
-    s"""IF(size($emb) >= ${bits * (b + 1)}, $code,
-       |  raise_error(concat('$api: bands*bits = ${bands * bits} exceeds the ',
-       |    'embedding dimension ', size($emb),
-       |    ' -- lower bands or bits so bands*bits <= dim')))""".stripMargin
-  }
+  private def bandRows(emb: Column, bands: Column, bits: Column,
+      api: String): Column =
+    posexplode(signBandCodes(emb, bands, bits, api)).as(Seq("band", "code"))
 
   /** Exact cosine top-k: the recall baseline. Corpus side streams
     * partition-parallel, the query set rides a broadcast, per-query
@@ -536,19 +528,17 @@ object Similarity extends QueryModule {
     * exact cosine. Recall grows with `bands` (more tables → more
     * collisions), cost with bands · occupancy ≈ bands · N/2^bits —
     * both knobs explicit, the standard LSH trade. Shuffle key is the
-    * (band, code) digest, never an embedding.
+    * (band, code) digest, never an embedding; corpus and query codes
+    * both come from the [[org.apache.spark.sql.graft.SignBandCodes]]
+    * kernel.
     */
   def annLsh(corpus: DataFrame, queries: DataFrame, k: Int,
       bands: Int, bits: Int): DataFrame = {
     requireKnobs("annLsh", bands, bits)
     def codes(df: DataFrame, idCol: String, emb: String): DataFrame =
-      df.select(col(idCol),
-        posexplode(array((0 until bands).map(b =>
-          expr(guardedBandCode("annLsh", emb, b, bands, bits))): _*))
-          .as(Seq("band", "code")))
+      df.select(col(idCol), bandRows(col(emb), lit(bands), lit(bits), "annLsh"))
     val cand = codes(corpus, "vec_id", "embedding")
-      .join(broadcast(codes(queries.withColumnRenamed("qe", "embedding"), "qid", "embedding")),
-        Seq("band", "code"))
+      .join(broadcast(codes(queries, "qid", "qe")), Seq("band", "code"))
       .select("qid", "vec_id").distinct()
     rerank(cand, corpus, queries, k)
   }
@@ -587,7 +577,8 @@ object Similarity extends QueryModule {
     rerank(cand, corpus, queries, k)
   }
 
-  /** (vec_id, band, code) rows of the parameterized sign-LSH band family
+  /** (vec_id, band, code) rows of the parameterized sign-LSH band family,
+    * coded by the [[org.apache.spark.sql.graft.SignBandCodes]] kernel
     * — the candidate-blocking projection shared by [[nearDupPairs]] and
     * PairScaleSpec's occupancy integral `candidateCount`, which sums
     * Σ C(bucket, 2) over these rows to PRICE a knob setting (the exact
@@ -603,15 +594,16 @@ object Similarity extends QueryModule {
     * on every exploded row — the join input of the verify-inline pairs
     * shape. Catalyst prunes the carried columns out of the probe's
     * occupancy aggregate, so sharing one projection keeps the probe's
-    * price and the operator's blocking keys from ever drifting.
+    * price and the operator's blocking keys from ever drifting. The
+    * codes come from one call of the
+    * [[org.apache.spark.sql.graft.SignBandCodes]] kernel per row, so
+    * the projection's generated method stays small at any bands × bits.
     */
   private def bandCodesCarrying(corpus: DataFrame, api: String, bands: Int,
       bits: Int, carry: String*): DataFrame =
     withNorm(corpus).select((col("vec_id") +: carry.map(col)) ++ Seq(
       col("embedding"), col("nrm"),
-      posexplode(array((0 until bands).map(b =>
-        expr(guardedBandCode(api, "embedding", b, bands, bits))): _*))
-        .as(Seq("band", "code"))): _*)
+      bandRows(col("embedding"), lit(bands), lit(bits), api)): _*)
 
   /** Embedding near-dup PAIRS — the parameterized form of the fixed
     * sim_cos_pairs query, for arbitrary corpora: banded sign-LSH
@@ -691,6 +683,9 @@ object Similarity extends QueryModule {
     * bands trade recall at moderate sims for scale-linearity; `dim` is
     * the caller's embedding dimension (knobs always satisfy
     * bands·bits <= dim, and a short row still fails loudly in-plan).
+    * The broadcast knob columns feed the same
+    * [[org.apache.spark.sql.graft.SignBandCodes]] kernel as the
+    * fixed-knob forms, so both binding modes share one band coding.
     */
   def nearDupPairsScaled(corpus: DataFrame, dim: Int,
       minSim: Double): DataFrame = {
@@ -701,18 +696,10 @@ object Similarity extends QueryModule {
       .select(expr(scaledBitsSql("n")).as("bits"))
       .select(col("bits"),
         greatest(lit(1), expr(s"CAST(floor($dim / bits) AS INT)")).as("bands"))
-    val codesArr =
-      s"""transform(sequence(0, bands - 1), b ->
-         |  IF(size(embedding) >= (b + 1) * bits,
-         |    aggregate(sequence(0, bits - 1), 0, (acc, j) ->
-         |      acc + IF(element_at(embedding, b * bits + j + 1) >= 0,
-         |               shiftleft(1, j), 0)),
-         |    raise_error(concat('nearDupPairsScaled: derived bands*bits = ',
-         |      bands * bits, ' exceeds the embedding dimension ',
-         |      size(embedding), ' -- pass the corpus'' true dim'))))""".stripMargin
     val codes = withNorm(corpus).crossJoin(broadcast(knobs))
       .select(col("vec_id"), col("embedding"), col("nrm"),
-        posexplode(expr(codesArr)).as(Seq("band", "code")))
+        bandRows(col("embedding"), col("bands"), col("bits"),
+          "nearDupPairsScaled"))
     cosinePairsOf(codes, Seq("band", "code"), minSim)
   }
 

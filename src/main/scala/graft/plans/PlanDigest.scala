@@ -70,15 +70,20 @@ object PlanDigest {
     }
   }
 
-  def digest(s: SparkSession, df: DataFrame): Seq[String] = {
+  /** The frame's prepared plan with AQE off: codegen stages collapsed,
+    * the tree the digest walks and `PlanDigestSpec` compiles.
+    */
+  def prepared(s: SparkSession, df: DataFrame): SparkPlan =
     // executedPlan is lazy and reads the conf of the frame's OWN session
     // when first forced — which is not always `s`: rel_bloom_join builds
     // on a child session (its injection thresholds must not leak into
-    // the caller), so scope AQE-off on df.sparkSession too or its digest
+    // the caller), so scope AQE-off on df.sparkSession too or its plan
     // collapses to a single opaque AdaptiveSparkPlan node (nesting under
     // all()'s scope is idempotent when the sessions coincide)
-    val plan = withAqeOff(s)(
-      withAqeOff(df.sparkSession)(df.queryExecution.executedPlan))
+    withAqeOff(s)(withAqeOff(df.sparkSession)(df.queryExecution.executedPlan))
+
+  def digest(s: SparkSession, df: DataFrame): Seq[String] = {
+    val plan = prepared(s, df)
     val out = Seq.newBuilder[String]
     def walk(p: SparkPlan, depth: Int): Unit = {
       out += ("  " * depth) + clean(summary(p))

@@ -356,4 +356,20 @@ class AnnRecallSpec extends SparkSpec {
       Similarity.annLsh(corpus, queries, K, bands = 0, bits = 8))
     assert(e3.getMessage.contains("bands >= 1"))
   }
+
+  test("nearDupPairsScaled: a dim beyond the embedding's raises naming the " +
+      "API and the derived bands*bits") {
+    val (corpus, _) =
+      SyntheticVectors.corpusAndQueries(spark, 200, 1, 64, 8, 11L)
+    // knobs derived for dim 128 read past the 64-dim rows
+    val bits = Similarity.scaledBits(200)
+    val need = Similarity.scaledBands(128, bits) * bits
+    val e = intercept[Exception] {
+      Similarity.nearDupPairsScaled(corpus, 128, minSim = 0.9).count()
+    }
+    val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+      .take(10).flatMap(t => Option(t.getMessage)).mkString("\n")
+    assert(msgs.contains("nearDupPairsScaled") &&
+      msgs.contains(s"bands*bits = $need"), s"got: $msgs")
+  }
 }

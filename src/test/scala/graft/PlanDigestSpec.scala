@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.debug.codegenStringSeq
+
 /** Automated PLANS.md: every batch query's prepared physical plan is
   * digested ([[plans.PlanDigest]]) and diffed against the committed
   * `PLAN_DIGEST.json`, so a silent plan flip — a Spark upgrade
@@ -91,6 +93,33 @@ class PlanDigestSpec extends SparkSpec {
         case _               => None
       }
     }
+  }
+
+  test("no whole-stage codegen method reaches HotSpot's 8000-byte " +
+      "JIT limit") {
+    // HotSpot never JIT-compiles a method of 8000 bytecode bytes or more
+    // (DontCompileHugeMethods), while Spark keeps whole-stage codegen up
+    // to spark.sql.codegen.hugeMethodLimit = 65535: a stage in between
+    // runs in the bytecode interpreter for the life of the JVM. Every
+    // digested query's prepared plan is compiled here and each codegen
+    // subtree's largest method must stay below the JIT's limit.
+    val limit = 8000
+    freshCacheState()
+    try {
+      val sizes = withConfs("spark.sql.adaptive.enabled" -> "false") {
+        plans.PlanDigest.digestableQueries.map { n =>
+          val plan = plans.PlanDigest.prepared(spark,
+            SparkEntry.queries(n)(spark, sfDir))
+          n -> codegenStringSeq(plan).map(_._3.maxMethodCodeSize)
+            .foldLeft(0)(math.max)
+        }
+      }
+      info("largest methods: " + sizes.sortBy(-_._2).take(3)
+        .map { case (n, b) => s"$n $b bytes" }.mkString(", "))
+      val over = sizes.filter(_._2 >= limit)
+      assert(over.isEmpty, s"generated methods at or past $limit bytes " +
+        s"run interpreted: ${over.map { case (n, b) => s"$n $b" }.mkString(", ")}")
+    } finally freshCacheState()
   }
 
   test("digest is deterministic within a session") {

@@ -89,4 +89,141 @@ object VectorExpressionProps extends Properties("VecDot") {
             acc + p._1.doubleValue * p._2.doubleValue))
       sameBits(e.eval(null), model)
     }
+
+  // ---- SignBandCodes ---------------------------------------------------
+
+  /** The band coding SignBandCodes replaced, verbatim: one guarded
+    * `CASE WHEN emb[i] >= 0` arm per bit — the kernel's contract is
+    * equality with THIS under Spark's compare (null element → 0, NaN
+    * and -0.0 → 1) and a raise naming `api` on a short embedding.
+    */
+  private def guardedBandCode(api: String, emb: String, b: Int,
+      bands: Int, bits: Int): String = {
+    val code = (0 until bits)
+      .map(j => s"CASE WHEN $emb[${bits * b + j}] >= 0 THEN ${1 << j} ELSE 0 END")
+      .mkString(" + ")
+    s"""IF(size($emb) >= ${bits * (b + 1)}, $code,
+       |  raise_error(concat('$api: bands*bits = ${bands * bits} exceeds the ',
+       |    'embedding dimension ', size($emb),
+       |    ' -- lower bands or bits so bands*bits <= dim')))""".stripMargin
+  }
+
+  private val bandApi = "bandSpec"
+
+  import org.apache.spark.sql.types._
+
+  /** Embedding elements dense in the compare's edge cases. */
+  private val bandElem: Gen[java.lang.Double] = Gen.frequency(
+    6 -> Gen.chooseNum(-4.0, 4.0).map(java.lang.Double.valueOf),
+    2 -> Gen.const(java.lang.Double.valueOf(0.0)),
+    2 -> Gen.const(java.lang.Double.valueOf(-0.0)),
+    2 -> Gen.const(java.lang.Double.valueOf(Double.NaN)),
+    1 -> Gen.oneOf(Double.PositiveInfinity, Double.NegativeInfinity)
+      .map(java.lang.Double.valueOf),
+    2 -> Gen.const(null: java.lang.Double))
+
+  /** One case: element type, knobs, embeddings of at least bands·bits
+    * entries, and maybe one short or null embedding that must raise.
+    */
+  private case class BandCase(isFloat: Boolean, bands: Int, bits: Int,
+      good: Seq[Seq[java.lang.Double]], bad: Option[Seq[java.lang.Double]]) {
+    val need: Int = bands * bits
+    val arrType: ArrayType =
+      ArrayType(if (isFloat) FloatType else DoubleType, containsNull = true)
+    /** As the column's external type: float columns hold Floats. */
+    def external(a: Seq[java.lang.Double]): Seq[Any] =
+      if (a == null) null
+      else if (isFloat) a.map(v => if (v == null) null else java.lang.Float.valueOf(v.floatValue))
+      else a
+  }
+
+  private val bandCaseGen: Gen[BandCase] = for {
+    isFloat <- Gen.oneOf(true, false)
+    bands <- Gen.choose(1, 4)
+    bits <- Gen.choose(1, 8)
+    good <- Gen.listOfN(6, Gen.choose(0, 2).flatMap(extra =>
+      Gen.listOfN(bands * bits + extra, bandElem)))
+    bad <- Gen.frequency(
+      2 -> Gen.const(None),
+      1 -> Gen.const(Some(null: Seq[java.lang.Double])),
+      1 -> Gen.choose(0, bands * bits - 1).flatMap(n =>
+        Gen.listOfN(n, bandElem).map(Some(_))))
+  } yield BandCase(isFloat, bands, bits, good, bad)
+
+  /** Rows (id, e) as an RDD-backed frame, so projections over it run in
+    * whole-stage codegen (a local relation would be folded on the
+    * driver by interpreted eval).
+    */
+  private def bandFrame(c: BandCase, rows: Seq[Seq[java.lang.Double]]) = {
+    val schema = StructType(Seq(
+      StructField("id", IntegerType, nullable = false),
+      StructField("e", c.arrType)))
+    val data = rows.zipWithIndex.map { case (a, i) =>
+      org.apache.spark.sql.Row(i, c.external(a)) }
+    spark.createDataFrame(spark.sparkContext.parallelize(data, 2), schema)
+  }
+
+  private def reference(c: BandCase): org.apache.spark.sql.Column =
+    org.apache.spark.sql.functions.array((0 until c.bands).map(b =>
+      org.apache.spark.sql.functions.expr(
+        guardedBandCode(bandApi, "e", b, c.bands, c.bits))): _*)
+
+  private def kernel(c: BandCase): org.apache.spark.sql.Column =
+    org.apache.spark.sql.graft.VectorColumns.signBandCodes(
+      org.apache.spark.sql.functions.col("e"),
+      org.apache.spark.sql.functions.lit(c.bands),
+      org.apache.spark.sql.functions.lit(c.bits), bandApi)
+
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10)
+      .flatMap(x => Option(x.getMessage)).mkString("\n")
+
+  /** Kernel and reference over the good rows: (id, reference, kernel). */
+  private def bandRows(c: BandCase): Seq[(Int, Seq[Int], Seq[Int])] = {
+    import org.apache.spark.sql.functions.col
+    val df = bandFrame(c, c.good)
+      .select(col("id"), reference(c).as("ref"), kernel(c).as("got"))
+    val plan = df.queryExecution.executedPlan
+    assert(plan.exists(_.isInstanceOf[
+      org.apache.spark.sql.execution.WholeStageCodegenExec]),
+      s"the kernel's projection must run in whole-stage codegen:\n$plan")
+    df.collect().toSeq.map(r => (r.getInt(0), r.getSeq[Int](1), r.getSeq[Int](2)))
+  }
+
+  property("SignBandCodes codegen'd batch equals the guardedBandCode " +
+      "text; a short or null embedding raises naming the api") =
+    Prop.forAll(bandCaseGen) { c =>
+      val goodOk = bandRows(c).forall { case (_, ref, got) => ref == got }
+      val badOk = c.bad.forall { a =>
+        def run(col: org.apache.spark.sql.Column): Option[Throwable] =
+          try { bandFrame(c, Seq(a)).select(col).collect(); None }
+          catch { case t: Throwable => Some(t) }
+        val kernelMsg = run(kernel(c)).map(messages)
+        run(reference(c)).isDefined && kernelMsg.exists(m =>
+          m.contains(bandApi) && m.contains(s"bands*bits = ${c.need}"))
+      }
+      goodOk && badOk
+    }
+
+  property("SignBandCodes interpreted eval equals the guardedBandCode " +
+      "text; a short or null embedding raises naming the api") =
+    Prop.forAll(bandCaseGen) { c =>
+      import org.apache.spark.sql.catalyst.expressions.Literal
+      import org.apache.spark.sql.catalyst.util.ArrayData
+      def eval(a: Seq[java.lang.Double]): Any =
+        org.apache.spark.sql.graft.SignBandCodes(
+          Literal.create(c.external(a), c.arrType), Literal(c.bands),
+          Literal(c.bits), bandApi).eval(null)
+      val goodOk = bandRows(c).forall { case (i, ref, _) =>
+        eval(c.good(i)).asInstanceOf[ArrayData].toIntArray().toSeq == ref
+      }
+      val badOk = c.bad.forall { a =>
+        try { eval(a); false }
+        catch { case t: RuntimeException =>
+          val m = messages(t)
+          m.contains(bandApi) && m.contains(s"bands*bits = ${c.need}")
+        }
+      }
+      goodOk && badOk
+    }
 }
