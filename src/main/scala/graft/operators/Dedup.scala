@@ -4,8 +4,7 @@ import graft.{QueryModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators over `documents` — the LLM-pipeline north star.
@@ -735,8 +734,7 @@ object Dedup extends QueryModule {
     * release), but a long-lived interactive session calling it in a loop
     * accumulates one pinned ~100 B/doc frame per call. Loop callers
     * (REPLs, per-trigger streaming) must use [[dedupAgainstSigs]] and
-    * own the persist/unpersist themselves, exactly as
-    * [[incrementalDedupStream]] does per micro-batch.
+    * own the persist/unpersist themselves.
     *
     * @return the kept rows of `newDocs`, all columns, order unspecified.
     */
@@ -751,7 +749,7 @@ object Dedup extends QueryModule {
     * caller, who owns their persist lifecycle — the loop-safe form: the
     * batch API above parks them in the session store (released by
     * [[graft.Materialize.clear]]), while a caller issuing many dedup
-    * rounds on one session (notably the per-micro-batch streaming path)
+    * rounds on one session (a per-micro-batch `foreachBatch`, say)
     * must unpersist them as soon as the batch's writes land or a
     * long-running stream would accumulate one pinned frame per trigger.
     *
@@ -949,27 +947,6 @@ object Dedup extends QueryModule {
     -57L -> "春天的花园里开满了各种颜色的鲜花蝴蝶在花丛中飞舞蜜蜂忙着采蜜小鸟在枝头歌唱温暖的阳光洒满大地微风轻拂柳条摇动",
     -55L -> "量子计算利用叠加态和纠缠实现并行计算能力远超经典计算机在密码学药物设计材料科学领域具有广阔应用前景值得期待关注")
 
-  /** [[dedupAgainst]] for UNSEGMENTED scripts: a new CJK crawl document
-    * shares ZERO word shingles with the CJK corpus doc it
-    * near-duplicates (each is ONE `\p{L}` run), so the word-base
-    * dominance pass keeps every unsegmented duplicate —
-    * DedupIncrementalSpec pins exactly that blindness and this catch.
-    * Both sides route through [[ScriptRouting.routed]] and build
-    * char-gram signatures for the same [[dedupAgainstSigs]] join.
-    *
-    * @return the kept rows of `newDocs`'s routed slice, all columns.
-    */
-  def dedupAgainstChars(corpusDocs: DataFrame, newDocs: DataFrame,
-      threshold: Double = 0.5): DataFrame = {
-    val corpusSigs = sigOf(withCharShingles(
-      ScriptRouting.routed(corpusDocs)).select("doc_id", "shingles"))
-    val newRouted = ScriptRouting.routed(newDocs).drop("sq")
-    val newSigs = tracked(sigOf(withCharShingles(newRouted)
-      .select("doc_id", "shingles"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
-    dedupAgainstSigs(corpusSigs, newRouted, newSigs, threshold)
-  }
-
   /** [[incrementalDedup]] over the routed corpus ∪ [[CJK_INCR_DOCS]]
     * (negative odd ids, hence `=!= 0` for the batch), reporting each
     * survivor's letter mass. One routed signature build serves both
@@ -994,385 +971,6 @@ object Dedup extends QueryModule {
   private def incrementalDedupCharsOracle: String =
     dominanceOracle(charShinglesCte(CJK_INCR_DOCS), "<> 0",
       "doc_id, length(sq)::BIGINT AS n_letters FROM routed")
-
-  // ---- streaming incremental dedup ------------------------------------
-
-  /** On-disk signature-table schema: the [[signatures]] columns plus the
-    * micro-batch id that wrote the row (partition column, so a replayed
-    * trigger overwrites exactly its own output).
-    */
-  val sigTableSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("sig", ArrayType(StringType)),
-    StructField("ingest_batch", LongType)))
-
-  /** Parameter stamp persisted beside every signature table. A signature
-    * is only comparable to another computed with the SAME K, banding and
-    * shingle recipe — agreement compares minhash positions positionally —
-    * so if a library upgrade changes any of these, every existing sigDir
-    * would silently mis-dedup forever (a crawl pipeline keeps signature
-    * tables for months). The stamp makes that failure loud: writers
-    * record it, readers refuse a mismatch. The string is canonical (field
-    * order fixed, no whitespace), so equality of the serialized form IS
-    * equality of the parameters.
-    */
-  private[graft] val sigTableMeta: String =
-    s"""{"format":3,"k":$K,"bands":$BANDS,"shingle":"lower-nfc-pL-word-3gram-distinct","schema":"doc_id bigint, sig array<string>, ingest_batch bigint"}"""
-
-  private val META_FILE = "_graft_meta.json"
-  private val COMMIT_MARKER = "_graft_commit"
-  private val VERSION_PREFIX = "v="
-
-  private def hadoopFs(s: SparkSession, dir: String) = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    (p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
-  }
-
-  /** FS for the meta sidecar: the raw layer when the FS is checksummed
-    * (local/testing), else the FS itself (HDFS/object stores). The stamp
-    * is human-patchable by contract — the unstamped-table remedy says
-    * "write this file by hand" — so it must not drag a .crc twin that
-    * turns a hand edit into a ChecksumException instead of the readable
-    * mismatch error.
-    */
-  private def metaFs(fs: org.apache.hadoop.fs.FileSystem) = fs match {
-    case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-    case f => f
-  }
-
-  /** Stamp `dir` (underscore-prefixed, so parquet readers ignore it). */
-  private def writeMeta(s: SparkSession, dir: String): Unit = {
-    val (fs0, p) = hadoopFs(s, dir)
-    val out = metaFs(fs0).create(new org.apache.hadoop.fs.Path(p, META_FILE), true)
-    try out.write(sigTableMeta.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Refuse to read a signature table whose stamp is absent or differs
-    * from this build's parameters — the readable-error contract: the
-    * message carries both stamps (or the exact sidecar to write after
-    * manually verifying an unstamped pre-round-9 table).
-    */
-  private def checkMeta(s: SparkSession, dir: String): Unit = {
-    val (fs0, p) = hadoopFs(s, dir)
-    val fs = metaFs(fs0)
-    val metaPath = new org.apache.hadoop.fs.Path(p, META_FILE)
-    if (!fs.exists(metaPath))
-      sys.error(s"signature table $dir has no $META_FILE parameter stamp: " +
-        "either it was not written by writeSignatureTable/compactSignatureTable, " +
-        "or it predates stamping. Re-seed it, or — after verifying it was built " +
-        s"with exactly these parameters — stamp it with a $META_FILE containing: " +
-        sigTableMeta)
-    val in = fs.open(metaPath)
-    val found = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    if (found != sigTableMeta)
-      sys.error(s"signature table $dir was built with different parameters " +
-        s"and would silently mis-dedup if used: its stamp is\n  $found\n" +
-        s"but this build requires\n  $sigTableMeta\nRe-seed the table " +
-        "(writeSignatureTable) with the current parameters.")
-  }
-
-  /** Committed version subdirectories of a signature table — `v=N` or
-    * `v=N.<nonce>` (the nonce suffix is how concurrent compactors stay
-    * out of each other's directories; see [[compactSignatureTable]]) —
-    * i.e. those carrying a [[COMMIT_MARKER]] file. A version directory
-    * without the marker is invisible: either a compaction is still
-    * writing it, or a crashed one left it behind — in both cases its
-    * contents are not truth and the next compaction collects it.
-    */
-  private def committedVersions(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Seq[(Long, org.apache.hadoop.fs.Path)] =
-    (if (fs.exists(dir)) fs.listStatus(dir).toSeq else Seq.empty)
-      .filter(_.isDirectory).map(_.getPath)
-      .filter(_.getName.startsWith(VERSION_PREFIX))
-      .flatMap { p =>
-        val n = p.getName.stripPrefix(VERSION_PREFIX).takeWhile(_ != '.')
-        if (n.nonEmpty && n.forall(_.isDigit)) Some(n.toLong -> p) else None
-      }
-      .filter { case (_, p) =>
-        fs.exists(new org.apache.hadoop.fs.Path(p, COMMIT_MARKER)) }
-
-  /** Resolve the LIVE version of a signature table: the highest
-    * committed `v=N` subdirectory. This is the whole read-path pointer
-    * protocol — no rename is ever observed by a reader, so the layout is
-    * safe on object stores where "rename" is copy+delete (the round-9
-    * two-rename swap was atomic on HDFS/local only). Errors name the
-    * remedy, including the one-time migration for a pre-versioned flat
-    * table.
-    */
-  private def liveVersionPath(s: SparkSession,
-      sigDir: String): org.apache.hadoop.fs.Path = {
-    val (fs, dir) = hadoopFs(s, sigDir)
-    val versions = committedVersions(fs, dir)
-    if (versions.isEmpty) {
-      val flat = fs.exists(dir) && fs.listStatus(dir).toSeq
-        .exists(_.getPath.getName.startsWith("ingest_batch="))
-      if (flat)
-        sys.error(s"signature table $sigDir uses the pre-versioned FLAT " +
-          s"layout: migrate it by moving its ingest_batch=* directories and " +
-          s"$META_FILE into a new $sigDir/${VERSION_PREFIX}0/ subdirectory " +
-          s"and creating an empty $sigDir/${VERSION_PREFIX}0/$COMMIT_MARKER " +
-          "marker file (while no stream or compaction is running).")
-      sys.error(s"no committed signature-table version under $sigDir " +
-        s"(expected a ${VERSION_PREFIX}N subdirectory containing " +
-        s"$COMMIT_MARKER): seed the table with writeSignatureTable.")
-    }
-    // tie-break equal version numbers (two racing compactors that both
-    // committed content-equivalent folds) by directory name: EVERY
-    // reader picks the same winner, and the next compaction collects
-    // the loser like any other superseded version
-    versions.maxBy { case (n, p) => (n, p.getName) }._2
-  }
-
-  /** Publish a fully-written version directory: create its commit
-    * marker. One small-file creation — atomically visible on HDFS and
-    * on object stores (a PUT either exists or does not), unlike a
-    * directory rename. Raw FS for the same hand-patchability reason as
-    * the meta sidecar (the flat-layout migration asks the operator to
-    * touch one).
-    */
-  private def commitVersion(s: SparkSession,
-      vdir: org.apache.hadoop.fs.Path): Unit = {
-    val (fs0, _) = hadoopFs(s, vdir.toString)
-    val out = metaFs(fs0)
-      .create(new org.apache.hadoop.fs.Path(vdir, COMMIT_MARKER), false)
-    try out.write("v1".getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Seed (or rebuild) the on-disk corpus signature table consumed by
-    * [[incrementalDedupStream]] from the already-kept corpus documents;
-    * seed rows carry `ingest_batch = -1` so no replayed stream trigger
-    * can ever dynamic-overwrite them. The table is written as version
-    * `v=0`, stamped with [[sigTableMeta]], and published by its commit
-    * marker; every reader resolves the highest committed version. A
-    * pre-existing table at `sigDir` is torn down first (this is the
-    * seed/rebuild entry point, not a live-table operation).
-    */
-  def writeSignatureTable(corpusDocs: DataFrame, sigDir: String): Unit = {
-    val s = corpusDocs.sparkSession
-    val (fs, dir) = hadoopFs(s, sigDir)
-    if (fs.exists(dir)) { fs.delete(dir, true); () }
-    val v0 = new org.apache.hadoop.fs.Path(dir, VERSION_PREFIX + "0")
-    signatures(corpusDocs).select("doc_id", "sig")
-      .withColumn("ingest_batch", lit(-1L))
-      .write.mode("overwrite").partitionBy("ingest_batch").parquet(v0.toString)
-    writeMeta(s, v0.toString)
-    commitVersion(s, v0)
-  }
-
-  private[graft] def readSignatureTable(s: SparkSession, sigDir: String): DataFrame = {
-    val live = liveVersionPath(s, sigDir)
-    checkMeta(s, live.toString)
-    s.read.schema(sigTableSchema).parquet(live.toString)
-  }
-
-  /** Streaming incremental dedup — the crawl-ingest shape of
-    * [[dedupAgainst]]. Each micro-batch of NEW documents is deduplicated
-    * (within the batch, and against the on-disk signature table at
-    * `sigDir`), the survivors land in `keptDir`, and their signatures are
-    * APPENDED to `sigDir` — so the next micro-batch dedups against the
-    * corpus PLUS everything kept so far, without recomputing a single
-    * historical signature. This is the Structured Streaming idiom for a
-    * stream-vs-evolving-static join: the LSH band join, candidate
-    * verify, and anti-join cannot run as one stateless stream-static
-    * plan (the per-doc "any verified match" decision needs a stream-side
-    * aggregation), so `foreachBatch` runs the full BATCH operator per
-    * trigger — same code, same dominance semantics, corpus refreshed by
-    * re-listing `sigDir` each batch.
-    *
-    * Failure contract: `foreachBatch` replays a failed trigger with the
-    * SAME batch id, and both writes are dynamic partition overwrites of
-    * their `ingest_batch=<id>` partition — a replay rewrites exactly its
-    * own output, so the sink and signature table are idempotent under
-    * at-least-once delivery (the checkpoint at `checkpointDir` carries
-    * the source offsets). Scale: per trigger this shuffles band digests
-    * and doc_ids of the NEW batch only; the corpus side is the ~100 B/doc
-    * signature table, never corpus text.
-    *
-    * @param newDocs STREAMING frame with at least (doc_id, text)
-    * @return the started query; callers own awaitTermination/stop
-    */
-  def incrementalDedupStream(newDocs: DataFrame, sigDir: String,
-      keptDir: String, checkpointDir: String, threshold: Double = 0.5,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    newDocs.writeStream
-      .queryName("graft_incremental_dedup")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        // resolve the live version ONCE per trigger and use it for both
-        // the corpus read and the signature append — the stream owns the
-        // table while running (compaction refuses concurrent use by
-        // contract), so the version cannot flip mid-batch, but a single
-        // resolve keeps even a misuse from splitting read and write
-        // across versions
-        val live = liveVersionPath(s, sigDir)
-        checkMeta(s, live.toString)
-        val corpus = s.read.schema(sigTableSchema).parquet(live.toString)
-          .select("doc_id", "sig")
-        val newSigs = signatures(batch).select("doc_id", "sig")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val kept = dedupAgainstSigs(corpus, batch, newSigs, threshold)
-          .withColumn("ingest_batch", lit(batchId))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          kept.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch").parquet(keptDir)
-          // only the KEPT docs' signatures join the corpus: a dropped
-          // doc's keeper is already in the table, and near-dup chains
-          // must not extend through dropped members
-          newSigs.join(kept.select("doc_id"), "doc_id")
-            .withColumn("ingest_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch").parquet(live.toString)
-        } finally { kept.unpersist(); newSigs.unpersist(); () }
-      }
-      .start()
-
-  /** Offline maintenance for the [[incrementalDedupStream]] signature
-    * table: fold every per-trigger `ingest_batch=<id>` partition back
-    * into the seed partition (`ingest_batch = -1`), rewritten as
-    * `targetFiles` parquet files. Without this a long-lived crawl ingest
-    * accrues one partition directory per micro-batch forever, so the
-    * per-trigger corpus re-list in the stream (and every [[dedupAgainst]]
-    * reader) pays O(completed triggers) file-listing cost and the table
-    * degrades into tiny files at crawl scale; compaction bounds both at a
-    * constant the operator chooses (~100 B/doc rows, so 32 files carries
-    * billions of documents).
-    *
-    * MUST run while no stream is writing `sigDir`, and only once the
-    * stream checkpoint has committed every folded batch: a committed
-    * trigger never replays, so erasing its partition identity is safe,
-    * whereas folding an UNCOMMITTED batch would let its replay append a
-    * second copy of those signatures beside the compacted one. That
-    * precondition is MECHANIZED, not operator-trust: `checkpointDir` must
-    * be the SAME checkpoint location the [[incrementalDedupStream]] call
-    * writing `sigDir` uses (they are a pair — one checkpoint owns one
-    * signature table), and the call reads its `commits/` log and refuses
-    * to fold any `ingest_batch` partition newer than the max committed
-    * batch id — exactly the window where a crash-stopped stream replays.
-    *
-    * The rewrite is OBJECT-STORE-SAFE: it never renames anything, on the
-    * write path or the read path. The fold is written into a fresh
-    * nonce-suffixed `v=<live+1>.<nonce>` subdirectory (unique per
-    * compactor run — see the concurrency contract on the 5-arg
-    * overload) and published by creating one commit
-    * marker file — a single PUT, atomically visible on HDFS and on
-    * S3A/GCS alike, where a directory "rename" is a non-atomic
-    * copy+delete (the round-9 two-rename swap, like the reference's own
-    * temp-dir + `fs::rename` output commit at `src/worker.cc:184-200`,
-    * was only safe on local/HDFS). Readers resolve the highest committed
-    * version, so every crash point is benign and recovery is AUTOMATIC:
-    *  - crash while writing the fold: the new `v=N+1` has no marker, no
-    *    reader ever resolves it, and the next compaction collects it and
-    *    redoes the fold — the live table was never touched;
-    *  - crash after the marker, i.e. normal completion: BOTH `v=N` and
-    *    `v=N+1` are committed and the newer one is live. The superseded
-    *    `v=N` is kept until the NEXT compaction collects it, so a reader
-    *    that resolved `v=N` just before the flip still finishes against
-    *    an intact directory (the racing-reader window of a same-dir
-    *    swap). A reader pinned TWO flips back fails-stop on the
-    *    collected directory — never reads a half-table. Disk cost: one
-    *    superseded copy of a ~100 B/doc table between compactions.
-    * All three states are spec'd in StreamingIncrementalDedupSpec.
-    */
-  def compactSignatureTable(s: SparkSession, sigDir: String,
-      checkpointDir: String, targetFiles: Int = 32): Unit =
-    compactSignatureTable(s, sigDir, checkpointDir, targetFiles, () => ())
-
-  /** [[compactSignatureTable]] with a test seam: `beforeCommit` runs
-    * after the fold is fully written but before the committed-version
-    * recheck + marker PUT — the exact window a CONCURRENT compactor's
-    * commit lands in. Production callers use the 4-arg form (no-op).
-    *
-    * Concurrency contract: each compactor folds into its own
-    * nonce-suffixed `v=<N+1>.<nonce>` directory, so two racing runs
-    * never write the same files. The commit point is the marker PUT,
-    * guarded by a re-list: if another compactor committed version
-    * >= N+1 first, this run deletes its own staging and fails stop
-    * (nothing it wrote was ever reader-visible). Check-then-put is a
-    * benign race, not a lock: if BOTH pass the recheck and PUT, the two
-    * committed `v=<N+1>.*` directories are complete folds of the SAME
-    * live version — content-equivalent — and every reader picks the
-    * same one by the deterministic (version, name) tie-break; the next
-    * compaction collects the other. On an object store without
-    * read-after-list consistency the recheck can only shrink the
-    * already-benign double-commit window, never corrupt it.
-    */
-  private[graft] def compactSignatureTable(s: SparkSession, sigDir: String,
-      checkpointDir: String, targetFiles: Int,
-      beforeCommit: () => Unit): Unit = {
-    import org.apache.hadoop.fs.Path
-    val (fs, dir) = hadoopFs(s, sigDir)
-    val live = liveVersionPath(s, sigDir)
-    checkMeta(s, live.toString)
-    val liveN = live.getName.stripPrefix(VERSION_PREFIX)
-      .takeWhile(_ != '.').toLong
-
-    // collect non-live version dirs: superseded committed versions from
-    // the previous cycle (deferred one cycle for racing readers) and
-    // uncommitted debris from a crashed fold (never reader-visible)
-    fs.listStatus(dir).toSeq.map(_.getPath)
-      .filter(p => p.getName.startsWith(VERSION_PREFIX) &&
-        p.getName != live.getName)
-      .foreach(p => { fs.delete(p, true); () })
-
-    // commit precondition: every batch partition must be <= the newest
-    // batch the stream checkpoint has COMMITTED (commits/<id> files);
-    // anything newer can still replay and would re-append beside the fold
-    val batchIds = fs.listStatus(live).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("ingest_batch="))
-      .map(_.stripPrefix("ingest_batch=").toLong)
-      .filter(_ >= 0L)
-    if (batchIds.nonEmpty) {
-      val commits = new Path(checkpointDir, "commits")
-      val committed =
-        if (!fs.exists(commits)) Seq.empty[Long]
-        else fs.listStatus(commits).toSeq.map(_.getPath.getName)
-          .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
-      val horizon = if (committed.isEmpty) -1L else committed.max
-      val unsafe = batchIds.filter(_ > horizon).sorted
-      require(unsafe.isEmpty,
-        s"refusing to compact $sigDir: ingest_batch partition(s) " +
-          s"${unsafe.mkString(", ")} exceed the max committed batch id " +
-          s"($horizon) in $commits — a crash-stopped stream would replay " +
-          "them and append duplicate signatures beside the fold. Let the " +
-          "stream finish (commit) or restart it once, then compact.")
-    }
-
-    // fold into a nonce-suffixed staging version: racing compactors can
-    // never interleave writes into one directory, and an abandoned
-    // staging dir is ordinary uncommitted debris for the next cycle
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val next = new Path(dir, VERSION_PREFIX + (liveN + 1) + "." + nonce)
-    s.read.schema(sigTableSchema).parquet(live.toString)
-      .select("doc_id", "sig")
-      .repartition(targetFiles)
-      .withColumn("ingest_batch", lit(-1L))
-      .write.mode("overwrite").partitionBy("ingest_batch").parquet(next.toString)
-    writeMeta(s, next.toString)
-    beforeCommit()
-    // commit-point guard: a concurrent compactor that committed first
-    // supersedes this fold — discard the staging (never reader-visible)
-    // and fail stop rather than publish a version the winner's next
-    // cycle would treat as live
-    val nowCommitted = committedVersions(fs, dir)
-      .filter { case (n, _) => n > liveN }
-    if (nowCommitted.nonEmpty) {
-      if (fs.exists(next)) { fs.delete(next, true); () }
-      sys.error(s"refusing to commit compaction of $sigDir: a concurrent " +
-        s"compactor committed ${nowCommitted.map(_._2.getName).sorted.mkString(", ")} " +
-        s"while this fold of ${live.getName} was running. This run's " +
-        "staging directory has been removed; nothing it wrote was ever " +
-        "visible to readers. Run compaction again if the table still " +
-        "needs folding — and run ONE compactor per table.")
-    }
-    commitVersion(s, next)
-    ()
-  }
 
   // ---- connected-components duplicate clusters ------------------------
 

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.{QueryModule, Tables}
-import graft.streaming.Streams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -213,7 +212,7 @@ object Sources extends QueryModule {
   //
   // Every stream query reads its table through Tables.streamTable and
   // runs its shape through the batch twin's own definition (the event
-  // windows and anomalyScore in ScalarFns, Streams.dedupStreamExact),
+  // windows and anomalyScore in ScalarFns, dedupStreamExact below),
   // then through one of two sink runners: `memorySink` or the parquet
   // `appendSink`.
 
@@ -364,7 +363,16 @@ object Sources extends QueryModule {
         .orderBy("bucket")
     }
 
-  /** Streaming exact dedup ([[Streams.dedupStreamExact]]): first
+  /** Streaming exact dedup on `keyCols`: each key's first occurrence
+    * passes and every later one drops (state note at [[streamDedup]]).
+    */
+  private[graft] def dedupStreamExact(events: DataFrame,
+      keyCols: Seq[String]): DataFrame =
+    events
+      .withWatermark("ts", "2 hours")
+      .dropDuplicates(keyCols)
+
+  /** Streaming exact dedup ([[dedupStreamExact]]): first
     * occurrence per (user_id, event_type) passes through, later ones are
     * dropped against the state store. Emitting only the key columns
     * makes the result the distinct key set — invariant to
@@ -376,8 +384,8 @@ object Sources extends QueryModule {
     * lateness, but Spark only evicts dedup state when the event-time
     * column is part of the key set, which global distinct excludes. On
     * an unbounded key space (billions of users) that is O(keys) state by
-    * contract, not by accident; the bounded-state discipline exists as
-    * `Streams.dedupStreamWithinWatermark` and is what a production
+    * contract, not by accident; the bounded-state discipline is Spark's
+    * `dropDuplicatesWithinWatermark`, and it is what a production
     * pipeline with an unbounded key domain should run.
     */
   private def streamDedup(s: SparkSession, d: String): DataFrame =
@@ -386,7 +394,7 @@ object Sources extends QueryModule {
     // State is O(distinct keys) BY CONTRACT → RocksDB by policy
     withStreamFanout(s, skipNoDataBatch = true, unboundedState = true) {
       memorySink(s, "stream_dedup", "append")(
-        Streams.dedupStreamExact(streamTable(s, d, "events"),
+        dedupStreamExact(streamTable(s, d, "events"),
           Seq("user_id", "event_type"))
           .select(col("user_id"), col("event_type")))
         .orderBy("user_id", "event_type")

@@ -1289,16 +1289,15 @@ object TextAnalysis extends QueryModule {
 
   // ---- tokenizer store: the trained-merge artifact ----------------------
 
-  /** Parameter stamp persisted beside every tokenizer table — the
-    * signature-store recipe one module over: a merge list is only
-    * usable by an encoder implementing the SAME seed tokenization and
-    * occurrence semantics (two-pass boundary-consuming replay — see
-    * BpeEncoder), so the stamp pins both plus the storage schema, and
-    * [[readTokenizer]] refuses a mismatch loudly instead of silently
-    * encoding with the wrong algebra. Canonical string: equality of the
-    * serialized form IS equality of the parameters. The merge COUNT is
-    * deliberately data, not stamp — any prefix of a merge list is a
-    * valid smaller tokenizer.
+  /** Parameter stamp persisted beside every tokenizer table. A merge
+    * list is only usable by an encoder implementing the SAME seed
+    * tokenization and occurrence semantics (two-pass boundary-consuming
+    * replay — see BpeEncoder), so the stamp pins both plus the storage
+    * schema, and [[readTokenizer]] refuses a mismatch loudly instead of
+    * silently encoding with the wrong algebra. Canonical string:
+    * equality of the serialized form IS equality of the parameters. The
+    * merge COUNT is deliberately data, not stamp — any prefix of a merge
+    * list is a valid smaller tokenizer.
     */
   private[graft] val tokenizerMeta: String =
     """{"format":1,"seed":"ascii-lower-word+</w>","apply":"two-pass-boundary-consuming-replay","schema":"merge_rank int, pa string, pb string"}"""

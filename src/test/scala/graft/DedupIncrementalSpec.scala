@@ -134,10 +134,11 @@ class DedupIncrementalSpec extends SparkSpec {
       operators.Dedup.signatures(corpus).select("doc_id", "sig"), batch))
     assert(keptWord == Set(-61L, -59L, -57L, -55L),
       s"word base must keep all (blindness pin); got $keptWord")
-    // catch: the routed char base drops -61 (near-dup of corpus -62)
+    // catch: the routed char base (the dedup_incremental_chars contract
+    // query over the same plants) drops -61 (near-dup of corpus -62)
     // and -57 (near-dup of earlier batch doc -59), keeps the originals
-    val keptChar = keptIds(
-      operators.Dedup.dedupAgainstChars(corpus, batch))
+    val keptChar = keptIds(SparkEntry.queries("dedup_incremental_chars")(
+      spark, sfDir).filter(col("doc_id") < 0))
     assert(keptChar == Set(-59L, -55L),
       s"char base must drop -61 (corpus arm) and -57 (earlier arm); " +
         s"got $keptChar")

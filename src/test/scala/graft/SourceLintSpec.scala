@@ -50,11 +50,9 @@ class SourceLintSpec extends AnyFunSuite {
   test("stream sinks start only in the two sink runners") {
     // Sources.memorySink and Sources.appendSink own the trigger, the
     // query name, the checkpoint and the read-back; the copies they
-    // replaced had each repeated all four. Dedup's incremental stream
-    // is a caller-owned foreachBatch library entry, not a replay query.
+    // replaced had each repeated all four.
     val allowed = Set("Sources.scala" -> "memorySink",
-      "Sources.scala" -> "appendSink",
-      "Dedup.scala" -> "incrementalDedupStream")
+      "Sources.scala" -> "appendSink")
     val sites = sitesOf(".writeStream")
     assert(sites.subsetOf(allowed),
       s"writeStream outside the runners: ${sites -- allowed}")
@@ -83,7 +81,6 @@ class SourceLintSpec extends AnyFunSuite {
     // single-row fetches, never O(data).
     val hits = offenders(".collect()", "graft/operators",
       exempt = Set("graft/operators/TextAnalysis.scala")) ++
-      offenders(".collect()", "graft/streaming") ++
       offenders(".toLocalIterator", "graft")
     assert(hits.isEmpty, s"driver-side materialization in: $hits")
     // the exemption must never widen silently: TextAnalysis carries

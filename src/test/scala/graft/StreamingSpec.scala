@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import graft.streaming.Streams
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -60,34 +59,12 @@ class StreamingSpec extends SparkSpec {
     assertTumblingFixture("tumble_out")
   }
 
-  test("streaming dedup drops exact (key, ts) redeliveries, keeps later same-key events") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Timestamp, Long, String, Double)]
-    val events = input.toDF().toDF("ts", "user_id", "event_type", "value")
-    val q = Streams.dedupStream(events, Seq("user_id", "event_type"))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("dedup_out").start()
-    try {
-      input.addData(
-        (ts(1), 1L, "click", 1.0), (ts(1), 1L, "click", 1.0), // redelivery
-        (ts(9), 1L, "click", 1.0), // same key, later ts: NOT a duplicate
-        (ts(2), 1L, "view", 1.0))
-      q.processAllAvailable()
-      // assert WHICH rows survived, not just how many — a dedup that
-      // kept the wrong occurrence would still count 3
-      val kept = spark.table("dedup_out").select("ts", "event_type")
-        .as[(Timestamp, String)].collect().sortBy(_._1.getTime).toSeq
-      assert(kept == Seq(ts(1) -> "click", ts(2) -> "view", ts(9) -> "click"))
-    } finally q.stop()
-  }
-
   test("streaming exact dedup keeps only each key's first occurrence") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Timestamp, Long, String, Double)]
     val events = input.toDF().toDF("ts", "user_id", "event_type", "value")
-    val q = Streams.dedupStreamExact(events, Seq("user_id", "event_type"))
+    val q = operators.Sources.dedupStreamExact(events, Seq("user_id", "event_type"))
       .writeStream.outputMode("append").format("memory")
       .queryName("dedup_exact_out").start()
     try {
@@ -101,39 +78,6 @@ class StreamingSpec extends SparkSpec {
       val kept = spark.table("dedup_exact_out").select("ts", "event_type")
         .as[(Timestamp, String)].collect().sortBy(_._1.getTime).toSeq
       assert(kept == Seq(ts(1) -> "click", ts(2) -> "view"))
-    } finally q.stop()
-  }
-
-  test("watermark-bounded dedup suppresses near duplicates and evicts old state") {
-    // the third dedup discipline (dropDuplicatesWithinWatermark): a key
-    // is suppressed only while its first occurrence is younger than the
-    // watermark delay — so the SAME key must pass again after the
-    // watermark evicts its state, which is exactly what distinguishes
-    // this from dedupStreamExact (and what bounds state at 100 TB/day)
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Timestamp, Long, String, Double)]
-    val events = input.toDF().toDF("ts", "user_id", "event_type", "value")
-    val q = Streams.dedupStreamWithinWatermark(events, Seq("user_id", "event_type"))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("dedup_wm_out").start()
-    try {
-      input.addData(
-        (ts(1), 1L, "click", 1.0), (ts(1), 1L, "click", 1.0), // redelivery
-        (ts(3), 1L, "click", 1.0)) // same key within the delay: suppressed
-      q.processAllAvailable()
-      // another user's far-future event pushes the watermark past
-      // user 1's first occurrence + 2h delay, evicting its state
-      val day2 = Timestamp.valueOf("2024-01-02 10:00:00")
-      input.addData((day2, 2L, "view", 0.0))
-      q.processAllAvailable()
-      // same key again, after eviction: passes (exact dedup would drop it)
-      val day2b = Timestamp.valueOf("2024-01-02 10:30:00")
-      input.addData((day2b, 1L, "click", 1.0))
-      q.processAllAvailable()
-      val kept = spark.table("dedup_wm_out").select("ts", "user_id")
-        .as[(Timestamp, Long)].collect().sortBy(_._1.getTime).toSeq
-      assert(kept == Seq(ts(1) -> 1L, day2 -> 2L, day2b -> 1L))
     } finally q.stop()
   }
 
@@ -169,55 +113,6 @@ class StreamingSpec extends SparkSpec {
     val (buckets, total) = (out.select("bucket").as[Long].collect().toSet,
       out.agg(sum("n")).head().getLong(0))
     assert(total > 0 && buckets.subsetOf((0L to 9L).toSet))
-  }
-
-  test("flatMapGroupsWithState sessionization closes sessions on gap") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Streams.Event]
-    val q = Streams.statefulSessions(input.toDS(), gapMs = 10 * 60 * 1000L)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("sess_out").start()
-    try {
-      // two bursts 30 min apart -> first session closes when the second
-      // batch arrives (event-time gap logic inside the state fn)
-      input.addData(Streams.Event(ts(0), 1L, "click", 1.0),
-        Streams.Event(ts(2), 1L, "click", 2.0))
-      q.processAllAvailable()
-      input.addData(Streams.Event(ts(40), 1L, "click", 5.0))
-      q.processAllAvailable()
-      val closed = spark.table("sess_out").as[Streams.SessionOut].collect()
-      assert(closed.length == 1)
-      assert(closed.head.nEvents == 2 && closed.head.valueSum == 3.0)
-    } finally q.stop()
-  }
-
-  test("stateful session closes via event-time timeout when watermark passes") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Streams.Event]
-    val q = Streams.statefulSessions(input.toDS(), gapMs = 10 * 60 * 1000L)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("sess_to_out").start()
-    try {
-      input.addData(Streams.Event(ts(0), 1L, "click", 1.0),
-        Streams.Event(ts(2), 1L, "click", 2.0))
-      q.processAllAvailable()
-      // another user's far-future event advances the watermark past
-      // user 1's lastTs + gap (watermark delay is 2h): 15:00 - 2h =
-      // 13:00 > 10:02 + 10min. The timeout fires on the batch AFTER the
-      // watermark update, so feed one more event and drain again.
-      input.addData(Streams.Event(
-        Timestamp.valueOf("2024-01-01 15:00:00"), 2L, "click", 0.0))
-      q.processAllAvailable()
-      input.addData(Streams.Event(
-        Timestamp.valueOf("2024-01-01 15:01:00"), 2L, "click", 0.0))
-      q.processAllAvailable()
-      val closed = spark.table("sess_to_out").as[Streams.SessionOut].collect()
-        .filter(_.userId == 1L)
-      assert(closed.length == 1)
-      assert(closed.head.nEvents == 2 && closed.head.valueSum == 3.0)
-    } finally q.stop()
   }
 
   test("streaming session_window aggregation runs") {

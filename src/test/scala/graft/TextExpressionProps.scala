@@ -13,8 +13,6 @@ object TextExpressionProps extends Properties("MinGramHash") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(10)
 
-  private lazy val spark = SparkSpec.session
-
   /** Reference: pad with 8 spaces, min base-31 hash over max(len-7,1)
     * 8-char windows.
     */
@@ -31,13 +29,11 @@ object TextExpressionProps extends Properties("MinGramHash") {
 
   property("codegen'd batch result equals the Scala reference") =
     Prop.forAll(Gen.listOfN(12, asciiText)) { texts =>
-      import spark.implicits._
-      val got = texts.zipWithIndex.map { case (t, i) => (i, t) }
-        .toDF("id", "s")
+      val got = CodegenFrames.collect(CodegenFrames.texts(texts)
         .select(org.apache.spark.sql.functions.col("id"),
           org.apache.spark.sql.graft.TextColumns.minGramHash(
-            org.apache.spark.sql.functions.col("s")).as("h"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+            org.apache.spark.sql.functions.col("s")).as("h")))
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
       texts.zipWithIndex.forall { case (t, i) => got(i) == reference(t) }
     }
 
@@ -73,17 +69,14 @@ object TextExpressionProps extends Properties("MinGramHash") {
 
   property("WordNGrams equals the declarative HOF form for n in 1..9") =
     Prop.forAll(Gen.listOfN(8, mixedText), Gen.choose(1, 9)) { (texts, n) =>
-      import spark.implicits._
-      val rows = texts.zipWithIndex.map { case (t, i) => (i, t) }
-        .toDF("id", "s")
+      val rows = CodegenFrames.collect(CodegenFrames.texts(texts)
         .withColumn("words",
           org.apache.spark.sql.functions.expr(
             "filter(split(s, '[^a-z]+'), x -> x <> '')"))
         .select(org.apache.spark.sql.functions.col("id"),
           org.apache.spark.sql.functions.expr(declarativeNGrams(n)).as("want"),
           org.apache.spark.sql.graft.TextColumns.wordNGrams(
-            org.apache.spark.sql.functions.col("s"), n).as("got"))
-        .collect()
+            org.apache.spark.sql.functions.col("s"), n).as("got")))
       rows.forall(r => r.getSeq[String](1) == r.getSeq[String](2))
     }
 
@@ -127,43 +120,35 @@ object TextExpressionProps extends Properties("MinGramHash") {
   property("unicode WordNGrams equals the declarative \\p{L} HOF form " +
       "for n in 1..9 on multilingual input") =
     Prop.forAll(Gen.listOfN(8, multilingualText), Gen.choose(1, 9)) { (texts, n) =>
-      import spark.implicits._
-      val rows = texts.zipWithIndex.map { case (t, i) => (i, t) }
-        .toDF("id", "s")
+      val rows = CodegenFrames.collect(CodegenFrames.texts(texts)
         .withColumn("words",
           org.apache.spark.sql.functions.expr(
             "filter(split(s, '[^\\\\p{L}]+'), x -> x <> '')"))
         .select(org.apache.spark.sql.functions.col("id"),
           org.apache.spark.sql.functions.expr(declarativeNGrams(n)).as("want"),
           org.apache.spark.sql.graft.TextColumns.wordNGramsU(
-            org.apache.spark.sql.functions.col("s"), n).as("got"))
-        .collect()
+            org.apache.spark.sql.functions.col("s"), n).as("got")))
       rows.forall(r => r.getSeq[String](1) == r.getSeq[String](2))
     }
 
   property("LetterRunTokens equals filter(split('[^\\p{L}]+')) — split " +
       "semantics, empty array on letterless input") =
     Prop.forAll(Gen.listOfN(8, multilingualText)) { texts =>
-      import spark.implicits._
-      val rows = (texts :+ "123 .. 456").zipWithIndex
-        .map { case (t, i) => (i, t) }
-        .toDF("id", "s")
+      val rows = CodegenFrames.collect(CodegenFrames.texts(
+          texts :+ "123 .. 456")
         .select(org.apache.spark.sql.functions.col("id"),
           org.apache.spark.sql.functions.expr(
             "filter(split(s, '[^\\\\p{L}]+'), x -> x <> '')").as("want"),
           org.apache.spark.sql.graft.TextColumns.letterTokens(
-            org.apache.spark.sql.functions.col("s")).as("got"))
-        .collect()
+            org.apache.spark.sql.functions.col("s")).as("got")))
       rows.forall(r => r.getSeq[String](1) == r.getSeq[String](2))
     }
 
   property("CharNGrams equals the declarative squeeze-then-window form " +
       "for n in 1..6 on multilingual input") =
     Prop.forAll(Gen.listOfN(8, multilingualText), Gen.choose(1, 6)) { (texts, n) =>
-      import spark.implicits._
-      val rows = (texts :+ "42 ..." :+ "机器学习, hello! 语言")
-        .zipWithIndex.map { case (t, i) => (i, t) }
-        .toDF("id", "s")
+      val rows = CodegenFrames.collect(CodegenFrames.texts(
+          texts :+ "42 ..." :+ "机器学习, hello! 语言")
         .withColumn("sq",
           org.apache.spark.sql.functions.expr(
             "regexp_replace(s, '[^\\\\p{L}]+', '')"))
@@ -174,8 +159,7 @@ object TextExpressionProps extends Properties("MinGramHash") {
                |  i -> substring(sq, i + 1, $n))
                |ELSE array(sq) END""".stripMargin).as("want"),
           org.apache.spark.sql.graft.TextColumns.charNGrams(
-            org.apache.spark.sql.functions.col("s"), n).as("got"))
-        .collect()
+            org.apache.spark.sql.functions.col("s"), n).as("got")))
       rows.forall(r => r.getSeq[String](1) == r.getSeq[String](2))
     }
 
@@ -196,16 +180,13 @@ object TextExpressionProps extends Properties("MinGramHash") {
   property("LetterSqueeze equals regexp_replace('[^\\p{L}]+', '') on " +
       "multilingual input (codegen batch)") =
     Prop.forAll(Gen.listOfN(8, multiScriptText)) { texts =>
-      import spark.implicits._
-      val rows = (texts :+ "42 ..." :+ "" :+ "机器学习, hello! 语言")
-        .zipWithIndex.map { case (t, i) => (i, t) }
-        .toDF("id", "s")
+      val rows = CodegenFrames.collect(CodegenFrames.texts(
+          texts :+ "42 ..." :+ "" :+ "机器学习, hello! 语言")
         .select(org.apache.spark.sql.functions.col("id"),
           org.apache.spark.sql.functions.expr(
             "regexp_replace(s, '[^\\\\p{L}]+', '')").as("want"),
           org.apache.spark.sql.graft.TextColumns.squeezeLetters(
-            org.apache.spark.sql.functions.col("s")).as("got"))
-        .collect()
+            org.apache.spark.sql.functions.col("s")).as("got")))
       rows.forall(r => r.getString(1) == r.getString(2))
     }
 
@@ -234,7 +215,6 @@ object TextExpressionProps extends Properties("MinGramHash") {
   property("ScriptCounts equals the per-class \\p{IsXxx} regexp lengths " +
       "on multilingual input (codegen batch)") =
     Prop.forAll(Gen.listOfN(8, multiScriptText)) { texts =>
-      import spark.implicits._
       val wants = routedScripts.zipWithIndex.map { case (sc, i) =>
         org.apache.spark.sql.functions.expr(
           s"length(regexp_replace(s, '[^\\\\p{Is${sc.capitalize}}]+', ''))")
@@ -243,13 +223,11 @@ object TextExpressionProps extends Properties("MinGramHash") {
       val gots = routedScripts.indices.map(i =>
         org.apache.spark.sql.functions.element_at(
           org.apache.spark.sql.functions.col("sc"), i + 1).as(s"g$i"))
-      val rows = (texts :+ "" :+ "한국 世界 ひらカナ ωж abc")
-        .zipWithIndex.map { case (t, i) => (i, t) }
-        .toDF("id", "s")
+      val rows = CodegenFrames.collect(CodegenFrames.texts(
+          texts :+ "" :+ "한국 世界 ひらカナ ωж abc")
         .withColumn("sc", org.apache.spark.sql.graft.TextColumns
           .scriptCounts(org.apache.spark.sql.functions.col("s"), routedScripts))
-        .select(wants ++ gots: _*)
-        .collect()
+        .select(wants ++ gots: _*))
       rows.forall(r => routedScripts.indices.forall(i =>
         r.getLong(i) == r.getLong(routedScripts.size + i)))
     }
@@ -312,13 +290,11 @@ object TextExpressionProps extends Properties("MinGramHash") {
   property("MinCharGramHash codegen'd batch result equals the " +
       "code-point reference on multilingual input") =
     Prop.forAll(Gen.listOfN(12, multilingualText)) { texts =>
-      import spark.implicits._
-      val got = texts.zipWithIndex.map { case (t, i) => (i, t) }
-        .toDF("id", "s")
+      val got = CodegenFrames.collect(CodegenFrames.texts(texts)
         .select(org.apache.spark.sql.functions.col("id"),
           org.apache.spark.sql.graft.TextColumns.minCharGramHash(
-            org.apache.spark.sql.functions.col("s")).as("h"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+            org.apache.spark.sql.functions.col("s")).as("h")))
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
       texts.zipWithIndex.forall { case (t, i) => got(i) == charReference(t) }
     }
 
@@ -358,13 +334,11 @@ object TextExpressionProps extends Properties("MinGramHash") {
   property("NfcNormalize codegen'd batch result equals " +
       "java.text.Normalizer on mixed ASCII/Latin/combining input") =
     Prop.forAll(Gen.listOfN(12, unicodeText)) { texts =>
-      import spark.implicits._
-      val got = texts.zipWithIndex.map { case (t, i) => (i, t) }
-        .toDF("id", "s")
+      val got = CodegenFrames.collect(CodegenFrames.texts(texts)
         .select(org.apache.spark.sql.functions.col("id"),
           org.apache.spark.sql.graft.TextColumns.nfc(
-            org.apache.spark.sql.functions.col("s")).as("n"))
-        .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
+            org.apache.spark.sql.functions.col("s")).as("n")))
+        .map(r => r.getInt(0) -> r.getString(1)).toMap
       texts.zipWithIndex.forall { case (t, i) => got(i) == nfcRef(t) }
     }
 
@@ -397,13 +371,11 @@ object TextExpressionProps extends Properties("MinGramHash") {
   property("CaseFold codegen'd batch result equals the ICU reference " +
       "on mixed-case ASCII/Latin/Greek input") =
     Prop.forAll(Gen.listOfN(12, mixedCaseText)) { texts =>
-      import spark.implicits._
-      val got = texts.zipWithIndex.map { case (t, i) => (i, t) }
-        .toDF("id", "s")
+      val got = CodegenFrames.collect(CodegenFrames.texts(texts)
         .select(org.apache.spark.sql.functions.col("id"),
           org.apache.spark.sql.graft.TextColumns.casefold(
-            org.apache.spark.sql.functions.col("s")).as("f"))
-        .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
+            org.apache.spark.sql.functions.col("s")).as("f")))
+        .map(r => r.getInt(0) -> r.getString(1)).toMap
       texts.zipWithIndex.forall { case (t, i) => got(i) == foldRef(t) }
     }
 
@@ -456,9 +428,7 @@ object TextExpressionProps extends Properties("MinGramHash") {
   property("PiiScan codegen'd batch result equals the regexp chain " +
       "(the oracle spelling) on adversarial scrub input") =
     Prop.forAll(Gen.listOfN(12, piiText)) { texts =>
-      import spark.implicits._
-      val rows = texts.zipWithIndex.map { case (t, i) => (i, t) }
-        .toDF("id", "s")
+      val rows = CodegenFrames.collect(CodegenFrames.texts(texts)
         .select(org.apache.spark.sql.functions.col("id"),
           org.apache.spark.sql.functions.expr(
             s"size(regexp_extract_all(s, '$PII_EMAIL', 0))").cast("long").as("ne"),
@@ -469,8 +439,7 @@ object TextExpressionProps extends Properties("MinGramHash") {
             s"regexp_replace(regexp_replace(s, '$PII_EMAIL', '<EMAIL>'), '$PII_DIGITS', '<NUM>')")
             .as("scr"),
           org.apache.spark.sql.graft.TextColumns.piiScan(
-            org.apache.spark.sql.functions.col("s")).as("p"))
-        .collect()
+            org.apache.spark.sql.functions.col("s")).as("p")))
       rows.forall { r =>
         val p = r.getStruct(4)
         r.getLong(1) == p.getLong(0) && r.getLong(2) == p.getLong(1) &&
@@ -504,17 +473,14 @@ object TextExpressionProps extends Properties("MinGramHash") {
   property("WordNGramsExact equals the GUARDED declarative \\p{L} form " +
       "for n in 1..9 on multilingual input") =
     Prop.forAll(Gen.listOfN(8, multilingualText), Gen.choose(1, 9)) { (texts, n) =>
-      import spark.implicits._
-      val rows = texts.zipWithIndex.map { case (t, i) => (i, t) }
-        .toDF("id", "s")
+      val rows = CodegenFrames.collect(CodegenFrames.texts(texts)
         .withColumn("words",
           org.apache.spark.sql.functions.expr(
             "filter(split(s, '[^\\\\p{L}]+'), x -> x <> '')"))
         .select(org.apache.spark.sql.functions.col("id"),
           org.apache.spark.sql.functions.expr(declarativeExactNGrams(n)).as("want"),
           org.apache.spark.sql.graft.TextColumns.wordNGramsUExact(
-            org.apache.spark.sql.functions.col("s"), n).as("got"))
-        .collect()
+            org.apache.spark.sql.functions.col("s"), n).as("got")))
       rows.forall(r => r.getSeq[String](1) == r.getSeq[String](2))
     }
 

@@ -18,8 +18,6 @@ object VectorExpressionProps extends Properties("VecDot") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(10)
 
-  private lazy val spark = SparkSpec.session
-
   private val elemGen: Gen[java.lang.Float] = Gen.frequency(
     12 -> Gen.chooseNum(-100f, 100f).map(java.lang.Float.valueOf),
     // exact binary fractions and whole floats hit the no-rounding paths
@@ -60,17 +58,15 @@ object VectorExpressionProps extends Properties("VecDot") {
       StructField("id", IntegerType, nullable = false),
       StructField("a", ArrayType(FloatType, containsNull = true)),
       StructField("b", ArrayType(FloatType, containsNull = true))))
-    import scala.jdk.CollectionConverters._
     val rows = pairs.zipWithIndex.map { case ((a, b), i) =>
       org.apache.spark.sql.Row(i, a, b) }
-    val df = spark.createDataFrame(rows.asJava, schema)
-    val got = df.select(col("id"),
+    val got = CodegenFrames.collect(CodegenFrames.frame(rows, schema)
+      .select(col("id"),
         org.apache.spark.sql.graft.VectorColumns.vecDot(col("a"), col("b"))
           .as("fast"),
         expr("aggregate(zip_with(a, b, (x, y) -> CAST(x AS DOUBLE) * " +
           "CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)")
-          .as("ref"))
-      .collect()
+          .as("ref")))
     got.length == pairs.length && got.forall(r => sameBits(r.get(1), r.get(2)))
   }
 
@@ -150,18 +146,12 @@ object VectorExpressionProps extends Properties("VecDot") {
         Gen.listOfN(n, bandElem).map(Some(_))))
   } yield BandCase(isFloat, bands, bits, good, bad)
 
-  /** Rows (id, e) as an RDD-backed frame, so projections over it run in
-    * whole-stage codegen (a local relation would be folded on the
-    * driver by interpreted eval).
-    */
-  private def bandFrame(c: BandCase, rows: Seq[Seq[java.lang.Double]]) = {
-    val schema = StructType(Seq(
-      StructField("id", IntegerType, nullable = false),
-      StructField("e", c.arrType)))
-    val data = rows.zipWithIndex.map { case (a, i) =>
-      org.apache.spark.sql.Row(i, c.external(a)) }
-    spark.createDataFrame(spark.sparkContext.parallelize(data, 2), schema)
-  }
+  /** Rows (id, e) as an RDD-backed frame ([[CodegenFrames.frame]]). */
+  private def bandFrame(c: BandCase, rows: Seq[Seq[java.lang.Double]]) =
+    CodegenFrames.frame(rows.zipWithIndex.map { case (a, i) =>
+        org.apache.spark.sql.Row(i, c.external(a)) },
+      StructType(Seq(StructField("id", IntegerType, nullable = false),
+        StructField("e", c.arrType))))
 
   private def reference(c: BandCase): org.apache.spark.sql.Column =
     org.apache.spark.sql.functions.array((0 until c.bands).map(b =>
@@ -181,13 +171,9 @@ object VectorExpressionProps extends Properties("VecDot") {
   /** Kernel and reference over the good rows: (id, reference, kernel). */
   private def bandRows(c: BandCase): Seq[(Int, Seq[Int], Seq[Int])] = {
     import org.apache.spark.sql.functions.col
-    val df = bandFrame(c, c.good)
-      .select(col("id"), reference(c).as("ref"), kernel(c).as("got"))
-    val plan = df.queryExecution.executedPlan
-    assert(plan.exists(_.isInstanceOf[
-      org.apache.spark.sql.execution.WholeStageCodegenExec]),
-      s"the kernel's projection must run in whole-stage codegen:\n$plan")
-    df.collect().toSeq.map(r => (r.getInt(0), r.getSeq[Int](1), r.getSeq[Int](2)))
+    CodegenFrames.collect(bandFrame(c, c.good)
+        .select(col("id"), reference(c).as("ref"), kernel(c).as("got")))
+      .toSeq.map(r => (r.getInt(0), r.getSeq[Int](1), r.getSeq[Int](2)))
   }
 
   property("SignBandCodes codegen'd batch equals the guardedBandCode " +
